@@ -5999,10 +5999,10 @@ def _q_sample_group_split(spark, sf):
 def _q_contamination_bloom_jvm(spark, sf):
     """Distributed-build Bloom contamination (impl="jvm"): the filter
     words come from an explode → bit_or JVM tree-aggregate (no driver
-    collect, no plan literal at any eval size) and are probed with k
-    broadcast hash joins — same exact rows as `contamination_exact`,
-    the plan shape for benchmark suites beyond the ~1M-row literal
-    cap."""
+    collect, no plan literal at any eval size) and are probed through
+    one broadcast of the dense word array — same exact rows as
+    `contamination_exact`, the plan shape for benchmark suites beyond
+    the ~1M-row literal cap."""
     from stark_spark.operators.dedup import cross_bloom_dups
     docs = D.load(spark, sf, "documents")
     return cross_bloom_dups(docs, _eval_corpus(spark, sf), "doc_id",
@@ -7248,59 +7248,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # nothing beyond position 50 lacks a prior green driver row, and
     # the window holds the stalest entries.
     return {
-        # --- never driver-checked (new gates) ---
-        "simhash_pairs_planted": _pq_simhash_pairs_planted,
-        "incremental_ingest_planted": _pq_incremental_ingest_planted,
-        "duplicated_spans": _pq_duplicated_spans,
-        "contaminated_spans": _pq_contaminated_spans,
-        "stream_ingest_dedup": _pq_stream_ingest_dedup,
-        "kn_discounts_docs": _pq_kn_discounts,
-        # --- latest driver-green row: r08 ---
-        "interval_join_open": _q_interval_join_open,
-        "knn_join_sparse": _q_knn_join_sparse,
-        "skyline_st": _q_skyline_st,
-        "raster_histogram": _q_raster_hist,
-        "agg_revenue_by_segment": _q_agg_revenue_by_segment,
-        "dedup_keep_best": _q_dedup_keep_best,
-        "text_profile": _q_text_profile,
-        "text_by_source": _q_text_by_source,
-        "text_repetition": _q_text_repetition,
-        "pii_scrub": _q_pii_scrub,
-        "chunk_documents": _q_chunk_documents,
-        "contamination_exact": _q_contamination_exact,
-        "contamination_lsh": _q_contamination_lsh,
-        "contamination_bloom": _q_contamination_bloom,
-        "kmeans_exact": _q_kmeans_exact,
-        "partition_str": _q_partition_str,
-        "sample_deterministic": _q_sample_deterministic,
-        "sample_stratified": _q_sample_stratified,
-        "sample_weighted": _q_sample_weighted,
-        "sample_weighted_by_source": _q_sample_weighted_by_source,
-        "mix_sources": _q_mix_sources,
-        "pack_shards": _q_pack_shards,
-        "length_quantiles": _q_length_quantiles,
-        "source_heavy_hitters": _q_source_heavy_hitters,
-        "ann_filtered_topk": _q_ann_filtered,
-        "ann_brute_topk_gemm": _q_ann_brute_gemm,
-        "ann_quantized_topk": _q_ann_quantized,
-        "ann_ivf_pruned_topk": _q_ann_ivf_pruned,
-        "ann_lsh_topk": _q_ann_lsh,
-        "ann_ivf_topk_gemm": _q_ann_ivf_gemm,
-        "ann_knn_join": _q_ann_knn_join,
-        "ann_knn_join_gemm": _q_ann_knn_join_gemm,
-        "ann_dup_pairs_ivf_gemm": _q_ann_dup_pairs_ivf_gemm,
-        "viz_lit_pixels": _q_viz_lit_pixels,
-        "partition_spatio_temporal": _q_partition_spatio_temporal,
-        "events_rollup": _q_events_rollup,
-        "events_gapfill": _q_events_gapfill,
         # --- latest driver-green row: r09 ---
-        "sql_st_difference_annulus": _pq_sql_st_difference_annulus,
-        "ann_recall_lsh_mp": _pq_ann_recall_lsh_mp,
-        "sql_st_buffer_erode": _pq_sql_st_buffer_erode,
-        "events_gapfill_interp": _q_events_gapfill_interp,
-        "sql_st_filter": _q_sql_st_filter,
-        "sql_tile_accessors": _q_sql_tile_accessors,
-        "sql_st_measures": _q_sql_st_measures,
         "sql_hull_simplify": _q_sql_hull_simplify,
         "knn_manhattan": _q_knn_manhattan,
         "stream_windowed_stats": _q_stream_windowed_stats,
@@ -7494,6 +7442,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize": _q_sessionize,
         "within_distance_filter": _q_within_distance_filter,
         "st_anti_join": _q_st_anti_join,
+        # --- latest driver-green row: r14 ---
+        "simhash_pairs_planted": _pq_simhash_pairs_planted,
+        "incremental_ingest_planted": _pq_incremental_ingest_planted,
+        "duplicated_spans": _pq_duplicated_spans,
+        "contaminated_spans": _pq_contaminated_spans,
+        "stream_ingest_dedup": _pq_stream_ingest_dedup,
+        "kn_discounts_docs": _pq_kn_discounts,
+        "interval_join_open": _q_interval_join_open,
+        "knn_join_sparse": _q_knn_join_sparse,
+        "skyline_st": _q_skyline_st,
+        "raster_histogram": _q_raster_hist,
+        "agg_revenue_by_segment": _q_agg_revenue_by_segment,
+        "dedup_keep_best": _q_dedup_keep_best,
+        "text_profile": _q_text_profile,
+        "text_by_source": _q_text_by_source,
+        "text_repetition": _q_text_repetition,
+        "pii_scrub": _q_pii_scrub,
+        "chunk_documents": _q_chunk_documents,
+        "contamination_exact": _q_contamination_exact,
+        "contamination_lsh": _q_contamination_lsh,
+        "contamination_bloom": _q_contamination_bloom,
+        "kmeans_exact": _q_kmeans_exact,
+        "partition_str": _q_partition_str,
+        "sample_deterministic": _q_sample_deterministic,
+        "sample_stratified": _q_sample_stratified,
+        "sample_weighted": _q_sample_weighted,
+        "sample_weighted_by_source": _q_sample_weighted_by_source,
+        "mix_sources": _q_mix_sources,
+        "pack_shards": _q_pack_shards,
+        "length_quantiles": _q_length_quantiles,
+        "source_heavy_hitters": _q_source_heavy_hitters,
+        "ann_filtered_topk": _q_ann_filtered,
+        "ann_brute_topk_gemm": _q_ann_brute_gemm,
+        "ann_quantized_topk": _q_ann_quantized,
+        "ann_ivf_pruned_topk": _q_ann_ivf_pruned,
+        "ann_lsh_topk": _q_ann_lsh,
+        "ann_ivf_topk_gemm": _q_ann_ivf_gemm,
+        "ann_knn_join": _q_ann_knn_join,
+        "ann_knn_join_gemm": _q_ann_knn_join_gemm,
+        "ann_dup_pairs_ivf_gemm": _q_ann_dup_pairs_ivf_gemm,
+        "viz_lit_pixels": _q_viz_lit_pixels,
+        "partition_spatio_temporal": _q_partition_spatio_temporal,
+        "events_rollup": _q_events_rollup,
+        "events_gapfill": _q_events_gapfill,
+        "sql_st_difference_annulus": _pq_sql_st_difference_annulus,
+        "ann_recall_lsh_mp": _pq_ann_recall_lsh_mp,
+        "sql_st_buffer_erode": _pq_sql_st_buffer_erode,
+        "events_gapfill_interp": _q_events_gapfill_interp,
+        "sql_st_filter": _q_sql_st_filter,
+        "sql_tile_accessors": _q_sql_tile_accessors,
+        "sql_st_measures": _q_sql_st_measures,
     }
 
 

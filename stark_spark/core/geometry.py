@@ -2388,21 +2388,6 @@ class _Nodes:
         return nid
 
 
-def _arc_midpoint(pts: np.ndarray) -> np.ndarray:
-    """Point at half the arc's polyline length (always interior to a
-    segment, never a shared crossing endpoint)."""
-    seg = np.diff(pts, axis=0)
-    lens = np.hypot(seg[:, 0], seg[:, 1])
-    half = lens.sum() / 2.0
-    acc = 0.0
-    for i, ln in enumerate(lens):
-        if acc + ln >= half and ln > 0:
-            f = (half - acc) / ln
-            return pts[i] + f * seg[i]
-        acc += ln
-    return pts[len(pts) // 2]
-
-
 def _union_rings(rings: list) -> list:
     """Union of simple closed rings (each a hole-free polygon) — see
     `_trace_polys`. Returns POLYGONS: a list of ring-lists
@@ -2788,11 +2773,6 @@ def _norm_ring(coords: np.ndarray, ccw: bool = True) -> np.ndarray:
     if (_ring_signed_area2(np.vstack([ring, ring[:1]])) < 0) == ccw:
         ring = ring[::-1]
     return np.vstack([ring, ring[:1]])
-
-
-def _norm_ccw_ring(coords: np.ndarray) -> np.ndarray:
-    """Closed ring → closed CCW simple ring (see `_norm_ring`)."""
-    return _norm_ring(coords, ccw=True)
 
 
 def _norm_poly(coords_list: list) -> list:

@@ -21,10 +21,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _defined(t_start: Column) -> Column:
-    return t_start.isNotNull()
-
-
 def temporal_intersects(ls: Column, le: Column, rs: Column, re: Column) -> Column:
     """Interval/instant intersection (`Interval.scala:32-36`):
     a.start <= b.end AND b.start <= a.end, open ends = +inf."""
@@ -39,15 +35,6 @@ def temporal_contains(ls: Column, le: Column, rs: Column, re: Column) -> Column:
     left.end (left open end = +inf)."""
     le_eff = F.coalesce(le, F.lit(2**62))
     return re.isNotNull() & (ls <= rs) & (re <= le_eff)
-
-
-def temporal_before(le: Column, rs: Column) -> Column:
-    """left entirely before right starts (`TemporalExpression.scala` `<`)."""
-    return F.coalesce(le, F.lit(2**62)) < rs
-
-
-def temporal_after(ls: Column, re: Column) -> Column:
-    return ls > F.coalesce(re, F.lit(-(2**62)))
 
 
 _TEMPORAL_FOR_PREDICATE = {

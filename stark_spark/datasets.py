@@ -90,14 +90,6 @@ def synth_xy(df: DataFrame, key: str,
               .withColumn("y", ((k * PY + sy) % 1000) / 10.0))
 
 
-def synth_xy_sql(key: str,
-                 salt: tuple[int, int] = (0, 0)) -> tuple[str, str]:
-    """The same formulas as oracle SQL fragments."""
-    sx, sy = salt
-    return (f"(({key} * {PX} + {sx}) % 1000) / 10.0",
-            f"(({key} * {PY} + {sy}) % 1000) / 10.0")
-
-
 def st_points(spark: SparkSession, sf_dir: str, table: str, key: str,
               keep_geom: bool = True) -> DataFrame:
     """Table → ST point frame on synthetic coords (untimed);
@@ -113,7 +105,3 @@ def st_events(spark: SparkSession, sf_dir: str, keep_geom: bool = True) -> DataF
     df = (df.withColumn("x", F.col("value"))
             .withColumn("y", (F.col("user_id").cast("long") * PX % 1000) / 10.0))
     return st_frame(df, x="x", y="y", t_start="ts", keep_geom=keep_geom)
-
-
-def events_xy_sql() -> tuple[str, str]:
-    return "value", f"((user_id * {PX}) % 1000) / 10.0"

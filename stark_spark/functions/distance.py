@@ -157,18 +157,6 @@ def _vertices(g):
     return np.vstack([_vertices(p) for p in g.parts()])
 
 
-def st_hausdorff(left_geom: Column, right_geom: Column,
-                 l_start: Column, l_end: Column,
-                 r_start: Column, r_end: Column,
-                 w_space: float = 1.0, w_time: float = 1.0) -> Column:
-    """Combined spatio-temporal Hausdorff (`Distance.scala:161-167`
-    hausdorff pair + weighted scalarization) usable in kNN /
-    withinDistance orderings."""
-    sd = hausdorff_pair(left_geom, right_geom)
-    td = temporal_hausdorff(l_start, l_end, r_start, r_end)
-    return weighted_st_distance(sd, td, w_space=w_space, w_time=w_time)
-
-
 def interval_distance(x: Column, y: Column, xmin: Column, ymin: Column,
                       xmax: Column, ymax: Column) -> Column:
     """IntervalDistance (`Distance.scala:27-77`): (min, max) distance

@@ -31,10 +31,11 @@ from .text import gopher_flags
 
 
 def _is_materialized_scan(df: DataFrame) -> bool:
-    """True iff the frame's analyzed plan is already a materialized
-    scan — the LogicalRDD a ``localCheckpoint``/``checkpoint``
+    """True iff the root of the frame's analyzed plan is a
+    ``LogicalRDD`` — what a ``localCheckpoint``/``checkpoint``
     returns. Re-checkpointing such a frame pays a full copy job and
-    buys nothing (the blocks are already pinned)."""
+    buys nothing (the blocks are already pinned). Any other root,
+    a ``cache()``d frame included, reads as not materialized."""
     try:
         node = df._jdf.queryExecution().analyzed()
         return node.getClass().getSimpleName() == "LogicalRDD"
@@ -115,8 +116,8 @@ def dedup_near_keep_best(df: DataFrame, key: str, score_col: str, *,
     cheap to recompute) pass ``materialize=False`` to skip the
     extra job and keep the wide rows out of executor block
     storage; the checkpoint is also skipped automatically when the
-    input plan is already a materialized scan (LogicalRDD /
-    cached), since re-checkpointing blocks buys nothing."""
+    root of the input plan is a ``LogicalRDD`` (a checkpointed
+    frame), since re-checkpointing blocks buys nothing."""
     from .dedup import (dedup_keep_best, hamming_near_pairs,
                         simhash_near_pairs)
     if materialize and not _is_materialized_scan(df):

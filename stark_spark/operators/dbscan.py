@@ -295,26 +295,6 @@ def neighborhood_histogram(df: DataFrame, eps: float, *, grid: GridSpec,
                .orderBy("n_neighbors"))
 
 
-def knn_distance_sample(df: DataFrame, k: int, *, x: str = "xmin",
-                        y: str = "ymin", sample: int = 2000,
-                        seed: int = 42):
-    """k-th-NN distance distribution from a bounded sample (the
-    DistanceHistogram elbow heuristic for choosing eps): returns a
-    sorted numpy array of k-th neighbor distances (driver-side; the
-    sample transfer is capped regardless of data size)."""
-    n = df.count()
-    frac = min(1.0, sample / max(n, 1))
-    pdf = (df.select(F.col(x).alias("x"), F.col(y).alias("y"))
-             .sample(fraction=frac, seed=seed).toPandas())
-    xs, ys = pdf["x"].to_numpy(), pdf["y"].to_numpy()
-    d2 = ((xs[:, None] - xs[None, :]) ** 2 +
-          (ys[:, None] - ys[None, :]) ** 2)
-    d2.sort(axis=1)
-    kth = np.sqrt(d2[:, min(k, d2.shape[1] - 1)])
-    kth.sort()
-    return kth
-
-
 def distance_histogram(df: DataFrame, max_dist: float, n_buckets: int, *,
                        grid: GridSpec, key: str, x: str = "xmin",
                        y: str = "ymin",

@@ -49,10 +49,13 @@ def _dot_fold_sql(vec_name: str, w) -> str:
     shortest-repr double literals parse to the same IEEE bits), built
     as a string so a whole literal-plane expression costs ONE py4j
     call + one JVM parse instead of per-element/per-lambda
-    round-trips (r14). Caller guarantees finite weights."""
+    round-trips (r14). Caller guarantees finite weights. Backticks
+    in the name are doubled, so any column name parses as one
+    identifier."""
     arr = ("CAST(array(" + ",".join(f"{float(x)!r}D" for x in w)
            + ") AS ARRAY<DOUBLE>)")
-    return (f"aggregate(zip_with(`{vec_name}`, {arr}, "
+    q = "`" + vec_name.replace("`", "``") + "`"
+    return (f"aggregate(zip_with({q}, {arr}, "
             f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
             f"0.0D, (acc, v) -> acc + v)")
 
@@ -972,39 +975,23 @@ def lsh_hyperplanes(dim: int, n_bits: int):
     return vals.reshape(n_bits, dim)
 
 
-def lsh_signature(vec, dim: int, n_bits: int) -> Column:
-    """Sign-LSH bucket id (SimHash over the embedding): bit i is the
-    sign of ⟨v, w_i⟩. Fold twin — bit-exact with the SQL oracle; the
-    production signature path is one `signs(V @ W.T)` matmul inside
-    any of the gemm kernels (ulp near-zero dots could flip a bucket
-    between float paths, so oracle-gated queries use the fold)."""
-    import math as _math
-    planes = lsh_hyperplanes(dim, n_bits)
-    if isinstance(vec, str) and all(
-            _math.isfinite(x) for w in planes for x in w):
-        # ONE SQL expression string for the whole signature (r14):
-        # the Column form still paid ~15-20 py4j round-trips per
-        # plane for the zip_with/aggregate lambdas (~140-210 ms of
-        # driver time per signature at dim=64/n_bits=4, per gate
-        # invocation ×2 sides). The parsed tree is the identical
-        # fold (same CASTs, same left fold, same CASE/sum chain —
-        # repr() doubles with a D suffix round-trip to the same
-        # IEEE bits), so values match the Column path bit-for-bit.
-        terms = []
-        for i, w in enumerate(planes):
-            terms.append(f"(CASE WHEN {_dot_fold_sql(vec, w)} >= 0 "
-                         f"THEN {1 << i} ELSE 0 END)")
-        return F.expr("(" + " + ".join(terms) + ")")
-    v = F.col(vec) if isinstance(vec, str) else vec
-    sig = None
-    for i, w in enumerate(planes):
-        # Column-expression twin for expression-valued callers (one
-        # lit(list)-style array per plane via _sql_array_lit)
-        warr = _sql_array_lit(w, "double")
-        bit = F.when(dot_fold(v, warr) >= 0,
-                     F.lit(1 << i)).otherwise(F.lit(0))
-        sig = bit if sig is None else sig + bit
-    return sig
+def lsh_signature(vec: str, dim: int, n_bits: int) -> Column:
+    """Sign-LSH bucket id (SimHash over the embedding column ``vec``):
+    bit i is the sign of ⟨v, w_i⟩. Fold twin — bit-exact with the SQL
+    oracle; the production signature path is one `signs(V @ W.T)`
+    matmul inside any of the gemm kernels (ulp near-zero dots could
+    flip a bucket between float paths, so oracle-gated queries use
+    the fold).
+
+    ONE SQL expression string for the whole signature (r14): the
+    Column form paid ~15-20 py4j round-trips per plane for the
+    zip_with/aggregate lambdas (~140-210 ms of driver time per
+    signature at dim=64/n_bits=4). `lsh_hyperplanes` values are
+    finite, as `_dot_fold_sql` requires."""
+    terms = [f"(CASE WHEN {_dot_fold_sql(vec, w)} >= 0 "
+             f"THEN {1 << i} ELSE 0 END)"
+             for i, w in enumerate(lsh_hyperplanes(dim, n_bits))]
+    return F.expr("(" + " + ".join(terms) + ")")
 
 
 def _lsh_probe_masks(n_bits: int, max_structs: int = 4096):
@@ -1291,89 +1278,73 @@ def pq_train(vectors: DataFrame, *, dim: int = 64, m_sub: int = 8,
 
 
 def _pq_codes(vectors: DataFrame, codebook: list, *, key: str,
-              vec_col: str, out_col: str = "codes",
-              engine: str = "arrow") -> DataFrame:
+              vec_col: str, out_col: str = "codes") -> DataFrame:
     """(key, codes) frame — one PQ code array per input row, codes in
     sub-space order.
 
-    ``engine="arrow"`` (default, r14): one `mapInPandas` pass — per
-    Arrow batch, per subspace, the squared distances to all codewords
-    accumulate as ``acc = acc + t·t`` looped over the dsub POSITIONS
-    (numpy-broadcast across rows × codes), then a first-min argmin.
-    This is the `_pq_train_local` determinism scheme verbatim: the
-    per-pair accumulation order is the fold's left-associated chain
-    from 0.0 term for term (float32→float64 widening is exact in both
-    engines), and np.argmin's first minimum equals min(struct(d2,
-    code))'s smallest-code tie-break — so the codes are bit-identical
-    to the fold path (property-pinned in pytest). Replaces an
+    One `mapInPandas` pass (r14): per Arrow batch, per subspace, the
+    squared distances to all codewords accumulate as ``acc = acc +
+    t·t`` looped over the dsub POSITIONS (numpy-broadcast across rows
+    × codes), then a first-min argmin. This is the `_pq_train_local`
+    determinism scheme verbatim: the per-pair accumulation order is
+    the `_pq_assign_codes` fold's left-associated chain from 0.0 term
+    for term (float32→float64 widening is exact in both engines), and
+    np.argmin's first minimum equals min(struct(d2, code))'s
+    smallest-code tie-break — so the codes are bit-identical to the
+    relational fold (property-pinned in pytest). Replaces an
     explode(m_sub) + broadcast join(n_codes) + interpreted
     CodegenFallback fold over rows·m_sub·n_codes pairs + a groupBy
     shuffle with ZERO shuffles and BLAS-speed arithmetic (measured
     0.86 s → see plans/r14; the encode pass dominates `pq_topk`).
-    Rows with a NULL vector get NULL codes.
+    Rows with a NULL vector get NULL codes."""
+    import numpy as np
+    import pandas as pd
 
-    ``engine="fold"`` keeps the relational path (the oracle-shaped
-    correctness twin): broadcast-join assignment + in-order per-key
-    collect. Every key yields exactly m_sub assignment rows, so the
-    output key set equals the input's in both engines."""
+    from pyspark.sql.types import (ArrayType, IntegerType,
+                                   StructField, StructType)
     m_sub = len(codebook)
     dsub = len(codebook[0][0])
-    if engine == "arrow":
-        import numpy as np
-        import pandas as pd
+    out_schema = StructType([
+        StructField(key, vectors.schema[key].dataType),
+        StructField(out_col, ArrayType(IntegerType()))])
+    C = [np.asarray(codebook[s], dtype=np.float64)
+         for s in range(m_sub)]
 
-        from pyspark.sql.types import (ArrayType, IntegerType,
-                                       StructField, StructType)
-        out_schema = StructType([
-            StructField(key, vectors.schema[key].dataType),
-            StructField(out_col, ArrayType(IntegerType()))])
-        C = [np.asarray(codebook[s], dtype=np.float64)
-             for s in range(m_sub)]
+    def encode(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            vals = pdf[vec_col]
+            mask = vals.isna().to_numpy()
+            out = pd.Series([None] * len(pdf), dtype=object)
+            if (~mask).any():
+                V = np.vstack(vals[~mask].to_numpy()) \
+                      .astype(np.float64)
+                codes = np.empty((V.shape[0], m_sub),
+                                 dtype=np.int32)
+                for s in range(m_sub):
+                    Vs = V[:, s * dsub:(s + 1) * dsub]
+                    Cs = C[s]
+                    acc = np.zeros((V.shape[0], Cs.shape[0]))
+                    for i in range(dsub):
+                        t = Vs[:, i][:, None] - Cs[:, i][None, :]
+                        acc = acc + t * t
+                    codes[:, s] = np.argmin(acc, axis=1)
+                out[np.nonzero(~mask)[0]] = list(codes)
+            yield pd.DataFrame({key: pdf[key].to_numpy(),
+                                out_col: out})
 
-        def encode(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                vals = pdf[vec_col]
-                mask = vals.isna().to_numpy()
-                out = pd.Series([None] * len(pdf), dtype=object)
-                if (~mask).any():
-                    V = np.vstack(vals[~mask].to_numpy()) \
-                          .astype(np.float64)
-                    codes = np.empty((V.shape[0], m_sub),
-                                     dtype=np.int32)
-                    for s in range(m_sub):
-                        Vs = V[:, s * dsub:(s + 1) * dsub]
-                        Cs = C[s]
-                        acc = np.zeros((V.shape[0], Cs.shape[0]))
-                        for i in range(dsub):
-                            t = Vs[:, i][:, None] - Cs[:, i][None, :]
-                            acc = acc + t * t
-                        codes[:, s] = np.argmin(acc, axis=1)
-                    out[np.nonzero(~mask)[0]] = list(codes)
-                yield pd.DataFrame({key: pdf[key].to_numpy(),
-                                    out_col: out})
-
-        return vectors.select(key, vec_col).mapInPandas(encode,
-                                                        out_schema)
-    subv = _pq_subvectors(vectors, key=key, vec_col=vec_col,
-                          m_sub=m_sub, dsub=dsub)
-    a = _pq_assign_codes(subv, _pq_cb_frame(vectors.sparkSession,
-                                            codebook), key=key)
-    return (a.groupBy(key)
-             .agg(F.transform(
-                  F.sort_array(F.collect_list(
-                      F.struct("sub_id", "code"))),
-                  lambda x: x["code"]).alias(out_col)))
+    return vectors.select(key, vec_col).mapInPandas(encode,
+                                                    out_schema)
 
 
 def pq_encode(vectors: DataFrame, codebook: list, *,
               key: str = "vec_id", vec_col: str = "embedding",
               out_col: str = "codes") -> DataFrame:
-    """Attach the PQ code array (m_sub ints, sub-space order) —
-    broadcast-join assignment + an in-order per-row collect; store
-    this instead of the vectors for the compressed index. ``key``
-    must uniquely identify rows (it drives the collect-back join)."""
+    """Attach the PQ code array (m_sub ints, sub-space order) from
+    the Arrow encoder `_pq_codes`; store this instead of the vectors
+    for the compressed index. ``key`` must uniquely identify rows (it
+    drives the join back)."""
     codes = _pq_codes(vectors, codebook, key=key, vec_col=vec_col,
                       out_col=out_col)
     return vectors.join(codes, key)

@@ -180,36 +180,3 @@ def sessionize(df: DataFrame, key: str, ts_col: str, gap: int, *,
                 .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (df2.withColumn(session_col, F.sum("_new").over(wc))
                .drop("_new"))
-
-
-def band_join(left: DataFrame, right: DataFrame, *, left_val: str,
-              right_val: str, delta: int,
-              keep: str = "all") -> DataFrame:
-    """Numeric band join: pairs with ``|l.v − r.v| ≤ delta`` on an
-    integer grid — the 1-D sibling of `within_distance_join` and the
-    join behind tolerance reconciliation ("match invoices to payments
-    within 1 %") and numeric blocking.
-
-    Physical plan — never a theta join: bucket both sides at width
-    ``delta`` (a row's matches live in its own or an adjacent
-    bucket), explode the LEFT side to (b−1, b, b+1), equi-join on the
-    bucket id, then the exact codegen band filter. Shuffle keys are
-    small ints, candidate volume is |L|·3·(right density per bucket)
-    — linear for bounded density, and AQE splits hot buckets.
-    ``keep="lt"`` keeps only l.v < r.v pairs (canonical self-join
-    dedup); default returns all ordered pairs.
-
-    Output: left columns + right columns (caller aliases to avoid
-    collisions) — both sides must carry distinct column names.
-    """
-    lb = (F.col(left_val) / F.lit(delta)).cast("long")
-    rb = (F.col(right_val) / F.lit(delta)).cast("long")
-    l_ex = left.withColumn(
-        "_bb", F.explode(F.array(lb - 1, lb, lb + 1)))
-    r_b = right.withColumn("_bb", rb)
-    j = (l_ex.join(r_b, "_bb")
-             .where(F.abs(F.col(left_val) - F.col(right_val))
-                    <= F.lit(delta)))
-    if keep == "lt":
-        j = j.where(F.col(left_val) < F.col(right_val))
-    return j.drop("_bb")

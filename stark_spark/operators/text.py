@@ -29,10 +29,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 # GPT-2-ish pre-tokenizer approximation: a letters run is one token,
 # each digit its own token, each non-space symbol its own token — the
 # boundaries BPE vocabularies split on. Kept inside the RE2 ∩

@@ -14,7 +14,7 @@ from stark_spark import datasets as D
 from stark_spark.operators.dbscan import dbscan, _local_dbscan
 from stark_spark.operators.dedup import (exact_dups, lsh_candidate_pairs,
                                          minhash_signature_long,
-                                         ngram_jaccard_pairs, simhash64,
+                                         ngram_jaccard_pairs,
                                          simhash_near_pairs)
 from stark_spark.operators.similarity import brute_force_topk, cosine, ivf_topk
 from stark_spark.operators.skyline import skyline
@@ -265,26 +265,21 @@ def test_minhash_signature_matches_python(docs):
 
 
 def test_simhash_fingerprints_match_column_spec(docs):
-    """Both fingerprint engines (arrow kernel, codegen agg) must be
-    bit-identical to the fold-Column spec (simhash64/simhash16)."""
-    from stark_spark.operators.dedup import (simhash16,
+    """The Arrow fingerprint kernel must be bit-identical to the
+    fold-Column spec (`_simhash_bits`) at 64 and 16 bits, and at 12
+    bits, where the kernel unpacks two digest bytes and keeps the
+    first three nibbles' bits."""
+    from stark_spark.operators.dedup import (_simhash_bits,
                                              simhash_fingerprints)
     sample = docs.limit(40)
-    spec64 = {r.doc_id: r.fp for r in
-              sample.select("doc_id",
-                            simhash64(F.col("text")).alias("fp")).collect()}
-    spec16 = {r.doc_id: r.fp for r in
-              sample.select("doc_id",
-                            simhash16(F.col("text")).alias("fp")).collect()}
-    for engine in ("arrow", "native"):
-        fast64 = {r.doc_id: r.fp for r in
-                  simhash_fingerprints(sample, "doc_id",
-                                       engine=engine).collect()}
-        assert fast64 == spec64, engine
-        fast16 = {r.doc_id: r.fp for r in
-                  simhash_fingerprints(sample, "doc_id", n_bits=16,
-                                       engine=engine).collect()}
-        assert fast16 == spec16, engine
+    for n_bits in (64, 16, 12):
+        spec = {r.doc_id: r.fp for r in sample.select(
+            "doc_id",
+            _simhash_bits(F.col("text"), 4, n_bits).alias("fp")).collect()}
+        fast = {r.doc_id: r.fp for r in
+                simhash_fingerprints(sample, "doc_id",
+                                     n_bits=n_bits).collect()}
+        assert fast == spec, n_bits
 
 
 def test_simhash_near_pairs(spark, docs):
@@ -758,14 +753,14 @@ def test_contamination_bloom(spark, docs):
     train_h = docs.select(F.md5("text").alias("content_hash"))
     n_total = train_h.count()
     n_surv = train_h.where(
-        bloom_might_contain(F.col("content_hash"), words, m, k)).count()
+        bloom_might_contain("content_hash", words, m, k)).count()
     assert n_surv < n_total * 0.2
     assert ev.select(F.md5("text").alias("content_hash")).where(
-        ~bloom_might_contain(F.col("content_hash"), words, m, k)
+        ~bloom_might_contain("content_hash", words, m, k)
     ).count() == 0
 
     plan = train_h.where(
-        bloom_might_contain(F.col("content_hash"), words, m, k)
+        bloom_might_contain("content_hash", words, m, k)
     )._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "Exchange" not in plan
     assert "*(1) Filter" in plan  # '*' = whole-stage codegen stage
@@ -937,6 +932,34 @@ def test_distance_histogram(spark):
                                  n_samples=2)
               .agg(F.sum("num")).first()[0])
     assert capped == 4
+
+
+def test_neighborhood_histogram(spark):
+    """The distributed |N_eps(p)| histogram (self included, capped at
+    ``max_count``) must equal brute-force numpy counts on a seeded
+    point set — uniform points over a 4×2 grid (cell-halo replication
+    across every interior edge) plus a tight clump whose counts
+    exceed the cap."""
+    from stark_spark.operators.dbscan import neighborhood_histogram
+    from stark_spark.partitioner.grid import GridSpec
+    rng = np.random.default_rng(11)
+    xs = np.concatenate([rng.uniform(0, 20, 300),
+                         rng.uniform(9.7, 10.3, 12)])
+    ys = np.concatenate([rng.uniform(0, 10, 300),
+                         rng.uniform(4.7, 5.3, 12)])
+    eps, cap = 1.5, 8
+    df = spark.createDataFrame(
+        [(float(x), float(y)) for x, y in zip(xs, ys)],
+        "xmin double, ymin double")
+    grid = GridSpec(0.0, 0.0, 20.0, 10.0, nx=4, ny=2)
+    got = {r.n_neighbors: r.n_points for r in
+           neighborhood_histogram(df, eps, grid=grid,
+                                  max_count=cap).collect()}
+    d2 = (xs[:, None] - xs[None, :]) ** 2 + (ys[:, None] - ys[None, :]) ** 2
+    n = np.minimum((d2 <= eps * eps).sum(axis=1), cap)
+    want = dict(zip(*(v.tolist() for v in np.unique(n, return_counts=True))))
+    assert got == want
+    assert got[cap] >= 12      # the clump hits the cap
 
 
 def test_ivf_assign_gemm_is_shuffle_free(spark, emb):
@@ -2487,7 +2510,8 @@ def test_pagerank_prepartition_smj_regime(spark):
 
 def test_pq_codes_arrow_equals_fold(spark):
     """The r14 Arrow PQ encoder must be BIT-IDENTICAL to the
-    relational fold path on every row — same left-associated d2
+    relational fold (broadcast-join assignment `_pq_assign_codes` +
+    in-order per-key collect) on every row — same left-associated d2
     accumulation, same first-min/smallest-code tie-break — over a
     corpus engineered for exact d2 ties (duplicated codeword-equal
     vectors) and irregular values."""
@@ -2495,7 +2519,9 @@ def test_pq_codes_arrow_equals_fold(spark):
 
     from pyspark.sql import functions as F
 
-    from stark_spark.operators.similarity import _pq_codes, pq_train
+    from stark_spark.operators.similarity import (_pq_assign_codes,
+                                                  _pq_cb_frame, _pq_codes,
+                                                  _pq_subvectors, pq_train)
     rng = np.random.default_rng(7)
     dim, m_sub, n_codes = 16, 4, 4
     rows = []
@@ -2510,8 +2536,13 @@ def test_pq_codes_arrow_equals_fold(spark):
     a = {r.vec_id: list(r.codes)
          for r in _pq_codes(emb, cb, key="vec_id",
                             vec_col="embedding").collect()}
-    f = {r.vec_id: list(r.codes)
-         for r in _pq_codes(emb, cb, key="vec_id", vec_col="embedding",
-                            engine="fold").collect()}
+    subv = _pq_subvectors(emb, key="vec_id", vec_col="embedding",
+                          m_sub=m_sub, dsub=dim // m_sub)
+    fold = (_pq_assign_codes(subv, _pq_cb_frame(spark, cb), key="vec_id")
+            .groupBy("vec_id")
+            .agg(F.transform(F.sort_array(F.collect_list(
+                     F.struct("sub_id", "code"))),
+                 lambda x: x["code"]).alias("codes")))
+    f = {r.vec_id: list(r.codes) for r in fold.collect()}
     assert a == f
     assert len(a) == 200

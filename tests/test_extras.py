@@ -958,14 +958,27 @@ def test_sql_array_lit_bit_identical(spark):
 
 
 def test_bloom_probe_string_equals_column(spark):
-    """The one-parse SQL-string form of bloom_might_contain (r14,
-    column-name argument) must select exactly the rows the Column
-    arithmetic selects — same double-hash, same k-probe AND."""
+    """The one-parse SQL-string form of bloom_might_contain (r14)
+    must select exactly the rows the Column-arithmetic k-probe AND
+    selects — same double-hash, same word lookup."""
     import hashlib
 
     from pyspark.sql import functions as F
 
-    from stark_spark.operators.dedup import bloom_build, bloom_might_contain
+    from stark_spark.operators.dedup import (_sql_array_lit, bloom_build,
+                                             bloom_might_contain)
+
+    def column_probe(col, words, m, k):
+        arr = _sql_array_lit(words, "bigint")
+        h1 = F.conv(F.substring(col, 1, 15), 16, 10).cast("long") % m
+        h2 = (F.conv(F.substring(col, 16, 15), 16, 10).cast("long")
+              % (m - 1)) + 1
+        cond = F.lit(True)
+        for j in range(k):
+            pos = (h1 + F.lit(j) * h2) % m
+            word = F.element_at(arr, (pos / 32).cast("int") + 1)
+            cond = cond & (F.getbit(word, pos % 32) == 1)
+        return cond
 
     hashes = [hashlib.md5(str(i).encode()).hexdigest()
               for i in range(150)]
@@ -975,13 +988,44 @@ def test_bloom_probe_string_equals_column(spark):
     df = spark.createDataFrame([(h,) for h in probe],
                                "content_hash string")
     col_rows = sorted(
-        r.content_hash for r in df.where(bloom_might_contain(
+        r.content_hash for r in df.where(column_probe(
             F.col("content_hash"), words, m, k)).collect())
     str_rows = sorted(
         r.content_hash for r in df.where(bloom_might_contain(
             "content_hash", words, m, k)).collect())
     assert col_rows == str_rows
     assert set(hashes) <= set(str_rows)     # no false negatives
+
+
+def test_bloom_probe_quotes_backtick_names(spark):
+    """A column literally named ``we`ird`` must parse as one
+    identifier in both Bloom probes (literal word array and broadcast
+    word array): every member passes its own filter."""
+    import hashlib
+
+    from stark_spark.operators.dedup import (_bloom_probe_array,
+                                             _bloom_sizing, bloom_build,
+                                             bloom_might_contain,
+                                             bloom_words_df)
+
+    hashes = [hashlib.md5(str(i).encode()).hexdigest()
+              for i in range(50)]
+    df = spark.createDataFrame([(h,) for h in hashes], "`we``ird` string")
+    words, m, k = bloom_build(hashes, 1e-3)
+    assert df.where(bloom_might_contain("we`ird", words, m, k)).count() == 50
+    m, k = _bloom_sizing(len(hashes), 1e-3)
+    words_df = bloom_words_df(df.withColumnRenamed("we`ird", "h"), m, k)
+    assert _bloom_probe_array(df, "we`ird", words_df, m, k).count() == 50
+
+
+def test_bloom_probe_array_rejects_oversized_filter(spark):
+    """A dense word array past Spark's 2 GiB row limit (m = 2^34 bits
+    → 2^29 BIGINTs = 4 GiB) must raise before any plan is built."""
+    from stark_spark.operators.dedup import _bloom_probe_array
+    one = spark.createDataFrame([("0" * 32,)], "h string")
+    words_df = spark.createDataFrame([], "w_idx int, word long")
+    with pytest.raises(ValueError, match="2 GiB"):
+        _bloom_probe_array(one, "h", words_df, 2 ** 34, 4)
 
 
 def test_lsh_signature_sql_equals_column(spark):
@@ -1018,3 +1062,23 @@ def test_lsh_signature_sql_equals_column(spark):
         "vec_id", lsh_signature("embedding", 16, 5).alias("s"))
         .orderBy("vec_id").collect()]
     assert a == b
+
+
+def test_lsh_signature_quotes_backtick_names(spark):
+    """`lsh_signature` over a column literally named ``we`ird`` must
+    parse and equal the signature of the same vectors under a plain
+    name."""
+    import numpy as np
+
+    from stark_spark.operators.similarity import lsh_signature
+
+    rng = np.random.RandomState(3)
+    rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(50)]
+    df = spark.createDataFrame(rows, "vec_id long, `we``ird` array<double>")
+    got = [r.s for r in df.select(
+        "vec_id", lsh_signature("we`ird", 8, 4).alias("s"))
+        .orderBy("vec_id").collect()]
+    want = [r.s for r in df.withColumnRenamed("we`ird", "v").select(
+        "vec_id", lsh_signature("v", 8, 4).alias("s"))
+        .orderBy("vec_id").collect()]
+    assert got == want

@@ -1483,12 +1483,6 @@ def test_jaccard_prefix_join_lossless_property(spark, seed, n_docs,
     got = {(r.a, r.b): r.jaccard_q6
            for r in jaccard_prefix_join(
                df, "doc_id", threshold=t_q6 / 1e6).collect()}
-    # the relational explode-verify twin must emit the identical
-    # pair set (r14: verify engines arrow vs sql pinned row-equal)
-    got_sql = {(r.a, r.b): r.jaccard_q6
-               for r in jaccard_prefix_join(
-                   df, "doc_id", threshold=t_q6 / 1e6,
-                   verify="sql").collect()}
     sets = {i: set(t.split(" ")) for i, t in docs}
     want = {}
     ks = sorted(sets)
@@ -1500,7 +1494,6 @@ def test_jaccard_prefix_join_lossless_property(spark, seed, n_docs,
             if jq >= t_q6:
                 want[(a, b)] = jq
     assert got == want
-    assert got_sql == want
 
 
 def _rand_holed_box(rng, x0, y0):
