@@ -3592,12 +3592,10 @@ def _pq_stream_semantic_contamination(spark, sf):
                     F.col("embedding").alias("c_embedding")))
     d = _replay_dir(qs, sf, "planted_arrivals")
     s = read_event_stream(spark, d, qs.schema, max_files=2)
-    # gemm eval-side assignment: at scaled replica counts the corpus
-    # has C = n/48 centers and the fold argmax is N·C interpreted
-    # evals; planted margins (~0.999 intra vs ≲0.8 inter) make BLAS
-    # assignment provably equal — the ann_knn_join_planted argument
-    out = stream_semantic_contamination(s, ev, cent, 0.992,
-                                        assign_score="gemm")
+    # gemm eval-side assignment is safe: planted margins (~0.999
+    # intra vs ≲0.8 inter) make BLAS assignment provably equal to the
+    # fold argmax — the ann_knn_join_planted argument
+    out = stream_semantic_contamination(s, ev, cent, 0.992)
     t = _stream_sink(out, "append")
     return t.select("vec_id", "eval_id", "cos")
 
@@ -6251,8 +6249,8 @@ def _q_ann_ivf_pruned(spark, sf):
                .select(F.col("vec_id").alias("c_id"),
                        F.col("embedding").alias("c_embedding")))
     path = tempfile.mkdtemp(prefix="stark_ivf_store_") + "/store"
-    save_ivf_bucketed(emb, cent, path, score="fold")
-    return ivf_topk_pruned(spark, path, q, 5, n_probe=2, score="fold")
+    save_ivf_bucketed(emb, cent, path)
+    return ivf_topk_pruned(spark, path, q, 5, n_probe=2)
 
 
 def _media_fixture_images():
@@ -6574,7 +6572,7 @@ def _q_kmeans_exact(spark, sf):
     scalar rows — no array column in the hash."""
     from stark_spark.operators.similarity import kmeans_centroids
     emb = D.load(spark, sf, "embeddings")
-    cent = kmeans_centroids(emb, 4, n_iter=2, score="fold", exact=True)
+    cent = kmeans_centroids(emb, 4, n_iter=2, exact=True)
     return cent.select("c_id", F.posexplode("c_embedding")
                         .alias("dim", "val"))
 

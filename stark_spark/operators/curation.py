@@ -84,8 +84,7 @@ def decontaminate_exact(df: DataFrame, eval_df: DataFrame, *,
 def dedup_near_keep_best(df: DataFrame, key: str, score_col: str, *,
                          text_col: str = "text",
                          max_hamming: int = 3,
-                         fp_col: str | None = None,
-                         materialize: bool = True) -> DataFrame:
+                         fp_col: str | None = None) -> DataFrame:
     """NEAR-dup removal keeping the best-scored copy per cluster:
     pigeonhole-banded hamming pairs → connected components →
     `dedup.dedup_keep_best` argmax — the fuzzy stage real pipelines
@@ -111,16 +110,13 @@ def dedup_near_keep_best(df: DataFrame, key: str, score_col: str, *,
     invocation); with it the chain runs once and every branch reads
     the materialized blocks. On a real cluster swap for
     ``checkpoint()`` to reliable storage — same trade the
-    simhash fingerprint checkpoint already documents. Direct
-    callers whose input is ALREADY materialized (or trivially
-    cheap to recompute) pass ``materialize=False`` to skip the
-    extra job and keep the wide rows out of executor block
-    storage; the checkpoint is also skipped automatically when the
-    root of the input plan is a ``LogicalRDD`` (a checkpointed
-    frame), since re-checkpointing blocks buys nothing."""
+    simhash fingerprint checkpoint already documents. The
+    checkpoint is skipped when the root of the input plan is a
+    ``LogicalRDD`` (a checkpointed frame), since re-checkpointing
+    blocks buys nothing."""
     from .dedup import (dedup_keep_best, hamming_near_pairs,
                         simhash_near_pairs)
-    if materialize and not _is_materialized_scan(df):
+    if not _is_materialized_scan(df):
         df = df.localCheckpoint()
     if fp_col is not None:
         # (key, int64) frame — tiny; its own checkpoint keeps the

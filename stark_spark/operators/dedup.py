@@ -300,6 +300,12 @@ def _bloom_sizing(n: int, fpp: float) -> tuple[int, int]:
     return m, k
 
 
+# Most hashes `bloom_build` takes: ~1.8 MB of plan literal at fpp=1e-3.
+# The literal Bloom paths collect the eval hashes to the driver; larger
+# eval sets take impl="jvm", which builds the filter distributed.
+BLOOM_LITERAL_MAX_HASHES = 1 << 20
+
+
 def bloom_build(hashes: list[str], fpp: float = 1e-3):
     """Build a Bloom filter over md5-hex values. Returns
     ``(words, m, k)``: 32-bit words (as Python ints), bit count, and
@@ -313,7 +319,13 @@ def bloom_build(hashes: list[str], fpp: float = 1e-3):
     arithmetic progression, so tiny m gives correlated bits; an even
     step on an even m walks only a coset): m is forced ODD with a
     2048-bit floor (256 B — free), the step lands in [1, m-1], and k
-    is capped at 16 so the native probe stays a short conjunction."""
+    is capped at 16 so the native probe stays a short conjunction.
+    Raises ValueError past `BLOOM_LITERAL_MAX_HASHES` hashes."""
+    if len(hashes) > BLOOM_LITERAL_MAX_HASHES:
+        raise ValueError(
+            f"{len(hashes)} distinct eval hashes exceed the literal Bloom "
+            f"limit of {BLOOM_LITERAL_MAX_HASHES}; pass impl=\"jvm\" to "
+            f"build the filter distributed")
     n = max(1, len(hashes))
     m, k = _bloom_sizing(n, fpp)
     words = [0] * ((m + 31) // 32)
@@ -443,8 +455,7 @@ def _bloom_probe_array(scan: DataFrame, hash_col: str,
 
 def cross_bloom_dups(train: DataFrame, eval_df: DataFrame, key: str, *,
                      text_col: str = "text", fpp: float = 1e-3,
-                     impl: str = "literal",
-                     eval_count: int | None = None) -> DataFrame:
+                     impl: str = "literal") -> DataFrame:
     """Exact train→eval contamination via a Bloom prefilter — the
     100 TB decontamination shape. `cross_exact_dups` shuffles every
     distinct TRAIN hash into a groupBy before the join; here the huge
@@ -460,8 +471,8 @@ def cross_bloom_dups(train: DataFrame, eval_df: DataFrame, key: str, *,
 
     - ``impl="literal"`` (default, small eval sets): driver-built
       bitmap applied as a literal-array + ``getbit`` expression
-      (codegen, no Python, no broadcast variable). At ~1M eval rows
-      and fpp=1e-3 the bitmap is ~1.8 MB of plan literal — the cap.
+      (codegen, no Python, no broadcast variable). Raises ValueError
+      above `BLOOM_LITERAL_MAX_HASHES` distinct eval hashes.
     - ``impl="jvm"`` (large eval sets — full benchmark suites): the
       filter words are built DISTRIBUTED (`bloom_words_df`: explode
       into bit positions → bit_or tree-aggregate, no driver collect)
@@ -469,9 +480,6 @@ def cross_bloom_dups(train: DataFrame, eval_df: DataFrame, key: str, *,
       array + k getbit probes (`_bloom_probe_array`) — no plan
       literal at any eval size; the broadcast is m/32 longs
       (~3.6 MB at 1M eval rows).
-
-    ``eval_count`` skips the sizing count() when the caller already
-    knows |eval| (the jvm path only).
 
     Output: (content_hash, <key> of the eval row, n_train)."""
     ev_hash = F.md5(F.col(text_col))
@@ -498,8 +506,7 @@ def cross_bloom_dups(train: DataFrame, eval_df: DataFrame, key: str, *,
             bloom_might_contain("content_hash", words, m, k))
     elif impl == "jvm":
         ev_hashes = eval_df.select(ev_hash.alias("h")).distinct()
-        n = eval_count if eval_count is not None else ev_hashes.count()
-        m, k = _bloom_sizing(n, fpp)
+        m, k = _bloom_sizing(ev_hashes.count(), fpp)
         filtered = _bloom_probe_array(tr_hash, "content_hash",
                                       bloom_words_df(ev_hashes, m, k),
                                       m, k)
@@ -896,9 +903,7 @@ def simhash_fingerprints(df: DataFrame, key: str, *, n_bits: int = 64,
 
 
 def simhash_near_pairs(df: DataFrame, key: str, *, max_hamming: int = 3,
-                       text_col: str = "text",
-                       bucket_cap: int | None = 1 << 16,
-                       oversize: str = "raise") -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
 
     Scale shape: block on bit-bands of the fingerprint (pigeonhole: two
@@ -917,8 +922,7 @@ def simhash_near_pairs(df: DataFrame, key: str, *, max_hamming: int = 3,
     fp = simhash_fingerprints(df, key, n_bits=64,
                               text_col=text_col).localCheckpoint()
     return hamming_near_pairs(fp, key, fp_col="fp",
-                              max_hamming=max_hamming,
-                              bucket_cap=bucket_cap, oversize=oversize)
+                              max_hamming=max_hamming)
 
 
 def _banded_fp(fp_df: DataFrame, key: str, fp_col: str,
@@ -949,17 +953,14 @@ def _banded_fp(fp_df: DataFrame, key: str, fp_col: str,
                       F.col("bb.bucket").alias("bucket")))
 
 
-# Memoized skew-guard probe results, keyed by the banded plan's
-# semantic hash (see hamming_near_pairs docstring). Bounded; safe
-# because parquet inputs are immutable within a Spark session.
-_PROBE_CACHE: dict[tuple, int] = {}
+# Largest band-bucket `hamming_near_pairs` will self-join; see its
+# docstring.
+HAMMING_BUCKET_CAP = 1 << 16
 
 
 def hamming_near_pairs(fp_df: DataFrame, key: str, *,
                        fp_col: str = "fp",
-                       max_hamming: int = 3,
-                       bucket_cap: int | None = 1 << 16,
-                       oversize: str = "raise") -> DataFrame:
+                       max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs over ANY 64-bit fingerprint column (SimHash,
     image perceptual hash, audio fingerprint ...) by hamming distance
     ≤ max_hamming: pigeonhole banding (two fingerprints within
@@ -972,70 +973,28 @@ def hamming_near_pairs(fp_df: DataFrame, key: str, *,
     band equi-join is QUADRATIC inside a bucket, and a template-heavy
     real crawl can put a large fraction of the corpus into one
     band-bucket (low fingerprint diversity) — a one-task n² straggler
-    no partitioning fixes. ``bucket_cap`` bounds that:
-
-    * ``oversize="raise"`` (default): an EAGER probe (one aggregate
-      over the banded frame — cheap when the input is checkpointed,
-      which every in-repo caller does) raises ValueError when any
-      band-bucket exceeds the cap, with rescale guidance. The
-      returned plan is byte-identical to the unguarded one.
-    * ``oversize="salt"``: lazily salt-splits each oversized bucket
-      into ``ceil(count / bucket_cap)`` groups by a deterministic
-      key hash and joins within equal salt only. RECALL EFFECT: a
-      qualifying pair is missed only if EVERY band it agrees on is
-      oversized AND the pair straddles salt groups in all of them —
-      pairs with at least one quiet shared band (the common case;
-      pigeonhole gives d+1 chances) are unaffected.
-    * ``bucket_cap=None`` disables the guard entirely.
-
-    Probe cost (r12 verdict #6): the raise-mode probe is memoized on
-    the banded plan's semantic hash, so repeated calls over the SAME
-    input frame (a pipeline stage invoked twice, a warm bench rerun,
-    the curation pipeline's reuse) pay the aggregate once per
-    session. Parquet inputs are immutable within a session, so a
-    cache hit is exact; if you mutate the files a plan reads
-    mid-session, clear `_PROBE_CACHE` yourself.
+    no partitioning fixes. An EAGER probe (one aggregate over the
+    banded frame — cheap when the input is checkpointed, which every
+    in-repo caller does) raises ValueError when any band-bucket holds
+    more than `HAMMING_BUCKET_CAP` rows, with rescale guidance. The
+    probe adds no node to the returned plan.
     """
-    if oversize not in ("raise", "salt"):
-        raise ValueError(
-            f"hamming_near_pairs: oversize={oversize!r} — must be "
-            f"'raise' or 'salt' (an unrecognized mode must not "
-            f"silently fall through to a different guard behavior)")
     banded = _banded_fp(fp_df, key, fp_col, max_hamming + 1)
-    join_keys = ["band", "bucket"]
-    if bucket_cap is not None and oversize == "salt":
-        sizes = (banded.groupBy("band", "bucket")
-                       .agg(F.count("*").alias("_bc")))
-        banded = (banded.join(sizes, ["band", "bucket"])
-                        .withColumn("_salt", F.pmod(
-                            F.xxhash64(F.col(key)),
-                            F.expr(f"CAST((_bc + {int(bucket_cap)} - 1)"
-                                   f" div {int(bucket_cap)} AS INT)"))
-                            .cast("int"))
-                        .drop("_bc"))
-        join_keys = ["band", "bucket", "_salt"]
-    elif bucket_cap is not None:
-        ck = (banded.semanticHash(), "hamming_probe")
-        mx = _PROBE_CACHE.get(ck)
-        if mx is None:
-            mx = (banded.groupBy("band", "bucket").count()
-                        .agg(F.max("count")).first()[0]) or 0
-            if len(_PROBE_CACHE) > 256:
-                _PROBE_CACHE.clear()
-            _PROBE_CACHE[ck] = mx
-        if mx is not None and mx > bucket_cap:
-            raise ValueError(
-                f"hamming_near_pairs: a band-bucket holds {mx} rows "
-                f"(> bucket_cap={bucket_cap}) — a low-diversity "
-                f"(template-heavy) corpus would make the band "
-                f"self-join quadratic in one task. Collapse exact-"
-                f"duplicate fingerprints first, raise bucket_cap, or "
-                f"pass oversize='salt' (documented recall effect).")
+    mx = (banded.groupBy("band", "bucket").count()
+                .agg(F.max("count")).first()[0]) or 0
+    if mx > HAMMING_BUCKET_CAP:
+        raise ValueError(
+            f"hamming_near_pairs: a band-bucket holds {mx} rows "
+            f"(> {HAMMING_BUCKET_CAP}) — a low-diversity "
+            f"(template-heavy) corpus would make the band "
+            f"self-join quadratic in one task. Collapse exact-"
+            f"duplicate fingerprints first, or lower max_hamming "
+            f"(fewer, wider bands).")
     a = banded.select(F.col(key).alias("a"), F.col("fp").alias("fp_a"),
-                      *join_keys)
+                      "band", "bucket")
     b = banded.select(F.col(key).alias("b"), F.col("fp").alias("fp_b"),
-                      *join_keys)
-    cand = (a.join(b, join_keys).where(F.col("a") < F.col("b"))
+                      "band", "bucket")
+    cand = (a.join(b, ["band", "bucket"]).where(F.col("a") < F.col("b"))
              .select("a", "b", "fp_a", "fp_b").distinct())
     hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
     return (cand.withColumn("hamming", hamming)

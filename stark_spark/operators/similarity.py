@@ -21,9 +21,11 @@ Net-new beyond the reference. Tiers:
   `ann_quantized_topk`) — 4× smaller, integer scores, exactly
   reproducible ranking.
 
-Every float scoring pass has a BLAS engine (``score="gemm"``) with the
-fold expression kept as the bit-exact oracle twin. Embedding-cosine
-near-dup pairs ride the same IVF bucketing.
+Query-time scoring (brute-force, IVF, ANN joins, cosine pairs) has a
+BLAS engine (``score="gemm"``) next to the bit-exact fold expression;
+the cluster-local passes (semantic dedup/contamination, k-means
+assignment, the persisted IVF store) score with the fold only.
+Embedding-cosine near-dup pairs ride the same IVF bucketing.
 """
 
 from __future__ import annotations
@@ -534,8 +536,8 @@ def cosine_dup_pairs(vectors: DataFrame, threshold: float, *,
 
 
 def _cluster_assigned(vectors: DataFrame, *, key: str, vec_col: str,
-                      centroids: DataFrame | None, assign_col: str | None,
-                      score: str) -> DataFrame:
+                      centroids: DataFrame | None,
+                      assign_col: str | None) -> DataFrame:
     """(key, vec, bucket) with the cluster taken from ``assign_col``
     when the caller already knows it (planted data, precomputed
     k-means labels, a partition column) — skipping the assignment
@@ -546,15 +548,14 @@ def _cluster_assigned(vectors: DataFrame, *, key: str, vec_col: str,
     if centroids is None:
         raise ValueError("pass centroids (e.g. kmeans_centroids(...)) "
                          "or assign_col")
-    return ivf_assign(vectors, centroids, key=key, vec_col=vec_col,
-                      score=score).select(key, vec_col, "bucket")
+    return ivf_assign(vectors, centroids, key=key,
+                      vec_col=vec_col).select(key, vec_col, "bucket")
 
 
 def semantic_dedup(vectors: DataFrame, tau: float, *,
                    key: str = "vec_id", vec_col: str = "embedding",
                    centroids: DataFrame | None = None,
-                   assign_col: str | None = None,
-                   score: str = "fold") -> DataFrame:
+                   assign_col: str | None = None) -> DataFrame:
     """SemDeDup-style embedding-level dedup (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus, then inside each cluster
     drop every vector that is a near-duplicate (cosine ≥ ``tau``) of
@@ -572,52 +573,13 @@ def semantic_dedup(vectors: DataFrame, tau: float, *,
 
     Scale shape: pairwise work is confined to clusters — the
     SemDeDup cost model (k ≈ √N clusters ⇒ O(N·√N) total, one
-    shuffle on cluster id). ``score="gemm"`` runs one row-blocked
-    BLAS matmul per cluster via `applyInPandas` (no pair explosion,
-    no join-back); the fold default keeps cos bit-identical to the
-    DuckDB oracle. Assignment may independently be BLAS
-    (``centroids`` + the `ivf_assign` gemm path) — the production
-    mix, same argument as `ann_knn_join`'s planted gate.
-
-    Engine choice (measured at 100×, 49,980 members): with SMALL
-    clusters (12 members) the fold equi-join wins outright (0.10 s
-    vs 1.31 s warm — per-group Arrow/python-worker overhead
-    dominates a 66-pair matmul), identical keep sets. The BLAS path
-    pays off when clusters are LARGE (k ≈ √N ⇒ √N members ⇒
-    |cluster|² cos per group): the fold's per-pair interpreted
-    expression loses to one matmul the same way `ivf_assign`'s
-    crossJoin loses at C ≈ √N. Rule of thumb: fold below ~100
-    members/cluster, gemm above.
+    shuffle on cluster id). One fold-cosine equi-join on the cluster
+    id keeps cos bit-identical to the DuckDB oracle. Measured at 100×
+    (49,980 members, 12 per cluster) it ran 0.10 s warm against 1.31 s
+    for a per-cluster BLAS `applyInPandas` with identical keep sets.
     """
     v = _cluster_assigned(vectors, key=key, vec_col=vec_col,
-                          centroids=centroids, assign_col=assign_col,
-                          score="fold" if score == "fold" else "gemm")
-    if score == "gemm":
-        import numpy as np
-        import pandas as pd
-        key_type = dict(v.dtypes)[key]
-        cl_type = dict(v.dtypes)["bucket"]
-
-        def bucket_keep(members: pd.DataFrame) -> pd.DataFrame:
-            members = members.sort_values(key, kind="stable")
-            M = np.vstack(members[vec_col].to_numpy()).astype(np.float64)
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            n = len(members)
-            dropped = np.zeros(n, dtype=bool)
-            for i0 in range(0, n, 1024):
-                i1 = min(i0 + 1024, n)
-                cos = Mn[i0:i1] @ Mn.T
-                ii, jj = np.nonzero(cos >= tau)
-                jj = jj[(ii + i0) < jj]  # witness strictly earlier
-                dropped[np.unique(jj)] = True
-            return pd.DataFrame({key: members[key].to_numpy(),
-                                 "cluster": members["bucket"].to_numpy(),
-                                 "keep": ~dropped})
-
-        return (v.groupBy("bucket")
-                 .applyInPandas(bucket_keep,
-                                f"{key} {key_type}, cluster {cl_type}, "
-                                f"keep boolean"))
+                          centroids=centroids, assign_col=assign_col)
     vn = v.withColumn("_n", norm(F.col(vec_col)))
     a = vn.select("bucket", F.col(key).alias("_a"),
                   F.col(vec_col).alias("_va"), F.col("_n").alias("_na"))
@@ -639,8 +601,7 @@ def semantic_contamination(train: DataFrame, eval_df: DataFrame,
                            key: str = "vec_id",
                            vec_col: str = "embedding",
                            centroids: DataFrame | None = None,
-                           assign_col: str | None = None,
-                           score: str = "fold") -> DataFrame:
+                           assign_col: str | None = None) -> DataFrame:
     """Embedding-level decontamination: eval rows whose vector is
     near-duplicate (cosine ≥ ``tau``) of ANY training vector in the
     same cluster — the semantic sibling of the `cross_*` text
@@ -656,11 +617,9 @@ def semantic_contamination(train: DataFrame, eval_df: DataFrame,
     raise the cluster count quality via `kmeans_centroids` as usual.
     """
     t = _cluster_assigned(train, key=key, vec_col=vec_col,
-                          centroids=centroids, assign_col=assign_col,
-                          score=score)
+                          centroids=centroids, assign_col=assign_col)
     q = _cluster_assigned(eval_df, key=key, vec_col=vec_col,
-                          centroids=centroids, assign_col=assign_col,
-                          score=score)
+                          centroids=centroids, assign_col=assign_col)
     # NOTE (r14 negative result): the _cos_pre norm-precompute form
     # measured ~15% SLOWER here in a 6-rep interleaved A/B at sf0.1
     # (min 0.52 -> 0.60 s, slower in every paired rep): at this
@@ -682,9 +641,9 @@ def semantic_contamination(train: DataFrame, eval_df: DataFrame,
 
 
 def _kmeans_local(vecs: list, n_centroids: int, n_iter: int) -> list:
-    """Driver-side replica of `kmeans_centroids(exact=True,
-    score="fold")` — the same IEEE operation sequence as the cluster
-    path, so the centroid table is bit-identical (pytest-pinned):
+    """Driver-side replica of `kmeans_centroids(exact=True)` — the
+    same IEEE operation sequence as the cluster path, so the centroid
+    table is bit-identical (pytest-pinned):
 
     * cosine = left-fold dot / (sqrt(left-fold ‖a‖²) · sqrt(left-fold
       ‖b‖²)), accumulated elementwise over positions = the zip_with/
@@ -735,7 +694,6 @@ def _kmeans_local(vecs: list, n_centroids: int, n_iter: int) -> list:
 def kmeans_centroids(vectors: DataFrame, n_centroids: int, *,
                      n_iter: int = 5, key: str = "vec_id",
                      vec_col: str = "embedding",
-                     score: str = "fold",
                      exact: bool = False,
                      local_max: int = 65536) -> DataFrame:
     """Distributed Lloyd's k-means → (c_id, c_embedding) centroid table
@@ -758,7 +716,9 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, *,
 
     Empty buckets keep their previous centroid (left join + coalesce).
 
-    Small-input fast path (``exact=True`` + ``score="fold"`` + at most
+    Assignment scores with the fold cosine (bit-exact argmax).
+
+    Small-input fast path (``exact=True`` + at most
     ``local_max`` rows): the identical Lloyd's runs driver-side in one
     ordered collect — bit-equal by construction (same left-associated
     cosine folds, same (-cos, c_id) tie-break, same integer means;
@@ -769,7 +729,7 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, *,
     """
     from pyspark.sql import Window
 
-    if exact and score == "fold" and local_max:
+    if exact and local_max:
         # bounded probe; require >= 1 row — an EMPTY frame must fall
         # through to the distributed path's graceful empty centroid
         # table (_kmeans_local asserts a 2-D shape and would crash)
@@ -797,8 +757,7 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, *,
         mean_expr = F.avg(F.col("v").cast("double"))
 
     for _ in range(n_iter):
-        assigned = ivf_assign(vectors, cent, key=key, vec_col=vec_col,
-                              score=score)
+        assigned = ivf_assign(vectors, cent, key=key, vec_col=vec_col)
         means = (assigned
                  .select("bucket", F.posexplode(F.col(vec_col))
                           .alias("pos", "v"))
@@ -895,16 +854,14 @@ def ann_quantized_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
 
 def save_ivf_bucketed(vectors: DataFrame, centroids: DataFrame,
                       path: str, *, key: str = "vec_id",
-                      vec_col: str = "embedding",
-                      score: str = "gemm") -> None:
+                      vec_col: str = "embedding") -> None:
     """Persist the corpus IVF-bucketed: `partitionBy(bucket)` parquet
     plus the centroid table alongside. This is what turns the IVF
     probe from a filter into a FILE-LEVEL prune — a query touching
     n_probe of C buckets reads n_probe/C of the files, before any row
     is deserialized. At 100 TB that's the difference between an index
-    probe and a corpus scan."""
-    assigned = ivf_assign(vectors, centroids, key=key, vec_col=vec_col,
-                          score=score)
+    probe and a corpus scan. Assignment scores with the fold cosine."""
+    assigned = ivf_assign(vectors, centroids, key=key, vec_col=vec_col)
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
     centroids.write.mode("overwrite").parquet(path + "/_centroids")
 
@@ -912,13 +869,13 @@ def save_ivf_bucketed(vectors: DataFrame, centroids: DataFrame,
 def ivf_topk_pruned(spark, path: str, queries: DataFrame, k: int, *,
                     n_probe: int = 2, key: str = "vec_id",
                     qkey: str = "q_id", vec_col: str = "embedding",
-                    qvec_col: str = "q_embedding",
-                    score: str = "gemm") -> DataFrame:
+                    qvec_col: str = "q_embedding") -> DataFrame:
     """IVF top-k against a `save_ivf_bucketed` store: probe buckets are
     resolved against the (tiny) persisted centroid table, then the scan
     carries `bucket IN (…)` — Catalyst partition-prunes the directories
     (assert `PartitionFilters` in the plan), so I/O ∝ probed buckets.
-    Scoring engine as in `ivf_topk`."""
+    Candidates are scored with the fold cosine, as `ivf_topk(score=
+    "fold")` does."""
     from pyspark.sql import Window
     centroids = spark.read.parquet(path + "/_centroids")
     qc = queries.crossJoin(F.broadcast(centroids))
@@ -932,22 +889,13 @@ def ivf_topk_pruned(spark, path: str, queries: DataFrame, k: int, *,
                                           .distinct().collect()]
     assigned = (spark.read.parquet(path)
                 .where(F.col("bucket").isin(bucket_ids)))
-    if score == "gemm":
-        scored = _gemm_cogroup_topk(
-            assigned.select("bucket", key, vec_col),
-            probes.select(F.col(qkey).alias("q_id"),
-                          F.col(qvec_col).alias("q_embedding"), "bucket"),
-            k, key=key, key_type=dict(assigned.dtypes)[key],
-            vec_col=vec_col, qkey_type=dict(queries.dtypes)[qkey]) \
-            .withColumnRenamed("q_id", qkey)
-    else:
-        scored = (assigned.withColumn("_nv", norm(F.col(vec_col)))
-                  .join(probes.withColumn("_nq", norm(F.col(qvec_col))),
-                        "bucket")
-                  .withColumn("cos",
-                              _cos_pre(F.col(vec_col), F.col(qvec_col),
-                                       F.col("_nv"), F.col("_nq")))
-                  .select(qkey, key, "cos"))
+    scored = (assigned.withColumn("_nv", norm(F.col(vec_col)))
+              .join(probes.withColumn("_nq", norm(F.col(qvec_col))),
+                    "bucket")
+              .withColumn("cos",
+                          _cos_pre(F.col(vec_col), F.col(qvec_col),
+                                   F.col("_nv"), F.col("_nq")))
+              .select(qkey, key, "cos"))
     w = Window.partitionBy(qkey).orderBy(F.desc("cos"), F.col(key))
     return (scored.withColumn("_rn", F.row_number().over(w))
                   .where(F.col("_rn") <= k)

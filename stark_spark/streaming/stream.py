@@ -374,7 +374,8 @@ def stream_contamination(stream: DataFrame, eval_df: DataFrame, *,
 
     - ``impl="literal"`` (default, small eval sets): driver-built
       bitmap applied as a literal-array + ``getbit`` codegen
-      expression; caps at ~1M eval rows (~1.8 MB of plan literal).
+      expression; raises ValueError above
+      `dedup.BLOOM_LITERAL_MAX_HASHES` distinct eval hashes.
       PRECONDITION: eval_df must be deterministic — its hashes are
       collected ONCE here and reused for both the filter and the
       closing join; the collected snapshot is what every micro-batch
@@ -458,8 +459,7 @@ def stream_contamination_ngrams(stream: DataFrame, eval_df: DataFrame,
 def stream_semantic_contamination(stream: DataFrame, eval_df: DataFrame,
                                   centroids: DataFrame, tau: float, *,
                                   key: str = "vec_id",
-                                  vec_col: str = "embedding",
-                                  assign_score: str = "fold") -> DataFrame:
+                                  vec_col: str = "embedding") -> DataFrame:
     """Embedding-level decontamination at ingest — the streaming twin
     of `similarity.semantic_contamination` and the semantic sibling
     of `stream_contamination` (exact/Bloom) and
@@ -481,12 +481,10 @@ def stream_semantic_contamination(stream: DataFrame, eval_df: DataFrame,
     The eval side is dim-sized BY CONTRACT (a benchmark suite), so
     its assigned form localCheckpoints once up front and every
     micro-batch reads the checkpoint blocks — the eval pipeline is
-    never re-evaluated per batch. ``assign_score`` picks the eval
-    side's one-off assignment engine: "fold" (bit-exact argmax
-    tie-break) or "gemm" (BLAS — the large-C choice; at C ≈ √N
-    centroids the fold is N·C interpreted evals). Near-tie ulp
-    divergence between the two is the usual IVF caveat
-    (`ivf_assign` docstring); the scored cos is fold either way."""
+    never re-evaluated per batch. Both sides assign with "gemm" (BLAS —
+    at C ≈ √N centroids the fold is N·C interpreted evals); near-tie
+    ulp divergence from the fold argmax is the usual IVF caveat
+    (`ivf_assign` docstring). The scored cos is fold."""
     from stark_spark.operators.similarity import (_cos_pre, ivf_assign,
                                                   norm)
     # the eval-side norm is materialized INTO the checkpoint (one
@@ -495,7 +493,7 @@ def stream_semantic_contamination(stream: DataFrame, eval_df: DataFrame,
     # joined PAIR instead of three times (dot + both norms), which is
     # the per-batch hot loop (guide §4; bit-identical values)
     ev = (ivf_assign(eval_df, centroids, key=key, vec_col=vec_col,
-                     score=assign_score)
+                     score="gemm")
           .select(F.col(key).alias("eval_id"),
                   F.col(vec_col).alias("_evv"), "bucket",
                   norm(F.col(vec_col)).alias("_evn"))

@@ -353,9 +353,8 @@ def ivf_prune_plan_check(workdir: str) -> bool:
     path = tempfile.mkdtemp(prefix="scale_ivf_store_") + "/store"
     try:
         t0 = time.time()
-        save_ivf_bucketed(emb, cent, path, score="fold")
-        got = ivf_topk_pruned(spark, path, q, 5, n_probe=2,
-                              score="fold")
+        save_ivf_bucketed(emb, cent, path)
+        got = ivf_topk_pruned(spark, path, q, 5, n_probe=2)
         plan = got._jdf.queryExecution().executedPlan().toString()
         if "PartitionFilters" not in plan or not re.search(
                 r"bucket#\d+ IN \(", plan.split("PartitionFilters",

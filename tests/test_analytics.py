@@ -298,44 +298,34 @@ def test_hamming_bucket_skew_guard(spark):
     homogeneous corpus (every fingerprint identical — the template-
     heavy-crawl limit) concentrates a whole band in ONE bucket, which
     the band self-join would turn into a one-task n² straggler. The
-    guard must (a) raise with rescale guidance by default once a
-    bucket exceeds bucket_cap, (b) with oversize='salt' split the
-    bucket and still emit within-salt pairs lazily, and (c) stay
-    plan-silent below the cap (bucket_cap=None twin agrees)."""
+    guard must raise with rescale guidance once a bucket holds more
+    than HAMMING_BUCKET_CAP rows, and below the cap return exactly the
+    brute-force hamming pairs."""
+    import random
+
     import pytest
 
-    from stark_spark.operators.dedup import hamming_near_pairs
-    same = spark.range(50).select(
+    from stark_spark.operators.dedup import (HAMMING_BUCKET_CAP,
+                                             hamming_near_pairs)
+    n = HAMMING_BUCKET_CAP + 1
+    same = spark.range(n).select(
         F.col("id").alias("k"), F.lit(0x0F0F0F0F).cast("long").alias("fp"))
-    with pytest.raises(ValueError, match="bucket_cap"):
-        hamming_near_pairs(same, "k", max_hamming=3, bucket_cap=10)
-    salted = hamming_near_pairs(same, "k", max_hamming=3,
-                                bucket_cap=10, oversize="salt")
-    got = salted.collect()          # lazy until here — no probe job
-    assert got and all(r.hamming == 0 for r in got)
-    # below the cap the guarded plan equals the unguarded one
-    few = spark.range(6).select(
-        F.col("id").alias("k"),
-        (F.col("id") * 1_000_003).cast("long").alias("fp"))
-    guarded = hamming_near_pairs(few, "k", max_hamming=2,
-                                 bucket_cap=10).collect()
-    open_ = hamming_near_pairs(few, "k", max_hamming=2,
-                               bucket_cap=None).collect()
-    assert sorted(map(tuple, guarded)) == sorted(map(tuple, open_))
-    # r12 ADVICE: an unknown oversize mode must error, not silently
-    # fall through to the raise-probe branch
-    with pytest.raises(ValueError, match="oversize"):
-        hamming_near_pairs(few, "k", oversize="Salt")
-    # r12 verdict #6: the raise-mode probe memoizes on the banded
-    # plan's semantic hash — a second call over the same frame hits
-    # the cache (no second aggregate job)
-    from stark_spark.operators import dedup as _dd
-    _dd._PROBE_CACHE.clear()
-    hamming_near_pairs(few, "k", max_hamming=2, bucket_cap=10)
-    assert len(_dd._PROBE_CACHE) == 1
-    key, cached_mx = next(iter(_dd._PROBE_CACHE.items()))
-    hamming_near_pairs(few, "k", max_hamming=2, bucket_cap=10)
-    assert _dd._PROBE_CACHE == {key: cached_mx}
+    with pytest.raises(ValueError, match=f"band-bucket holds {n} rows"):
+        hamming_near_pairs(same, "k", max_hamming=3)
+    # below the cap: random 64-bit fingerprints plus planted near
+    # copies (1–4 flipped bits) against an all-pairs Python check
+    rng = random.Random(7)
+    fps = [rng.getrandbits(64) for _ in range(30)]
+    fps += [fps[i] ^ sum(1 << b for b in rng.sample(range(64), i % 4 + 1))
+            for i in range(12)]
+    signed = [f - (1 << 64) if f >= 1 << 63 else f for f in fps]
+    df = spark.createDataFrame(list(enumerate(signed)), "k long, fp long")
+    want = {(a, b, bin(fps[a] ^ fps[b]).count("1"))
+            for a in range(len(fps)) for b in range(a + 1, len(fps))
+            if bin(fps[a] ^ fps[b]).count("1") <= 3}
+    got = {tuple(r) for r in hamming_near_pairs(df, "k", max_hamming=3)
+           .collect()}
+    assert got == want and len(want) >= 9
 
 
 def test_hamming_near_join_matches_brute_force(spark):
@@ -818,6 +808,24 @@ def test_contamination_bloom_jvm(spark, docs):
         cross_bloom_dups(docs, ev, "doc_id", impl="nope")
 
 
+def test_bloom_literal_path_rejects_large_eval(spark, monkeypatch):
+    """The literal Bloom path collects every distinct eval hash to the
+    driver and embeds the filter in the plan: past
+    BLOOM_LITERAL_MAX_HASHES both callers (batch and streaming) must
+    raise and point to impl="jvm"; at the limit the batch path runs."""
+    from stark_spark.operators import dedup
+    from stark_spark.streaming.stream import stream_contamination
+    docs = spark.createDataFrame([(i, f"doc {i}") for i in range(3)],
+                                 "doc_id long, text string")
+    monkeypatch.setattr(dedup, "BLOOM_LITERAL_MAX_HASHES", 2)
+    with pytest.raises(ValueError, match='impl="jvm"'):
+        dedup.cross_bloom_dups(docs, docs, "doc_id")
+    with pytest.raises(ValueError, match='impl="jvm"'):
+        stream_contamination(docs, docs)
+    monkeypatch.setattr(dedup, "BLOOM_LITERAL_MAX_HASHES", 3)
+    assert dedup.cross_bloom_dups(docs, docs, "doc_id").count() == 3
+
+
 def test_skyline_maximize_directions(spark):
     """maximize= flips dominance per dimension (the reference's custom
     `dominates` use case) — verified against a pandas recompute."""
@@ -994,11 +1002,11 @@ def test_ivf_bucketed_store_prunes_files(spark, emb, tmp_path):
                .select(F.col("vec_id").alias("c_id"),
                        F.col("embedding").alias("c_embedding")))
     path = str(tmp_path / "ivf_store")
-    save_ivf_bucketed(emb, cent, path, score="fold")
+    save_ivf_bucketed(emb, cent, path)
     q = (emb.where(F.col("vec_id") < 5)
             .select(F.col("vec_id").alias("q_id"),
                     F.col("embedding").alias("q_embedding")))
-    got = ivf_topk_pruned(spark, path, q, 5, n_probe=2, score="fold")
+    got = ivf_topk_pruned(spark, path, q, 5, n_probe=2)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     import re
@@ -1054,7 +1062,7 @@ def test_ann_recall_floors(spark, emb):
     assert r34 >= 0.65, f"lsh 3-bit n_probe=4 recall {r34}"
     assert r36 > r34, "extra probes beyond n_bits+1 gained nothing"
 
-    km = kmeans_centroids(emb, 8, n_iter=5, score="gemm")
+    km = kmeans_centroids(emb, 8, n_iter=5)
     riv4 = recall(ivf_topk(emb, q, km, k, n_probe=4,
                            score="gemm").toPandas())
     riv6 = recall(ivf_topk(emb, q, km, k, n_probe=6,
@@ -1105,7 +1113,7 @@ def test_ann_recall_planted_clusters(spark):
                              n_probe=4).toPandas())
     assert rl >= 0.90, f"planted-cluster LSH recall {rl}"
 
-    km = kmeans_centroids(emb, 8, n_iter=5, score="gemm")
+    km = kmeans_centroids(emb, 8, n_iter=5)
     riv = recall(ivf_topk(emb, q, km, k, n_probe=2,
                           score="gemm").toPandas())
     assert riv >= 0.90, f"planted-cluster IVF recall {riv}"
@@ -1188,9 +1196,8 @@ def test_trainer_fastpaths_short_input(spark):
     dist = pq_train(df, dim=64, m_sub=8, n_codes=8, n_iter=2,
                     local_max=0)
     assert fast == dist and len(fast[0]) == 3
-    kf = kmeans_centroids(df, 4, n_iter=2, score="fold", exact=True)
-    kd = kmeans_centroids(df, 4, n_iter=2, score="fold", exact=True,
-                          local_max=0)
+    kf = kmeans_centroids(df, 4, n_iter=2, exact=True)
+    kd = kmeans_centroids(df, 4, n_iter=2, exact=True, local_max=0)
     f = {r.c_id: list(r.c_embedding) for r in kf.collect()}
     d = {r.c_id: [float(x) for x in r.c_embedding]
          for r in kd.collect()}
@@ -1218,9 +1225,8 @@ def test_trainer_fastpaths_bit_equal_random(spark, seed):
                     local_max=0)
     assert fast == dist
 
-    kf = kmeans_centroids(df, 4, n_iter=2, score="fold", exact=True)
-    kd = kmeans_centroids(df, 4, n_iter=2, score="fold", exact=True,
-                          local_max=0)
+    kf = kmeans_centroids(df, 4, n_iter=2, exact=True)
+    kd = kmeans_centroids(df, 4, n_iter=2, exact=True, local_max=0)
     f = {r.c_id: list(r.c_embedding) for r in kf.collect()}
     d = {r.c_id: [float(x) for x in r.c_embedding]
          for r in kd.collect()}
@@ -1228,14 +1234,14 @@ def test_trainer_fastpaths_bit_equal_random(spark, seed):
 
 
 def test_kmeans_local_fastpath_bit_equal(spark, emb):
-    """`kmeans_centroids(exact=True, score="fold")`'s driver-side
+    """`kmeans_centroids(exact=True)`'s driver-side
     small-input fast path must equal the distributed path (forced via
     local_max=0) bit for bit — same cosine folds, same (-cos, c_id)
     tie-break, same integer means. Exact == on every float."""
     from stark_spark.operators.similarity import kmeans_centroids
 
-    fast = kmeans_centroids(emb, 4, n_iter=2, score="fold", exact=True)
-    dist = kmeans_centroids(emb, 4, n_iter=2, score="fold", exact=True,
+    fast = kmeans_centroids(emb, 4, n_iter=2, exact=True)
+    dist = kmeans_centroids(emb, 4, n_iter=2, exact=True,
                             local_max=0)
     f = {r.c_id: list(r.c_embedding) for r in fast.collect()}
     d = {r.c_id: [float(x) for x in r.c_embedding]
@@ -1842,29 +1848,6 @@ def test_ann_knn_join_gemm_assign_empty_centroids(spark):
         assert out.count() == 0, assign
 
 
-def test_semantic_dedup_gemm_matches_fold(spark):
-    """The BLAS per-cluster keep kernel must agree row-for-row with
-    the fold join path on the planted corpus (intra-cluster cos sits
-    ~1e-3 from τ at these SFs — ten orders above BLAS-vs-fold ulp
-    noise, so equality is deterministic, same argument as the
-    planted knn-join gate)."""
-    import __spark_entry__ as E
-    from pyspark.sql import functions as F
-
-    from stark_spark.operators.similarity import semantic_dedup
-
-    emb = (E._planted_knn_corpus(spark, "/root/testdata/sf0.001")
-            .withColumn("cl", F.expr("vec_id div 12")))
-    fold = {(r.vec_id, r.cluster): r.keep
-            for r in semantic_dedup(emb, 0.992, assign_col="cl")
-            .collect()}
-    gemm = {(r.vec_id, r.cluster): r.keep
-            for r in semantic_dedup(emb, 0.992, assign_col="cl",
-                                    score="gemm").collect()}
-    assert fold == gemm and len(fold) > 0
-    assert any(fold.values()) and not all(fold.values())
-
-
 def test_semantic_dedup_centroid_assignment(spark):
     """End-to-end with a real centroid table (no planted labels):
     exact copies must dedup to one survivor, distinct directions all
@@ -2129,6 +2112,25 @@ def test_curation_neardup_stage_effects(spark):
                          .dedup_near("n_chars"))
     kept = sorted(r.doc_id for r in out.df.collect())
     assert kept == [2, 3]  # longer near-copy wins; other untouched
+
+
+def test_is_materialized_scan(spark, tmp_path):
+    """`dedup_near_keep_best` skips its own checkpoint exactly when
+    the input's root is a LogicalRDD: a localCheckpoint()ed frame
+    reads as materialized; a parquet scan and a cache()d frame (an
+    InMemoryRelation only at execution) do not."""
+    from stark_spark.operators.curation import _is_materialized_scan
+    path = str(tmp_path / "docs")
+    spark.range(4).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert not _is_materialized_scan(scan)
+    cached = scan.cache()
+    try:
+        cached.count()
+        assert not _is_materialized_scan(cached)
+    finally:
+        cached.unpersist()
+    assert _is_materialized_scan(scan.localCheckpoint())
 
 
 def test_passage_dedup_rewrites_and_identity(spark):
