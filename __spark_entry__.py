@@ -4669,15 +4669,14 @@ WITH e AS (
             + f" SELECT node, dist FROM d{n_rounds}")
 
 
-def _ann_recall_eval_sql() -> str:
+def _ann_recall_eval_sql(table: dict[str, str]) -> str:
     """Composes the ann_ivf_topk and ann_brute_topk DuckDB mirrors
     (verbatim, as nested-WITH subqueries) and evaluates recall@5 +
     MRR on them — the oracle measures the same two gated pipelines
     the Spark side composes."""
-    live = _base_oracle_sql()
     return f"""
-WITH ret AS ({live['ann_ivf_topk']}),
-tru AS ({live['ann_brute_topk']}),
+WITH ret AS ({table['ann_ivf_topk']}),
+tru AS ({table['ann_brute_topk']}),
 tk AS (SELECT q_id, vec_id FROM tru WHERE rank <= 5),
 hits AS (
   SELECT ret.q_id, CAST(count(*) AS BIGINT) AS n_hits
@@ -4694,1104 +4693,6 @@ SELECT base.q_id,
   CAST(CASE WHEN pos.p IS NULL THEN 0
        ELSE 1000000 // pos.p END AS BIGINT) AS mrr_q6
 FROM base LEFT JOIN hits USING (q_id) LEFT JOIN pos USING (q_id)"""
-
-
-def pending_oracle_sql() -> dict[str, str]:
-    # Mirrors for pending_queries() — prior cohorts live on in
-    # _promoted_oracle_sql_r12/_r11/.../_r6, merged into
-    # oracle_sql(). r12 cohort promoted at the round-13 rotation.
-    return {
-        "curation_neardup_planted": _curation_neardup_planted_sql(),
-        "doc_logprob_kn": _doc_logprob_kn_sql(),
-        "incremental_ingest_indexed": _incremental_ingest_planted_sql(),
-        "doc_logprob_kn3": _doc_logprob_kn3_sql(),
-    }
-
-
-def _promoted_oracle_sql_r12() -> dict[str, str]:
-    # DuckDB mirrors for the gates promoted at the r13 rotation (the
-    # r12 staged cohort, 6 gates): the planted hamming-space family
-    # (closed-form within-cluster mask truth — cross-cluster pairs
-    # impossible by the d >= 4 code property), the span extractors,
-    # the streaming ingest twin (shares the batch join's mirror
-    # verbatim — both collapse to min(hamming) per key pair), and
-    # the Kneser-Ney ppm grid.
-    return {
-        "simhash_pairs_planted": _simhash_pairs_planted_sql(),
-        "incremental_ingest_planted": _incremental_ingest_planted_sql(),
-        "duplicated_spans": _duplicated_spans_sql(),
-        "contaminated_spans": _contaminated_spans_sql(),
-        "stream_ingest_dedup": _incremental_ingest_planted_sql(),
-        "kn_discounts_docs": _kn_discounts_sql(),
-    }
-
-
-def _promoted_oracle_sql_r11() -> dict[str, str]:
-    # DuckDB mirrors for the gates promoted at the r12 rotation (the
-    # r11 staged cohort, 15 gates). The planted knn-join mirror is
-    # the O(n·12) planted-truth form (no argmax); the hier-dissolve
-    # gate shares the dissolve_zones mirror verbatim
-    # (band-order-invariant integers); the fine-percentile gate is
-    # the funnel_latency mirror with a wider VALUES list. Built from
-    # _base_oracle_sql + the r7 cohort (NOT oracle_sql(), which
-    # merges this function — recursion).
-    base = _base_oracle_sql()
-    base.update(_promoted_oracle_sql_r7())
-    fine = base["funnel_latency"].replace(
-        "(VALUES (50), (90), (99))",
-        "(VALUES (1), (25), (50), (75), (99))")
-    assert fine != base["funnel_latency"]
-    return {
-        "ann_knn_join_planted": _ann_knn_join_planted_sql(),
-        "dissolve_zones_hier": base["dissolve_zones"],
-        "funnel_latency_fine": fine,
-        "price_percentiles_exact": _price_percentiles_exact_sql(),
-        "semantic_dedup_planted": _semantic_dedup_planted_sql(),
-        "semantic_contamination_planted":
-            _semantic_contamination_planted_sql(),
-        "sample_token_budget": _sample_token_budget_sql(),
-        "curation_pipeline": _curation_pipeline_sql(),
-        "curation_pipeline_neardup": _curation_pipeline_neardup_sql(),
-        "passage_dedup_planted": _passage_dedup_planted_sql(),
-        "k_core_handoff": _k_core_handoff_sql(),
-        "graph_assortativity": _graph_assortativity_sql(),
-        "rich_club_handoff": _rich_club_sql(),
-        "gini_prices": _gini_prices_sql(),
-        "stream_semantic_contamination":
-            _stream_semantic_contamination_sql(),
-    }
-
-
-def _promoted_oracle_sql_r10() -> dict[str, str]:
-    # DuckDB mirror for the gate promoted at the r11 rotation (the
-    # r10 staged cohort). The batch ADC kernel produces bit-identical
-    # BIGINT scores to the literal path, so its mirror IS the
-    # ann_pq_topk oracle.
-    return {
-        "ann_pq_topk_batch": _base_oracle_sql()["ann_pq_topk"],
-    }
-
-
-def _promoted_oracle_sql_r9() -> dict[str, str]:
-    # DuckDB mirrors for the gates promoted at the r10 rotation (the
-    # r9 staged cohort). Own function: the planted-recall mirror
-    # composes module-level SQL builders.
-    return {
-        # adjacent-tiling dissolve closed forms (see the gate
-        # docstring: q = n div k, rem = n mod k)
-        "dissolve_adjacent_tiles": """
-WITH c AS (
-  SELECT p_partkey % 20 AS g, count(*) AS rows_avail
-  FROM part WHERE p_partkey <= 400 GROUP BY 1),
-k AS (
-  SELECT g, g % 3 + 2 AS k,
-         least(rows_avail, (g % 3 + 2) * (g % 3 + 2)) AS n
-  FROM c),
-q AS (SELECT g, k, n, n // k AS q, n % k AS rem FROM k)
-SELECT CAST(g AS BIGINT) AS g,
-  CAST(n AS BIGINT) AS uarea,
-  CAST(CASE WHEN rem = 0 THEN 2 * (k + q)
-            WHEN q = 0 THEN 2 * n + 2
-            ELSE 2 * k + 2 * q + 2 END AS BIGINT) AS ulen,
-  CAST(1 AS BIGINT) AS n_parts
-FROM q""",
-        # split-waist erosion closed forms (see gate docstring)
-        "sql_st_buffer_erode_split": """
-WITH p AS (
-  SELECT p_partkey, p_partkey % 5 + 4 AS w, p_partkey % 7 + 6 AS h
-  FROM part WHERE p_partkey <= 200)
-SELECT p_partkey,
-  CAST(2 * (w - 3) * (h - 3) AS BIGINT) AS sarea,
-  CAST(2 AS BIGINT) AS snrings,
-  CAST(-1 AS BIGINT) AS svan
-FROM p""",
-        "ann_recall_planted": _rank_eval_sql(
-            _lsh_mp_topk_sql(n_probe=4, k=10,
-                             src=f"({_planted_sql()})",
-                             q_pred="vec_id % 12 = 0"),
-            f"""SELECT q_id, vec_id, rank FROM (
-  SELECT q.vec_id AS q_id, v.vec_id,
-    CAST(row_number() OVER (PARTITION BY q.vec_id
-      ORDER BY {_cos('v.embedding', 'q.embedding')} DESC, v.vec_id)
-      AS INT) AS rank
-  FROM ({_planted_sql()}) q
-  JOIN ({_planted_sql()}) v ON v.vec_id <> q.vec_id
-  WHERE q.vec_id % 12 = 0) t WHERE rank <= 10""", 10),
-        # degenerate-contact closed forms (see the gate docstring)
-        "sql_st_degenerate_contact": """
-WITH p AS (
-  SELECT p_partkey, p_partkey % 4 + 2 AS s, p_partkey % 4 + 4 AS w
-  FROM part WHERE p_partkey <= 200)
-SELECT p_partkey,
-  CAST(2 * s * s AS BIGINT) AS f8area,
-  CAST(8 * s AS BIGINT) AS f8len,
-  CAST(2 AS BIGINT) AS f8rings,
-  CAST(4 * s * s AS BIGINT) AS farea,
-  CAST(1 AS BIGINT) AS frings,
-  CAST(s * s AS BIGINT) AS darea,
-  CAST(-1 AS BIGINT) AS iarea,
-  CAST(w * w - 2 AS BIGINT) AS pacarea,
-  CAST(2 AS BIGINT) AS pacrings
-FROM p""",
-    }
-
-
-def _promoted_oracle_sql_r8() -> dict[str, str]:
-    # DuckDB mirrors for the gates promoted at the r9 rotation (the
-    # r8 staged cohort). Composes _base_oracle_sql() entries, so it
-    # cannot live inside _base_oracle_sql() itself.
-    live = _base_oracle_sql()
-    tru_noself = f"""SELECT q_id, vec_id, row_number() OVER (
-      PARTITION BY q_id ORDER BY rank) AS rank
-    FROM ({live['ann_brute_topk']}) t0 WHERE vec_id <> q_id"""
-    return {
-        # annulus closed forms (w-square minus centered (w-2)-square):
-        #   darea = w²-(w-2)² = 4w-4        dlen = 8w-8
-        #   iarea: annulus ∩ corner 3-box gd = 2·2 - 1·1 = 3
-        #   island: (w+4)-frame minus annulus = (w+4)²-w² + (w-2)²
-        #           (the annulus hole returns as an ISLAND)
-        #   uarea: ∪ disjoint 2-box = 4w-4+4;  uarea2: ∪ gd (overlap
-        #           3, hole shrinks) = 4w-4 + 9 - 3
-        "sql_st_difference_annulus": """
-WITH p AS (
-  SELECT p_partkey, p_partkey % 5 + 4 AS w
-  FROM part WHERE p_partkey <= 200)
-SELECT p_partkey,
-  CAST(4*w - 4 AS BIGINT) AS darea,
-  CAST(8*w - 8 AS BIGINT) AS dlen,
-  CAST(3 AS BIGINT) AS iarea,
-  CAST((w+4)*(w+4) - w*w + (w-2)*(w-2) AS BIGINT) AS island,
-  CAST(4*w AS BIGINT) AS uarea,
-  CAST(4*w + 2 AS BIGINT) AS uarea2
-FROM p""",
-        "ann_recall_lsh_mp": _rank_eval_sql(
-            _lsh_mp_topk_sql(), tru_noself, 5),
-        # erosion closed forms: rectangle minus 1 per side; full
-        # erosion (min side <= 2d) → NULL → -1; hole-shrink identity
-        # (v-2·0.5)² with v = w-2
-        "sql_st_buffer_erode": """
-WITH p AS (
-  SELECT p_partkey, p_partkey % 5 + 4 AS w, p_partkey % 7 + 3 AS h
-  FROM part WHERE p_partkey <= 200)
-SELECT p_partkey,
-  CAST((w-2)*(h-2) AS BIGINT) AS earea,
-  CAST(2*(w-2) + 2*(h-2) AS BIGINT) AS elen,
-  CAST(CASE WHEN least(w, h) <= 4 THEN -1
-       ELSE (w-4)*(h-4) END AS BIGINT) AS evan,
-  CAST((w-3)*(w-3) AS BIGINT) AS hshrink
-FROM p""",
-    }
-
-
-def _promoted_oracle_sql_r7() -> dict[str, str]:
-    # DuckDB mirrors for the gates promoted at the r8 rotation (the
-    # r7 staged cohort). Kept as its own function: the ann_recall
-    # mirrors compose _base_oracle_sql() entries, so they cannot live
-    # inside _base_oracle_sql() itself (infinite recursion).
-    live = _base_oracle_sql()
-    ret_pq = f"""SELECT q_id, vec_id, row_number() OVER (
-      PARTITION BY q_id ORDER BY adc_q, vec_id) AS rank
-    FROM ({live['ann_pq_topk']}) r0"""
-    tru_brute = (f"SELECT q_id, vec_id, rank "
-                 f"FROM ({live['ann_brute_topk']}) t0")
-    ret_lsh = (f"SELECT q_id, vec_id, rank "
-               f"FROM ({live['ann_lsh_topk']}) r0")
-    tru_noself = f"""SELECT q_id, vec_id, row_number() OVER (
-      PARTITION BY q_id ORDER BY rank) AS rank
-    FROM ({live['ann_brute_topk']}) t0 WHERE vec_id <> q_id"""
-    return {
-        # rank derived with the PQ operator's tie order; truth = the
-        # exact brute mirror verbatim
-        "ann_recall_pq": _rank_eval_sql(ret_pq, tru_brute, 5),
-        # LSH retrieves with exclude_self, so truth drops the query's
-        # own row and re-ranks
-        "ann_recall_lsh": _rank_eval_sql(ret_lsh, tru_noself, 5),
-        # union octagon closed forms (integer rectangles, corner
-        # overlap): area = 2wh - (w-dx)(h-dy),
-        # perimeter = 4(w+h) - 2((w-dx)+(h-dy))
-        "sql_st_union": """
-WITH p AS (
-  SELECT p_partkey,
-    p_partkey % 5 + 4 AS w, p_partkey % 7 + 3 AS h,
-    p_partkey % 3 + 1 AS dx, p_partkey % 2 + 1 AS dy
-  FROM part WHERE p_partkey <= 200)
-SELECT p_partkey,
-  CAST(2 * w * h - (w - dx) * (h - dy) AS BIGINT) AS uarea,
-  CAST(4 * (w + h) - 2 * ((w - dx) + (h - dy)) AS BIGINT) AS ulen,
-  CAST((w - dx) * (h - dy) AS BIGINT) AS iarea,
-  CAST(2 * ((w - dx) + (h - dy)) AS BIGINT) AS ilen,
-  CAST(w * h - (w - dx) * (h - dy) AS BIGINT) AS darea,
-  CAST(2 * (w + h) AS BIGINT) AS dlen
-FROM p""",
-        # k-member staggered chain: area 24k - 6(k-1), one region
-        "dissolve_zones": """
-WITH p AS (SELECT p_partkey % 20 AS g FROM part WHERE p_partkey <= 400),
-r AS (SELECT g, count(*) AS k FROM p GROUP BY g)
-SELECT CAST(g AS BIGINT) AS g,
-  CAST(24 * k - 6 * (k - 1) AS BIGINT) AS uarea,
-  CAST(1 AS BIGINT) AS n_parts
-FROM r""",
-        # identical to the common_neighbors mirror except sym is
-        # capped per node to the 8 smallest-id neighbors via the same
-        # row_number window the operator uses; the anti-join (NOT
-        # EXISTS) still probes the FULL edge set e
-        "common_neighbors_capped": """
-WITH raw AS (
-  SELECT user_id AS src,
-    lead(user_id) OVER (PARTITION BY event_type
-                        ORDER BY ts, event_id) AS dst
-  FROM events),
-e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      FROM raw WHERE dst IS NOT NULL AND src <> dst),
-sym AS (
-  SELECT a, b FROM (
-    SELECT a, b, row_number() OVER (PARTITION BY a ORDER BY b) AS rn
-    FROM (SELECT a, b FROM e UNION ALL SELECT b, a FROM e) s) t
-  WHERE rn <= 8),
-cand AS (
-  SELECT s1.b AS a, s2.b AS b, count(*) AS n_common
-  FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b
-  GROUP BY s1.b, s2.b),
-nc AS (SELECT c.a, c.b, c.n_common FROM cand c
-       WHERE NOT EXISTS (SELECT 1 FROM e
-                         WHERE e.a = c.a AND e.b = c.b))
-SELECT a, b, CAST(n_common AS BIGINT) AS n_common FROM nc
-ORDER BY n_common DESC, a, b LIMIT 20""",
-    }
-
-
-def _promoted_oracle_sql_r6() -> dict[str, str]:
-    # DuckDB mirrors for pending_queries() — same conventions as
-    # oracle_sql(): integers everywhere, float ops operand-order-
-    # mirrored, ln() quantized to BIGINT before any summation.
-    zx = repr(255 / 2048.0)        # exact binary scale factors
-    zy = repr(255 / 4096.0)
-    return {
-        # HDR bucket/bounds decode mirrored in DuckDB dialect
-        # (// for div, ltrim(s,'0'), >>/<< shifts); nearest-rank
-        # ceil via the sign-free (a+9999)//10000
-        "price_quantiles_hdr": """
-WITH v AS (
-  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem
-), b AS (
-  SELECT CASE WHEN v < 32 THEN v
-         ELSE (length(ltrim(bin(v), '0')) - 1 - 5) * 32
-              + (v >> CAST(length(ltrim(bin(v), '0')) - 1 - 5 AS INT))
-         END AS bucket
-  FROM v
-), hist AS (
-  SELECT bucket, count(*) AS cnt FROM b GROUP BY bucket
-), tot AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS n FROM hist
-), cdf AS (
-  SELECT bucket,
-    CAST(sum(cnt) OVER (ORDER BY bucket
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-  FROM hist
-), qs(q_bp) AS (
-  VALUES (5000), (9000), (9900), (9999)
-), sel AS (
-  SELECT q_bp, min(bucket) AS bucket, min(n) AS n
-  FROM cdf, tot, qs
-  WHERE cum >= (q_bp * n + 9999) // 10000
-  GROUP BY q_bp
-)
-SELECT CAST(q_bp AS INT) AS q_bp,
-  CAST(CASE WHEN bucket < 32 THEN bucket
-       ELSE ((bucket % 32 + 32) + 1) << CAST(bucket // 32 - 1 AS INT)
-       END - CASE WHEN bucket < 32 THEN 0 ELSE 1 END AS BIGINT)
-    AS estimate,
-  n
-FROM sel""",
-
-        "parts_overlap_kmv": f"""
-WITH ha AS (
-  SELECT DISTINCT {_hex13_sql('h32')} AS h FROM (
-    SELECT md5(CAST(l_partkey AS VARCHAR)) AS h32 FROM lineitem
-    WHERE year(l_shipdate) = 1996) t
-), hb AS (
-  SELECT DISTINCT {_hex13_sql('h32')} AS h FROM (
-    SELECT md5(CAST(l_partkey AS VARCHAR)) AS h32 FROM lineitem
-    WHERE year(l_shipdate) = 1997) t
-), sa AS (SELECT h FROM ha ORDER BY h LIMIT 128),
-   sb AS (SELECT h FROM hb ORDER BY h LIMIT 128),
-   m AS (
-  SELECT COALESCE(sa.h, sb.h) AS h,
-    CASE WHEN sa.h IS NULL THEN 0 ELSE 1 END AS in_a,
-    CASE WHEN sb.h IS NULL THEN 0 ELSE 1 END AS in_b
-  FROM sa FULL OUTER JOIN sb ON sa.h = sb.h
-), l AS (SELECT * FROM m ORDER BY h LIMIT 128),
-   agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS k_used,
-    CAST(max(h) AS BIGINT) AS kth_min,
-    CAST(sum(in_a * in_b) AS BIGINT) AS n_both
-  FROM l
-), est AS (
-  SELECT *, CAST(CASE WHEN k_used < 128 OR kth_min <= 0 THEN k_used
-       ELSE (k_used - 1) * 4503599627370496 // kth_min END AS BIGINT)
-    AS union_est
-  FROM agg
-)
-SELECT k_used, kth_min, n_both, union_est,
-  CAST(n_both * union_est // k_used AS BIGINT) AS inter_est,
-  CAST(n_both * 10000 // k_used AS BIGINT) AS jaccard_bp
-FROM est""",
-
-        # gaps-and-islands SCD2; IS DISTINCT FROM == eqNullSafe
-        "scd2_user_state": """
-WITH s AS (
-  SELECT user_id, ts, event_type,
-    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
-         THEN 1 ELSE 0 END AS chg
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), i AS (
-  SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-  FROM s
-), v AS (
-  SELECT user_id, island, any_value(event_type) AS event_type,
-    min(ts) AS valid_from
-  FROM i GROUP BY user_id, island
-)
-SELECT user_id, event_type, valid_from,
-  lead(valid_from) OVER w2 AS valid_to,
-  CAST(CASE WHEN lead(valid_from) OVER w2 IS NULL THEN 1 ELSE 0 END
-       AS INT) AS is_current
-FROM v
-WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from)""",
-
-        "attribution_linear": """
-WITH r AS (
-  SELECT user_id, ts, event_id, event_type,
-    CAST(round(value * 100) AS BIGINT) AS cents,
-    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg
-  FROM events
-), convs AS (
-  SELECT user_id, seg AS cidx, cents FROM r WHERE event_type = 'purchase'
-), touches AS (
-  SELECT user_id, ts, event_id, event_type, seg + 1 AS cidx
-  FROM r WHERE event_type <> 'purchase'
-), j AS (
-  SELECT t.event_type AS channel, c.cents,
-    row_number() OVER (PARTITION BY t.user_id, t.cidx
-                       ORDER BY t.ts, t.event_id) AS rn,
-    count(*) OVER (PARTITION BY t.user_id, t.cidx) AS n
-  FROM touches t JOIN convs c
-    ON c.user_id = t.user_id AND c.cidx = t.cidx
-), per AS (
-  SELECT channel,
-    10000 // n + CASE WHEN rn = 1 THEN 10000 % n ELSE 0 END AS credit,
-    cents // n + CASE WHEN rn = 1 THEN cents % n ELSE 0 END AS rev
-  FROM j
-), cred AS (
-  SELECT channel, CAST(count(*) AS BIGINT) AS n_touches,
-    CAST(sum(credit) AS BIGINT) AS credit_bp,
-    CAST(sum(rev) AS BIGINT) AS revenue_c
-  FROM per GROUP BY channel
-), direct AS (
-  SELECT 'direct' AS channel, CAST(count(*) AS BIGINT) AS n_touches,
-    CAST(count(*) * 10000 AS BIGINT) AS credit_bp,
-    CAST(COALESCE(sum(c.cents), 0) AS BIGINT) AS revenue_c
-  FROM convs c
-  LEFT JOIN (SELECT DISTINCT user_id, cidx FROM touches) t
-    ON t.user_id = c.user_id AND t.cidx = c.cidx
-  WHERE t.user_id IS NULL
-  HAVING count(*) > 0
-)
-SELECT * FROM cred UNION ALL SELECT * FROM direct""",
-
-        "zorder_events": f"""
-WITH g AS (
-  SELECT event_id,
-    CAST(floor((least(greatest(CAST(user_id AS DOUBLE),
-                               CAST(0 AS DOUBLE)),
-                      CAST(2048 AS DOUBLE)) - CAST(0 AS DOUBLE))
-         * CAST({zx} AS DOUBLE)) AS BIGINT) AS sx,
-    CAST(floor((least(greatest(CAST(date_diff('day', DATE '2020-01-01',
-                                    CAST(ts AS DATE)) AS DOUBLE),
-                               CAST(0 AS DOUBLE)),
-                      CAST(4096 AS DOUBLE)) - CAST(0 AS DOUBLE))
-         * CAST({zy} AS DOUBLE)) AS BIGINT) AS sy
-  FROM events
-)
-SELECT event_id,
-  CAST({_zorder_interleave_sql('sx', 'sy', _ZBITS)} AS BIGINT) AS zkey
-FROM g""",
-
-        "user_retention_km": """
-WITH pu AS (
-  SELECT user_id, min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1
-  FROM events GROUP BY user_id
-), mx AS (SELECT max(d1) AS dm FROM pu),
-   obs AS (
-  SELECT CAST(date_diff('day', d0, d1) AS BIGINT) AS t,
-    CASE WHEN date_diff('day', d1, dm) > 7 THEN 1 ELSE 0 END AS e
-  FROM pu, mx
-), per_t AS (
-  SELECT t, CAST(sum(e) AS BIGINT) AS n_events,
-    CAST(sum(1 - e) AS BIGINT) AS n_censored,
-    CAST(count(*) AS BIGINT) AS n_obs
-  FROM obs GROUP BY t
-), rk AS (
-  SELECT *, CAST(sum(n_obs) OVER (ORDER BY t
-    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
-    AS n_risk
-  FROM per_t
-), tm AS (
-  SELECT *, CASE WHEN n_events = 0 THEN CAST(0 AS BIGINT)
-    WHEN n_risk = n_events THEN CAST(-4611686018427387904 AS BIGINT)
-    ELSE CAST(round(1000000.0 * ln(CAST(n_risk - n_events AS DOUBLE)
-         / CAST(n_risk AS DOUBLE))) AS BIGINT) END AS term
-  FROM rk
-)
-SELECT t, n_risk, n_events, n_censored,
-  CAST(greatest(sum(term) OVER (ORDER BY t
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-    -4611686018427387904) AS BIGINT) AS log_surv_q6
-FROM tm""",
-
-        "event_sequences_3": """
-WITH s AS (
-  SELECT event_type AS step_1,
-    lead(event_type, 1) OVER w AS step_2,
-    lead(event_type, 2) OVER w AS step_3
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT step_1, step_2, step_3, count(*) AS n_occurrences
-FROM s WHERE step_3 IS NOT NULL
-GROUP BY step_1, step_2, step_3""",
-
-        "lineitem_corr": _corr_oracle_sql(),
-
-        # PSI mirror: expression text identical to drift.psi_drift
-        "drift_psi_value": """
-WITH b AS (
-  SELECT least(CAST(round(value * 100) AS BIGINT) // 5000, 9) AS bin,
-    CASE WHEN date_part('day', ts) <= 15 THEN 1 ELSE 0 END AS is_a
-  FROM events
-), counts AS (
-  SELECT bin, CAST(sum(is_a) AS BIGINT) AS n_a,
-    CAST(sum(1 - is_a) AS BIGINT) AS n_b
-  FROM b GROUP BY bin
-), tot AS (
-  SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
-    CAST(sum(n_b) AS BIGINT) AS tot_b,
-    CAST(count(*) AS BIGINT) AS k
-  FROM counts
-)
-SELECT bin, n_a, n_b,
-  CAST(round(1000000.0 * (
-    (CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + k * 1 AS DOUBLE)
-     - CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + k * 1 AS DOUBLE))
-    * ln((CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + k * 1 AS DOUBLE))
-         / (CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + k * 1 AS DOUBLE)))
-  )) AS BIGINT) AS psi_term_q6
-FROM counts, tot""",
-
-        "chi2_type_dow": """
-WITH cells AS (
-  SELECT event_type AS r,
-    CAST(date_part('dow', ts) + 1 AS INT) AS c,
-    CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-), rt AS (SELECT r, CAST(sum(n) AS BIGINT) AS n_r FROM cells GROUP BY r),
-   ct AS (SELECT c, CAST(sum(n) AS BIGINT) AS n_c FROM cells GROUP BY c),
-   g AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot FROM cells)
-SELECT cells.r, cells.c, n,
-  CAST(round(1000000.0 * (CAST(n_r AS DOUBLE) * CAST(n_c AS DOUBLE)
-       / CAST(n_tot AS DOUBLE))) AS BIGINT) AS expected_q6,
-  CAST(round(1000000.0 *
-    ((CAST(n AS DOUBLE) - (CAST(n_r AS DOUBLE) * CAST(n_c AS DOUBLE)
-        / CAST(n_tot AS DOUBLE)))
-     * (CAST(n AS DOUBLE) - (CAST(n_r AS DOUBLE) * CAST(n_c AS DOUBLE)
-        / CAST(n_tot AS DOUBLE)))
-     / (CAST(n_r AS DOUBLE) * CAST(n_c AS DOUBLE)
-        / CAST(n_tot AS DOUBLE)))) AS BIGINT) AS chi2_term_q6
-FROM cells JOIN rt ON cells.r = rt.r
-JOIN ct ON cells.c = ct.c CROSS JOIN g""",
-
-        "postings_index": """
-WITH tok AS (
-  SELECT DISTINCT doc_id, token FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-    FROM documents) t
-  WHERE token <> ''
-)
-SELECT token, CAST(count(*) AS BIGINT) AS df,
-  string_agg(CAST(doc_id AS VARCHAR), ' ' ORDER BY doc_id) AS postings
-FROM tok GROUP BY token""",
-
-        # boundary ranks use CAST(q AS DOUBLE)·n — the DOUBLE product
-        # (not DuckDB's exact DECIMAL) to mirror Spark's float ceil
-        "order_price_bins": """
-WITH o AS (
-  SELECT o_orderpriority AS g, o_orderkey,
-    CAST(round(o_totalprice * 100) AS BIGINT) AS v
-  FROM orders
-), r AS (
-  SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-    count(*) OVER (PARTITION BY g) AS n
-  FROM o
-), b AS (
-  SELECT g, v AS bnd
-  FROM r JOIN (VALUES (0.1), (0.2), (0.3), (0.4), (0.5), (0.6),
-               (0.7), (0.8), (0.9)) AS qv(q)
-    ON rn = greatest(CAST(ceil(CAST(q AS DOUBLE) * n) AS BIGINT), 1)
-), a AS (
-  SELECT o.g, o.o_orderkey, any_value(o.v) AS v,
-    CAST(sum(CASE WHEN o.v > b.bnd THEN 1 ELSE 0 END) AS INT) AS bin
-  FROM o JOIN b ON b.g = o.g
-  GROUP BY o.g, o.o_orderkey
-)
-SELECT g AS o_orderpriority, bin, CAST(count(*) AS BIGINT) AS n,
-  min(v) AS min_v, max(v) AS max_v
-FROM a GROUP BY g, bin""",
-
-        # md5-parity arm assignment + pooled two-proportion z, chain
-        # text identical to drift.two_proportion_ztest
-        "ab_ztest_purchase": """
-WITH per AS (
-  SELECT user_id,
-    CAST((strpos('0123456789abcdef',
-          substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) - 1) % 2 AS INT)
-      AS a,
-    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS c
-  FROM events GROUP BY user_id
-), agg AS (
-  SELECT CAST(sum(1 - a) AS BIGINT) AS n_a,
-    CAST(sum((1 - a) * c) AS BIGINT) AS x_a,
-    CAST(sum(a) AS BIGINT) AS n_b,
-    CAST(sum(a * c) AS BIGINT) AS x_b
-  FROM per
-)
-SELECT n_a, x_a, n_b, x_b,
-  CAST(CASE WHEN x_a + x_b = 0 OR x_a + x_b = n_a + n_b THEN 0
-  ELSE round(1000000.0 * (
-    (CAST(x_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-     - CAST(x_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-    / sqrt((CAST(x_a + x_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-    * (1.0 - CAST(x_a + x_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-    * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
-  )) END AS BIGINT) AS z_q6
-FROM agg""",
-
-        "hourly_acf": _acf_oracle_sql(),
-
-        # hourly cents resample → last same-phase train hour →
-        # integer MAE / floor-div bias (// floors, matching the
-        # operator's pmod floor-division)
-        "forecast_snaive": """
-WITH hours AS (
-  SELECT event_type AS k, epoch_us(ts) // 3600000000 AS h,
-    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS hv
-  FROM events GROUP BY 1, 2
-), sp AS (
-  SELECT epoch_us(TIMESTAMP '2024-01-24 00:00:00') // 3600000000 AS s
-), train AS (SELECT hours.* FROM hours, sp WHERE h < s),
-   test AS (SELECT hours.* FROM hours, sp WHERE h >= s),
-   lp AS (
-  SELECT k, h % 168 AS phase, max(h) AS h_train
-  FROM train GROUP BY k, h % 168
-), scored AS (
-  SELECT t.k, t.hv, tr.hv AS v_hat
-  FROM test t
-  JOIN lp ON lp.k = t.k AND lp.phase = t.h % 168
-  JOIN train tr ON tr.k = t.k AND tr.h = lp.h_train
-)
-SELECT k AS event_type, CAST(count(*) AS BIGINT) AS n_test_hours,
-  CAST(CAST(sum(abs(hv - v_hat)) AS BIGINT) // count(*) AS BIGINT)
-    AS mae_c,
-  CAST(CAST(sum(hv - v_hat) AS BIGINT) // count(*) AS BIGINT)
-    AS bias_c
-FROM scored GROUP BY k""",
-
-        # per-dim boundaries at rank ceil(double(q)·n); scores count
-        # strict-greater boundaries (recency inverted)
-        "rfm_segments": """
-WITH ev AS (
-  SELECT user_id AS u, CAST(ts AS DATE) AS d,
-    CAST(round(value * 100) AS BIGINT) AS c
-  FROM events WHERE event_type = 'purchase'
-), per AS (
-  SELECT u, max(d) AS last_d, CAST(count(*) AS BIGINT) AS freq,
-    CAST(sum(c) AS BIGINT) AS mon
-  FROM ev GROUP BY u
-), mx AS (SELECT max(last_d) AS dm FROM per),
-   p2 AS (
-  SELECT u, CAST(date_diff('day', last_d, dm) AS BIGINT) AS rec,
-    freq, mon
-  FROM per, mx
-), qv(q) AS (VALUES (0.2), (0.4), (0.6), (0.8)),
-   r_rec AS (SELECT rec AS v, row_number() OVER (ORDER BY rec) AS rn,
-             count(*) OVER () AS n FROM p2),
-   b_rec AS (SELECT v FROM r_rec JOIN qv
-             ON rn = greatest(CAST(ceil(CAST(q AS DOUBLE) * n)
-                              AS BIGINT), 1)),
-   r_frq AS (SELECT freq AS v, row_number() OVER (ORDER BY freq) AS rn,
-             count(*) OVER () AS n FROM p2),
-   b_frq AS (SELECT v FROM r_frq JOIN qv
-             ON rn = greatest(CAST(ceil(CAST(q AS DOUBLE) * n)
-                              AS BIGINT), 1)),
-   r_mon AS (SELECT mon AS v, row_number() OVER (ORDER BY mon) AS rn,
-             count(*) OVER () AS n FROM p2),
-   b_mon AS (SELECT v FROM r_mon JOIN qv
-             ON rn = greatest(CAST(ceil(CAST(q AS DOUBLE) * n)
-                              AS BIGINT), 1)),
-   s AS (
-  SELECT u, mon,
-    5 - (SELECT count(*) FROM b_rec WHERE p2.rec > b_rec.v) AS s_rec,
-    1 + (SELECT count(*) FROM b_frq WHERE p2.freq > b_frq.v) AS s_frq,
-    1 + (SELECT count(*) FROM b_mon WHERE p2.mon > b_mon.v) AS s_mon
-  FROM p2
-)
-SELECT concat(s_rec, s_frq, s_mon) AS rfm,
-  CAST(count(*) AS BIGINT) AS n_users,
-  CAST(sum(mon) AS BIGINT) AS monetary_c_sum
-FROM s GROUP BY concat(s_rec, s_frq, s_mon)""",
-
-        # each rule mirrored as its own aggregate; NULL comparisons
-        # drop out of FILTERs exactly as they do from Spark's
-        # boolean-cast sums
-        "data_expectations": """
-SELECT 'orders.unique:o_orderkey' AS rule,
-  CAST(count(*) AS BIGINT) AS n_checked,
-  CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS n_violations
-FROM orders
-UNION ALL
-SELECT 'orders.range:o_totalprice', CAST(count(o_totalprice) AS BIGINT),
-  CAST(count(*) FILTER (o_totalprice < 0 OR o_totalprice > 600000)
-       AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'orders.regex:o_orderstatus',
-  CAST(count(o_orderstatus) AS BIGINT),
-  CAST(count(*) FILTER (o_orderstatus IS NOT NULL
-       AND NOT regexp_matches(o_orderstatus, '^[OFP]$')) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'orders.not_null:o_custkey', CAST(count(*) AS BIGINT),
-  CAST(count(*) FILTER (o_custkey IS NULL) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'lineitem.fk:l_orderkey', CAST(count(l_orderkey) AS BIGINT),
-  CAST(count(*) FILTER (l_orderkey IS NOT NULL AND NOT EXISTS (
-    SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)) AS BIGINT)
-FROM lineitem
-UNION ALL
-SELECT 'lineitem.range:l_discount', CAST(count(l_discount) AS BIGINT),
-  CAST(count(*) FILTER (l_discount < 0.0 OR l_discount > 0.05)
-       AS BIGINT)
-FROM lineitem
-UNION ALL
-SELECT 'lineitem.regex:l_returnflag',
-  CAST(count(l_returnflag) AS BIGINT),
-  CAST(count(*) FILTER (l_returnflag IS NOT NULL
-       AND NOT regexp_matches(l_returnflag, '^[ANR]$')) AS BIGINT)
-FROM lineitem""",
-
-        "cube_users_hll": _hll_cube_sql(),
-
-        # SCD2 versions (non-purchase states) + interval-predicate
-        # join — must equal Spark's as-of union-sweep exactly
-        "scd2_pit_enrich": """
-WITH st AS (
-  SELECT user_id, ts, event_type AS state FROM events
-  WHERE event_type <> 'purchase'
-), s AS (
-  SELECT user_id, ts, state,
-    CASE WHEN lag(state) OVER w IS DISTINCT FROM state
-         THEN 1 ELSE 0 END AS chg
-  FROM st WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), i AS (
-  SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-  FROM s
-), v AS (
-  SELECT user_id, any_value(state) AS state, min(ts) AS valid_from
-  FROM i GROUP BY user_id, island
-), v2 AS (
-  SELECT user_id, state, valid_from,
-    lead(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from)
-      AS valid_to
-  FROM v
-), p AS (
-  SELECT event_id, user_id, ts,
-    CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT p.event_id, p.user_id, p.ts, p.cents, v2.state
-FROM p LEFT JOIN v2 ON v2.user_id = p.user_id
-  AND v2.valid_from <= p.ts
-  AND (v2.valid_to IS NULL OR p.ts < v2.valid_to)""",
-
-        "table_diff_orders": """
-WITH other AS (
-  SELECT o_orderkey,
-    CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10
-         ELSE o_totalprice END AS o_totalprice,
-    o_orderstatus,
-    CASE WHEN o_orderkey % 13 = 0 THEN 'CHANGED'
-         ELSE o_orderpriority END AS o_orderpriority
-  FROM orders WHERE o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey + 50000000, o_totalprice, o_orderstatus,
-    o_orderpriority
-  FROM orders WHERE o_orderkey % 1000 = 3
-), j AS (
-  SELECT b.o_orderkey AS bk, o.o_orderkey AS ok,
-    b.o_totalprice IS DISTINCT FROM o.o_totalprice AS ch_p,
-    b.o_orderstatus IS DISTINCT FROM o.o_orderstatus AS ch_s,
-    b.o_orderpriority IS DISTINCT FROM o.o_orderpriority AS ch_r
-  FROM orders b FULL OUTER JOIN other o
-    ON b.o_orderkey = o.o_orderkey
-), c AS (
-  SELECT
-    CAST(count(*) FILTER (bk IS NULL) AS BIGINT) AS added,
-    CAST(count(*) FILTER (ok IS NULL) AS BIGINT) AS removed,
-    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL
-         AND NOT (ch_p OR ch_s OR ch_r)) AS BIGINT) AS unchanged,
-    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL
-         AND (ch_p OR ch_s OR ch_r)) AS BIGINT) AS changed_rows,
-    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL AND ch_p)
-         AS BIGINT) AS ch_price,
-    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL AND ch_s)
-         AS BIGINT) AS ch_status,
-    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL AND ch_r)
-         AS BIGINT) AS ch_prio
-  FROM j
-)
-SELECT '_added' AS item, added AS n FROM c
-UNION ALL SELECT '_removed', removed FROM c
-UNION ALL SELECT '_unchanged', unchanged FROM c
-UNION ALL SELECT '_changed_rows', changed_rows FROM c
-UNION ALL SELECT 'col:o_totalprice', ch_price FROM c
-UNION ALL SELECT 'col:o_orderstatus', ch_status FROM c
-UNION ALL SELECT 'col:o_orderpriority', ch_prio FROM c""",
-
-        "basket_lift_pairs": """
-WITH m AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d,
-    event_type AS item
-  FROM events
-), pairs AS (
-  SELECT a.item AS item_a, b.item AS item_b,
-    CAST(count(*) AS BIGINT) AS n_ab
-  FROM m a JOIN m b ON a.user_id = b.user_id AND a.d = b.d
-    AND a.item < b.item
-  GROUP BY a.item, b.item
-), singles AS (
-  SELECT item, CAST(count(*) AS BIGINT) AS n_i FROM m GROUP BY item
-), total AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_baskets
-  FROM (SELECT DISTINCT user_id, d FROM m)
-)
-SELECT item_a, item_b, n_ab, sa.n_i AS n_a, sb.n_i AS n_b, n_baskets,
-  CAST(round(1000000.0 * ((CAST(n_baskets AS DOUBLE)
-       * CAST(n_ab AS DOUBLE))
-       / (CAST(sa.n_i AS DOUBLE) * CAST(sb.n_i AS DOUBLE))))
-       AS BIGINT) AS lift_q6
-FROM pairs
-JOIN singles sa ON sa.item = pairs.item_a
-JOIN singles sb ON sb.item = pairs.item_b
-CROSS JOIN total""",
-
-        "value_percent_rank": """
-WITH e AS (
-  SELECT event_id, event_type,
-    CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-)
-SELECT event_id, event_type, cents AS value_c,
-  CAST(CASE WHEN count(*) OVER (PARTITION BY event_type) <= 1 THEN 0
-       ELSE (rank() OVER (PARTITION BY event_type ORDER BY cents) - 1)
-            * 10000
-            // (count(*) OVER (PARTITION BY event_type) - 1)
-       END AS BIGINT) AS pr_bp
-FROM e""",
-
-        "ols_price_qty": """
-WITH pts AS (
-  SELECT n_name,
-    CAST(round(l_quantity) AS BIGINT) AS x,
-    CAST(round(l_extendedprice) AS BIGINT) AS y
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-), m AS (
-  SELECT n_name, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-    CAST(sum(x * x) AS BIGINT) AS sxx,
-    CAST(sum(y * y) AS BIGINT) AS syy,
-    CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM pts GROUP BY n_name
-)
-SELECT n_name, n,
-  CASE WHEN n >= 2 AND (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
-    THEN CAST(round(1000000.0 * (((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-       / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))))) AS BIGINT)
-  END AS slope_q6,
-  CASE WHEN n >= 2 AND (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
-    THEN CAST(round(1000000.0 * (((CAST(sy AS DOUBLE)
-       - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-          / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-         * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)))) AS BIGINT)
-  END AS intercept_q6,
-  CASE WHEN n >= 2 AND (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
-       AND (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-       - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0.0
-    THEN CAST(round(1000000.0 * ((((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-       * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
-       / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-       * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-       - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))))) AS BIGINT)
-  END AS r2_q6
-FROM m""",
-
-        "cms_user_counts": _cms_oracle_sql(),
-
-
-        "jaccard_prefix_pairs": """
-WITH tok AS (
-  SELECT DISTINCT doc_id, t AS tok
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-        FROM documents)
-), sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM tok GROUP BY doc_id
-), inter AS (
-  SELECT ta.doc_id AS a, tb.doc_id AS b,
-    CAST(count(*) AS BIGINT) AS n_common
-  FROM tok ta JOIN tok tb
-    ON ta.tok = tb.tok AND ta.doc_id < tb.doc_id
-  GROUP BY 1, 2
-)
-SELECT a, b, n_common, sa.sz AS sz_a, sb.sz AS sz_b,
-  CAST(1000000 * n_common // (sa.sz + sb.sz - n_common) AS BIGINT)
-    AS jaccard_q6
-FROM inter
-JOIN sizes sa ON sa.doc_id = a
-JOIN sizes sb ON sb.doc_id = b
-WHERE 1000000 * n_common // (sa.sz + sb.sz - n_common) >= 950000""",
-
-        "bpe_merge_pairs": """
-WITH toks AS (
-  SELECT lower(t) AS w
-  FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
-  WHERE regexp_matches(lower(t), '^[a-z]+$') AND length(t) >= 2
-), words AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY w
-), pairs AS (
-  -- DuckDB can't correlate generate_series bounds: fixed 1..128
-  -- grid + filter (no [a-z]+ token in the corpus exceeds 129 chars)
-  SELECT substring(w, CAST(i AS INT), 2) AS pair, c
-  FROM words, generate_series(1, 128) t(i)
-  WHERE i <= length(w) - 1
-)
-SELECT pair, CAST(sum(c) AS BIGINT) AS cnt
-FROM pairs GROUP BY pair
-ORDER BY cnt DESC, pair ASC LIMIT 50""",
-
-        "bfs_reach": _bfs_sql(4),
-        "stream_cms_counts": _cms_oracle_sql(),
-        "sssp_latency": _sssp_sql(4),
-
-        "golden_record": """
-WITH src AS (
-  SELECT user_id, ts, event_id,
-    CASE WHEN event_type = 'purchase'
-         THEN CAST(round(value * 100) AS BIGINT) END AS pc,
-    CASE WHEN event_type <> 'purchase' THEN event_type END AS ot
-  FROM events
-), a1 AS (
-  SELECT user_id,
-    first(pc ORDER BY ts DESC, event_id DESC) AS last_purchase_c
-  FROM src WHERE pc IS NOT NULL GROUP BY user_id
-), a2 AS (
-  SELECT user_id,
-    first(ot ORDER BY ts DESC, event_id DESC) AS last_other_type
-  FROM src WHERE ot IS NOT NULL GROUP BY user_id
-), ls AS (
-  SELECT user_id,
-    first(ts ORDER BY ts DESC, event_id DESC) AS last_seen_ts
-  FROM src GROUP BY user_id
-)
-SELECT ls.user_id, a1.last_purchase_c, a2.last_other_type,
-  ls.last_seen_ts
-FROM ls
-LEFT JOIN a1 USING (user_id)
-LEFT JOIN a2 USING (user_id)""",
-
-        "latency_cube_hdr": _hdr_cube_sql(),
-
-        "doc_logprob_bigram": """
-WITH lsts AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '')
-    AS lst
-  FROM documents
-), pairs AS (
-  SELECT doc_id,
-    unnest(list_transform(generate_series(1, len(lst) - 1),
-                          i -> lst[i] || ' ' || lst[i + 1])) AS pair
-  FROM lsts WHERE len(lst) >= 2
-), tk AS (
-  SELECT token FROM (
-    SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
-  WHERE token <> ''
-), uni AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS cu FROM tk GROUP BY token
-), vv AS (
-  SELECT CAST(count(*) AS BIGINT) AS v FROM uni
-), big AS (
-  SELECT pair, CAST(count(*) AS BIGINT) AS cb FROM pairs GROUP BY pair
-)
-SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-  CAST(sum(CAST(floor(ln(CAST(big.cb + 1 AS DOUBLE)
-       / CAST(uni.cu + vv.v AS DOUBLE)) * 1000000) AS BIGINT))
-    AS BIGINT) AS logprob2_q
-FROM pairs p
-JOIN big USING (pair)
-JOIN uni ON uni.token = split_part(p.pair, ' ', 1), vv
-GROUP BY p.doc_id""",
-
-        "pivot_type_dow": """
-SELECT event_type,
-  CAST(count(*) FILTER (dayofweek(ts) + 1 = 1) AS BIGINT) AS d1,
-  CAST(count(*) FILTER (dayofweek(ts) + 1 = 2) AS BIGINT) AS d2,
-  CAST(count(*) FILTER (dayofweek(ts) + 1 = 3) AS BIGINT) AS d3,
-  CAST(count(*) FILTER (dayofweek(ts) + 1 = 4) AS BIGINT) AS d4,
-  CAST(count(*) FILTER (dayofweek(ts) + 1 = 5) AS BIGINT) AS d5,
-  CAST(count(*) FILTER (dayofweek(ts) + 1 = 6) AS BIGINT) AS d6,
-  CAST(count(*) FILTER (dayofweek(ts) + 1 = 7) AS BIGINT) AS d7
-FROM events GROUP BY event_type""",
-
-        "min_cost_supplier": """
-WITH offers AS (
-  SELECT l_partkey, l_suppkey,
-    CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c
-  FROM lineitem
-), mins AS (
-  SELECT l_partkey, min(price_c) AS min_c FROM offers GROUP BY l_partkey
-)
-SELECT DISTINCT offers.l_partkey, offers.l_suppkey, offers.price_c
-FROM offers JOIN mins USING (l_partkey)
-WHERE offers.price_c = mins.min_c""",
-
-        "cumulative_reach": """
-WITH fs AS (
-  SELECT user_id, min(CAST(ts AS DATE)) AS day FROM events
-  GROUP BY user_id
-), daily AS (
-  SELECT day, CAST(count(*) AS BIGINT) AS new_users FROM fs GROUP BY day
-)
-SELECT CAST(day AS VARCHAR) AS day, new_users,
-  CAST(sum(new_users) OVER (ORDER BY day
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-    AS cum_users
-FROM daily""",
-
-        "stream_hll_users": f"""
-WITH src AS (
-  SELECT md5(CAST(user_id AS VARCHAR)) AS h32 FROM events
-), hh AS (
-  SELECT {_hex13_sql('h32')} AS h FROM src
-), regs AS (
-  SELECT h % 256 AS register,
-    max(45 - length(ltrim(bin(h // 256), '0'))) AS max_rho
-  FROM hh GROUP BY register
-), agg AS (
-  SELECT CAST(256 - count(*) AS BIGINT) AS v_zero,
-    CAST(CAST(sum(CAST(1 AS BIGINT) << (52 - max_rho)) AS BIGINT)
-         + (256 - count(*)) * 4503599627370496 AS BIGINT) AS s_scaled,
-    CAST(round(((CAST(0.7182725932495458 AS DOUBLE)
-                 * CAST(65536 AS DOUBLE))
-                * CAST(4503599627370496 AS DOUBLE))
-         / CAST(CAST(sum(CAST(1 AS BIGINT) << (52 - max_rho)) AS BIGINT)
-                + (256 - count(*)) * 4503599627370496 AS DOUBLE))
-         AS BIGINT) AS raw_est
-  FROM regs
-)
-SELECT CAST(256 AS BIGINT) AS n_registers, v_zero, s_scaled,
-  CASE WHEN v_zero > 0 AND raw_est * 2 <= 1280
-       THEN CAST(round(CAST(256 AS DOUBLE)
-                 * ln(CAST(256 AS DOUBLE) / CAST(v_zero AS DOUBLE)))
-                 AS BIGINT)
-       ELSE raw_est END AS estimate
-FROM agg""",
-
-        "ppr_handoff": _ppr_sql(3),
-
-        "schema_evolution_read": """
-SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
-  CAST(NULL AS VARCHAR) AS event_type
-FROM events WHERE user_id % 2 = 0
-UNION ALL
-SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
-  event_type
-FROM events WHERE user_id % 2 = 1""",
-
-        "funnel_steps_24h": """
-WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t,
-                   min(epoch_us(ts)) AS t1 FROM events
-            WHERE event_type = 'view' GROUP BY user_id),
-s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t, s1.t1 AS t1
-       FROM events e JOIN s1 USING (user_id)
-       WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t
-         AND epoch_us(e.ts) <= s1.t1 + 86400000000
-       GROUP BY e.user_id, s1.t1),
-s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
-       FROM events e JOIN s2 USING (user_id)
-       WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t
-         AND epoch_us(e.ts) <= s2.t1 + 86400000000
-       GROUP BY e.user_id),
-c AS (SELECT (SELECT count(*) FROM s1) AS u1,
-             (SELECT count(*) FROM s2) AS u2,
-             (SELECT count(*) FROM s3) AS u3)
-SELECT 1 AS step, 'view' AS step_name, CAST(u1 AS BIGINT) AS users,
-  CAST(CASE WHEN u1 > 0 THEN u1 * 1000000 // u1 ELSE 0 END AS BIGINT)
-    AS conv_ppm FROM c
-UNION ALL
-SELECT 2, 'click', CAST(u2 AS BIGINT),
-  CAST(CASE WHEN u1 > 0 THEN u2 * 1000000 // u1 ELSE 0 END AS BIGINT)
-  FROM c
-UNION ALL
-SELECT 3, 'purchase', CAST(u3 AS BIGINT),
-  CAST(CASE WHEN u1 > 0 THEN u3 * 1000000 // u1 ELSE 0 END AS BIGINT)
-  FROM c""",
-
-        "agg_delta_apply": """
-WITH o AS (
-  SELECT o_orderstatus, o_orderpriority,
-    CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-    o_orderdate, o_orderkey
-  FROM orders
-), survivors AS (
-  SELECT * FROM o
-  WHERE date_part('year', o_orderdate) >= 1996
-  UNION ALL
-  SELECT * FROM o
-  WHERE date_part('year', o_orderdate) < 1996 AND o_orderkey % 7 <> 0
-)
-SELECT o_orderstatus, o_orderpriority,
-  CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS sum_v
-FROM survivors
-GROUP BY o_orderstatus, o_orderpriority
-HAVING count(*) > 0""",
-
-        "ann_recall_eval": _ann_recall_eval_sql(),
-    }
 
 
 def _q_stream_quality_filter(spark, sf):
@@ -6214,7 +5115,8 @@ def _q_ann_knn_join(spark, sf, score="fold"):
     retrieval-index builds; never all-pairs. The oracle gates the
     fold-scored twin (bit-identical to DuckDB list_reduce); the gemm
     entry below is the production scorer (per-bucket BLAS matmul),
-    rows-only checked here and rank-equality-gated in pytest."""
+    oracle-gated on its discrete columns and rank-equality-gated in
+    pytest."""
     from stark_spark.operators.similarity import ann_knn_join
     emb = D.load(spark, sf, "embeddings")
     cent = (emb.where(F.col("vec_id") < 8)
@@ -7730,7 +6632,13 @@ LEFT JOIN core_cluster cc ON cc.k = p.k
 LEFT JOIN border b ON b.k = p.k"""
 
 
-def _base_oracle_sql() -> dict[str, str]:
+def _oracle_table() -> dict[str, str]:
+    """Every DuckDB mirror — live, pending and retired gates — keyed
+    by gate name; one call builds each entry once. Same conventions
+    throughout: integers everywhere, float ops operand-order-mirrored,
+    ln() quantized to BIGINT before any summation. Raises ValueError when
+    the keys differ from queries() ∪ pending_queries() ∪
+    retired_queries() or a name sits in two of those lists."""
     cx, cy = _xy("c_custkey")
     sx, sy = _xy("s_suppkey")
     px0 = "((p_partkey * 37) % 900) / 10.0 + 0.05::DOUBLE"
@@ -7745,6 +6653,56 @@ def _base_oracle_sql() -> dict[str, str]:
         cye = f"least(31, greatest(0, CAST(floor(({ye}) / 3.125) AS INT)))"
         return f"({cye}) * 32 + ({cxe})"
 
+    zx = repr(255 / 2048.0)        # exact binary scale factors
+    zy = repr(255 / 4096.0)
+    # eval/train 13-gram shingle sets of the two ngram contamination
+    # gates (batch and streaming)
+    ngram_ctes = """
+WITH ev AS (
+  SELECT doc_id, CASE WHEN doc_id % 20 = 0 THEN text
+                      ELSE text || ' tail' END AS text
+  FROM documents WHERE doc_id % 10 = 0
+), evt AS (
+  SELECT list_filter(string_split(text, ' '), t -> t <> '') AS tk
+  FROM ev
+), evsh AS (
+  SELECT DISTINCT md5(array_to_string(tk[i:i+12], ' ')) AS h
+  FROM evt, unnest(range(1, len(tk) - 11)) u(i)
+  WHERE len(tk) >= 13
+), trt AS (
+  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '')
+    AS tk
+  FROM documents
+), trsh AS (
+  SELECT DISTINCT doc_id, md5(array_to_string(tk[i:i+12], ' ')) AS h
+  FROM trt, unnest(range(1, len(tk) - 11)) u(i)
+  WHERE len(tk) >= 13
+)"""
+    # tokenize / dl / idf / tf chain of the 3-term BM25 query, shared
+    # by bm25_topk and rrf_fusion_topk
+    bm25_ctes = """
+WITH tk AS (
+  SELECT doc_id, token FROM (
+    SELECT doc_id, unnest(string_split(text, ' ')) AS token
+    FROM documents) t
+  WHERE token <> ''
+), dl AS (
+  SELECT doc_id, count(*) AS dl FROM tk GROUP BY doc_id
+), st AS (
+  SELECT count(*) AS n,
+         CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
+  FROM dl
+), qt AS (
+  SELECT * FROM tk WHERE token IN ('join', 'filter', 'merge')
+), idf AS (
+  SELECT token,
+    CAST(floor(ln((CAST(st.n AS DOUBLE) - nd + CAST(0.5 AS DOUBLE))
+                   / (nd + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE))
+               * 1000000) AS BIGINT) AS idf_q
+  FROM (SELECT token, count(DISTINCT doc_id) AS nd
+        FROM qt GROUP BY token) f, st
+), tf AS (
+  SELECT doc_id, token, count(*) AS tf FROM qt GROUP BY doc_id, token"""
     sql = {
         # min-ts chain as chained CTEs (the k-join form; the engine's
         # one-shuffle greedy fold provably computes the same reach)
@@ -8267,10 +7225,6 @@ WHERE value >= 0 AND value <= 100 AND ({EV_Y}) >= 0 AND ({EV_Y}) <= 100
 SELECT c_custkey, s_suppkey FROM customer, supplier
 WHERE ({cx}) = ({sx}) AND ({cy}) = ({sy})""",
 
-        "st_join_broadcast_points": f"""
-SELECT c_custkey, s_suppkey FROM customer, supplier
-WHERE ({cx}) = ({sx}) AND ({cy}) = ({sy})""",
-
         "st_join_poly_contains": f"""
 SELECT p_partkey, c_custkey FROM part, customer
 WHERE ({cx}) > ({px0}) AND ({cx}) < ({px0}) + (1 + p_partkey % 2)
@@ -8390,11 +7344,6 @@ SELECT event_id,
                        CAST(1.0 AS DOUBLE)))))
     * CAST(1.0E6 AS DOUBLE)) AS BIGINT) AS d_q
 FROM h ORDER BY d_q, event_id LIMIT 15""",
-
-        # pruned two-phase kNN must equal the full scan
-        "pruned_knn": f"""
-SELECT event_id, {dist_q} AS dist FROM events
-ORDER BY dist, event_id LIMIT 50""",
 
         # trajectory hops quantized to integer micro-units before the
         # per-user sum (aggregation-order-proof); (ts, event_id) order
@@ -8562,14 +7511,6 @@ WHERE NOT EXISTS (
   SELECT 1 FROM e q
   WHERE q.d_space <= p.d_space AND q.d_time <= p.d_time
     AND (q.d_space < p.d_space OR q.d_time < p.d_time))""",
-
-        # same answer, different physical grouping (angular buckets)
-        "skyline_angular": f"""
-WITH p AS (SELECT c_custkey, {cx} AS x, {cy} AS y FROM customer)
-SELECT c_custkey, x, y FROM p
-WHERE NOT EXISTS (
-  SELECT 1 FROM p q
-  WHERE q.x <= p.x AND q.y <= p.y AND (q.x < p.x OR q.y < p.y))""",
 
         "dbscan": _dbscan_sql(2.0, 4, "c_custkey", cx, cy, "customer"),
 
@@ -8786,16 +7727,6 @@ SELECT tx * 10.0 AS ulx, (ty + 1) * 10.0 AS uly,
   CAST(2 AS BIGINT) AS n_copies,
   CAST(2 * n_occ AS BIGINT) AS nz2
 FROM t""",
-
-        "pruned_read_rect": f"""
-SELECT event_id, value AS x, {EV_Y} AS y FROM events
-WHERE value >= 10 AND value <= 60
-  AND ({EV_Y}) >= 10 AND ({EV_Y}) <= 80
-  AND {EV_T} >= 1704067200 AND {EV_T} <= 1705276800""",
-
-        "pruned_join_points": f"""
-SELECT c_custkey, s_suppkey FROM customer, supplier
-WHERE ({cx}) = ({sx}) AND ({cy}) = ({sy})""",
 
         "pruned_read_st": f"""
 SELECT event_id, value AS x, {EV_Y} AS y FROM events
@@ -9107,29 +8038,7 @@ WHERE n_common / (x.sz + y.sz - n_common) >= 0.12""",
         # every double literal CAST(... AS DOUBLE) to dodge DuckDB's
         # DECIMAL literal typing; operation order mirrors the Spark
         # expression tree exactly
-        "bm25_topk": """
-WITH tk AS (
-  SELECT doc_id, token FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-    FROM documents) t
-  WHERE token <> ''
-), dl AS (
-  SELECT doc_id, count(*) AS dl FROM tk GROUP BY doc_id
-), st AS (
-  SELECT count(*) AS n,
-         CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-  FROM dl
-), qt AS (
-  SELECT * FROM tk WHERE token IN ('join', 'filter', 'merge')
-), idf AS (
-  SELECT token,
-    CAST(floor(ln((CAST(st.n AS DOUBLE) - nd + CAST(0.5 AS DOUBLE))
-                   / (nd + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE))
-               * 1000000) AS BIGINT) AS idf_q
-  FROM (SELECT token, count(DISTINCT doc_id) AS nd
-        FROM qt GROUP BY token) f, st
-), tf AS (
-  SELECT doc_id, token, count(*) AS tf FROM qt GROUP BY doc_id, token
+        "bm25_topk": bm25_ctes + """
 )
 SELECT tf.doc_id, CAST(any_value(dl.dl) AS BIGINT) AS n_tokens,
   CAST(sum(CAST(floor(
@@ -9208,29 +8117,7 @@ WHERE rn <= 10""",
         # hybrid retrieval: BM25 top-50 and cosine top-50 fused by
         # reciprocal rank; each side contributes the exact integer
         # floor(1e9/(60+rank)), so rrf_q is a BIGINT sum
-        "rrf_fusion_topk": f"""
-WITH tk AS (
-  SELECT doc_id, token FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-    FROM documents) t
-  WHERE token <> ''
-), dl AS (
-  SELECT doc_id, count(*) AS dl FROM tk GROUP BY doc_id
-), st AS (
-  SELECT count(*) AS n,
-         CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-  FROM dl
-), qt AS (
-  SELECT * FROM tk WHERE token IN ('join', 'filter', 'merge')
-), idf AS (
-  SELECT token,
-    CAST(floor(ln((CAST(st.n AS DOUBLE) - nd + CAST(0.5 AS DOUBLE))
-                   / (nd + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE))
-               * 1000000) AS BIGINT) AS idf_q
-  FROM (SELECT token, count(DISTINCT doc_id) AS nd
-        FROM qt GROUP BY token) f, st
-), tf AS (
-  SELECT doc_id, token, count(*) AS tf FROM qt GROUP BY doc_id, token
+        "rrf_fusion_topk": bm25_ctes + f"""
 ), bm AS (
   SELECT tf.doc_id,
     CAST(sum(CAST(floor(
@@ -9360,15 +8247,7 @@ SELECT column_name, n, n_null, n_distinct FROM (
     count(DISTINCT value) FROM events
 ) t""",
 
-        # format roundtrips: the oracle is the parquet original — the
-        # Spark side must read back EXACTLY what it wrote
         "jsonl_roundtrip": """
-SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
-FROM documents""",
-        "csv_roundtrip": """
-SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
-FROM documents""",
-        "orc_roundtrip": """
 SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
 FROM documents""",
 
@@ -9817,21 +8696,6 @@ WITH ev AS (
 SELECT th.content_hash, e.doc_id, th.n_train
 FROM ev e JOIN th ON th.content_hash = md5(e.text)""",
 
-        # Bloom prefilter + exact verify ≡ exact contamination: the
-        # oracle is deliberately the same SQL — the Bloom pass is a
-        # pure physical optimization with zero semantic effect.
-        "contamination_bloom": """
-WITH ev AS (
-  SELECT doc_id, CASE WHEN doc_id % 20 = 0 THEN text
-                      ELSE text || ' tail' END AS text
-  FROM documents WHERE doc_id % 10 = 0
-), th AS (
-  SELECT md5(text) AS content_hash, CAST(count(*) AS BIGINT) AS n_train
-  FROM documents GROUP BY 1
-)
-SELECT th.content_hash, e.doc_id, th.n_train
-FROM ev e JOIN th ON th.content_hash = md5(e.text)""",
-
         # streaming ingest decontamination == batch: the Bloom filter
         # is a pure physical prefilter and the stream replays the
         # whole table, so flagged rows are exactly the train rows
@@ -9851,27 +8715,7 @@ FROM documents d JOIN evh ON md5(d.text) = evh.content_hash""",
         # per-doc distinct shingle hashes; DuckDB mirrors the native
         # filter/sequence/slice/md5 expression chain with
         # list_filter + correlated unnest(range) + list slicing
-        "contamination_ngrams": """
-WITH ev AS (
-  SELECT doc_id, CASE WHEN doc_id % 20 = 0 THEN text
-                      ELSE text || ' tail' END AS text
-  FROM documents WHERE doc_id % 10 = 0
-), evt AS (
-  SELECT list_filter(string_split(text, ' '), t -> t <> '') AS tk
-  FROM ev
-), evsh AS (
-  SELECT DISTINCT md5(array_to_string(tk[i:i+12], ' ')) AS h
-  FROM evt, unnest(range(1, len(tk) - 11)) u(i)
-  WHERE len(tk) >= 13
-), trt AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '')
-    AS tk
-  FROM documents
-), trsh AS (
-  SELECT DISTINCT doc_id, md5(array_to_string(tk[i:i+12], ' ')) AS h
-  FROM trt, unnest(range(1, len(tk) - 11)) u(i)
-  WHERE len(tk) >= 13
-)
+        "contamination_ngrams": ngram_ctes + """
 SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_hit_shingles
 FROM trsh t JOIN evsh USING (h)
 GROUP BY t.doc_id""",
@@ -9907,58 +8751,9 @@ FROM hits h JOIN per_doc p USING (doc_id)""",
         # streaming twin: the stream replays the whole table and the
         # join is stateless, so the flagged (doc, window) pairs are
         # exactly the batch rule's hit set
-        "stream_contamination_ngrams": """
-WITH ev AS (
-  SELECT doc_id, CASE WHEN doc_id % 20 = 0 THEN text
-                      ELSE text || ' tail' END AS text
-  FROM documents WHERE doc_id % 10 = 0
-), evt AS (
-  SELECT list_filter(string_split(text, ' '), t -> t <> '') AS tk
-  FROM ev
-), evsh AS (
-  SELECT DISTINCT md5(array_to_string(tk[i:i+12], ' ')) AS h
-  FROM evt, unnest(range(1, len(tk) - 11)) u(i)
-  WHERE len(tk) >= 13
-), trt AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '')
-    AS tk
-  FROM documents
-), trsh AS (
-  SELECT DISTINCT doc_id, md5(array_to_string(tk[i:i+12], ' ')) AS h
-  FROM trt, unnest(range(1, len(tk) - 11)) u(i)
-  WHERE len(tk) >= 13
-)
+        "stream_contamination_ngrams": ngram_ctes + """
 SELECT t.doc_id, t.h
 FROM trsh t JOIN evsh USING (h)""",
-
-        # Same SQL: the jvm streaming impl (distributed words build +
-        # per-micro-batch broadcast probe joins) is a physically
-        # different plan with identical semantics
-        "stream_contamination_jvm": """
-WITH ev AS (
-  SELECT doc_id, CASE WHEN doc_id % 20 = 0 THEN text
-                      ELSE text || ' tail' END AS text
-  FROM documents WHERE doc_id % 10 = 0
-), evh AS (
-  SELECT DISTINCT md5(text) AS content_hash FROM ev
-)
-SELECT d.doc_id, md5(d.text) AS content_hash
-FROM documents d JOIN evh ON md5(d.text) = evh.content_hash""",
-
-        # Same SQL again: the jvm (distributed build + broadcast-join
-        # probe) impl is a physically different plan with identical
-        # semantics — exact contamination.
-        "contamination_bloom_jvm": """
-WITH ev AS (
-  SELECT doc_id, CASE WHEN doc_id % 20 = 0 THEN text
-                      ELSE text || ' tail' END AS text
-  FROM documents WHERE doc_id % 10 = 0
-), th AS (
-  SELECT md5(text) AS content_hash, CAST(count(*) AS BIGINT) AS n_train
-  FROM documents GROUP BY 1
-)
-SELECT th.content_hash, e.doc_id, th.n_train
-FROM ev e JOIN th ON th.content_hash = md5(e.text)""",
 
         "contamination_lsh": f"""
 WITH ev AS (
@@ -10303,11 +9098,995 @@ SELECT a.vec_id AS a, b.vec_id AS b,
   {_cos('a.embedding', 'b.embedding')} AS cos
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
 WHERE {_cos('a.embedding', 'b.embedding')} >= 0.4""",
-    }
 
-    # the bucketed-store probe must be a results no-op vs in-memory IVF:
-    # same parameters, same fold scorer, hence the identical oracle
-    sql["ann_ivf_pruned_topk"] = sql["ann_ivf_topk"]
+        # HDR bucket/bounds decode mirrored in DuckDB dialect
+        # (// for div, ltrim(s,'0'), >>/<< shifts); nearest-rank
+        # ceil via the sign-free (a+9999)//10000
+        "price_quantiles_hdr": """
+WITH v AS (
+  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem
+), b AS (
+  SELECT CASE WHEN v < 32 THEN v
+         ELSE (length(ltrim(bin(v), '0')) - 1 - 5) * 32
+              + (v >> CAST(length(ltrim(bin(v), '0')) - 1 - 5 AS INT))
+         END AS bucket
+  FROM v
+), hist AS (
+  SELECT bucket, count(*) AS cnt FROM b GROUP BY bucket
+), tot AS (
+  SELECT CAST(sum(cnt) AS BIGINT) AS n FROM hist
+), cdf AS (
+  SELECT bucket,
+    CAST(sum(cnt) OVER (ORDER BY bucket
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+  FROM hist
+), qs(q_bp) AS (
+  VALUES (5000), (9000), (9900), (9999)
+), sel AS (
+  SELECT q_bp, min(bucket) AS bucket, min(n) AS n
+  FROM cdf, tot, qs
+  WHERE cum >= (q_bp * n + 9999) // 10000
+  GROUP BY q_bp
+)
+SELECT CAST(q_bp AS INT) AS q_bp,
+  CAST(CASE WHEN bucket < 32 THEN bucket
+       ELSE ((bucket % 32 + 32) + 1) << CAST(bucket // 32 - 1 AS INT)
+       END - CASE WHEN bucket < 32 THEN 0 ELSE 1 END AS BIGINT)
+    AS estimate,
+  n
+FROM sel""",
+
+        "parts_overlap_kmv": f"""
+WITH ha AS (
+  SELECT DISTINCT {_hex13_sql('h32')} AS h FROM (
+    SELECT md5(CAST(l_partkey AS VARCHAR)) AS h32 FROM lineitem
+    WHERE year(l_shipdate) = 1996) t
+), hb AS (
+  SELECT DISTINCT {_hex13_sql('h32')} AS h FROM (
+    SELECT md5(CAST(l_partkey AS VARCHAR)) AS h32 FROM lineitem
+    WHERE year(l_shipdate) = 1997) t
+), sa AS (SELECT h FROM ha ORDER BY h LIMIT 128),
+   sb AS (SELECT h FROM hb ORDER BY h LIMIT 128),
+   m AS (
+  SELECT COALESCE(sa.h, sb.h) AS h,
+    CASE WHEN sa.h IS NULL THEN 0 ELSE 1 END AS in_a,
+    CASE WHEN sb.h IS NULL THEN 0 ELSE 1 END AS in_b
+  FROM sa FULL OUTER JOIN sb ON sa.h = sb.h
+), l AS (SELECT * FROM m ORDER BY h LIMIT 128),
+   agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS k_used,
+    CAST(max(h) AS BIGINT) AS kth_min,
+    CAST(sum(in_a * in_b) AS BIGINT) AS n_both
+  FROM l
+), est AS (
+  SELECT *, CAST(CASE WHEN k_used < 128 OR kth_min <= 0 THEN k_used
+       ELSE (k_used - 1) * 4503599627370496 // kth_min END AS BIGINT)
+    AS union_est
+  FROM agg
+)
+SELECT k_used, kth_min, n_both, union_est,
+  CAST(n_both * union_est // k_used AS BIGINT) AS inter_est,
+  CAST(n_both * 10000 // k_used AS BIGINT) AS jaccard_bp
+FROM est""",
+
+        # gaps-and-islands SCD2; IS DISTINCT FROM == eqNullSafe
+        "scd2_user_state": """
+WITH s AS (
+  SELECT user_id, ts, event_type,
+    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
+         THEN 1 ELSE 0 END AS chg
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), i AS (
+  SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+  FROM s
+), v AS (
+  SELECT user_id, island, any_value(event_type) AS event_type,
+    min(ts) AS valid_from
+  FROM i GROUP BY user_id, island
+)
+SELECT user_id, event_type, valid_from,
+  lead(valid_from) OVER w2 AS valid_to,
+  CAST(CASE WHEN lead(valid_from) OVER w2 IS NULL THEN 1 ELSE 0 END
+       AS INT) AS is_current
+FROM v
+WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from)""",
+
+        "attribution_linear": """
+WITH r AS (
+  SELECT user_id, ts, event_id, event_type,
+    CAST(round(value * 100) AS BIGINT) AS cents,
+    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+      OVER (PARTITION BY user_id ORDER BY ts, event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg
+  FROM events
+), convs AS (
+  SELECT user_id, seg AS cidx, cents FROM r WHERE event_type = 'purchase'
+), touches AS (
+  SELECT user_id, ts, event_id, event_type, seg + 1 AS cidx
+  FROM r WHERE event_type <> 'purchase'
+), j AS (
+  SELECT t.event_type AS channel, c.cents,
+    row_number() OVER (PARTITION BY t.user_id, t.cidx
+                       ORDER BY t.ts, t.event_id) AS rn,
+    count(*) OVER (PARTITION BY t.user_id, t.cidx) AS n
+  FROM touches t JOIN convs c
+    ON c.user_id = t.user_id AND c.cidx = t.cidx
+), per AS (
+  SELECT channel,
+    10000 // n + CASE WHEN rn = 1 THEN 10000 % n ELSE 0 END AS credit,
+    cents // n + CASE WHEN rn = 1 THEN cents % n ELSE 0 END AS rev
+  FROM j
+), cred AS (
+  SELECT channel, CAST(count(*) AS BIGINT) AS n_touches,
+    CAST(sum(credit) AS BIGINT) AS credit_bp,
+    CAST(sum(rev) AS BIGINT) AS revenue_c
+  FROM per GROUP BY channel
+), direct AS (
+  SELECT 'direct' AS channel, CAST(count(*) AS BIGINT) AS n_touches,
+    CAST(count(*) * 10000 AS BIGINT) AS credit_bp,
+    CAST(COALESCE(sum(c.cents), 0) AS BIGINT) AS revenue_c
+  FROM convs c
+  LEFT JOIN (SELECT DISTINCT user_id, cidx FROM touches) t
+    ON t.user_id = c.user_id AND t.cidx = c.cidx
+  WHERE t.user_id IS NULL
+  HAVING count(*) > 0
+)
+SELECT * FROM cred UNION ALL SELECT * FROM direct""",
+
+        "zorder_events": f"""
+WITH g AS (
+  SELECT event_id,
+    CAST(floor((least(greatest(CAST(user_id AS DOUBLE),
+                               CAST(0 AS DOUBLE)),
+                      CAST(2048 AS DOUBLE)) - CAST(0 AS DOUBLE))
+         * CAST({zx} AS DOUBLE)) AS BIGINT) AS sx,
+    CAST(floor((least(greatest(CAST(date_diff('day', DATE '2020-01-01',
+                                    CAST(ts AS DATE)) AS DOUBLE),
+                               CAST(0 AS DOUBLE)),
+                      CAST(4096 AS DOUBLE)) - CAST(0 AS DOUBLE))
+         * CAST({zy} AS DOUBLE)) AS BIGINT) AS sy
+  FROM events
+)
+SELECT event_id,
+  CAST({_zorder_interleave_sql('sx', 'sy', _ZBITS)} AS BIGINT) AS zkey
+FROM g""",
+
+        "user_retention_km": """
+WITH pu AS (
+  SELECT user_id, min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1
+  FROM events GROUP BY user_id
+), mx AS (SELECT max(d1) AS dm FROM pu),
+   obs AS (
+  SELECT CAST(date_diff('day', d0, d1) AS BIGINT) AS t,
+    CASE WHEN date_diff('day', d1, dm) > 7 THEN 1 ELSE 0 END AS e
+  FROM pu, mx
+), per_t AS (
+  SELECT t, CAST(sum(e) AS BIGINT) AS n_events,
+    CAST(sum(1 - e) AS BIGINT) AS n_censored,
+    CAST(count(*) AS BIGINT) AS n_obs
+  FROM obs GROUP BY t
+), rk AS (
+  SELECT *, CAST(sum(n_obs) OVER (ORDER BY t
+    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
+    AS n_risk
+  FROM per_t
+), tm AS (
+  SELECT *, CASE WHEN n_events = 0 THEN CAST(0 AS BIGINT)
+    WHEN n_risk = n_events THEN CAST(-4611686018427387904 AS BIGINT)
+    ELSE CAST(round(1000000.0 * ln(CAST(n_risk - n_events AS DOUBLE)
+         / CAST(n_risk AS DOUBLE))) AS BIGINT) END AS term
+  FROM rk
+)
+SELECT t, n_risk, n_events, n_censored,
+  CAST(greatest(sum(term) OVER (ORDER BY t
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+    -4611686018427387904) AS BIGINT) AS log_surv_q6
+FROM tm""",
+
+        "event_sequences_3": """
+WITH s AS (
+  SELECT event_type AS step_1,
+    lead(event_type, 1) OVER w AS step_2,
+    lead(event_type, 2) OVER w AS step_3
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+)
+SELECT step_1, step_2, step_3, count(*) AS n_occurrences
+FROM s WHERE step_3 IS NOT NULL
+GROUP BY step_1, step_2, step_3""",
+
+        "lineitem_corr": _corr_oracle_sql(),
+
+        # PSI mirror: expression text identical to drift.psi_drift
+        "drift_psi_value": """
+WITH b AS (
+  SELECT least(CAST(round(value * 100) AS BIGINT) // 5000, 9) AS bin,
+    CASE WHEN date_part('day', ts) <= 15 THEN 1 ELSE 0 END AS is_a
+  FROM events
+), counts AS (
+  SELECT bin, CAST(sum(is_a) AS BIGINT) AS n_a,
+    CAST(sum(1 - is_a) AS BIGINT) AS n_b
+  FROM b GROUP BY bin
+), tot AS (
+  SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
+    CAST(sum(n_b) AS BIGINT) AS tot_b,
+    CAST(count(*) AS BIGINT) AS k
+  FROM counts
+)
+SELECT bin, n_a, n_b,
+  CAST(round(1000000.0 * (
+    (CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + k * 1 AS DOUBLE)
+     - CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + k * 1 AS DOUBLE))
+    * ln((CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + k * 1 AS DOUBLE))
+         / (CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + k * 1 AS DOUBLE)))
+  )) AS BIGINT) AS psi_term_q6
+FROM counts, tot""",
+
+        "chi2_type_dow": """
+WITH cells AS (
+  SELECT event_type AS r,
+    CAST(date_part('dow', ts) + 1 AS INT) AS c,
+    CAST(count(*) AS BIGINT) AS n
+  FROM events GROUP BY 1, 2
+), rt AS (SELECT r, CAST(sum(n) AS BIGINT) AS n_r FROM cells GROUP BY r),
+   ct AS (SELECT c, CAST(sum(n) AS BIGINT) AS n_c FROM cells GROUP BY c),
+   g AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot FROM cells)
+SELECT cells.r, cells.c, n,
+  CAST(round(1000000.0 * (CAST(n_r AS DOUBLE) * CAST(n_c AS DOUBLE)
+       / CAST(n_tot AS DOUBLE))) AS BIGINT) AS expected_q6,
+  CAST(round(1000000.0 *
+    ((CAST(n AS DOUBLE) - (CAST(n_r AS DOUBLE) * CAST(n_c AS DOUBLE)
+        / CAST(n_tot AS DOUBLE)))
+     * (CAST(n AS DOUBLE) - (CAST(n_r AS DOUBLE) * CAST(n_c AS DOUBLE)
+        / CAST(n_tot AS DOUBLE)))
+     / (CAST(n_r AS DOUBLE) * CAST(n_c AS DOUBLE)
+        / CAST(n_tot AS DOUBLE)))) AS BIGINT) AS chi2_term_q6
+FROM cells JOIN rt ON cells.r = rt.r
+JOIN ct ON cells.c = ct.c CROSS JOIN g""",
+
+        "postings_index": """
+WITH tok AS (
+  SELECT DISTINCT doc_id, token FROM (
+    SELECT doc_id, unnest(string_split(text, ' ')) AS token
+    FROM documents) t
+  WHERE token <> ''
+)
+SELECT token, CAST(count(*) AS BIGINT) AS df,
+  string_agg(CAST(doc_id AS VARCHAR), ' ' ORDER BY doc_id) AS postings
+FROM tok GROUP BY token""",
+
+        # boundary ranks use CAST(q AS DOUBLE)·n — the DOUBLE product
+        # (not DuckDB's exact DECIMAL) to mirror Spark's float ceil
+        "order_price_bins": """
+WITH o AS (
+  SELECT o_orderpriority AS g, o_orderkey,
+    CAST(round(o_totalprice * 100) AS BIGINT) AS v
+  FROM orders
+), r AS (
+  SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
+    count(*) OVER (PARTITION BY g) AS n
+  FROM o
+), b AS (
+  SELECT g, v AS bnd
+  FROM r JOIN (VALUES (0.1), (0.2), (0.3), (0.4), (0.5), (0.6),
+               (0.7), (0.8), (0.9)) AS qv(q)
+    ON rn = greatest(CAST(ceil(CAST(q AS DOUBLE) * n) AS BIGINT), 1)
+), a AS (
+  SELECT o.g, o.o_orderkey, any_value(o.v) AS v,
+    CAST(sum(CASE WHEN o.v > b.bnd THEN 1 ELSE 0 END) AS INT) AS bin
+  FROM o JOIN b ON b.g = o.g
+  GROUP BY o.g, o.o_orderkey
+)
+SELECT g AS o_orderpriority, bin, CAST(count(*) AS BIGINT) AS n,
+  min(v) AS min_v, max(v) AS max_v
+FROM a GROUP BY g, bin""",
+
+        # md5-parity arm assignment + pooled two-proportion z, chain
+        # text identical to drift.two_proportion_ztest
+        "ab_ztest_purchase": """
+WITH per AS (
+  SELECT user_id,
+    CAST((strpos('0123456789abcdef',
+          substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) - 1) % 2 AS INT)
+      AS a,
+    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS c
+  FROM events GROUP BY user_id
+), agg AS (
+  SELECT CAST(sum(1 - a) AS BIGINT) AS n_a,
+    CAST(sum((1 - a) * c) AS BIGINT) AS x_a,
+    CAST(sum(a) AS BIGINT) AS n_b,
+    CAST(sum(a * c) AS BIGINT) AS x_b
+  FROM per
+)
+SELECT n_a, x_a, n_b, x_b,
+  CAST(CASE WHEN x_a + x_b = 0 OR x_a + x_b = n_a + n_b THEN 0
+  ELSE round(1000000.0 * (
+    (CAST(x_a AS DOUBLE) / CAST(n_a AS DOUBLE)
+     - CAST(x_b AS DOUBLE) / CAST(n_b AS DOUBLE))
+    / sqrt((CAST(x_a + x_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
+    * (1.0 - CAST(x_a + x_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
+    * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
+  )) END AS BIGINT) AS z_q6
+FROM agg""",
+
+        "hourly_acf": _acf_oracle_sql(),
+
+        # hourly cents resample → last same-phase train hour →
+        # integer MAE / floor-div bias (// floors, matching the
+        # operator's pmod floor-division)
+        "forecast_snaive": """
+WITH hours AS (
+  SELECT event_type AS k, epoch_us(ts) // 3600000000 AS h,
+    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS hv
+  FROM events GROUP BY 1, 2
+), sp AS (
+  SELECT epoch_us(TIMESTAMP '2024-01-24 00:00:00') // 3600000000 AS s
+), train AS (SELECT hours.* FROM hours, sp WHERE h < s),
+   test AS (SELECT hours.* FROM hours, sp WHERE h >= s),
+   lp AS (
+  SELECT k, h % 168 AS phase, max(h) AS h_train
+  FROM train GROUP BY k, h % 168
+), scored AS (
+  SELECT t.k, t.hv, tr.hv AS v_hat
+  FROM test t
+  JOIN lp ON lp.k = t.k AND lp.phase = t.h % 168
+  JOIN train tr ON tr.k = t.k AND tr.h = lp.h_train
+)
+SELECT k AS event_type, CAST(count(*) AS BIGINT) AS n_test_hours,
+  CAST(CAST(sum(abs(hv - v_hat)) AS BIGINT) // count(*) AS BIGINT)
+    AS mae_c,
+  CAST(CAST(sum(hv - v_hat) AS BIGINT) // count(*) AS BIGINT)
+    AS bias_c
+FROM scored GROUP BY k""",
+
+        # per-dim boundaries at rank ceil(double(q)·n); scores count
+        # strict-greater boundaries (recency inverted)
+        "rfm_segments": """
+WITH ev AS (
+  SELECT user_id AS u, CAST(ts AS DATE) AS d,
+    CAST(round(value * 100) AS BIGINT) AS c
+  FROM events WHERE event_type = 'purchase'
+), per AS (
+  SELECT u, max(d) AS last_d, CAST(count(*) AS BIGINT) AS freq,
+    CAST(sum(c) AS BIGINT) AS mon
+  FROM ev GROUP BY u
+), mx AS (SELECT max(last_d) AS dm FROM per),
+   p2 AS (
+  SELECT u, CAST(date_diff('day', last_d, dm) AS BIGINT) AS rec,
+    freq, mon
+  FROM per, mx
+), qv(q) AS (VALUES (0.2), (0.4), (0.6), (0.8)),
+   r_rec AS (SELECT rec AS v, row_number() OVER (ORDER BY rec) AS rn,
+             count(*) OVER () AS n FROM p2),
+   b_rec AS (SELECT v FROM r_rec JOIN qv
+             ON rn = greatest(CAST(ceil(CAST(q AS DOUBLE) * n)
+                              AS BIGINT), 1)),
+   r_frq AS (SELECT freq AS v, row_number() OVER (ORDER BY freq) AS rn,
+             count(*) OVER () AS n FROM p2),
+   b_frq AS (SELECT v FROM r_frq JOIN qv
+             ON rn = greatest(CAST(ceil(CAST(q AS DOUBLE) * n)
+                              AS BIGINT), 1)),
+   r_mon AS (SELECT mon AS v, row_number() OVER (ORDER BY mon) AS rn,
+             count(*) OVER () AS n FROM p2),
+   b_mon AS (SELECT v FROM r_mon JOIN qv
+             ON rn = greatest(CAST(ceil(CAST(q AS DOUBLE) * n)
+                              AS BIGINT), 1)),
+   s AS (
+  SELECT u, mon,
+    5 - (SELECT count(*) FROM b_rec WHERE p2.rec > b_rec.v) AS s_rec,
+    1 + (SELECT count(*) FROM b_frq WHERE p2.freq > b_frq.v) AS s_frq,
+    1 + (SELECT count(*) FROM b_mon WHERE p2.mon > b_mon.v) AS s_mon
+  FROM p2
+)
+SELECT concat(s_rec, s_frq, s_mon) AS rfm,
+  CAST(count(*) AS BIGINT) AS n_users,
+  CAST(sum(mon) AS BIGINT) AS monetary_c_sum
+FROM s GROUP BY concat(s_rec, s_frq, s_mon)""",
+
+        # each rule mirrored as its own aggregate; NULL comparisons
+        # drop out of FILTERs exactly as they do from Spark's
+        # boolean-cast sums
+        "data_expectations": """
+SELECT 'orders.unique:o_orderkey' AS rule,
+  CAST(count(*) AS BIGINT) AS n_checked,
+  CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS n_violations
+FROM orders
+UNION ALL
+SELECT 'orders.range:o_totalprice', CAST(count(o_totalprice) AS BIGINT),
+  CAST(count(*) FILTER (o_totalprice < 0 OR o_totalprice > 600000)
+       AS BIGINT)
+FROM orders
+UNION ALL
+SELECT 'orders.regex:o_orderstatus',
+  CAST(count(o_orderstatus) AS BIGINT),
+  CAST(count(*) FILTER (o_orderstatus IS NOT NULL
+       AND NOT regexp_matches(o_orderstatus, '^[OFP]$')) AS BIGINT)
+FROM orders
+UNION ALL
+SELECT 'orders.not_null:o_custkey', CAST(count(*) AS BIGINT),
+  CAST(count(*) FILTER (o_custkey IS NULL) AS BIGINT)
+FROM orders
+UNION ALL
+SELECT 'lineitem.fk:l_orderkey', CAST(count(l_orderkey) AS BIGINT),
+  CAST(count(*) FILTER (l_orderkey IS NOT NULL AND NOT EXISTS (
+    SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)) AS BIGINT)
+FROM lineitem
+UNION ALL
+SELECT 'lineitem.range:l_discount', CAST(count(l_discount) AS BIGINT),
+  CAST(count(*) FILTER (l_discount < 0.0 OR l_discount > 0.05)
+       AS BIGINT)
+FROM lineitem
+UNION ALL
+SELECT 'lineitem.regex:l_returnflag',
+  CAST(count(l_returnflag) AS BIGINT),
+  CAST(count(*) FILTER (l_returnflag IS NOT NULL
+       AND NOT regexp_matches(l_returnflag, '^[ANR]$')) AS BIGINT)
+FROM lineitem""",
+
+        "cube_users_hll": _hll_cube_sql(),
+
+        # SCD2 versions (non-purchase states) + interval-predicate
+        # join — must equal Spark's as-of union-sweep exactly
+        "scd2_pit_enrich": """
+WITH st AS (
+  SELECT user_id, ts, event_type AS state FROM events
+  WHERE event_type <> 'purchase'
+), s AS (
+  SELECT user_id, ts, state,
+    CASE WHEN lag(state) OVER w IS DISTINCT FROM state
+         THEN 1 ELSE 0 END AS chg
+  FROM st WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), i AS (
+  SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+  FROM s
+), v AS (
+  SELECT user_id, any_value(state) AS state, min(ts) AS valid_from
+  FROM i GROUP BY user_id, island
+), v2 AS (
+  SELECT user_id, state, valid_from,
+    lead(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from)
+      AS valid_to
+  FROM v
+), p AS (
+  SELECT event_id, user_id, ts,
+    CAST(round(value * 100) AS BIGINT) AS cents
+  FROM events WHERE event_type = 'purchase'
+)
+SELECT p.event_id, p.user_id, p.ts, p.cents, v2.state
+FROM p LEFT JOIN v2 ON v2.user_id = p.user_id
+  AND v2.valid_from <= p.ts
+  AND (v2.valid_to IS NULL OR p.ts < v2.valid_to)""",
+
+        "table_diff_orders": """
+WITH other AS (
+  SELECT o_orderkey,
+    CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10
+         ELSE o_totalprice END AS o_totalprice,
+    o_orderstatus,
+    CASE WHEN o_orderkey % 13 = 0 THEN 'CHANGED'
+         ELSE o_orderpriority END AS o_orderpriority
+  FROM orders WHERE o_orderkey % 97 <> 0
+  UNION ALL
+  SELECT o_orderkey + 50000000, o_totalprice, o_orderstatus,
+    o_orderpriority
+  FROM orders WHERE o_orderkey % 1000 = 3
+), j AS (
+  SELECT b.o_orderkey AS bk, o.o_orderkey AS ok,
+    b.o_totalprice IS DISTINCT FROM o.o_totalprice AS ch_p,
+    b.o_orderstatus IS DISTINCT FROM o.o_orderstatus AS ch_s,
+    b.o_orderpriority IS DISTINCT FROM o.o_orderpriority AS ch_r
+  FROM orders b FULL OUTER JOIN other o
+    ON b.o_orderkey = o.o_orderkey
+), c AS (
+  SELECT
+    CAST(count(*) FILTER (bk IS NULL) AS BIGINT) AS added,
+    CAST(count(*) FILTER (ok IS NULL) AS BIGINT) AS removed,
+    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL
+         AND NOT (ch_p OR ch_s OR ch_r)) AS BIGINT) AS unchanged,
+    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL
+         AND (ch_p OR ch_s OR ch_r)) AS BIGINT) AS changed_rows,
+    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL AND ch_p)
+         AS BIGINT) AS ch_price,
+    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL AND ch_s)
+         AS BIGINT) AS ch_status,
+    CAST(count(*) FILTER (bk IS NOT NULL AND ok IS NOT NULL AND ch_r)
+         AS BIGINT) AS ch_prio
+  FROM j
+)
+SELECT '_added' AS item, added AS n FROM c
+UNION ALL SELECT '_removed', removed FROM c
+UNION ALL SELECT '_unchanged', unchanged FROM c
+UNION ALL SELECT '_changed_rows', changed_rows FROM c
+UNION ALL SELECT 'col:o_totalprice', ch_price FROM c
+UNION ALL SELECT 'col:o_orderstatus', ch_status FROM c
+UNION ALL SELECT 'col:o_orderpriority', ch_prio FROM c""",
+
+        "basket_lift_pairs": """
+WITH m AS (
+  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d,
+    event_type AS item
+  FROM events
+), pairs AS (
+  SELECT a.item AS item_a, b.item AS item_b,
+    CAST(count(*) AS BIGINT) AS n_ab
+  FROM m a JOIN m b ON a.user_id = b.user_id AND a.d = b.d
+    AND a.item < b.item
+  GROUP BY a.item, b.item
+), singles AS (
+  SELECT item, CAST(count(*) AS BIGINT) AS n_i FROM m GROUP BY item
+), total AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_baskets
+  FROM (SELECT DISTINCT user_id, d FROM m)
+)
+SELECT item_a, item_b, n_ab, sa.n_i AS n_a, sb.n_i AS n_b, n_baskets,
+  CAST(round(1000000.0 * ((CAST(n_baskets AS DOUBLE)
+       * CAST(n_ab AS DOUBLE))
+       / (CAST(sa.n_i AS DOUBLE) * CAST(sb.n_i AS DOUBLE))))
+       AS BIGINT) AS lift_q6
+FROM pairs
+JOIN singles sa ON sa.item = pairs.item_a
+JOIN singles sb ON sb.item = pairs.item_b
+CROSS JOIN total""",
+
+        "value_percent_rank": """
+WITH e AS (
+  SELECT event_id, event_type,
+    CAST(round(value * 100) AS BIGINT) AS cents
+  FROM events
+)
+SELECT event_id, event_type, cents AS value_c,
+  CAST(CASE WHEN count(*) OVER (PARTITION BY event_type) <= 1 THEN 0
+       ELSE (rank() OVER (PARTITION BY event_type ORDER BY cents) - 1)
+            * 10000
+            // (count(*) OVER (PARTITION BY event_type) - 1)
+       END AS BIGINT) AS pr_bp
+FROM e""",
+
+        "ols_price_qty": """
+WITH pts AS (
+  SELECT n_name,
+    CAST(round(l_quantity) AS BIGINT) AS x,
+    CAST(round(l_extendedprice) AS BIGINT) AS y
+  FROM lineitem
+  JOIN supplier ON l_suppkey = s_suppkey
+  JOIN nation ON s_nationkey = n_nationkey
+), m AS (
+  SELECT n_name, CAST(count(*) AS BIGINT) AS n,
+    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+    CAST(sum(x * x) AS BIGINT) AS sxx,
+    CAST(sum(y * y) AS BIGINT) AS syy,
+    CAST(sum(x * y) AS BIGINT) AS sxy
+  FROM pts GROUP BY n_name
+)
+SELECT n_name, n,
+  CASE WHEN n >= 2 AND (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
+    THEN CAST(round(1000000.0 * (((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+       / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))))) AS BIGINT)
+  END AS slope_q6,
+  CASE WHEN n >= 2 AND (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
+    THEN CAST(round(1000000.0 * (((CAST(sy AS DOUBLE)
+       - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+          / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
+         * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)))) AS BIGINT)
+  END AS intercept_q6,
+  CASE WHEN n >= 2 AND (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
+       AND (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+       - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0.0
+    THEN CAST(round(1000000.0 * ((((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+       * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
+       / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+       * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+       - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))))) AS BIGINT)
+  END AS r2_q6
+FROM m""",
+
+        "cms_user_counts": _cms_oracle_sql(),
+
+
+        "jaccard_prefix_pairs": """
+WITH tok AS (
+  SELECT DISTINCT doc_id, t AS tok
+  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
+        FROM documents)
+), sizes AS (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM tok GROUP BY doc_id
+), inter AS (
+  SELECT ta.doc_id AS a, tb.doc_id AS b,
+    CAST(count(*) AS BIGINT) AS n_common
+  FROM tok ta JOIN tok tb
+    ON ta.tok = tb.tok AND ta.doc_id < tb.doc_id
+  GROUP BY 1, 2
+)
+SELECT a, b, n_common, sa.sz AS sz_a, sb.sz AS sz_b,
+  CAST(1000000 * n_common // (sa.sz + sb.sz - n_common) AS BIGINT)
+    AS jaccard_q6
+FROM inter
+JOIN sizes sa ON sa.doc_id = a
+JOIN sizes sb ON sb.doc_id = b
+WHERE 1000000 * n_common // (sa.sz + sb.sz - n_common) >= 950000""",
+
+        "bpe_merge_pairs": """
+WITH toks AS (
+  SELECT lower(t) AS w
+  FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
+  WHERE regexp_matches(lower(t), '^[a-z]+$') AND length(t) >= 2
+), words AS (
+  SELECT w, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY w
+), pairs AS (
+  -- DuckDB can't correlate generate_series bounds: fixed 1..128
+  -- grid + filter (no [a-z]+ token in the corpus exceeds 129 chars)
+  SELECT substring(w, CAST(i AS INT), 2) AS pair, c
+  FROM words, generate_series(1, 128) t(i)
+  WHERE i <= length(w) - 1
+)
+SELECT pair, CAST(sum(c) AS BIGINT) AS cnt
+FROM pairs GROUP BY pair
+ORDER BY cnt DESC, pair ASC LIMIT 50""",
+
+        "bfs_reach": _bfs_sql(4),
+        "sssp_latency": _sssp_sql(4),
+
+        "golden_record": """
+WITH src AS (
+  SELECT user_id, ts, event_id,
+    CASE WHEN event_type = 'purchase'
+         THEN CAST(round(value * 100) AS BIGINT) END AS pc,
+    CASE WHEN event_type <> 'purchase' THEN event_type END AS ot
+  FROM events
+), a1 AS (
+  SELECT user_id,
+    first(pc ORDER BY ts DESC, event_id DESC) AS last_purchase_c
+  FROM src WHERE pc IS NOT NULL GROUP BY user_id
+), a2 AS (
+  SELECT user_id,
+    first(ot ORDER BY ts DESC, event_id DESC) AS last_other_type
+  FROM src WHERE ot IS NOT NULL GROUP BY user_id
+), ls AS (
+  SELECT user_id,
+    first(ts ORDER BY ts DESC, event_id DESC) AS last_seen_ts
+  FROM src GROUP BY user_id
+)
+SELECT ls.user_id, a1.last_purchase_c, a2.last_other_type,
+  ls.last_seen_ts
+FROM ls
+LEFT JOIN a1 USING (user_id)
+LEFT JOIN a2 USING (user_id)""",
+
+        "latency_cube_hdr": _hdr_cube_sql(),
+
+        "doc_logprob_bigram": """
+WITH lsts AS (
+  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '')
+    AS lst
+  FROM documents
+), pairs AS (
+  SELECT doc_id,
+    unnest(list_transform(generate_series(1, len(lst) - 1),
+                          i -> lst[i] || ' ' || lst[i + 1])) AS pair
+  FROM lsts WHERE len(lst) >= 2
+), tk AS (
+  SELECT token FROM (
+    SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
+  WHERE token <> ''
+), uni AS (
+  SELECT token, CAST(count(*) AS BIGINT) AS cu FROM tk GROUP BY token
+), vv AS (
+  SELECT CAST(count(*) AS BIGINT) AS v FROM uni
+), big AS (
+  SELECT pair, CAST(count(*) AS BIGINT) AS cb FROM pairs GROUP BY pair
+)
+SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+  CAST(sum(CAST(floor(ln(CAST(big.cb + 1 AS DOUBLE)
+       / CAST(uni.cu + vv.v AS DOUBLE)) * 1000000) AS BIGINT))
+    AS BIGINT) AS logprob2_q
+FROM pairs p
+JOIN big USING (pair)
+JOIN uni ON uni.token = split_part(p.pair, ' ', 1), vv
+GROUP BY p.doc_id""",
+
+        "pivot_type_dow": """
+SELECT event_type,
+  CAST(count(*) FILTER (dayofweek(ts) + 1 = 1) AS BIGINT) AS d1,
+  CAST(count(*) FILTER (dayofweek(ts) + 1 = 2) AS BIGINT) AS d2,
+  CAST(count(*) FILTER (dayofweek(ts) + 1 = 3) AS BIGINT) AS d3,
+  CAST(count(*) FILTER (dayofweek(ts) + 1 = 4) AS BIGINT) AS d4,
+  CAST(count(*) FILTER (dayofweek(ts) + 1 = 5) AS BIGINT) AS d5,
+  CAST(count(*) FILTER (dayofweek(ts) + 1 = 6) AS BIGINT) AS d6,
+  CAST(count(*) FILTER (dayofweek(ts) + 1 = 7) AS BIGINT) AS d7
+FROM events GROUP BY event_type""",
+
+        "min_cost_supplier": """
+WITH offers AS (
+  SELECT l_partkey, l_suppkey,
+    CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c
+  FROM lineitem
+), mins AS (
+  SELECT l_partkey, min(price_c) AS min_c FROM offers GROUP BY l_partkey
+)
+SELECT DISTINCT offers.l_partkey, offers.l_suppkey, offers.price_c
+FROM offers JOIN mins USING (l_partkey)
+WHERE offers.price_c = mins.min_c""",
+
+        "cumulative_reach": """
+WITH fs AS (
+  SELECT user_id, min(CAST(ts AS DATE)) AS day FROM events
+  GROUP BY user_id
+), daily AS (
+  SELECT day, CAST(count(*) AS BIGINT) AS new_users FROM fs GROUP BY day
+)
+SELECT CAST(day AS VARCHAR) AS day, new_users,
+  CAST(sum(new_users) OVER (ORDER BY day
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+    AS cum_users
+FROM daily""",
+
+        "stream_hll_users": f"""
+WITH src AS (
+  SELECT md5(CAST(user_id AS VARCHAR)) AS h32 FROM events
+), hh AS (
+  SELECT {_hex13_sql('h32')} AS h FROM src
+), regs AS (
+  SELECT h % 256 AS register,
+    max(45 - length(ltrim(bin(h // 256), '0'))) AS max_rho
+  FROM hh GROUP BY register
+), agg AS (
+  SELECT CAST(256 - count(*) AS BIGINT) AS v_zero,
+    CAST(CAST(sum(CAST(1 AS BIGINT) << (52 - max_rho)) AS BIGINT)
+         + (256 - count(*)) * 4503599627370496 AS BIGINT) AS s_scaled,
+    CAST(round(((CAST(0.7182725932495458 AS DOUBLE)
+                 * CAST(65536 AS DOUBLE))
+                * CAST(4503599627370496 AS DOUBLE))
+         / CAST(CAST(sum(CAST(1 AS BIGINT) << (52 - max_rho)) AS BIGINT)
+                + (256 - count(*)) * 4503599627370496 AS DOUBLE))
+         AS BIGINT) AS raw_est
+  FROM regs
+)
+SELECT CAST(256 AS BIGINT) AS n_registers, v_zero, s_scaled,
+  CASE WHEN v_zero > 0 AND raw_est * 2 <= 1280
+       THEN CAST(round(CAST(256 AS DOUBLE)
+                 * ln(CAST(256 AS DOUBLE) / CAST(v_zero AS DOUBLE)))
+                 AS BIGINT)
+       ELSE raw_est END AS estimate
+FROM agg""",
+
+        "ppr_handoff": _ppr_sql(3),
+
+        "schema_evolution_read": """
+SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
+  CAST(NULL AS VARCHAR) AS event_type
+FROM events WHERE user_id % 2 = 0
+UNION ALL
+SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
+  event_type
+FROM events WHERE user_id % 2 = 1""",
+
+        "funnel_steps_24h": """
+WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t,
+                   min(epoch_us(ts)) AS t1 FROM events
+            WHERE event_type = 'view' GROUP BY user_id),
+s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t, s1.t1 AS t1
+       FROM events e JOIN s1 USING (user_id)
+       WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t
+         AND epoch_us(e.ts) <= s1.t1 + 86400000000
+       GROUP BY e.user_id, s1.t1),
+s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
+       FROM events e JOIN s2 USING (user_id)
+       WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t
+         AND epoch_us(e.ts) <= s2.t1 + 86400000000
+       GROUP BY e.user_id),
+c AS (SELECT (SELECT count(*) FROM s1) AS u1,
+             (SELECT count(*) FROM s2) AS u2,
+             (SELECT count(*) FROM s3) AS u3)
+SELECT 1 AS step, 'view' AS step_name, CAST(u1 AS BIGINT) AS users,
+  CAST(CASE WHEN u1 > 0 THEN u1 * 1000000 // u1 ELSE 0 END AS BIGINT)
+    AS conv_ppm FROM c
+UNION ALL
+SELECT 2, 'click', CAST(u2 AS BIGINT),
+  CAST(CASE WHEN u1 > 0 THEN u2 * 1000000 // u1 ELSE 0 END AS BIGINT)
+  FROM c
+UNION ALL
+SELECT 3, 'purchase', CAST(u3 AS BIGINT),
+  CAST(CASE WHEN u1 > 0 THEN u3 * 1000000 // u1 ELSE 0 END AS BIGINT)
+  FROM c""",
+
+        "agg_delta_apply": """
+WITH o AS (
+  SELECT o_orderstatus, o_orderpriority,
+    CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+    o_orderdate, o_orderkey
+  FROM orders
+), survivors AS (
+  SELECT * FROM o
+  WHERE date_part('year', o_orderdate) >= 1996
+  UNION ALL
+  SELECT * FROM o
+  WHERE date_part('year', o_orderdate) < 1996 AND o_orderkey % 7 <> 0
+)
+SELECT o_orderstatus, o_orderpriority,
+  CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS sum_v
+FROM survivors
+GROUP BY o_orderstatus, o_orderpriority
+HAVING count(*) > 0""",
+
+        # union octagon closed forms (integer rectangles, corner
+        # overlap): area = 2wh - (w-dx)(h-dy),
+        # perimeter = 4(w+h) - 2((w-dx)+(h-dy))
+        "sql_st_union": """
+WITH p AS (
+  SELECT p_partkey,
+    p_partkey % 5 + 4 AS w, p_partkey % 7 + 3 AS h,
+    p_partkey % 3 + 1 AS dx, p_partkey % 2 + 1 AS dy
+  FROM part WHERE p_partkey <= 200)
+SELECT p_partkey,
+  CAST(2 * w * h - (w - dx) * (h - dy) AS BIGINT) AS uarea,
+  CAST(4 * (w + h) - 2 * ((w - dx) + (h - dy)) AS BIGINT) AS ulen,
+  CAST((w - dx) * (h - dy) AS BIGINT) AS iarea,
+  CAST(2 * ((w - dx) + (h - dy)) AS BIGINT) AS ilen,
+  CAST(w * h - (w - dx) * (h - dy) AS BIGINT) AS darea,
+  CAST(2 * (w + h) AS BIGINT) AS dlen
+FROM p""",
+        # k-member staggered chain: area 24k - 6(k-1), one region
+        "dissolve_zones": """
+WITH p AS (SELECT p_partkey % 20 AS g FROM part WHERE p_partkey <= 400),
+r AS (SELECT g, count(*) AS k FROM p GROUP BY g)
+SELECT CAST(g AS BIGINT) AS g,
+  CAST(24 * k - 6 * (k - 1) AS BIGINT) AS uarea,
+  CAST(1 AS BIGINT) AS n_parts
+FROM r""",
+        # identical to the common_neighbors mirror except sym is
+        # capped per node to the 8 smallest-id neighbors via the same
+        # row_number window the operator uses; the anti-join (NOT
+        # EXISTS) still probes the FULL edge set e
+        "common_neighbors_capped": """
+WITH raw AS (
+  SELECT user_id AS src,
+    lead(user_id) OVER (PARTITION BY event_type
+                        ORDER BY ts, event_id) AS dst
+  FROM events),
+e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      FROM raw WHERE dst IS NOT NULL AND src <> dst),
+sym AS (
+  SELECT a, b FROM (
+    SELECT a, b, row_number() OVER (PARTITION BY a ORDER BY b) AS rn
+    FROM (SELECT a, b FROM e UNION ALL SELECT b, a FROM e) s) t
+  WHERE rn <= 8),
+cand AS (
+  SELECT s1.b AS a, s2.b AS b, count(*) AS n_common
+  FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b
+  GROUP BY s1.b, s2.b),
+nc AS (SELECT c.a, c.b, c.n_common FROM cand c
+       WHERE NOT EXISTS (SELECT 1 FROM e
+                         WHERE e.a = c.a AND e.b = c.b))
+SELECT a, b, CAST(n_common AS BIGINT) AS n_common FROM nc
+ORDER BY n_common DESC, a, b LIMIT 20""",
+        # annulus closed forms (w-square minus centered (w-2)-square):
+        #   darea = w²-(w-2)² = 4w-4        dlen = 8w-8
+        #   iarea: annulus ∩ corner 3-box gd = 2·2 - 1·1 = 3
+        #   island: (w+4)-frame minus annulus = (w+4)²-w² + (w-2)²
+        #           (the annulus hole returns as an ISLAND)
+        #   uarea: ∪ disjoint 2-box = 4w-4+4;  uarea2: ∪ gd (overlap
+        #           3, hole shrinks) = 4w-4 + 9 - 3
+        "sql_st_difference_annulus": """
+WITH p AS (
+  SELECT p_partkey, p_partkey % 5 + 4 AS w
+  FROM part WHERE p_partkey <= 200)
+SELECT p_partkey,
+  CAST(4*w - 4 AS BIGINT) AS darea,
+  CAST(8*w - 8 AS BIGINT) AS dlen,
+  CAST(3 AS BIGINT) AS iarea,
+  CAST((w+4)*(w+4) - w*w + (w-2)*(w-2) AS BIGINT) AS island,
+  CAST(4*w AS BIGINT) AS uarea,
+  CAST(4*w + 2 AS BIGINT) AS uarea2
+FROM p""",
+        # erosion closed forms: rectangle minus 1 per side; full
+        # erosion (min side <= 2d) → NULL → -1; hole-shrink identity
+        # (v-2·0.5)² with v = w-2
+        "sql_st_buffer_erode": """
+WITH p AS (
+  SELECT p_partkey, p_partkey % 5 + 4 AS w, p_partkey % 7 + 3 AS h
+  FROM part WHERE p_partkey <= 200)
+SELECT p_partkey,
+  CAST((w-2)*(h-2) AS BIGINT) AS earea,
+  CAST(2*(w-2) + 2*(h-2) AS BIGINT) AS elen,
+  CAST(CASE WHEN least(w, h) <= 4 THEN -1
+       ELSE (w-4)*(h-4) END AS BIGINT) AS evan,
+  CAST((w-3)*(w-3) AS BIGINT) AS hshrink
+FROM p""",
+
+        # adjacent-tiling dissolve closed forms (see the gate
+        # docstring: q = n div k, rem = n mod k)
+        "dissolve_adjacent_tiles": """
+WITH c AS (
+  SELECT p_partkey % 20 AS g, count(*) AS rows_avail
+  FROM part WHERE p_partkey <= 400 GROUP BY 1),
+k AS (
+  SELECT g, g % 3 + 2 AS k,
+         least(rows_avail, (g % 3 + 2) * (g % 3 + 2)) AS n
+  FROM c),
+q AS (SELECT g, k, n, n // k AS q, n % k AS rem FROM k)
+SELECT CAST(g AS BIGINT) AS g,
+  CAST(n AS BIGINT) AS uarea,
+  CAST(CASE WHEN rem = 0 THEN 2 * (k + q)
+            WHEN q = 0 THEN 2 * n + 2
+            ELSE 2 * k + 2 * q + 2 END AS BIGINT) AS ulen,
+  CAST(1 AS BIGINT) AS n_parts
+FROM q""",
+        # split-waist erosion closed forms (see gate docstring)
+        "sql_st_buffer_erode_split": """
+WITH p AS (
+  SELECT p_partkey, p_partkey % 5 + 4 AS w, p_partkey % 7 + 6 AS h
+  FROM part WHERE p_partkey <= 200)
+SELECT p_partkey,
+  CAST(2 * (w - 3) * (h - 3) AS BIGINT) AS sarea,
+  CAST(2 AS BIGINT) AS snrings,
+  CAST(-1 AS BIGINT) AS svan
+FROM p""",
+        "ann_recall_planted": _rank_eval_sql(
+            _lsh_mp_topk_sql(n_probe=4, k=10,
+                             src=f"({_planted_sql()})",
+                             q_pred="vec_id % 12 = 0"),
+            f"""SELECT q_id, vec_id, rank FROM (
+  SELECT q.vec_id AS q_id, v.vec_id,
+    CAST(row_number() OVER (PARTITION BY q.vec_id
+      ORDER BY {_cos('v.embedding', 'q.embedding')} DESC, v.vec_id)
+      AS INT) AS rank
+  FROM ({_planted_sql()}) q
+  JOIN ({_planted_sql()}) v ON v.vec_id <> q.vec_id
+  WHERE q.vec_id % 12 = 0) t WHERE rank <= 10""", 10),
+        # degenerate-contact closed forms (see the gate docstring)
+        "sql_st_degenerate_contact": """
+WITH p AS (
+  SELECT p_partkey, p_partkey % 4 + 2 AS s, p_partkey % 4 + 4 AS w
+  FROM part WHERE p_partkey <= 200)
+SELECT p_partkey,
+  CAST(2 * s * s AS BIGINT) AS f8area,
+  CAST(8 * s AS BIGINT) AS f8len,
+  CAST(2 AS BIGINT) AS f8rings,
+  CAST(4 * s * s AS BIGINT) AS farea,
+  CAST(1 AS BIGINT) AS frings,
+  CAST(s * s AS BIGINT) AS darea,
+  CAST(-1 AS BIGINT) AS iarea,
+  CAST(w * w - 2 AS BIGINT) AS pacarea,
+  CAST(2 AS BIGINT) AS pacrings
+FROM p""",
+
+        "ann_knn_join_planted": _ann_knn_join_planted_sql(),
+        "price_percentiles_exact": _price_percentiles_exact_sql(),
+        "semantic_dedup_planted": _semantic_dedup_planted_sql(),
+        "semantic_contamination_planted":
+            _semantic_contamination_planted_sql(),
+        "sample_token_budget": _sample_token_budget_sql(),
+        "curation_pipeline": _curation_pipeline_sql(),
+        "curation_pipeline_neardup": _curation_pipeline_neardup_sql(),
+        "passage_dedup_planted": _passage_dedup_planted_sql(),
+        "k_core_handoff": _k_core_handoff_sql(),
+        "graph_assortativity": _graph_assortativity_sql(),
+        "rich_club_handoff": _rich_club_sql(),
+        "gini_prices": _gini_prices_sql(),
+        "stream_semantic_contamination":
+            _stream_semantic_contamination_sql(),
+        "simhash_pairs_planted": _simhash_pairs_planted_sql(),
+        "incremental_ingest_planted": _incremental_ingest_planted_sql(),
+        "duplicated_spans": _duplicated_spans_sql(),
+        "contaminated_spans": _contaminated_spans_sql(),
+        "kn_discounts_docs": _kn_discounts_sql(),
+        "curation_neardup_planted": _curation_neardup_planted_sql(),
+        "doc_logprob_kn": _doc_logprob_kn_sql(),
+        "doc_logprob_kn3": _doc_logprob_kn3_sql(),
+    }
 
     # streaming replay gates — each must equal the batch computation
     sql["stream_windowed_stats"] = """
@@ -10392,13 +10171,6 @@ SELECT DISTINCT user_id, event_type FROM events"""
     sql["multimodal_video_pairs"] = (
         "SELECT * FROM (VALUES " + ", ".join(vrow) +
         ") t(a_id, b_id, n_frames_matched, min_hamming)")
-
-    # bucketed zipJoin must equal the plain lattice point join — the
-    # bucketing is a physical-plan property (no exchanges), not a
-    # semantic one
-    sql["zip_join_bucketed"] = f"""
-SELECT c_custkey, s_suppkey FROM customer, supplier
-WHERE ({cx}) = ({sx}) AND ({cy}) = ({sy})"""
 
     # stream-stream join replay: even ⋈ odd event ids on exact point
     # equality within ±1 h (cell equality is implied by the point)
@@ -10644,40 +10416,117 @@ SELECT CAST(a.si * 3 +
          ELSE 2 END AS INT) AS part,
   count(*) AS n
 FROM assign a GROUP BY 1"""
+
+    # physical-plan twins reuse the mirror of the gate whose rows they
+    # must equal. The Bloom prefilter (literal or jvm build) is a pure
+    # physical optimization with zero semantic effect.
+    sql["contamination_bloom"] = sql["contamination_exact"]
+    sql["contamination_bloom_jvm"] = sql["contamination_exact"]
+    # the jvm streaming impl (distributed words build + per-micro-batch
+    # broadcast probe joins) has the literal impl's semantics
+    sql["stream_contamination_jvm"] = sql["stream_contamination"]
+    # format roundtrips: the oracle is the parquet original — the
+    # Spark side must read back EXACTLY what it wrote
+    sql["csv_roundtrip"] = sql["jsonl_roundtrip"]
+    sql["orc_roundtrip"] = sql["jsonl_roundtrip"]
+    # angular buckets only change the physical grouping of the skyline
+    sql["skyline_angular"] = sql["skyline"]
+    # partition pruning skips files, never rows of the rectangle
+    sql["pruned_read_rect"] = sql["st_filter_rect_timed"]
+    # grid, broadcast, pruned-storage and bucketed zipJoin (no
+    # exchanges) are physical plans of the same lattice point join
+    sql["st_join_broadcast_points"] = sql["st_join_grid_points"]
+    sql["pruned_join_points"] = sql["st_join_grid_points"]
+    sql["zip_join_bucketed"] = sql["st_join_grid_points"]
+    # the pruned two-phase kNN must equal the full scan
+    sql["pruned_knn"] = sql["knn_events"]
+    # the hierarchical dissolve yields the same band-order-invariant
+    # integers as the flat one
+    sql["dissolve_zones_hier"] = sql["dissolve_zones"]
+    # the batch ADC kernel produces bit-identical BIGINT scores to the
+    # literal path
+    sql["ann_pq_topk_batch"] = sql["ann_pq_topk"]
+    # streaming arrival order cannot move a single CMS counter
+    sql["stream_cms_counts"] = sql["cms_user_counts"]
+    # the streaming ingest twin and the persisted banded-index probe
+    # both collapse to min(hamming) per key pair, like the batch join
+    sql["stream_ingest_dedup"] = sql["incremental_ingest_planted"]
+    sql["incremental_ingest_indexed"] = sql["incremental_ingest_planted"]
+    # the bucketed-store probe must be a results no-op vs in-memory IVF:
+    # same parameters, same fold scorer, hence the identical oracle
+    sql["ann_ivf_pruned_topk"] = sql["ann_ivf_topk"]
     # the streaming OHLC replay must equal the batch resample exactly
     sql["stream_ohlc"] = sql["ohlc_hourly"]
     # ingest-time scoring against batch-fit thresholds must equal the
     # batch detector on the same rows
     sql["stream_outliers"] = sql["events_outliers"]
+
+    # entries built from other mirrors read the table built above
+    sql["ann_recall_eval"] = _ann_recall_eval_sql(sql)
+    tru_brute = (f"SELECT q_id, vec_id, rank "
+                 f"FROM ({sql['ann_brute_topk']}) t0")
+    # LSH retrieves with exclude_self, so truth drops the query's
+    # own row and re-ranks
+    tru_noself = f"""SELECT q_id, vec_id, row_number() OVER (
+      PARTITION BY q_id ORDER BY rank) AS rank
+    FROM ({sql['ann_brute_topk']}) t0 WHERE vec_id <> q_id"""
+    # rank derived with the PQ operator's tie order; truth = the
+    # exact brute mirror verbatim
+    sql["ann_recall_pq"] = _rank_eval_sql(
+        f"""SELECT q_id, vec_id, row_number() OVER (
+      PARTITION BY q_id ORDER BY adc_q, vec_id) AS rank
+    FROM ({sql['ann_pq_topk']}) r0""", tru_brute, 5)
+    sql["ann_recall_lsh"] = _rank_eval_sql(
+        f"SELECT q_id, vec_id, rank FROM ({sql['ann_lsh_topk']}) r0",
+        tru_noself, 5)
+    sql["ann_recall_lsh_mp"] = _rank_eval_sql(_lsh_mp_topk_sql(),
+                                              tru_noself, 5)
+    # the fine-percentile gate is the funnel_latency mirror with a
+    # wider VALUES list
+    sql["funnel_latency_fine"] = sql["funnel_latency"].replace(
+        "(VALUES (50), (90), (99))",
+        "(VALUES (1), (25), (50), (75), (99))")
+    assert sql["funnel_latency_fine"] != sql["funnel_latency"]
+
+    live, pending, retired = queries(), pending_queries(), retired_queries()
+    names = [*live, *pending, *retired]
+    shared = sorted({n for n in names if names.count(n) > 1})
+    if shared:
+        raise ValueError(f"names listed under two statuses: {shared}")
+    if set(sql) != set(names):
+        raise ValueError(
+            f"oracle table keys differ from the builder lists: "
+            f"no builder for {sorted(set(sql) - set(names))}, "
+            f"no mirror for {sorted(set(names) - set(sql))}")
     return sql
 
 
-# Retired at the r11/r12 rotations (the standing trigger: >= 3 gates
-# staged in one round). Retired gates keep their functions and
-# mirrors and stay oracle-checked — by
-# tests/test_extras.py::test_retired_gates_oracle_parity and
-# `python tests/oracle_check.py --retired` — they just no longer
-# occupy registry slots. All four are thin spines whose plan shapes
-# are shadowed by richer live gates: tpch_q5/q3/q18 carry the
-# fact-shuffle + dim-broadcast rollup; merge_upsert and the dedup
-# tier carry union + dropDuplicates (SURVEY §2.6 notes set ops are
-# Spark built-ins); events_daily ⊂ events_rollup (same date-trunc
-# groupBy, rollup adds GROUPING SETS); token_counts ⊂ text_profile
-# (same tokenizer, profile adds the quality columns).
-# r13 rotation (6 staged >= 3 fires the trigger again):
-# dedup_simhash ⊂ simhash_pairs_planted — the planted gate runs the
-# SAME banding engine (hamming_near_pairs) end-to-end with a stronger
-# (closed-form planted) oracle, and the fingerprint bit-vote
-# arithmetic stays pytest-pinned (test_analytics simhash tests);
-# contamination_ngrams ⊂ contaminated_spans — the span gate runs the
-# identical 13-gram explode + eval-gram join shape and ADDITIONALLY
-# proves the exact excision offsets the counting gate only counts.
-_RETIRED = ("set_ops_union_distinct", "agg_revenue_by_nation",
-            "events_daily", "token_counts",
-            "dedup_simhash", "contamination_ngrams")
-
-
 def retired_queries():
+    """Gates retired from the driver window. They keep their builders
+    and mirrors and stay oracle-checked — by
+    tests/test_extras.py::test_retired_gates_oracle_parity and
+    `python tests/oracle_check.py --retired` — they just no longer
+    occupy registry slots. Each plan shape is shadowed by a richer
+    live gate:
+
+    - set_ops_union_distinct: merge_upsert and the dedup tier carry
+      union + dropDuplicates (SURVEY §2.6 notes set ops are Spark
+      built-ins);
+    - agg_revenue_by_nation: tpch_q5/q3/q18 carry the fact-shuffle +
+      dim-broadcast rollup;
+    - events_daily ⊂ events_rollup (same date-trunc groupBy, rollup
+      adds GROUPING SETS);
+    - token_counts ⊂ text_profile (same tokenizer, profile adds the
+      quality columns);
+    - dedup_simhash ⊂ simhash_pairs_planted: the planted gate runs the
+      SAME banding engine (hamming_near_pairs) end-to-end with a
+      stronger (closed-form planted) oracle, and the fingerprint
+      bit-vote arithmetic stays pytest-pinned (test_analytics simhash
+      tests);
+    - contamination_ngrams ⊂ contaminated_spans: the span gate runs the
+      identical 13-gram explode + eval-gram join shape and additionally
+      proves the exact excision offsets the counting gate only counts.
+    """
     return {"set_ops_union_distinct": _q_set_ops,
             "agg_revenue_by_nation": _q_agg_revenue_by_nation,
             "events_daily": _q_events_daily,
@@ -10686,20 +10535,16 @@ def retired_queries():
             "contamination_ngrams": _q_contamination_ngrams}
 
 
-def retired_oracle_sql() -> dict[str, str]:
-    base = _base_oracle_sql()
-    return {k: base[k] for k in _RETIRED}
-
-
 def oracle_sql() -> dict[str, str]:
-    sql = _base_oracle_sql()
-    sql.update(_promoted_oracle_sql_r6())
-    sql.update(_promoted_oracle_sql_r7())
-    sql.update(_promoted_oracle_sql_r8())
-    sql.update(_promoted_oracle_sql_r9())
-    sql.update(_promoted_oracle_sql_r10())
-    sql.update(_promoted_oracle_sql_r11())
-    sql.update(_promoted_oracle_sql_r12())
-    for k in _RETIRED:
-        sql.pop(k, None)
-    return sql
+    table = _oracle_table()
+    return {n: table[n] for n in queries()}
+
+
+def pending_oracle_sql() -> dict[str, str]:
+    table = _oracle_table()
+    return {n: table[n] for n in pending_queries()}
+
+
+def retired_oracle_sql() -> dict[str, str]:
+    table = _oracle_table()
+    return {n: table[n] for n in retired_queries()}

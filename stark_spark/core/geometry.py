@@ -183,8 +183,6 @@ def bbox(g: Geometry) -> tuple[float, float, float, float]:
 # WKT codec
 # ---------------------------------------------------------------------------
 
-_NUM = r"[-+]?[0-9]*\.?[0-9]+(?:[eE][-+]?[0-9]+)?"
-
 
 def _parse_ring_text(txt: str) -> np.ndarray:
     """Parse a coordinate run → (n, 2) or (n, 3) float array (the third

@@ -53,17 +53,11 @@ def _loop_ckpt(df: DataFrame, key: str) -> DataFrame:
 
 
 def _broadcast_bytes(spark) -> int:
-    """autoBroadcastJoinThreshold in bytes (engine sessions set it
-    numerically); -1 when auto-broadcast is disabled."""
-    v = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
-                           "10485760")).lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    try:
-        if v and v[-1] in units and v[:-1].lstrip("-").isdigit():
-            return int(v[:-1]) * units[v[-1]]
-        return int(v)
-    except ValueError:
-        return 10 << 20
+    """autoBroadcastJoinThreshold in bytes as Spark itself parsed it
+    (unit suffixes such as "64MB" included); -1 when auto-broadcast is
+    disabled."""
+    return int(spark._jsparkSession.sessionState().conf()
+               .autoBroadcastJoinThreshold())
 
 
 def connected_components(edges: DataFrame, *, src: str = "a",
@@ -387,7 +381,7 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3,
     # broadcasts; plan-verified), so the setup shuffle is skipped.
     bt = _broadcast_bytes(spark)
     edj = e.join(deg, "src")
-    ed = (_loop_ckpt(edj, "src") if bt > 0 and n * 32 > bt
+    ed = (_loop_ckpt(edj, "src") if bt < 0 or n * 32 > bt
           else edj.localCheckpoint())
     base_q = (scale * 15 // 100) // n       # exact python ints
     r = nodes.select("node", "_out",
@@ -555,7 +549,7 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame, *,
     spark = edges.sparkSession
     bt = _broadcast_bytes(spark)
     edj = e.join(deg, "src")
-    ed = (_loop_ckpt(edj, "src") if bt > 0 and n_all * 32 > bt
+    ed = (_loop_ckpt(edj, "src") if bt < 0 or n_all * 32 > bt
           else edj.localCheckpoint())
     base_q = (scale * 15 // 100) // ns
     r = nodes.select("node", "_out", "_s",

@@ -50,12 +50,6 @@ except Exception:
     pass
 
 
-IMAGE_META = StructType([
-    StructField("mime", StringType()), StructField("width", IntegerType()),
-    StructField("height", IntegerType()), StructField("channels", IntegerType()),
-])
-
-
 def read_binary_dir(spark: SparkSession, path: str,
                     pattern: str = "*") -> DataFrame:
     """Directory of media files → (path, modificationTime, length,

@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_GRAIN_ORDER = ("day", "week", "month", "year")
-
 
 def multi_grain_rollup(df: DataFrame, ts_col: str, value_col: str,
                        grains: tuple[str, ...] = ("day", "month", "year"),

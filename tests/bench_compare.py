@@ -70,9 +70,8 @@ BANDS_WARM_MAX = {
     # a DECLARED +0.2-0.3 s eager probe to every hamming-family call
     # (the last pre-guard record is r11-era, so the step shows up in
     # the r12->r13 column); quiet-host post-guard readings are
-    # 0.76-0.91 s. The probe memo cache can't help here — each bench
-    # rep re-localCheckpoints the fp frame, which mints a fresh
-    # semanticHash. An unguarded quadratic regression would read
+    # 0.76-0.91 s. The probe runs once per call, so every bench rep
+    # pays it again. An unguarded quadratic regression would read
     # multi-second, far past these bands.
     "multimodal_phash_pairs": 1.2,
     "multimodal_audio_pairs": 1.1,

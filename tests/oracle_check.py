@@ -232,9 +232,6 @@ def run(sf_dir: str, only: list[str] | None = None,
             print(f"FAIL {name}: spark error: {str(e)[:200]}")
             failures += 1
             continue
-        if name not in oracles:
-            print(f"PASS(rows-only) {name}: {len(spark_pdf)} rows (no oracle)")
-            continue
         try:
             duck_pdf = con.execute(oracles[name]).fetchdf()
         except Exception as e:

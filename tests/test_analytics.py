@@ -2463,22 +2463,32 @@ def test_doc_logprob_kn3_closed_form(spark):
     assert 3 not in out and all(s < 0 for _, s in out.values())
 
 
-def test_pagerank_prepartition_smj_regime(spark):
+def test_pagerank_prepartition_smj_regime(spark, monkeypatch):
     """The r14 SMJ-regime edge pre-partitioning: when the rank frame
-    exceeds the broadcast threshold, the degree-annotated edge list
-    is materialized hash-partitioned on src with the partitioning
-    PRESERVED through the checkpoint, so (a) ranks are IDENTICAL to
-    the broadcast-regime run, and (b) a loop-shaped join against the
+    exceeds the broadcast threshold, or auto-broadcast is disabled
+    (-1), the degree-annotated edge list is materialized
+    hash-partitioned on src with the partitioning PRESERVED through
+    the checkpoint, so (a) ranks are IDENTICAL to the
+    broadcast-regime run, and (b) a loop-shaped join against the
     pre-partitioned frame plans no Exchange above the edge-side scan
     (only the rank side shuffles — the per-round 100 TB term)."""
     from pyspark.sql import functions as F
 
+    from stark_spark.operators import graph
     from stark_spark.operators.graph import _loop_ckpt, pagerank
 
+    calls = []
+
+    def counting_ckpt(df, key):
+        calls.append(key)
+        return _loop_ckpt(df, key)
+
+    monkeypatch.setattr(graph, "_loop_ckpt", counting_ckpt)
     edges = spark.createDataFrame(
         [(i % 37, (i * 7) % 37) for i in range(400)
          if i % 37 != (i * 7) % 37], "src long, dst long")
     base = {r.node: r.rank_q for r in pagerank(edges, n_iter=3).collect()}
+    assert calls == []          # 37 nodes broadcast: no pre-partition
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # force the SMJ regime: nothing broadcasts, the gate trips
@@ -2487,6 +2497,7 @@ def test_pagerank_prepartition_smj_regime(spark):
                for r in pagerank(edges, n_iter=3).collect()}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert calls == ["src"]
     assert smj == base
 
     # plan property, isolated: a join keyed on the preserved column
@@ -2508,6 +2519,20 @@ def test_pagerank_prepartition_smj_regime(spark):
     n_ex = plan.count("Exchange") - plan.count("ReusedExchange")
     assert n_ex == 1, plan
     assert "Scan ExistingRDD" in plan
+
+
+def test_broadcast_bytes_reads_unit_suffixes(spark):
+    """The SMJ-regime gate reads the threshold Spark itself parsed,
+    so unit-suffixed settings such as "64MB" size correctly."""
+    from stark_spark.operators.graph import _broadcast_bytes
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        assert _broadcast_bytes(spark) == 64 << 20
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == old
 
 
 def test_pq_codes_arrow_equals_fold(spark):

@@ -749,6 +749,32 @@ def test_registry_driver_window_packing():
         f"`python tests/rotate_registry.py --apply`")
 
 
+def test_registry_oracle_table_is_closed(monkeypatch):
+    """The oracle table holds exactly one mirror per name listed in
+    queries() ∪ pending_queries() ∪ retired_queries(): a builder
+    without a mirror fails when the table is built, not when a sweep
+    reaches it. bench.BENCH_QUERIES names only live or retired gates,
+    once each."""
+    import bench
+    import __spark_entry__ as entry
+
+    live, ret = set(entry.queries()), set(entry.retired_queries())
+    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES))
+    assert set(bench.BENCH_QUERIES) <= live | ret, (
+        sorted(set(bench.BENCH_QUERIES) - live - ret))
+
+    retired = entry.retired_queries()
+    monkeypatch.setattr(entry, "retired_queries",
+                        lambda: {**retired, "no_such_gate": None})
+    with pytest.raises(ValueError, match="no_such_gate"):
+        entry.oracle_sql()
+    # a name listed under two statuses is refused as well
+    monkeypatch.setattr(entry, "retired_queries",
+                        lambda: {**retired, "knn_events": None})
+    with pytest.raises(ValueError, match="knn_events"):
+        entry.oracle_sql()
+
+
 def test_format_roundtrips_hostile_content(spark):
     """JSONL/CSV/ORC roundtrips must survive hostile text: embedded
     quotes, commas, newlines, tabs, unicode, the nullValue marker
