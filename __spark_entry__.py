@@ -39,6 +39,8 @@ from stark_spark.operators.similarity import (brute_force_topk,
                                               cosine_dup_pairs, ivf_topk)
 from stark_spark.operators.skyline import skyline
 from stark_spark.partitioner.grid import GridSpec
+from stark_spark.materialize import materialize
+from stark_spark.session import bind, clone_session
 
 # ---------------------------------------------------------------------------
 # shared constants (mirrored verbatim in the oracle SQL)
@@ -1424,7 +1426,7 @@ def _q_pagerank_handoff(spark, sf):
     PURE-INTEGER mass — r div deg edge carry, (x·85) div 100 damping,
     dangling mass dm div N — so the iterative result is bit-exact
     against the oracle's unrolled CTE chain. One rank⋈edges shuffle
-    + one combined sum per round, localCheckpoint caps lineage."""
+    + one combined sum per round, materialize caps lineage."""
     from pyspark.sql import Window
     from stark_spark.operators.graph import pagerank
     ev = D.load(spark, sf, "events")
@@ -3014,10 +3016,10 @@ def _planted_hamming_fp(spark, sf, *, mask_xor: int = 0,
     disjoint."""
     base = D.load(spark, sf, "embeddings").select(
         F.col("vec_id").cast("long").alias("v0"))
-    return (_with_planted_fp(base, "v0", mask_xor=mask_xor)
-            .select((F.col("v0") + F.lit(id_offset)).alias("vec_id"),
-                    "fp")
-            .localCheckpoint())
+    return materialize(
+        _with_planted_fp(base, "v0", mask_xor=mask_xor)
+        .select((F.col("v0") + F.lit(id_offset)).alias("vec_id"),
+                "fp"))
 
 
 def _pq_incremental_ingest_planted(spark, sf):
@@ -4872,7 +4874,7 @@ def _q_contamination_bloom(spark, sf):
     is filtered through a compact literal bitmap BEFORE any shuffle:
     the 100 TB decontamination plan shape.
 
-    The eval frame is localCheckpoint'ed per the operator's caller
+    The eval frame is materialized per the operator's caller
     contract (dedup.cross_bloom_dups no longer persists internally —
     the r5 leak fix): the build collect and the closing join would
     otherwise evaluate the eval pipeline twice, and determinism of
@@ -4880,7 +4882,7 @@ def _q_contamination_bloom(spark, sf):
     guarantee."""
     from stark_spark.operators.dedup import cross_bloom_dups
     docs = D.load(spark, sf, "documents")
-    ev = _eval_corpus(spark, sf).localCheckpoint(eager=True)
+    ev = materialize(_eval_corpus(spark, sf))
     return cross_bloom_dups(docs, ev, "doc_id")
 
 
@@ -5552,19 +5554,18 @@ def _stream_sink(out, mode: str, state_partitions: int | None = None):
     env_parts = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
     if env_parts:
         state_partitions = int(env_parts)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    # the query runs on a clone of the session so the setting never
+    # touches the caller's session, which other queries may share
+    run = spark if state_partitions is None else clone_session(
+        spark, {"spark.sql.shuffle.partitions": str(state_partitions)})
     try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(state_partitions))
-        q = (out.writeStream.format("memory").queryName(name)
+        q = (bind(out, run).writeStream.format("memory").queryName(name)
                 .option("checkpointLocation", ck)
                 .outputMode(mode).trigger(availableNow=True).start())
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         shutil.rmtree(ck, ignore_errors=True)
-    return spark.table(name)
+    return bind(run.table(name), spark)
 
 
 def _q_stream_windowed_stats(spark, sf):
@@ -6703,10 +6704,18 @@ WITH tk AS (
         FROM qt GROUP BY token) f, st
 ), tf AS (
   SELECT doc_id, token, count(*) AS tf FROM qt GROUP BY doc_id, token"""
-    sql = {
-        # min-ts chain as chained CTEs (the k-join form; the engine's
-        # one-shuffle greedy fold provably computes the same reach)
-        "funnel_steps": """
+    # raster mirrors: per-pixel event counts of the 8×8-pixel tiles
+    # (10.0 units / 1.25 per pixel) over events
+    pix_cte = f"""
+WITH pix AS (
+  SELECT floor(value / 10.0) AS tx, floor(({EV_Y}) / 10.0) AS ty,
+    floor(value / 1.25) AS ix, floor(({EV_Y}) / 1.25) AS iy,
+    count(*) AS n
+  FROM events GROUP BY 1, 2, 3, 4
+)"""
+    # min-ts view→click→purchase chain (funnel_steps, funnel_latency)
+    # and the 3-step count report (funnel_steps, funnel_steps_24h)
+    funnel_chain = """
 WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
             WHERE event_type = 'view' GROUP BY user_id),
 s2 AS (SELECT e.user_id, min(e.ts) AS t
@@ -6716,7 +6725,8 @@ s3 AS (SELECT e.user_id, min(e.ts) AS t
        FROM events e JOIN s2 USING (user_id)
        WHERE e.event_type = 'purchase' AND e.ts > s2.t
        GROUP BY e.user_id),
-c AS (SELECT (SELECT count(*) FROM s1) AS u1,
+"""
+    funnel_report = """c AS (SELECT (SELECT count(*) FROM s1) AS u1,
              (SELECT count(*) FROM s2) AS u2,
              (SELECT count(*) FROM s3) AS u3)
 SELECT 1 AS step, 'view' AS step_name, CAST(u1 AS BIGINT) AS users,
@@ -6729,7 +6739,56 @@ SELECT 2, 'click', CAST(u2 AS BIGINT),
 UNION ALL
 SELECT 3, 'purchase', CAST(u3 AS BIGINT),
   CAST(CASE WHEN u1 > 0 THEN u3 * 1000000 // u1 ELSE 0 END AS BIGINT)
-  FROM c""",
+  FROM c"""
+    # consecutive-user edge list (lead within event_type) and the
+    # common-neighbor count over its symmetric form `sym`
+    lead_edges = """
+WITH raw AS (
+  SELECT user_id AS src,
+    lead(user_id) OVER (PARTITION BY event_type
+                        ORDER BY ts, event_id) AS dst
+  FROM events),
+e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      FROM raw WHERE dst IS NOT NULL AND src <> dst),
+"""
+    cn_tail = """cand AS (
+  SELECT s1.b AS a, s2.b AS b, count(*) AS n_common
+  FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b
+  GROUP BY s1.b, s2.b),
+nc AS (SELECT c.a, c.b, c.n_common FROM cand c
+       WHERE NOT EXISTS (SELECT 1 FROM e
+                         WHERE e.a = c.a AND e.b = c.b))
+SELECT a, b, CAST(n_common AS BIGINT) AS n_common FROM nc
+ORDER BY n_common DESC, a, b LIMIT 20"""
+
+    def ivf_ctes(n_cent, probe_filter=None):
+        """`assigned` (each vector's top-1 of the first ``n_cent``
+        centroids) and, with ``probe_filter``, `probes` (each query's
+        top-2 centroids)."""
+        ctes = f"""
+WITH assigned AS (
+  SELECT vec_id, embedding, bucket FROM (
+    SELECT v.vec_id, v.embedding, c.vec_id AS bucket,
+      row_number() OVER (PARTITION BY v.vec_id
+        ORDER BY {_cos('v.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
+    FROM embeddings v, embeddings c WHERE c.vec_id < {n_cent}
+  ) t WHERE rn = 1
+)"""
+        if probe_filter is None:
+            return ctes
+        return ctes + f""", probes AS (
+  SELECT q_id, q_embedding, bucket FROM (
+    SELECT q.vec_id AS q_id, q.embedding AS q_embedding, c.vec_id AS bucket,
+      row_number() OVER (PARTITION BY q.vec_id
+        ORDER BY {_cos('q.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
+    FROM embeddings q, embeddings c WHERE {probe_filter}c.vec_id < {n_cent}
+  ) t WHERE rn <= 2
+)"""
+
+    sql = {
+        # min-ts chain as chained CTEs (the k-join form; the engine's
+        # one-shuffle greedy fold provably computes the same reach)
+        "funnel_steps": funnel_chain + funnel_report,
 
         # integer epoch-week buckets: positive, so // == Spark div
         "cohort_retention": """
@@ -6757,16 +6816,7 @@ FROM g""",
         # exact order-statistic percentile ranks ⌈n·p/100⌉ on the
         # converted-users latency frame (min-ts chain as in
         # funnel_steps; greedy fold start == s1.t, end == s3.t)
-        "funnel_latency": """
-WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
-            WHERE event_type = 'view' GROUP BY user_id),
-s2 AS (SELECT e.user_id, min(e.ts) AS t
-       FROM events e JOIN s1 USING (user_id)
-       WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY e.user_id),
-s3 AS (SELECT e.user_id, min(e.ts) AS t
-       FROM events e JOIN s2 USING (user_id)
-       WHERE e.event_type = 'purchase' AND e.ts > s2.t
-       GROUP BY e.user_id),
+        "funnel_latency": funnel_chain + """\
 lat AS (SELECT s3.user_id AS u,
           epoch_us(s3.t) - epoch_us(s1.t) AS latency_us
         FROM s3 JOIN s1 ON s3.user_id = s1.user_id),
@@ -6896,14 +6946,7 @@ FROM g JOIN o USING (series, bucket) JOIN c USING (series, bucket)""",
 
         # id-ordered triangle join — counts the same triangles the
         # engine's degree-ordered orientation does
-        "triangle_count": """
-WITH raw AS (
-  SELECT user_id AS src,
-    lead(user_id) OVER (PARTITION BY event_type
-                        ORDER BY ts, event_id) AS dst
-  FROM events),
-e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      FROM raw WHERE dst IS NOT NULL AND src <> dst),
+        "triangle_count": lead_edges + """\
 deg AS (SELECT a AS node, count(*) AS deg FROM
         (SELECT a FROM e UNION ALL SELECT b FROM e) t(a) GROUP BY a),
 tri AS (SELECT count(*) AS n_triangles
@@ -7022,24 +7065,9 @@ WHERE dev.dev > 3 * mad.mad_c""",
 
         # symmetric wedge join == common-neighbor count; anti-join
         # removes existing links; full order makes top-k deterministic
-        "common_neighbors": """
-WITH raw AS (
-  SELECT user_id AS src,
-    lead(user_id) OVER (PARTITION BY event_type
-                        ORDER BY ts, event_id) AS dst
-  FROM events),
-e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      FROM raw WHERE dst IS NOT NULL AND src <> dst),
+        "common_neighbors": lead_edges + """\
 sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
-cand AS (
-  SELECT s1.b AS a, s2.b AS b, count(*) AS n_common
-  FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b
-  GROUP BY s1.b, s2.b),
-nc AS (SELECT c.a, c.b, c.n_common FROM cand c
-       WHERE NOT EXISTS (SELECT 1 FROM e
-                         WHERE e.a = c.a AND e.b = c.b))
-SELECT a, b, CAST(n_common AS BIGINT) AS n_common FROM nc
-ORDER BY n_common DESC, a, b LIMIT 20""",
+""" + cn_tail,
 
         # per-term quantized lns subtracted AFTER flooring (the pmi /
         # doc_logprob libm posture)
@@ -7605,25 +7633,13 @@ SELECT date_trunc('day', ts) AS day, count(*) AS n,
   sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS sum_value
 FROM events GROUP BY 1""",
 
-        "raster_rasterize_stats": f"""
-WITH pix AS (
-  SELECT floor(value / 10.0) AS tx, floor(({EV_Y}) / 10.0) AS ty,
-    floor(value / 1.25) AS ix, floor(({EV_Y}) / 1.25) AS iy,
-    count(*) AS n
-  FROM events GROUP BY 1, 2, 3, 4
-)
+        "raster_rasterize_stats": pix_cte + """
 SELECT tx * 10.0 AS ulx, (ty + 1) * 10.0 AS uly,
   max(n) AS pix_max, CAST(count(*) AS INT) AS n_nonzero,
   CAST(sum(n) AS BIGINT) AS n_events
 FROM pix GROUP BY tx, ty""",
 
-        "raster_histogram": f"""
-WITH pix AS (
-  SELECT floor(value / 10.0) AS tx, floor(({EV_Y}) / 10.0) AS ty,
-    floor(value / 1.25) AS ix, floor(({EV_Y}) / 1.25) AS iy,
-    count(*) AS n
-  FROM events GROUP BY 1, 2, 3, 4
-), hist AS (
+        "raster_histogram": pix_cte + """, hist AS (
   SELECT least(7, greatest(0, CAST(floor(n / 2.0) AS INT))) AS bucket,
     count(*) AS n
   FROM pix GROUP BY 1
@@ -7653,13 +7669,7 @@ WHERE 200 * ({EV_Y}) >= 0
   AND (-200) * ({EV_Y}) - 100 * (value - 200) >= 0
   AND 100 * value >= 0""",
 
-        "raster_join_vector_clip": f"""
-WITH pix AS (
-  SELECT floor(value / 10.0) AS tx, floor(({EV_Y}) / 10.0) AS ty,
-    floor(value / 1.25) AS ix, floor(({EV_Y}) / 1.25) AS iy,
-    count(*) AS n
-  FROM events GROUP BY 1, 2, 3, 4
-), tile AS (
+        "raster_join_vector_clip": pix_cte + f""", tile AS (
   SELECT tx, ty, tx * 10.0 AS ulx, (ty + 1) * 10.0 AS uly
   FROM pix GROUP BY tx, ty
 ), nat AS (
@@ -7705,22 +7715,10 @@ SELECT tx * 10.0 AS ulx, (ty + 1) * 10.0 AS uly,
   CAST(8 AS INT) AS width, CAST(8 AS INT) AS height, n AS n_ev
 FROM t WHERE ne > 0 AND no > 0""",
 
-        "raster_count_value": f"""
-WITH pix AS (
-  SELECT floor(value / 10.0) AS tx, floor(({EV_Y}) / 10.0) AS ty,
-    floor(value / 1.25) AS ix, floor(({EV_Y}) / 1.25) AS iy,
-    count(*) AS n
-  FROM events GROUP BY 1, 2, 3, 4
-)
+        "raster_count_value": pix_cte + """
 SELECT CAST(count(*) AS BIGINT) AS n FROM pix WHERE n = 1""",
 
-        "raster_roundtrip": f"""
-WITH pix AS (
-  SELECT floor(value / 10.0) AS tx, floor(({EV_Y}) / 10.0) AS ty,
-    floor(value / 1.25) AS ix, floor(({EV_Y}) / 1.25) AS iy,
-    count(*) AS n
-  FROM events GROUP BY 1, 2, 3, 4
-), t AS (
+        "raster_roundtrip": pix_cte + """, t AS (
   SELECT tx, ty, count(*) AS n_occ FROM pix GROUP BY tx, ty
 )
 SELECT tx * 10.0 AS ulx, (ty + 1) * 10.0 AS uly,
@@ -7838,13 +7836,7 @@ SELECT event_id, value AS x, {EV_Y} AS y FROM events
 WHERE value > 20 AND value < 70
   AND ({EV_Y}) > 30 AND ({EV_Y}) < 90""",
 
-        "sql_tile_accessors": f"""
-WITH pix AS (
-  SELECT floor(value / 10.0) AS tx, floor(({EV_Y}) / 10.0) AS ty,
-    floor(value / 1.25) AS ix, floor(({EV_Y}) / 1.25) AS iy,
-    count(*) AS n
-  FROM events GROUP BY 1, 2, 3, 4
-), t AS (
+        "sql_tile_accessors": pix_cte + """, t AS (
   SELECT tx, ty, count(*) AS n_occ, min(n) AS mn, max(n) AS mx,
     list(n ORDER BY n) AS cnts
   FROM pix GROUP BY tx, ty
@@ -7928,13 +7920,7 @@ SELECT event_id,
              * 10000) AS BIGINT) AS llen_q
 FROM t""",
 
-        "sql_raster_histogram": f"""
-WITH pix AS (
-  SELECT floor(value / 10.0) AS tx, floor(({EV_Y}) / 10.0) AS ty,
-    floor(value / 1.25) AS ix, floor(({EV_Y}) / 1.25) AS iy,
-    count(*) AS n
-  FROM events GROUP BY 1, 2, 3, 4
-), hist AS (
+        "sql_raster_histogram": pix_cte + """, hist AS (
   SELECT least(7, greatest(0, CAST(floor(n / 2.0) AS INT))) AS bucket,
     count(*) AS n
   FROM pix GROUP BY 1
@@ -8969,22 +8955,7 @@ SELECT q_id, vec_id, rank FROM (
   FROM embeddings v, embeddings q WHERE q.vec_id < 5
 ) t WHERE rank <= 10""",
 
-        "ann_ivf_topk_gemm": f"""
-WITH assigned AS (
-  SELECT vec_id, embedding, bucket FROM (
-    SELECT v.vec_id, v.embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY v.vec_id
-        ORDER BY {_cos('v.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings v, embeddings c WHERE c.vec_id < 4
-  ) t WHERE rn = 1
-), probes AS (
-  SELECT q_id, q_embedding, bucket FROM (
-    SELECT q.vec_id AS q_id, q.embedding AS q_embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY q.vec_id
-        ORDER BY {_cos('q.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings q, embeddings c WHERE q.vec_id < 5 AND c.vec_id < 4
-  ) t WHERE rn <= 2
-)
+        "ann_ivf_topk_gemm": ivf_ctes(4, "q.vec_id < 5 AND ") + f"""
 SELECT q_id, vec_id, rank FROM (
   SELECT p.q_id, a.vec_id,
     CAST(row_number() OVER (PARTITION BY p.q_id
@@ -8992,36 +8963,13 @@ SELECT q_id, vec_id, rank FROM (
   FROM assigned a JOIN probes p USING (bucket)
 ) t WHERE rank <= 5""",
 
-        "ann_dup_pairs_ivf_gemm": f"""
-WITH assigned AS (
-  SELECT vec_id, embedding, bucket FROM (
-    SELECT v.vec_id, v.embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY v.vec_id
-        ORDER BY {_cos('v.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings v, embeddings c WHERE c.vec_id < 4
-  ) t WHERE rn = 1
-)
+        "ann_dup_pairs_ivf_gemm": ivf_ctes(4) + f"""
 SELECT a.vec_id AS a, b.vec_id AS b
 FROM assigned a JOIN assigned b USING (bucket)
 WHERE a.vec_id < b.vec_id
   AND {_cos('a.embedding', 'b.embedding')} >= 0.4""",
 
-        "ann_ivf_topk": f"""
-WITH assigned AS (
-  SELECT vec_id, embedding, bucket FROM (
-    SELECT v.vec_id, v.embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY v.vec_id
-        ORDER BY {_cos('v.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings v, embeddings c WHERE c.vec_id < 4
-  ) t WHERE rn = 1
-), probes AS (
-  SELECT q_id, q_embedding, bucket FROM (
-    SELECT q.vec_id AS q_id, q.embedding AS q_embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY q.vec_id
-        ORDER BY {_cos('q.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings q, embeddings c WHERE q.vec_id < 5 AND c.vec_id < 4
-  ) t WHERE rn <= 2
-)
+        "ann_ivf_topk": ivf_ctes(4, "q.vec_id < 5 AND ") + f"""
 SELECT q_id, vec_id, cos, rank FROM (
   SELECT p.q_id, a.vec_id, {_cos('a.embedding', 'p.q_embedding')} AS cos,
     CAST(row_number() OVER (PARTITION BY p.q_id
@@ -9045,22 +8993,7 @@ SELECT q_id, vec_id, cos, rank FROM (
   WHERE q.vec_id < 5 AND v.vec_id <> q.vec_id
 ) t WHERE rank <= 5""",
 
-        "ann_knn_join": f"""
-WITH assigned AS (
-  SELECT vec_id, embedding, bucket FROM (
-    SELECT v.vec_id, v.embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY v.vec_id
-        ORDER BY {_cos('v.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings v, embeddings c WHERE c.vec_id < 8
-  ) t WHERE rn = 1
-), probes AS (
-  SELECT q_id, q_embedding, bucket FROM (
-    SELECT q.vec_id AS q_id, q.embedding AS q_embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY q.vec_id
-        ORDER BY {_cos('q.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings q, embeddings c WHERE c.vec_id < 8
-  ) t WHERE rn <= 2
-)
+        "ann_knn_join": ivf_ctes(8, "") + f"""
 SELECT q_id, vec_id, cos, rank FROM (
   SELECT p.q_id, a.vec_id, {_cos('a.embedding', 'p.q_embedding')} AS cos,
     CAST(row_number() OVER (PARTITION BY p.q_id
@@ -9069,22 +9002,7 @@ SELECT q_id, vec_id, cos, rank FROM (
   WHERE a.vec_id <> p.q_id
 ) t WHERE rank <= 3""",
 
-        "ann_knn_join_gemm": f"""
-WITH assigned AS (
-  SELECT vec_id, embedding, bucket FROM (
-    SELECT v.vec_id, v.embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY v.vec_id
-        ORDER BY {_cos('v.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings v, embeddings c WHERE c.vec_id < 8
-  ) t WHERE rn = 1
-), probes AS (
-  SELECT q_id, q_embedding, bucket FROM (
-    SELECT q.vec_id AS q_id, q.embedding AS q_embedding, c.vec_id AS bucket,
-      row_number() OVER (PARTITION BY q.vec_id
-        ORDER BY {_cos('q.embedding', 'c.embedding')} DESC, c.vec_id) AS rn
-    FROM embeddings q, embeddings c WHERE c.vec_id < 8
-  ) t WHERE rn <= 2
-)
+        "ann_knn_join_gemm": ivf_ctes(8, "") + f"""
 SELECT q_id, vec_id, rank FROM (
   SELECT p.q_id, a.vec_id,
     CAST(row_number() OVER (PARTITION BY p.q_id
@@ -9887,20 +9805,7 @@ s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
        WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t
          AND epoch_us(e.ts) <= s2.t1 + 86400000000
        GROUP BY e.user_id),
-c AS (SELECT (SELECT count(*) FROM s1) AS u1,
-             (SELECT count(*) FROM s2) AS u2,
-             (SELECT count(*) FROM s3) AS u3)
-SELECT 1 AS step, 'view' AS step_name, CAST(u1 AS BIGINT) AS users,
-  CAST(CASE WHEN u1 > 0 THEN u1 * 1000000 // u1 ELSE 0 END AS BIGINT)
-    AS conv_ppm FROM c
-UNION ALL
-SELECT 2, 'click', CAST(u2 AS BIGINT),
-  CAST(CASE WHEN u1 > 0 THEN u2 * 1000000 // u1 ELSE 0 END AS BIGINT)
-  FROM c
-UNION ALL
-SELECT 3, 'purchase', CAST(u3 AS BIGINT),
-  CAST(CASE WHEN u1 > 0 THEN u3 * 1000000 // u1 ELSE 0 END AS BIGINT)
-  FROM c""",
+""" + funnel_report,
 
         "agg_delta_apply": """
 WITH o AS (
@@ -9950,28 +9855,13 @@ FROM r""",
         # capped per node to the 8 smallest-id neighbors via the same
         # row_number window the operator uses; the anti-join (NOT
         # EXISTS) still probes the FULL edge set e
-        "common_neighbors_capped": """
-WITH raw AS (
-  SELECT user_id AS src,
-    lead(user_id) OVER (PARTITION BY event_type
-                        ORDER BY ts, event_id) AS dst
-  FROM events),
-e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      FROM raw WHERE dst IS NOT NULL AND src <> dst),
+        "common_neighbors_capped": lead_edges + """\
 sym AS (
   SELECT a, b FROM (
     SELECT a, b, row_number() OVER (PARTITION BY a ORDER BY b) AS rn
     FROM (SELECT a, b FROM e UNION ALL SELECT b, a FROM e) s) t
   WHERE rn <= 8),
-cand AS (
-  SELECT s1.b AS a, s2.b AS b, count(*) AS n_common
-  FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b
-  GROUP BY s1.b, s2.b),
-nc AS (SELECT c.a, c.b, c.n_common FROM cand c
-       WHERE NOT EXISTS (SELECT 1 FROM e
-                         WHERE e.a = c.a AND e.b = c.b))
-SELECT a, b, CAST(n_common AS BIGINT) AS n_common FROM nc
-ORDER BY n_common DESC, a, b LIMIT 20""",
+""" + cn_tail,
         # annulus closed forms (w-square minus centered (w-2)-square):
         #   darea = w²-(w-2)² = 4w-4        dlen = 8w-8
         #   iarea: annulus ∩ corner 3-box gd = 2·2 - 1·1 = 3

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 
 def basket_lift_pairs(df: DataFrame, *, basket: list, item: Column
@@ -28,10 +29,10 @@ def basket_lift_pairs(df: DataFrame, *, basket: list, item: Column
     n_a, n_b, n_baskets, lift_q6 = round(1e6·(n·n_ab)/(n_a·n_b))).
     Pairs never co-occurring are absent (support 0 has no lift).
     """
-    m = (df.select(*[c.alias(f"_k{i}") for i, c in enumerate(basket)],
-                   item.alias("item"))
-           .distinct()
-           .localCheckpoint(eager=True))       # 3 consumers below
+    m = materialize(
+        df.select(*[c.alias(f"_k{i}") for i, c in enumerate(basket)],
+                  item.alias("item"))
+          .distinct())       # 3 consumers below
     kcols = [f"_k{i}" for i in range(len(basket))]
     a = m.select(*kcols, F.col("item").alias("item_a"))
     b = m.select(*kcols, F.col("item").alias("item_b"))

@@ -26,21 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from stark_spark.materialize import materialize
+
 from .sampling import token_budget_sample
 from .text import gopher_flags
-
-
-def _is_materialized_scan(df: DataFrame) -> bool:
-    """True iff the root of the frame's analyzed plan is a
-    ``LogicalRDD`` — what a ``localCheckpoint``/``checkpoint``
-    returns. Re-checkpointing such a frame pays a full copy job and
-    buys nothing (the blocks are already pinned). Any other root,
-    a ``cache()``d frame included, reads as not materialized."""
-    try:
-        node = df._jdf.queryExecution().analyzed()
-        return node.getClass().getSimpleName() == "LogicalRDD"
-    except Exception:  # pragma: no cover — py4j surface drift
-        return False
 
 
 def filter_quality(df: DataFrame, *, text_col: str = "text",
@@ -99,7 +88,7 @@ def dedup_near_keep_best(df: DataFrame, key: str, score_col: str, *,
     signal), riding the identical engine
     (`dedup.hamming_near_pairs`).
 
-    The input frame is materialized (``localCheckpoint``) FIRST:
+    The input frame is materialized (`materialize`) FIRST:
     this stage fans ``df`` out three ways — the fingerprint pass,
     the (key, score) cluster labeling, and the survivor join-back —
     and in the composed `curate` pipeline ``df`` is the whole
@@ -108,20 +97,15 @@ def dedup_near_keep_best(df: DataFrame, key: str, score_col: str, *,
     re-runs that chain (r13 A/B at sf0.1: the upstream appears
     twice in the final join plan alone, 3 executions per
     invocation); with it the chain runs once and every branch reads
-    the materialized blocks. On a real cluster swap for
-    ``checkpoint()`` to reliable storage — same trade the
-    simhash fingerprint checkpoint already documents. The
-    checkpoint is skipped when the root of the input plan is a
-    ``LogicalRDD`` (a checkpointed frame), since re-checkpointing
-    blocks buys nothing."""
+    the materialized blocks (an input that is already cached or
+    checkpointed is used as it is)."""
     from .dedup import (dedup_keep_best, hamming_near_pairs,
                         simhash_near_pairs)
-    if not _is_materialized_scan(df):
-        df = df.localCheckpoint()
+    df = materialize(df)
     if fp_col is not None:
         # (key, int64) frame — tiny; its own checkpoint keeps the
         # banded self-join's branches off the wide-row df blocks
-        fp = df.select(key, fp_col).localCheckpoint()
+        fp = materialize(df.select(key, fp_col))
         pairs = hamming_near_pairs(fp, key, fp_col=fp_col,
                                    max_hamming=max_hamming)
     else:
@@ -177,8 +161,8 @@ def curate(df: DataFrame, key: str, *, text_col: str = "text",
         # decontaminate(→near-dup) chain twice. Materialize the
         # (post-dedup, so reduced) survivor set once; both branches
         # read the blocks. Same trade as the near-dup stage's entry
-        # checkpoint — swap for checkpoint() on a real cluster.
-        out = out.localCheckpoint()
+        # checkpoint.
+        out = materialize(out)
         out = token_budget_sample(out, key, weight_col, budgets,
                                   source_col=source_col,
                                   default_budget=default_budget,

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
                                StructType)
 
+from stark_spark.materialize import materialize
 from stark_spark.partitioner.grid import GridSpec
 
 
@@ -130,16 +131,14 @@ def dbscan(df: DataFrame, eps: float, min_pts: int, *, key: str,
         grid.cells_array_expr(F.col("_x"), F.col("_y"),
                               F.col("_x"), F.col("_y"), expand=eps)))
     home = grid.cell_expr(F.col("_x"), F.col("_y"))
-    # hash-partition the replica set by _cell BEFORE caching: both
-    # applyInPandas passes group by _cell, and an InMemoryRelation
-    # preserves outputPartitioning (unlike localCheckpoint — the r14
-    # graph probe), while the pass-2 broadcast join keeps the
-    # streamed side's partitioning. So the one exchange at cache
-    # build replaces BOTH per-pass replica-scale exchanges (guide
-    # §2.4 — two operations keyed the same way share one exchange);
-    # plan-verified: no Exchange above either FlatMapGroupsInPandas.
-    pts = (pts.withColumn("_home", (F.col("_cell") == home).cast("int"))
-              .repartition(F.col("_cell")).cache())
+    # pin the replica set hash-partitioned on _cell with the
+    # partitioning kept: both applyInPandas passes group by _cell, so
+    # pass 1 needs no exchange of its own, and neither does pass 2
+    # when its join broadcasts the core flags (the streamed replica
+    # side keeps its partitioning; guide §2.4 — two operations keyed
+    # the same way share one exchange).
+    pts = pts.withColumn("_home", (F.col("_cell") == home).cast("int"))
+    pts = materialize(pts, key="_cell", eager=False)
 
     # --- pass 1: globally-correct core flags, computed in home cells ----
     core_schema = StructType([StructField("_k", LongType()),
@@ -218,7 +217,8 @@ def dbscan(df: DataFrame, eps: float, min_pts: int, *, key: str,
         return pd.DataFrame({"_k": out_k, "_home": out_h,
                              "_core": out_c, "_lab": out_l})
 
-    labeled = piled.groupBy("_cell").applyInPandas(cluster_pass, lab_schema).cache()
+    labeled = materialize(piled.groupBy("_cell").applyInPandas(
+        cluster_pass, lab_schema), eager=False)
 
     # --- equivalence edges from multi-cell core points -------------------
     core_labs = labeled.where((F.col("_core") == 1) & F.col("_lab").isNotNull()) \

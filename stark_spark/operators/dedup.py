@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from stark_spark.operators.text import shingles
+from stark_spark.materialize import materialize
 
 
 def _sql_array_lit(values, element_type: str) -> Column:
@@ -436,15 +437,14 @@ def _bloom_probe_array(scan: DataFrame, hash_col: str,
             f"array, over Spark's 2 GiB row limit: split the eval set "
             f"into shards (<= ~5e8 hashes each at fpp 1e-3) or raise "
             f"fpp")
-    warr_row = (words_df.groupBy()
-                .agg(F.map_from_entries(
-                    F.collect_list(F.struct("w_idx", "word")))
-                    .alias("_mp"))
-                .select(F.expr(
-                    f"transform(sequence(0, {nw - 1}), "
-                    f"i -> coalesce(element_at(_mp, i), 0L))")
-                    .alias("_warr"))
-                .localCheckpoint(eager=True))
+    warr_row = materialize(words_df.groupBy()
+                           .agg(F.map_from_entries(
+                               F.collect_list(F.struct("w_idx", "word")))
+                               .alias("_mp"))
+                           .select(F.expr(
+                               f"transform(sequence(0, {nw - 1}), "
+                               f"i -> coalesce(element_at(_mp, i), 0L))")
+                               .alias("_warr")))
     h1, h2 = _bloom_h12(hash_col, m)
     out = (scan.crossJoin(F.broadcast(warr_row))
                .withColumn("_h1", F.expr(h1))
@@ -496,7 +496,7 @@ def cross_bloom_dups(train: DataFrame, eval_df: DataFrame, key: str, *,
     # the filter build against hashes recomputed in the closing join.
     # A nondeterministic eval pipeline (seedless sample(), uuid(),
     # limit over an unordered shuffle, ...) can silently drop matches;
-    # persist()/localCheckpoint() such inputs before calling.
+    # persist() or `materialize` such inputs before calling.
     tr_hash = train.select(F.md5(F.col(text_col)).alias("content_hash"))
     if impl == "literal":
         hashes = [r.h for r in
@@ -646,7 +646,7 @@ def jaccard_prefix_join(df: DataFrame, key: str, *,
     Output: (a, b, n_common, sz_a, sz_b, jaccard_q6), a < b.
     """
     t_q6 = int(round(threshold * 1_000_000))
-    # NOTE (r13 A/B): do NOT localCheckpoint tok/per_doc here even
+    # NOTE (r13 A/B): do NOT materialize tok/per_doc here even
     # though both feed multiple subtrees — the identical distinct
     # subtrees already share one exchange via ReusedExchange, column
     # pruning collapses the `sizes` branch to a count-only aggregate,
@@ -910,17 +910,16 @@ def simhash_near_pairs(df: DataFrame, key: str, *, max_hamming: int = 3,
     fingerprints within hamming d share at least one of d+1 bands
     unchanged), verify hamming inside blocks only.
 
-    The fingerprint frame is materialized (``localCheckpoint``) before
+    The fingerprint frame is materialized (`materialize`) before
     the banded self-join: the 2×(d+1) branch plans would otherwise each
     re-execute the fingerprint aggregate (no common exchange above the
     agg for ReusedExchange to dedup), and join-key ``isnotnull``
     pushdown re-inlines the fp expression when it is a Project alias —
     measured minutes instead of seconds at sf0.1. The checkpointed
-    frame is (key, int64) — tiny at any corpus size; on a real cluster
-    swap for ``checkpoint()`` to reliable storage.
+    frame is (key, int64) — tiny at any corpus size.
     """
-    fp = simhash_fingerprints(df, key, n_bits=64,
-                              text_col=text_col).localCheckpoint()
+    fp = materialize(
+        simhash_fingerprints(df, key, n_bits=64, text_col=text_col))
     return hamming_near_pairs(fp, key, fp_col="fp",
                               max_hamming=max_hamming)
 
@@ -1140,12 +1139,12 @@ def hamming_near_join_indexed(new_df: DataFrame, index_path: str, *,
             f"the threshold (pigeonhole bands are not reusable across "
             f"thresholds)")
     shards = int(mf.bucket_shards)
-    a = (_banded_fp(new_df, key, fp_col, n_bands)
-         .select(F.col(key).alias("_new"), F.col("fp").alias("fp_a"),
-                 "band", "bucket")
-         .withColumn("bshard",
-                     F.pmod(F.col("bucket"), F.lit(shards)).cast("int"))
-         .localCheckpoint())
+    a = materialize(
+        _banded_fp(new_df, key, fp_col, n_bands)
+        .select(F.col(key).alias("_new"), F.col("fp").alias("fp_a"),
+                "band", "bucket")
+        .withColumn("bshard",
+                    F.pmod(F.col("bucket"), F.lit(shards)).cast("int")))
     present = sorted({r.band * shards + r.bshard
                       for r in a.select("band", "bshard")
                                 .distinct().collect()})
@@ -1178,16 +1177,15 @@ def ingest_dedup_cycle(new_df: DataFrame, index_path: str, *,
     fresh rows of ``new_df`` (all columns).
 
     Note the append is an EAGER side effect (the anti-join result
-    must materialize before the index grows — localCheckpoint pins
+    must materialize before the index grows — `materialize` pins
     it so the returned frame does not re-probe a store that now
     contains the batch itself)."""
     matches = hamming_near_join_indexed(
         new_df, index_path, key=key, fp_col=fp_col,
         max_hamming=max_hamming)
-    fresh = (new_df.join(matches.select(F.col("new_key").alias(key))
-                                .distinct(),
-                         key, "left_anti")
-                   .localCheckpoint())
+    fresh = materialize(new_df.join(matches.select(F.col("new_key").alias(key))
+                                           .distinct(),
+                                    key, "left_anti"))
     if append:
         append_fp_index(fresh.select(key, fp_col), index_path,
                         key=key, fp_col=fp_col)

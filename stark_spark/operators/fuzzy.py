@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 
 def fuzzy_join(left: DataFrame, right: DataFrame, left_col: str,
@@ -78,17 +79,17 @@ def fuzzy_canonicalize(df: DataFrame, col: str, *, block_fn,
     (driver union-find under the size guard, hash-min label
     propagation above it).
 
-    The vocabulary aggregate is materialized (``localCheckpoint``)
+    The vocabulary aggregate is materialized (`materialize`)
     ONCE: it feeds the blocked self-join (twice — both sides), the
     component node set, and the final labeling join, and
     `connected_components`' eager edge probe is a separate action —
     un-materialized, the corpus-scale distinct-name aggregate
     re-executed 3-4× per invocation (r14 job trace). The frame is
     the distinct-value vocabulary — tiny relative to the rows at any
-    corpus size; swap for ``checkpoint()`` on a real cluster."""
+    corpus size."""
     from stark_spark.operators.graph import connected_components
-    vals = (df.groupBy(F.col(col).alias("name"))
-              .agg(F.count("*").alias("n")).localCheckpoint())
+    vals = materialize(df.groupBy(F.col(col).alias("name"))
+                         .agg(F.count("*").alias("n")))
     blocked = vals.withColumn("_blk", block_fn(F.col("name")))
     a = blocked.select(F.col("name").alias("name_a"),
                        F.col("n").alias("n_a"), "_blk")

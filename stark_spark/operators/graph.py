@@ -15,7 +15,7 @@ data that produced it):
   the size guard.
 * above it: hash-min label propagation (each node takes the min label
   of its neighborhood per round, O(diameter) rounds) with a
-  ``localCheckpoint()`` per round so iterative lineage can't grow —
+  `materialize` per round so iterative lineage can't grow —
   the standard large-graph CC on Spark without GraphX.
 """
 
@@ -23,33 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _loop_ckpt(df: DataFrame, key: str) -> DataFrame:
-    """Materialize a LOOP-INVARIANT frame hash-partitioned on the
-    loop's equi-join key with the partitioning PRESERVED into the
-    checkpointed LogicalRDD, so every round's join/aggregate keyed on
-    ``key`` leaves this side in place and shuffles only the per-round
-    side (guide §2.4 shuffle reuse — the 100 TB term of the iterative
-    operators: one setup shuffle instead of one big-side shuffle per
-    round).
-
-    Mechanics (probed on Spark 4.1.2): ``Dataset.localCheckpoint``
-    captures ``physicalPlan.outputPartitioning`` into the LogicalRDD,
-    but only when the plan is NOT wrapped in AdaptiveSparkPlanExec —
-    under AQE the capture reads Unknown and every downstream join
-    re-shuffles this side. AQE is therefore toggled off just for this
-    one materialization action; consumers keep AQE on (probe: the
-    downstream SortMergeJoin then plans `Scan ExistingRDD` with no
-    Exchange above it, only the other side exchanges)."""
-    spark = df.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.repartition(p, key).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+from stark_spark.materialize import materialize
 
 
 def _broadcast_bytes(spark) -> int:
@@ -69,8 +43,8 @@ def connected_components(edges: DataFrame, *, src: str = "a",
     (edges alone can't mention them); defaults to edge endpoints only.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = e.unionByName(e.select(F.col("b").alias("a"),
-                                 F.col("a").alias("b"))).localCheckpoint()
+    sym = materialize(e.unionByName(e.select(F.col("b").alias("a"),
+                                             F.col("a").alias("b"))))
     if nodes is None:
         node_df = sym.select(F.col("a").alias("node")).distinct()
     else:
@@ -117,17 +91,17 @@ def connected_components(edges: DataFrame, *, src: str = "a",
                  f"comp {schema['node'].dataType.simpleString()}"
         return spark.createDataFrame([(n, find(n)) for n in labs], schema)
 
-    comp = node_df.withColumn("comp", F.col("node")).localCheckpoint()
+    comp = materialize(node_df.withColumn("comp", F.col("node")))
     while True:
         neigh = (sym.join(comp.select(F.col("node").alias("b"),
                                       F.col("comp").alias("comp_b")), "b")
                     .groupBy("a").agg(F.min("comp_b").alias("comp_n")))
-        nxt = (comp.join(neigh.withColumnRenamed("a", "node"),
-                         "node", "left")
-                   .select("node", "comp",
-                           F.least(F.col("comp"),
-                                   F.col("comp_n")).alias("comp_new"))
-                   .localCheckpoint())
+        nxt = materialize(
+            comp.join(neigh.withColumnRenamed("a", "node"),
+                      "node", "left")
+                .select("node", "comp",
+                        F.least(F.col("comp"),
+                                F.col("comp_n")).alias("comp_new")))
         changed = nxt.where(F.col("comp_new") != F.col("comp")).count()
         comp = nxt.select("node", F.col("comp_new").alias("comp"))
         if changed == 0:
@@ -154,26 +128,26 @@ def triangle_count(edges: DataFrame, *, src: str = "src",
     oriented edge frame — both plain equi-joins Catalyst can plan —
     and one scalar aggregate. Orientation changes the join cost, not
     the count, so the oracle can use the simpler id-ordering."""
-    e = (edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-              .where(F.col("x") != F.col("y"))
-              .select(F.least("x", "y").alias("a"),
-                      F.greatest("x", "y").alias("b"))
-              .distinct().localCheckpoint())
+    e = materialize(edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+                         .where(F.col("x") != F.col("y"))
+                         .select(F.least("x", "y").alias("a"),
+                                 F.greatest("x", "y").alias("b"))
+                         .distinct())
     sym = e.unionByName(e.select(F.col("b").alias("a"),
                                  F.col("a").alias("b")))
     deg = sym.groupBy("a").agg(F.count("*").alias("deg")) \
              .select(F.col("a").alias("node"), "deg")
     # orient by (deg, node): u -> v iff key(u) < key(v)
-    keyed = (sym.join(deg.withColumnRenamed("node", "a")
-                         .withColumnRenamed("deg", "dega"), "a")
-                .join(deg.select(F.col("node").alias("b"),
-                                 F.col("deg").alias("degb")), "b")
-                .where((F.col("dega") < F.col("degb"))
-                       | ((F.col("dega") == F.col("degb"))
-                          & (F.col("a") < F.col("b"))))
-                .select(F.col("a").alias("u"), F.col("b").alias("v"),
-                        F.col("degb").alias("kv_deg"))
-                .localCheckpoint())
+    keyed = materialize(
+        sym.join(deg.withColumnRenamed("node", "a")
+                    .withColumnRenamed("deg", "dega"), "a")
+           .join(deg.select(F.col("node").alias("b"),
+                            F.col("deg").alias("degb")), "b")
+           .where((F.col("dega") < F.col("degb"))
+                  | ((F.col("dega") == F.col("degb"))
+                     & (F.col("a") < F.col("b"))))
+           .select(F.col("a").alias("u"), F.col("b").alias("v"),
+                   F.col("degb").alias("kv_deg")))
     # wedges u->v, u->w with key(v) < key(w); close with v->w
     lo = keyed.select(F.col("u").alias("wu"), F.col("v").alias("wv"),
                       F.col("kv_deg").alias("wv_deg"))
@@ -278,11 +252,11 @@ def common_neighbors(edges: DataFrame, *, k: int = 20,
     dense driver matrices to ~35 MB each. ``local_max=0`` forces the
     distributed join; node sets past the threshold (the 100 TB
     regime — users are the nodes) take it automatically."""
-    e = (edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-              .where(F.col("x") != F.col("y"))
-              .select(F.least("x", "y").alias("a"),
-                      F.greatest("x", "y").alias("b"))
-              .distinct().localCheckpoint())
+    e = materialize(edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+                         .where(F.col("x") != F.col("y"))
+                         .select(F.least("x", "y").alias("a"),
+                                 F.greatest("x", "y").alias("b"))
+                         .distinct())
     sym = e.unionByName(e.select(F.col("b").alias("a"),
                                  F.col("a").alias("b")))
     if max_degree is not None:
@@ -342,7 +316,7 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3,
     Scale shape: per iteration ONE shuffle — join ranks onto the
     degree-annotated edge list by src, then a map-side-combined sum
     by dst; the dangling total is a scalar aggregate over the rank
-    frame itself; ``localCheckpoint()`` per round caps lineage (same
+    frame itself; `materialize` per round caps lineage (same
     discipline as `connected_components`). O(n_iter) rounds,
     O(|E|) rows moved per round — the standard Spark PageRank shape
     without GraphX. Output: (node, rank_q).
@@ -355,18 +329,19 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3,
     per-round anti-join that re-derived the degree aggregate. Two
     edge-scale passes per round (join + contribution sum) is the
     algorithm's floor; everything else is now node-scale."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-              .distinct().localCheckpoint())
+    e = materialize(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+             .distinct())
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = (e.select(F.col("src").alias("node"))
-              .unionByName(e.select(F.col("dst").alias("node")))
-              .distinct()
-              .join(deg.select(F.col("src").alias("node"),
-                               F.lit(True).alias("_out")),
-                    "node", "left")
-              .select("node",
-                      F.coalesce("_out", F.lit(False)).alias("_out"))
-              .localCheckpoint())
+    nodes = materialize(
+        e.select(F.col("src").alias("node"))
+         .unionByName(e.select(F.col("dst").alias("node")))
+         .distinct()
+         .join(deg.select(F.col("src").alias("node"),
+                          F.lit(True).alias("_out")),
+               "node", "left")
+         .select("node",
+                 F.coalesce("_out", F.lit(False)).alias("_out")))
     n = nodes.count()
     if n == 0:
         return nodes.select("node", F.lit(0).cast("long").alias("rank_q"))
@@ -375,14 +350,13 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3,
     # broadcast (~32 B/row vs the threshold), every round's
     # contribution join goes sort-merge and would shuffle the EDGE
     # side per round. Pre-partition the degree-annotated edge list on
-    # src ONCE with the partitioning preserved (`_loop_ckpt`), so
+    # src ONCE with the partitioning preserved (`materialize(key=)`), so
     # rounds shuffle only the node-scale rank frame. In the broadcast
     # regime the plan is already edge-stationary (rank side
     # broadcasts; plan-verified), so the setup shuffle is skipped.
     bt = _broadcast_bytes(spark)
     edj = e.join(deg, "src")
-    ed = (_loop_ckpt(edj, "src") if bt < 0 or n * 32 > bt
-          else edj.localCheckpoint())
+    ed = materialize(edj, key="src" if bt < 0 or n * 32 > bt else None)
     base_q = (scale * 15 // 100) // n       # exact python ints
     r = nodes.select("node", "_out",
                      F.lit(scale // n).cast("long").alias("r"))
@@ -398,14 +372,14 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3,
         dang = (r.where(~F.col("_out"))
                  .agg(F.coalesce(F.sum("r"), F.lit(0).cast("long"))
                        .alias("_dang")))
-        r = (nodes.join(contrib, "node", "left")
-                  .crossJoin(F.broadcast(dang))
-                  .select("node", "_out",
-                          (F.lit(base_q)
-                           + F.expr(f"(coalesce(m, 0L) + _dang div {n}L)"
-                                    f" * 85 div 100")).cast("long")
-                          .alias("r"))
-                  .localCheckpoint())
+        r = materialize(
+            nodes.join(contrib, "node", "left")
+                 .crossJoin(F.broadcast(dang))
+                 .select("node", "_out",
+                         (F.lit(base_q)
+                          + F.expr(f"(coalesce(m, 0L) + _dang div {n}L)"
+                                   f" * 85 div 100")).cast("long")
+                         .alias("r")))
     return r.select("node", F.col("r").alias("rank_q"))
 
 
@@ -420,27 +394,28 @@ def bfs_hops(edges: DataFrame, sources: DataFrame, *,
     Frontier form — the shape that survives large graphs: each round
     joins only the NEWLY discovered frontier against the edge list
     (one equi-join shuffle on the node key), anti-joins the visited
-    set, and ``localCheckpoint()``s so iterative lineage can't grow.
+    set, and materializes so iterative lineage can't grow.
     Work per round is O(frontier·avg_deg), not O(visited·deg); total
     rows moved ≈ edges within the k-hop ball, the BFS lower bound.
     The early-exit count() per round is a driver scalar, not a
     collect. Set semantics throughout (distinct frontiers), so the
     result is deterministic at any parallelism.
     """
-    e = (edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-              .where(F.col("_s") != F.col("_d"))
-              .distinct().localCheckpoint())
-    dist = (sources.select(F.col(node).alias("node"))
-                   .distinct()
-                   .select("node", F.lit(0).cast("long").alias("hop"))
-                   .localCheckpoint())
+    e = materialize(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+             .where(F.col("_s") != F.col("_d"))
+             .distinct())
+    dist = materialize(
+        sources.select(F.col(node).alias("node"))
+               .distinct()
+               .select("node", F.lit(0).cast("long").alias("hop")))
     frontier = dist.select("node")
     for level in range(1, n_rounds + 1):
         nxt = (frontier.join(e, frontier["node"] == e["_s"])
                        .select(F.col("_d").alias("node")).distinct())
-        new = (nxt.join(dist, "node", "left_anti")
-                  .select("node", F.lit(level).cast("long").alias("hop"))
-                  .localCheckpoint())
+        new = materialize(
+            nxt.join(dist, "node", "left_anti")
+               .select("node", F.lit(level).cast("long").alias("hop")))
         if new.isEmpty():
             break
         # r14: no per-round checkpoint of the visited set — dist is a
@@ -465,7 +440,7 @@ def sssp_bounded(edges: DataFrame, sources: DataFrame, *,
     the edge list (shuffle on the node key) followed by a
     map-side-combined min per destination; distances stay exact
     BIGINTs, so the k-round result is deterministic in any engine.
-    ``localCheckpoint()`` per round caps iterative lineage;
+    `materialize` per round caps iterative lineage;
     convergence short-circuits on two scalar aggregates (row count +
     Σdist unchanged ⇒ no relaxation succeeded — sound because a
     successful relaxation strictly lowers some node's distance or
@@ -474,20 +449,20 @@ def sssp_bounded(edges: DataFrame, sources: DataFrame, *,
     Output: (node, dist) for every node reachable within n_rounds
     edges; dist = min total weight over such paths.
     """
-    e = (edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"),
-                      F.col(weight).cast("long").alias("_w"))
-              .localCheckpoint())
-    dist = (sources.select(F.col(node).alias("node")).distinct()
-                   .select("node", F.lit(0).cast("long").alias("dist"))
-                   .localCheckpoint())
+    e = materialize(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"),
+                     F.col(weight).cast("long").alias("_w")))
+    dist = materialize(
+        sources.select(F.col(node).alias("node")).distinct()
+               .select("node", F.lit(0).cast("long").alias("dist")))
     sig = dist.agg(F.count("*"), F.sum("dist")).first()
     for _ in range(n_rounds):
         cand = (dist.join(e, dist["node"] == e["_s"])
                     .select(F.col("_d").alias("node"),
                             (F.col("dist") + F.col("_w")).alias("dist")))
-        dist = (dist.unionByName(cand)
-                    .groupBy("node").agg(F.min("dist").alias("dist"))
-                    .localCheckpoint())
+        dist = materialize(
+            dist.unionByName(cand)
+                .groupBy("node").agg(F.min("dist").alias("dist")))
         new_sig = dist.agg(F.count("*"), F.sum("dist")).first()
         if new_sig == sig:
             break
@@ -519,23 +494,24 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame, *,
     edge join + contribution sum plus node-scale work only (no
     per-round degree aggregate, no anti-join, no per-round
     is_src re-join)."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-              .distinct().localCheckpoint())
+    e = materialize(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+             .distinct())
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     s_dist = sources.select(F.col(node).alias("node")).distinct()
-    nodes = (e.select(F.col("src").alias("node"))
-              .unionByName(e.select(F.col("dst").alias("node")))
-              .distinct()
-              .join(deg.select(F.col("src").alias("node"),
-                               F.lit(True).alias("_out")),
-                    "node", "left")
-              .join(F.broadcast(s_dist.select("node",
-                                              F.lit(True).alias("_s"))),
-                    "node", "left")
-              .select("node",
-                      F.coalesce("_out", F.lit(False)).alias("_out"),
-                      F.coalesce("_s", F.lit(False)).alias("_s"))
-              .localCheckpoint())
+    nodes = materialize(
+        e.select(F.col("src").alias("node"))
+         .unionByName(e.select(F.col("dst").alias("node")))
+         .distinct()
+         .join(deg.select(F.col("src").alias("node"),
+                          F.lit(True).alias("_out")),
+               "node", "left")
+         .join(F.broadcast(s_dist.select("node",
+                                         F.lit(True).alias("_s"))),
+               "node", "left")
+         .select("node",
+                 F.coalesce("_out", F.lit(False)).alias("_out"),
+                 F.coalesce("_s", F.lit(False)).alias("_s")))
     # one scalar job for both counts (|S| for the mass split, |V| for
     # the SMJ-regime gate below) over the checkpointed node frame
     n_all, ns = (nodes.agg(F.count("*"),
@@ -549,8 +525,8 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame, *,
     spark = edges.sparkSession
     bt = _broadcast_bytes(spark)
     edj = e.join(deg, "src")
-    ed = (_loop_ckpt(edj, "src") if bt < 0 or n_all * 32 > bt
-          else edj.localCheckpoint())
+    ed = materialize(edj,
+                     key="src" if bt < 0 or n_all * 32 > bt else None)
     base_q = (scale * 15 // 100) // ns
     r = nodes.select("node", "_out", "_s",
                      F.when(F.col("_s"), F.lit(scale // ns))
@@ -566,17 +542,16 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame, *,
         dang = (r.where(~F.col("_out"))
                  .agg(F.coalesce(F.sum("r"), F.lit(0).cast("long"))
                        .alias("_dang")))
-        r = (nodes.join(contrib, "node", "left")
-                  .crossJoin(F.broadcast(dang))
-                  .select(
-                      "node", "_out", "_s",
-                      (F.when(F.col("_s"), F.lit(base_q))
-                        .otherwise(F.lit(0))
-                       + F.expr(
-                           f"(coalesce(m, 0L) + IF(_s,"
-                           f" _dang div {ns}L, 0L)) * 85 div 100"))
-                      .cast("long").alias("r"))
-                  .localCheckpoint())
+        r = materialize(nodes.join(contrib, "node", "left")
+                             .crossJoin(F.broadcast(dang))
+                             .select(
+                                 "node", "_out", "_s",
+                                 (F.when(F.col("_s"), F.lit(base_q))
+                                   .otherwise(F.lit(0))
+                                  + F.expr(
+                                      f"(coalesce(m, 0L) + IF(_s,"
+                                      f" _dang div {ns}L, 0L)) * 85 div 100"))
+                                 .cast("long").alias("r")))
     return r.select("node", F.col("r").alias("rank_q"))
 
 
@@ -596,7 +571,7 @@ def k_core(edges: DataFrame, k: int, *, src: str = "src",
     scan of the fixed edge list joined against the (usually tiny)
     newly-removed frame — broadcast when it fits, so typically
     map-only with a node-scale partial aggregate — and (2) a
-    node-scale degree update, `localCheckpoint`ed (NODE-scale — the
+    node-scale degree update, materialized (NODE-scale — the
     old full-recount loop re-aggregated and re-CHECKPOINTED the
     entire shrinking EDGE list every round, O(|E|) shuffle + write ×
     peel depth; measured A/B on a deep-peel fixture in PARITY.md).
@@ -612,11 +587,10 @@ def k_core(edges: DataFrame, k: int, *, src: str = "src",
     """
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
               .where(F.col("a") != F.col("b")).distinct())
-    sym = (e.unionByName(e.select(F.col("b").alias("a"),
-                                  F.col("a").alias("b")))
-            .distinct().localCheckpoint())
-    deg = (sym.groupBy("a").agg(F.count("*").alias("_d"))
-              .localCheckpoint())
+    sym = materialize(e.unionByName(e.select(F.col("b").alias("a"),
+                                             F.col("a").alias("b")))
+                       .distinct())
+    deg = materialize(sym.groupBy("a").agg(F.count("*").alias("_d")))
     for _ in range(max_rounds):
         # bad is a plain filter over the checkpointed deg — re-deriving
         # it per use (count / broadcast side / anti-join) is a cheap
@@ -631,12 +605,11 @@ def k_core(edges: DataFrame, k: int, *, src: str = "src",
             bad_b = F.broadcast(bad_b)
         delta = (sym.join(bad_b, "b")
                     .groupBy("a").agg(F.count("*").alias("_dec")))
-        deg = (deg.join(bad, "a", "left_anti")
-                  .join(delta, "a", "left")
-                  .select("a", (F.col("_d") - F.coalesce("_dec",
-                                                         F.lit(0)))
-                          .alias("_d"))
-                  .localCheckpoint())
+        deg = materialize(deg.join(bad, "a", "left_anti")
+                             .join(delta, "a", "left")
+                             .select("a", (F.col("_d") - F.coalesce("_dec",
+                                                                    F.lit(0)))
+                                     .alias("_d")))
     else:
         # ADVICE r11: returning here would hand back nodes whose
         # degree is still < k — not a k-core. Deep-peeling graphs

@@ -63,6 +63,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 
 def hdr_bucket_sql(col: str, sub_bits: int = 5) -> str:
@@ -189,7 +190,7 @@ def hdr_rollup(cells: DataFrame, dims: list[str],
     Output: dims (NULL where rolled up), level, q_bp, n, estimate.
     """
     from pyspark.sql import Window
-    cells = cells.localCheckpoint(eager=True)
+    cells = materialize(cells)
     val = {"lo": F.col("lo"), "hi": F.col("hi"),
            "mid": (F.col("lo")
                    + F.expr("(hi - lo) div 2")).cast("long")}[value]
@@ -263,12 +264,11 @@ def exact_quantiles(df: DataFrame, value_col: str,
     guarded = F.when(F.col(value_col) < 0, F.expr(
         f"raise_error('exact_quantiles: negative value in {value_col}')")
     ).otherwise(F.col(value_col).cast("long")).alias("v")
-    vals = (df.select(guarded)
-              .groupBy("v").agg(F.count("*").alias("cnt"))
-              .withColumn("_bkt",
-                          F.expr(hdr_bucket_sql("v", sub_bits))
-                           .cast("long"))
-              .localCheckpoint(eager=False))
+    vals = materialize(df.select(guarded)
+                         .groupBy("v").agg(F.count("*").alias("cnt"))
+                         .withColumn("_bkt",
+                                     F.expr(hdr_bucket_sql("v", sub_bits))
+                                      .cast("long")), eager=False)
     bt = vals.groupBy("_bkt").agg(F.sum("cnt").alias("bcnt"))
     bw = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, 0)
     cdf = (bt.withColumn("cum", F.sum("bcnt").over(bw))
@@ -346,13 +346,13 @@ def gini_ppm(df: DataFrame, value_col: str, *,
     # boundaries (r13 A/B: two full aggregate executions per call) —
     # checkpointed, the sampler and the shuffle both read the ≤
     # |distinct v| narrow blocks
-    per_v0 = (df.where(F.col(value_col).isNotNull())
-                .select(guarded)
-                .groupBy("v").agg(F.count("*").alias("m"))
-                .localCheckpoint())
-    per_v = (per_v0.repartitionByRange(nparts, "v")
-                   .withColumn("_bk", F.spark_partition_id().cast("long"))
-                   .localCheckpoint(eager=False))
+    per_v0 = materialize(df.where(F.col(value_col).isNotNull())
+                           .select(guarded)
+                           .groupBy("v").agg(F.count("*").alias("m")))
+    per_v = materialize(
+        per_v0.repartitionByRange(nparts, "v")
+              .withColumn("_bk", F.spark_partition_id().cast("long")),
+        eager=False)
     # phase-1 bucket offsets IN-PLAN: an exclusive prefix sum over the
     # ≤ nparts bucket totals (single-partition window over ≤ P rows —
     # the bounded size the offsets collect already guaranteed), then

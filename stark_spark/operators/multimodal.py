@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
+from stark_spark.materialize import materialize
 
 FAKE_DECODE = True
 try:  # pragma: no cover - not present in this container
@@ -281,10 +282,10 @@ def image_dup_pairs(df: DataFrame, *, max_hamming: int = 8,
     hamming-band the 64-bit hashes exactly like SimHash text dedup
     (`dedup.hamming_near_pairs`): pigeonhole banding → band equi-join
     → exact bit_count verify — never all-pairs. Output (a, b,
-    hamming). The phash frame is localCheckpoint'ed so the banded
+    hamming). The phash frame is materialized so the banded
     self-join decodes each image once, not 2·(d+1) times."""
     from stark_spark.operators.dedup import hamming_near_pairs
-    fp = image_phash(df, content_col, key_col).localCheckpoint()
+    fp = materialize(image_phash(df, content_col, key_col))
     return hamming_near_pairs(fp, key_col, fp_col="phash",
                               max_hamming=max_hamming)
 
@@ -420,7 +421,7 @@ def audio_dup_pairs(df: DataFrame, *, max_hamming: int = 8,
     same pigeonhole hamming banding as text SimHash / image phash
     (`dedup.hamming_near_pairs`). Output (a, b, hamming)."""
     from stark_spark.operators.dedup import hamming_near_pairs
-    fp = audio_fingerprint(df, content_col, key_col).localCheckpoint()
+    fp = materialize(audio_fingerprint(df, content_col, key_col))
     return hamming_near_pairs(fp, key_col, fp_col="afp",
                               max_hamming=max_hamming)
 
@@ -645,12 +646,11 @@ def video_dup_pairs(df: DataFrame, *, max_hamming: int = 8,
     never all-pairs across videos — and the evidence aggregation is
     one groupBy over the surviving frame pairs."""
     from stark_spark.operators.dedup import hamming_near_pairs
-    fp = (video_frame_phash(df, every_n, content_col=content_col,
-                            key_col=key_col)
-          .select(F.concat_ws("#", F.col(key_col),
-                              F.col("frame_no").cast("string"))
-                  .alias("vf"), "phash")
-          .localCheckpoint())
+    fp = materialize(video_frame_phash(df, every_n, content_col=content_col,
+                                       key_col=key_col)
+                     .select(F.concat_ws("#", F.col(key_col),
+                                         F.col("frame_no").cast("string"))
+                             .alias("vf"), "phash"))
     pairs = hamming_near_pairs(fp, "vf", fp_col="phash",
                                max_hamming=max_hamming)
     # recover the video by stripping only the TRAILING '#<frame>'

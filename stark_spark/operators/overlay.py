@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, LongType, StructField,
                                StructType)
+from stark_spark.materialize import materialize
 
 
 def _dissolve_once(df: DataFrame, group_cols: list[str],
@@ -137,7 +138,7 @@ def dissolve(df: DataFrame, group_col: str,
     flagged = dissolve_flagged_groups(base, group_col, geom_col,
                                       shard_factor=shard_factor,
                                       min_shard=min_shard)
-    flagged = flagged.localCheckpoint(eager=True)   # tiny; reused 3x
+    flagged = materialize(flagged)   # tiny; reused 3x
     if flagged.limit(1).count() == 0:
         return _dissolve_once(base, [group_col], group_col, geom_col)
     big = base.join(F.broadcast(flagged), group_col)

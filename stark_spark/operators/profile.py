@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 
 def table_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -174,13 +175,12 @@ def rfm_segments(df, *, user: str = "user_id", ts: str = "ts",
     # per is consumed by three boundary computations plus the
     # scoring join — pin the (user-count-sized) frame once instead of
     # re-running the event aggregate per consumer
-    per = per.localCheckpoint(eager=True)
+    per = materialize(per)
     mx = per.agg(F.max("last_d").alias("dm"))
-    per = (per.crossJoin(F.broadcast(mx))
-              .select("u", F.datediff("dm", "last_d").cast("long")
-                            .alias("rec"),
-                      "freq", "mon")
-              .localCheckpoint(eager=True))
+    per = materialize(per.crossJoin(F.broadcast(mx))
+                         .select("u", F.datediff("dm", "last_d").cast("long")
+                                       .alias("rec"),
+                                 "freq", "mon"))
     qs = [k / n_bins for k in range(1, n_bins)]
     scored = per
     for dim, invert in (("rec", True), ("freq", False), ("mon", False)):

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stark_spark.operators.dedup import _sql_array_lit
+from stark_spark.materialize import materialize
 
 
 def dot_fold(a: Column, b: Column) -> Column:
@@ -746,7 +747,7 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, *,
     cent = (vectors.orderBy(key).limit(n_centroids)
             .withColumn("c_id", F.row_number().over(w) - 1)
             .select("c_id", F.col(vec_col).alias("c_embedding")))
-    cent = cent.localCheckpoint()
+    cent = materialize(cent)
 
     if exact:
         vq = F.floor(F.col("v").cast("double") * 1000000.0 + F.lit(0.5)) \
@@ -771,7 +772,7 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, *,
                     .select("c_id",
                             F.coalesce("new_embedding", "c_embedding")
                              .alias("c_embedding")))
-        cent = cent.localCheckpoint()
+        cent = materialize(cent)
     return cent
 
 
@@ -1176,7 +1177,7 @@ def pq_train(vectors: DataFrame, *, dim: int = 64, m_sub: int = 8,
     `_pq_assign_codes` — the literal-expression form it replaced blew
     the codegen budget), then one (sub, code, pos) exact-integer mean
     aggregate (map-side combined, ≤ m_sub·n_codes·dsub groups). The
-    sub-vector frame is localCheckpoint'ed once and reused across
+    sub-vector frame is materialized once and reused across
     iterations. Returns the plain-Python codebook
     ``[m_sub][n_codes][dsub]`` — pass it to `pq_encode`/`pq_topk`.
 
@@ -1204,8 +1205,8 @@ def pq_train(vectors: DataFrame, *, dim: int = 64, m_sub: int = 8,
             .select(vec_col).collect())
     cb = [[[float(r[0][s * dsub + i]) for i in range(dsub)]
            for r in init] for s in range(m_sub)]
-    subv = _pq_subvectors(vectors, key=key, vec_col=vec_col,
-                          m_sub=m_sub, dsub=dsub).localCheckpoint()
+    subv = materialize(_pq_subvectors(vectors, key=key, vec_col=vec_col,
+                                      m_sub=m_sub, dsub=dsub))
     for _ in range(n_iter):
         a = _pq_assign_codes(subv, _pq_cb_frame(spark, cb), key=key)
         rows = (a.join(subv, [key, "sub_id"])
@@ -1403,8 +1404,8 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, codebook: list,
     # for nothing. Every key yields exactly m_sub assignment rows, so
     # the aggregate's key set equals pq_encode's inner-join key set —
     # identical rows, one less corpus join (r13).
-    enc = _pq_codes(vectors, codebook, key=key,
-                    vec_col=vec_col).localCheckpoint()
+    enc = materialize(_pq_codes(vectors, codebook, key=key,
+                                vec_col=vec_col))
     if score == "batch":
         scored = _pq_topk_batch(
             enc, qrows, codebook, k, key=key,
@@ -1501,7 +1502,7 @@ def rank_eval(retrieved: DataFrame, truth: DataFrame, *, k: int,
     # NOTE (r13 opt, measured — do NOT "fix" the multi-reference):
     # retrieved is read 2x (hits + top-1 position) and truth 3x
     # (top-k set, top-1 set, query base), but lazily
-    # localCheckpoint'ing the two projections to "dedup the subtrees"
+    # materializing the two projections to "dedup the subtrees"
     # made EVERY recall gate SLOWER in a 4-rep interleaved A/B at
     # sf0.1 (ann_recall_planted 2.17 -> 2.84 s med, ann_recall_eval
     # 1.21 -> 1.64, ann_recall_lsh 1.44 -> 1.89, lsh_mp 1.63 -> 2.08,

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 HASH_BITS = 52
 HASH_SPACE = 1 << HASH_BITS
@@ -238,7 +239,7 @@ def hll_rollup(registers: DataFrame, dims: list[str],
     # every grouping set re-aggregates the same register table:
     # pin it once (bounded: groups × m rows), or the raw-data sketch
     # pass re-runs per level — defeating the whole point
-    registers = registers.localCheckpoint(eager=True)
+    registers = materialize(registers)
     outs = []
     for gs in grouping_sets:
         keep = [d for d in dims if d in gs]

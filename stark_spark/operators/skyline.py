@@ -26,6 +26,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 
 def _local_skyline(pdf: pd.DataFrame, x: str, y: str) -> pd.DataFrame:
@@ -76,9 +77,8 @@ def _merge_distributed(local_sky: DataFrame, x: str, y: str,
             yield _local_skyline(pd.concat(chunks, ignore_index=True),
                                  x, y)
 
-    swept = (ranged.mapInPandas(local2, schema=schema)
-                   .withColumn("_pid", F.spark_partition_id())
-                   .localCheckpoint())
+    swept = materialize(ranged.mapInPandas(local2, schema=schema)
+                              .withColumn("_pid", F.spark_partition_id()))
     mins = swept.groupBy("_pid").agg(F.min(y).alias("_my")).collect()
     prefix: dict[int, object] = {}
     run = None
@@ -137,7 +137,7 @@ def skyline(df: DataFrame, x: str = "x", y: str = "y",
         yield _local_skyline(rows, x, y)
 
     # Merge-path choice needs the stage-1 front size, but materializing
-    # the front (localCheckpoint + count) costs an extra eager job even
+    # the front (materialize + count) costs an extra eager job even
     # for tiny inputs. Cheap gate first: Catalyst's optimized-plan size
     # estimate is free (file-size based, no job). The estimate is
     # COMPRESSED on-disk size for file scans — RLE/dictionary parquet
@@ -155,7 +155,7 @@ def skyline(df: DataFrame, x: str = "x", y: str = "y",
     if est_bytes is not None and est_bytes * 8 < GLOBAL_MERGE_LIMIT:
         return local_sky.coalesce(1).mapInPandas(global_pass,
                                                  schema=schema)
-    local_sky = local_sky.localCheckpoint()
+    local_sky = materialize(local_sky)
     if local_sky.count() > GLOBAL_MERGE_LIMIT:
         return _merge_distributed(local_sky, x, y, schema)
     return local_sky.coalesce(1).mapInPandas(global_pass, schema=schema)

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 
 def kaplan_meier(df: DataFrame, *, duration: str = "duration",
@@ -60,7 +61,7 @@ def kaplan_meier(df: DataFrame, *, duration: str = "duration",
         # lazy checkpoint: the probe's count materializes the grouped
         # frame, so the KM windows below reuse it instead of paying
         # the input scan + shuffle a second time (review r11)
-        per_t = per_t.localCheckpoint(eager=False)
+        per_t = materialize(per_t, eager=False)
     if max_distinct and (per_t.limit(max_distinct + 1).count()
                          > max_distinct):
         raise ValueError(

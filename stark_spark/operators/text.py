@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 # tiny deterministic english-ish stopword set (shared with oracle SQL)
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -311,8 +312,8 @@ def doc_logprob(df: DataFrame, key: str, *, text_col: str = "text",
         # lazily checkpointed: the total .first() below materializes
         # the (vocab-sized) frame, so the corpus explode+agg runs once
         # instead of re-running for the broadcast side
-        vocab = (tok.groupBy("token").agg(F.count("*").alias("_n"))
-                    .localCheckpoint(eager=False))
+        vocab = materialize(
+            tok.groupBy("token").agg(F.count("*").alias("_n")), eager=False)
     else:
         vocab = vocab.select("token", F.col("n").alias("_n"))
     total = vocab.agg(F.sum("_n")).first()[0] or 1   # empty corpus →
@@ -367,13 +368,13 @@ def doc_logprob_bigram(df: DataFrame, key: str, *,
                               "t -> t <> '')").alias("_toks"))
                .select(F.col(key),
                        F.explode(F.expr(pair_expr)).alias("pair")))
-    uni = (df.select(F.explode(tokens(F.col(text_col))).alias("token"))
-             .where(F.col("token") != "")
-             .groupBy("token").agg(F.count("*").alias("cu"))
-             # the V count below materializes it; the scoring join
-             # then reads the vocab-sized frame back instead of
-             # re-running the corpus explode+agg
-             .localCheckpoint(eager=False))
+    # the V count below materializes it; the scoring join then reads
+    # the vocab-sized frame back instead of re-running the corpus
+    # explode+agg
+    uni = materialize(
+        df.select(F.explode(tokens(F.col(text_col))).alias("token"))
+          .where(F.col("token") != "")
+          .groupBy("token").agg(F.count("*").alias("cu")), eager=False)
     v = uni.count()
     big = pairs.groupBy("pair").agg(F.count("*").alias("cb"))
     first_tok = F.expr("substring_index(pair, ' ', 1)").alias("token")
@@ -409,7 +410,7 @@ def bm25_topk(df: DataFrame, key: str, query_terms: list[str], k: int,
     per-term document frequency) come from ONE combined aggregate
     (single collect), and scoring is row-local with driver-computed
     idf literals. The narrow per-doc projection is materialized once
-    (eager localCheckpoint) and feeds both the stats aggregate and
+    (`materialize`) and feeds both the stats aggregate and
     the scoring scan, so the corpus is tokenized exactly ONCE; the
     top-k is a TakeOrderedAndProject over the checkpointed rows.
     Output: (key, n_tokens, score_q)."""
@@ -430,9 +431,8 @@ def bm25_topk(df: DataFrame, key: str, query_terms: list[str], k: int,
     # would otherwise re-tokenize the ENTIRE corpus (guide §1.2 —
     # remove whole passes first). The checkpointed rows are
     # 2+|terms| integers per doc — far smaller than the text they
-    # replace; on a real cluster swap for checkpoint() to reliable
-    # storage (the repo-wide localCheckpoint trade).
-    base = base.localCheckpoint(eager=True)
+    # replace.
+    base = materialize(base)
     aggs = [F.count("*").alias("n"), F.sum("_dl").alias("tot")]
     aggs += [F.sum((F.col(f"_tf{i}") > 0).cast("long")).alias(f"nd{i}")
              for i in range(len(terms))]
@@ -539,15 +539,16 @@ def bm25_multi_topk(df: DataFrame, key: str, queries: DataFrame, k: int,
     # the nd collect below materializes it, so the corpus explode
     # runs ONCE — the scored pass reads the (query-vocab-bounded)
     # hits back instead of re-tokenizing the corpus
-    tf = (base.select(F.col(key), F.col("_dl"),
-                      F.explode(F.concat(
-                          F.col("_tk"), F.array(F.lit(SENT))))
-                       .alias("_term"))
-              .where(F.col("_term") != "")
-              .join(F.broadcast(vocab_plus), "_term")
-              .groupBy(F.col(key), F.col("_term"))
-              .agg(F.count("*").alias("_tf"), F.max("_dl").alias("_dl"))
-              .localCheckpoint(eager=False))
+    tf = materialize(
+        base.select(F.col(key), F.col("_dl"),
+                    F.explode(F.concat(
+                        F.col("_tk"), F.array(F.lit(SENT))))
+                     .alias("_term"))
+            .where(F.col("_term") != "")
+            .join(F.broadcast(vocab_plus), "_term")
+            .groupBy(F.col(key), F.col("_term"))
+            .agg(F.count("*").alias("_tf"), F.max("_dl").alias("_dl")),
+        eager=False)
 
     # per-term document frequency (+ the sentinel's N / Σ_dl) ->
     # driver-quantized idf literals, one collect
@@ -768,7 +769,7 @@ def bpe_train(df: DataFrame, n_merges: int, *,
     table; every merge round after that is vocabulary-sized (pair
     counts weighted by word frequency, a driver top-1, one array fold
     over ≤|vocab| rows). The corpus is never touched again.
-    ``localCheckpoint()`` per round caps the iterative lineage. The
+    `materialize` per round caps the iterative lineage. The
     fold expression is interpreted (higher-order functions are
     CodegenFallback) — acceptable because it runs on the vocab, not
     the corpus.
@@ -784,8 +785,8 @@ def bpe_train(df: DataFrame, n_merges: int, *,
                .where(F.col("w").rlike("^[a-z]+$")
                       & (F.length("w") >= 2))
                .groupBy("w").agg(F.count("*").alias("c")))
-    vocab = (words.select(F.expr("split(w, '')").alias("syms"), "c")
-                  .localCheckpoint())
+    vocab = materialize(
+        words.select(F.expr("split(w, '')").alias("syms"), "c"))
     merges = []
     for rank in range(n_merges):
         pairs = (vocab.select(
@@ -803,9 +804,8 @@ def bpe_train(df: DataFrame, n_merges: int, *,
             break
         a, b, cnt = top[0].a, top[0].b, top[0].cnt
         merges.append((rank, a, b, a + b, int(cnt)))
-        vocab = (vocab.select(
-            F.expr(_bpe_apply_merge("syms", a, b)).alias("syms"), "c")
-            .localCheckpoint())
+        vocab = materialize(vocab.select(
+            F.expr(_bpe_apply_merge("syms", a, b)).alias("syms"), "c"))
     spark = df.sparkSession
     return spark.createDataFrame(
         merges, "rank long, left string, right string, "
@@ -842,7 +842,7 @@ def pmi_collocations(df: DataFrame, k: int = 50, *,
     # match the old per-pass filters exactly, so both count frames
     # are value-identical. The combined frame is VOCAB-sized but
     # consumed 4 times below (two scalar totals + join sides) —
-    # localCheckpoint for the same reason as before (without it
+    # materialize for the same reason as before (without it
     # every consumer re-runs the corpus explode; measured 5.9 s vs
     # 1.5 s at sf0.1 for the two-pass form).
     toks = tokens(F.col(text_col))
@@ -855,14 +855,14 @@ def pmi_collocations(df: DataFrame, k: int = 50, *,
         F.col("_tk"),
         lambda t: F.struct(t.alias("w1"),
                            F.lit(None).cast("string").alias("w2")))
-    counts = (df.withColumn("_tk", toks)
-                .select(F.explode(F.concat(uni_structs, pair_structs))
-                         .alias("p"))
-                .select("p.w1", "p.w2")
-                .where((F.col("w1") != "")
-                       & (F.col("w2").isNull() | (F.col("w2") != "")))
-                .groupBy("w1", "w2").agg(F.count("*").alias("c"))
-                .localCheckpoint())
+    counts = materialize(
+        df.withColumn("_tk", toks)
+          .select(F.explode(F.concat(uni_structs, pair_structs))
+                   .alias("p"))
+          .select("p.w1", "p.w2")
+          .where((F.col("w1") != "")
+                 & (F.col("w2").isNull() | (F.col("w2") != "")))
+          .groupBy("w1", "w2").agg(F.count("*").alias("c")))
     uni = (counts.where(F.col("w2").isNull())
                  .select(F.col("w1").alias("w"), F.col("c").alias("cw")))
     bg = (counts.where(F.col("w2").isNotNull())
@@ -935,18 +935,18 @@ def keyness_log_odds(df: DataFrame, *, group_col: str = "source",
     ulp). Support floor ``min_count`` keeps noise terms out.
 
     Scale shape: ONE corpus explode into (group, token) counts
-    (map-side combined, localCheckpoint'ed — three consumers);
+    (map-side combined, materialized — three consumers);
     group totals and global per-token totals both derive from that
     count frame (vocab-sized aggregates, no second corpus pass);
     final ranking is a per-group window over the qualifying vocab.
     Output: (group, token, c, score_q), k rows per group."""
     from pyspark.sql import Window
     g = group_col
-    tok = (df.select(F.col(g),
-                     F.explode(tokens(F.col(text_col))).alias("token"))
-             .where(F.col("token") != "")
-             .groupBy(g, "token").agg(F.count("*").alias("c"))
-             .localCheckpoint())
+    tok = materialize(
+        df.select(F.col(g),
+                  F.explode(tokens(F.col(text_col))).alias("token"))
+          .where(F.col("token") != "")
+          .groupBy(g, "token").agg(F.count("*").alias("c")))
     totals = tok.groupBy(g).agg(F.sum("c").alias("n_g"))
     glob = tok.groupBy("token").agg(F.sum("c").alias("c_all"))
     n_all = tok.agg(F.sum("c")).first()[0] or 1
@@ -1022,8 +1022,8 @@ def kn_discounts(df: DataFrame, *, text_col: str = "text",
     bg = (df.select(toks.alias("_t"))
             .select(F.explode(pairs).alias("p"))
             .select("p.w1", "p.w2"))
-    c = (bg.groupBy("w1", "w2").agg(F.count("*").alias("c"))
-           .localCheckpoint(eager=False))
+    c = materialize(
+        bg.groupBy("w1", "w2").agg(F.count("*").alias("c")), eager=False)
     glob = c.agg(
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).alias("n1"),
         F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).alias("n2"))
@@ -1082,8 +1082,8 @@ def kn_discounts_mod(df: DataFrame, *, text_col: str = "text",
     bg = (df.select(toks.alias("_t"))
             .select(F.explode(pairs).alias("p"))
             .select("p.w1", "p.w2"))
-    c = (bg.groupBy("w1", "w2").agg(F.count("*").alias("c"))
-           .localCheckpoint(eager=False))
+    c = materialize(
+        bg.groupBy("w1", "w2").agg(F.count("*").alias("c")), eager=False)
     glob = c.agg(*[
         F.sum(F.when(F.col("c") == k, 1).otherwise(0)).alias(f"n{k}")
         for k in (1, 2, 3, 4)])
@@ -1178,8 +1178,9 @@ def doc_logprob_kn(df: DataFrame, key: str, *,
                            F.explode(F.expr(pair_expr)).alias("p"))
                    .select(F.col(key), "p.w1", "p.w2"))
     stats = kn_discounts_mod(df, text_col=text_col)
-    bgc = (doc_pairs.groupBy("w1", "w2").agg(F.count("*").alias("c"))
-           .localCheckpoint(eager=False))
+    bgc = materialize(
+        doc_pairs.groupBy("w1", "w2").agg(F.count("*").alias("c")),
+        eager=False)
     cont = bgc.groupBy("w2").agg(F.count("*").alias("cont"))
     t_types = bgc.count()
     dec = "DECIMAL(38, 0)"
@@ -1249,9 +1250,9 @@ def doc_logprob_kn3(df: DataFrame, key: str, *,
                  .select(F.col(key),
                          F.explode(F.expr(tri_expr)).alias("p"))
                  .select(F.col(key), "p.w1", "p.w2", "p.w3"))
-    tri = (doc_tri.groupBy("w1", "w2", "w3")
-           .agg(F.count("*").alias("c"))
-           .localCheckpoint(eager=False))
+    tri = materialize(
+        doc_tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c")),
+        eager=False)
 
     dec = "DECIMAL(38, 0)"
 
@@ -1289,8 +1290,8 @@ def doc_logprob_kn3(df: DataFrame, key: str, *,
                   .alias("k3p")))
     # bigram CONTINUATION counts: rows of tri are distinct trigrams,
     # so count(*) per (w2, w3) = |{w1 : c(w1,w2,w3) > 0}|
-    bc = (tri.groupBy("w2", "w3").agg(F.count("*").alias("bc"))
-          .localCheckpoint(eager=False))
+    bc = materialize(
+        tri.groupBy("w2", "w3").agg(F.count("*").alias("bc")), eager=False)
     glob2 = _discounts(bc, "bc")
     ctx2 = (bc.groupBy("w2")
             .agg(F.sum("bc").alias("total2"),

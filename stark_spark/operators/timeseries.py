@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from stark_spark.materialize import materialize
 
 _US_PER_HOUR = 3_600_000_000
 
@@ -135,7 +136,7 @@ def autocorrelation(df: DataFrame, *, value_col: str, order_col: str,
     # each lag consumes base twice (probe + shifted side): pin the
     # resampled series once or Catalyst re-runs the upstream
     # aggregate 2·|lags| times (the pmi repeated-scan lesson)
-    base = base.localCheckpoint(eager=True)
+    base = materialize(base)
     parts = []
     for lag in lags:
         lead = base.select((F.col("i") - lag).alias("i"),
@@ -187,7 +188,7 @@ def seasonal_naive_backtest(df: DataFrame, *, key: str, ts: str,
     # four consumers (train filter, test filter, phase max, forecast
     # values) would each re-run the hourly resample: pin it once —
     # the frame is bounded by keys × hours, not by event volume
-    hours = hours.localCheckpoint(eager=True)
+    hours = materialize(hours)
     split_h = F.expr(
         f"unix_micros(to_timestamp('{split_day}')) div 3600000000")
     hours = hours.withColumn("_split", split_h)

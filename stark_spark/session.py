@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Confs applied to every session we build. At 100 TB / 1000 executors the
 # absolute numbers (shuffle partitions, maxPartitionBytes) come from the
@@ -92,3 +92,24 @@ def get_session(app: str = "stark_spark", *, master: str | None = None,
             "spark.sql.warehouse.dir", "/tmp/stark_spark_warehouse")
     builder = configure(builder, shuffle_partitions=shuffle_partitions)
     return builder.getOrCreate()
+
+
+def clone_session(spark: SparkSession, conf: dict) -> SparkSession:
+    """A copy of ``spark`` (same SparkContext; settings, temp views and
+    functions as of this call) with ``conf`` set on the copy only —
+    the way to run one plan under a different setting. Setting it on
+    ``spark`` itself would race with every other query sharing that
+    session. ``newSession()`` would drop the caller's settings."""
+    clone = SparkSession(spark.sparkContext,
+                         spark._jsparkSession.cloneSession())
+    for k, v in conf.items():
+        clone.conf.set(k, v)
+    return clone
+
+
+def bind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``spark``: actions on the
+    result plan and run under ``spark``'s settings."""
+    jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jds, spark)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stark_spark.partitioner.grid import GridSpec
+from stark_spark.materialize import materialize
 
 
 def read_event_stream(spark: SparkSession, path: str, schema,
@@ -289,7 +290,7 @@ def stream_ingest_dedup(stream: DataFrame, index_fp: DataFrame, *,
     pair (r12 ADVICE), so duplicate keys (multiple fingerprints per
     key) agree too.
 
-    Scale shape: the index bands once (localCheckpoint; on a real
+    Scale shape: the index bands once (`materialize`; on a real
     cluster persist to storage and reload per restart) and the join
     is per-micro-batch map work against it; group state is pair-
     scale per batch — in production put a watermark on arrival time
@@ -297,10 +298,9 @@ def stream_ingest_dedup(stream: DataFrame, index_fp: DataFrame, *,
     does for the exact tier."""
     from stark_spark.operators.dedup import _banded_fp
     ik = index_key or key
-    idx = (_banded_fp(index_fp, ik, fp_col, max_hamming + 1)
-           .select(F.col(ik).alias("index_key"),
-                   F.col("fp").alias("fp_b"), "band", "bucket")
-           .localCheckpoint())
+    idx = materialize(_banded_fp(index_fp, ik, fp_col, max_hamming + 1)
+                      .select(F.col(ik).alias("index_key"),
+                              F.col("fp").alias("fp_b"), "band", "bucket"))
     s = (_banded_fp(stream, key, fp_col, max_hamming + 1)
          .select(F.col(key).alias("new_key"),
                  F.col("fp").alias("fp_a"), "band", "bucket"))
@@ -388,7 +388,7 @@ def stream_contamination(stream: DataFrame, eval_df: DataFrame, *,
       the dense word array + k getbit probes
       (`dedup._bloom_probe_array` — still stateless: the static side
       is a checkpointed local-block frame). The
-      eval hash set is `localCheckpoint`ed ONCE up front and serves
+      eval hash set is materialized ONCE up front and serves
       as BOTH the filter source and the closing-join truth side, so
       the determinism precondition disappears and the eval pipeline
       is never re-evaluated per micro-batch — each batch reads the
@@ -414,8 +414,7 @@ def stream_contamination(stream: DataFrame, eval_df: DataFrame, *,
         truth = stream.sparkSession.createDataFrame(
             [(h,) for h in hashes], "content_hash string")
     elif impl == "jvm":
-        ev_hashes = (eval_df.select(ev_hash.alias("h")).distinct()
-                     .localCheckpoint(eager=True))
+        ev_hashes = materialize(eval_df.select(ev_hash.alias("h")).distinct())
         n = ev_hashes.count()
         m, k = _bloom_sizing(n, fpp)
         flagged = _bloom_probe_array(hashed, "content_hash",
@@ -440,7 +439,7 @@ def stream_contamination_ngrams(stream: DataFrame, eval_df: DataFrame,
     equi-join, so there is zero streaming state and nothing to evict.
 
     The eval shingle set is built once (per-doc distinct → global
-    distinct) and `localCheckpoint`ed, so micro-batches re-read its
+    distinct) and materialized, so micro-batches re-read its
     blocks instead of re-evaluating the eval pipeline.
 
     Output: one row per (doc, matching window) — (<key>, h). The
@@ -449,9 +448,7 @@ def stream_contamination_ngrams(stream: DataFrame, eval_df: DataFrame,
     (an in-stream groupBy would force stateful complete/update mode
     for no ingest-side benefit)."""
     from stark_spark.operators.dedup import _doc_shingle_rows
-    ev_sh = (_doc_shingle_rows(eval_df, n, text_col)
-             .distinct()
-             .localCheckpoint(eager=True))
+    ev_sh = materialize(_doc_shingle_rows(eval_df, n, text_col).distinct())
     tr = _doc_shingle_rows(stream, n, text_col, key)
     return tr.join(ev_sh, "h").select(key, "h")
 
@@ -479,7 +476,7 @@ def stream_semantic_contamination(stream: DataFrame, eval_df: DataFrame,
     downstream if a verdict-per-vector is wanted.
 
     The eval side is dim-sized BY CONTRACT (a benchmark suite), so
-    its assigned form localCheckpoints once up front and every
+    its assigned form is materialized once up front and every
     micro-batch reads the checkpoint blocks — the eval pipeline is
     never re-evaluated per batch. Both sides assign with "gemm" (BLAS —
     at C ≈ √N centroids the fold is N·C interpreted evals); near-tie
@@ -492,12 +489,11 @@ def stream_semantic_contamination(stream: DataFrame, eval_df: DataFrame,
     # is one fold per batch row — the refine then folds once per
     # joined PAIR instead of three times (dot + both norms), which is
     # the per-batch hot loop (guide §4; bit-identical values)
-    ev = (ivf_assign(eval_df, centroids, key=key, vec_col=vec_col,
-                     score="gemm")
-          .select(F.col(key).alias("eval_id"),
-                  F.col(vec_col).alias("_evv"), "bucket",
-                  norm(F.col(vec_col)).alias("_evn"))
-          .localCheckpoint(eager=True))
+    ev = materialize(ivf_assign(eval_df, centroids, key=key, vec_col=vec_col,
+                                score="gemm")
+                     .select(F.col(key).alias("eval_id"),
+                             F.col(vec_col).alias("_evv"), "bucket",
+                             norm(F.col(vec_col)).alias("_evn")))
     s = (ivf_assign(stream, centroids, key=key, vec_col=vec_col,
                     score="gemm")
          .withColumn("_sn", norm(F.col(vec_col))))
@@ -590,7 +586,7 @@ def stream_score_outliers(stream: DataFrame, thresholds: DataFrame, *,
     needed, and the alert set equals the batch detector's on the same
     rows. Output: (key, group, value_c, med_c, mad_c, dev).
 
-    The thresholds frame is materialized (eager ``localCheckpoint``)
+    The thresholds frame is materialized (`materialize`)
     before entering the stream plan: a micro-batch re-executes every
     static subtree it broadcasts, so an un-materialized thresholds
     pipeline (a full median/MAD window pass over the training corpus)
@@ -601,7 +597,7 @@ def stream_score_outliers(stream: DataFrame, thresholds: DataFrame, *,
     base = stream.select(
         F.col(key), F.col(group),
         F.round(F.col(value) * 100).cast("long").alias("value_c"))
-    thresholds = thresholds.localCheckpoint(eager=True)
+    thresholds = materialize(thresholds)
     return (base.join(F.broadcast(thresholds), group)
                 .withColumn("dev",
                             F.abs(F.col("value_c") - F.col("med_c")))

@@ -2114,23 +2114,33 @@ def test_curation_neardup_stage_effects(spark):
     assert kept == [2, 3]  # longer near-copy wins; other untouched
 
 
-def test_is_materialized_scan(spark, tmp_path):
-    """`dedup_near_keep_best` skips its own checkpoint exactly when
-    the input's root is a LogicalRDD: a localCheckpoint()ed frame
-    reads as materialized; a parquet scan and a cache()d frame (an
-    InMemoryRelation only at execution) do not."""
-    from stark_spark.operators.curation import _is_materialized_scan
+def test_materialize_skips_pinned_frames(spark, tmp_path):
+    """`materialize` copies a frame only when it is not pinned yet: a
+    cache()d frame and a checkpointed one come back as the same
+    object (no second copy); a parquet scan and a frame built from a
+    Python RDD (a LogicalRDD root that is NOT checkpointed) are
+    materialised into a checkpointed LogicalRDD with the same rows."""
+    from stark_spark.materialize import materialize
     path = str(tmp_path / "docs")
     spark.range(4).write.parquet(path)
     scan = spark.read.parquet(path)
-    assert not _is_materialized_scan(scan)
     cached = scan.cache()
     try:
         cached.count()
-        assert not _is_materialized_scan(cached)
+        assert materialize(cached) is cached
     finally:
         cached.unpersist()
-    assert _is_materialized_scan(scan.localCheckpoint())
+    ck = scan.localCheckpoint()
+    assert materialize(ck) is ck
+    from_rdd = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, 2), (3, 4)]), "a long, b long")
+    for df in (scan, from_rdd):
+        out = materialize(df)
+        assert out is not df
+        root = out._jdf.queryExecution().analyzed()
+        assert root.getClass().getSimpleName() == "LogicalRDD"
+        assert root.rdd().isCheckpointed()
+        assert sorted(out.collect()) == sorted(df.collect())
 
 
 def test_passage_dedup_rewrites_and_identity(spark):
@@ -2463,48 +2473,89 @@ def test_doc_logprob_kn3_closed_form(spark):
     assert 3 not in out and all(s < 0 for _, s in out.values())
 
 
+def _pagerank_reference(edges, n_iter, scale=1_000_000_000_000):
+    """Pure-Python `pagerank` (same integer arithmetic)."""
+    e = set(edges)
+    nodes = {v for ed in e for v in ed}
+    n = len(nodes)
+    deg = {}
+    for a, _ in e:
+        deg[a] = deg.get(a, 0) + 1
+    r = {v: scale // n for v in nodes}
+    base_q = (scale * 15 // 100) // n
+    for _ in range(n_iter):
+        m = {}
+        for a, b in e:
+            m[b] = m.get(b, 0) + r[a] // deg[a]
+        dang = sum(r[v] for v in nodes if v not in deg)
+        r = {v: base_q + (m.get(v, 0) + dang // n) * 85 // 100
+             for v in nodes}
+    return r
+
+
 def test_pagerank_prepartition_smj_regime(spark, monkeypatch):
     """The r14 SMJ-regime edge pre-partitioning: when the rank frame
     exceeds the broadcast threshold, or auto-broadcast is disabled
     (-1), the degree-annotated edge list is materialized
     hash-partitioned on src with the partitioning PRESERVED through
     the checkpoint, so (a) ranks are IDENTICAL to the
-    broadcast-regime run, and (b) a loop-shaped join against the
+    broadcast-regime run, (b) a loop-shaped join against the
     pre-partitioned frame plans no Exchange above the edge-side scan
-    (only the rank side shuffles — the per-round 100 TB term)."""
+    (only the rank side shuffles — the per-round 100 TB term), and
+    (c) pagerank never changes a setting of the caller's session
+    (the partitioning is kept on a clone of it)."""
     from pyspark.sql import functions as F
+    from pyspark.sql.conf import RuntimeConfig
 
+    from stark_spark.materialize import materialize
     from stark_spark.operators import graph
-    from stark_spark.operators.graph import _loop_ckpt, pagerank
+    from stark_spark.operators.graph import pagerank
 
-    calls = []
+    keys = []
 
-    def counting_ckpt(df, key):
-        calls.append(key)
-        return _loop_ckpt(df, key)
+    def counting_materialize(df, **kw):
+        if kw.get("key") is not None:
+            keys.append(kw["key"])
+        return materialize(df, **kw)
 
-    monkeypatch.setattr(graph, "_loop_ckpt", counting_ckpt)
+    monkeypatch.setattr(graph, "materialize", counting_materialize)
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        sets.append((self, key))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+
+    def run():
+        n = len(sets)
+        got = {r.node: r.rank_q
+               for r in pagerank(edges, n_iter=3).collect()}
+        assert [k for c, k in sets[n:] if c is spark.conf] == []
+        return got
+
     edges = spark.createDataFrame(
         [(i % 37, (i * 7) % 37) for i in range(400)
          if i % 37 != (i * 7) % 37], "src long, dst long")
-    base = {r.node: r.rank_q for r in pagerank(edges, n_iter=3).collect()}
-    assert calls == []          # 37 nodes broadcast: no pre-partition
+    base = run()
+    assert keys == []          # 37 nodes broadcast: no pre-partition
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # force the SMJ regime: nothing broadcasts, the gate trips
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        smj = {r.node: r.rank_q
-               for r in pagerank(edges, n_iter=3).collect()}
+        smj = run()
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert calls == ["src"]
+    assert keys == ["src"]
     assert smj == base
 
     # plan property, isolated: a join keyed on the preserved column
     # leaves the pre-partitioned side in place
     e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ed = _loop_ckpt(e.join(deg, "src"), "src")
+    ed = materialize(e.join(deg, "src"), key="src")
     r = e.select(F.col("src").alias("node")).distinct() \
          .select("node", F.lit(1).cast("long").alias("r"))
     try:
@@ -2519,6 +2570,90 @@ def test_pagerank_prepartition_smj_regime(spark, monkeypatch):
     n_ex = plan.count("Exchange") - plan.count("ReusedExchange")
     assert n_ex == 1, plan
     assert "Scan ExistingRDD" in plan
+
+
+@pytest.mark.parametrize("policy", ["local", "reliable"])
+def test_materialize_policies_one_answer(spark, monkeypatch, tmp_path,
+                                         policy):
+    """One expected answer, many physical plans (the reference's
+    `SpatialRDDTestCase` idea): every operator that materialises
+    returns the same rows under local checkpoints and under reliable
+    ones (Spark has a checkpoint dir), and the reliable cell really
+    writes its checkpoints there."""
+    from stark_spark.operators import skyline as S
+    from stark_spark.operators.curation import curate
+    from stark_spark.operators.graph import connected_components, pagerank
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    ck_dir = tmp_path / "ck"
+    if policy == "reliable":
+        sc.setCheckpointDir(str(ck_dir))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        # connected components, hash-min loop forced
+        cc_edges = spark.createDataFrame([(0, 1), (1, 2), (3, 4), (5, 4)],
+                                         "a long, b long")
+        got = {r.node: r.comp for r in connected_components(
+            cc_edges, driver_threshold=0).collect()}
+        assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 3}
+
+        # pagerank, SMJ regime (edge list pre-partitioned on src)
+        pr_edges = [(i % 23, (i * 5) % 23) for i in range(200)
+                    if i % 23 != (i * 5) % 23]
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        got = {r.node: r.rank_q for r in pagerank(
+            spark.createDataFrame(pr_edges, "src long, dst long"),
+            n_iter=3).collect()}
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert got == _pagerank_reference(pr_edges, 3)
+
+        # dbscan on a grid
+        rng = np.random.RandomState(7)
+        pts = np.vstack([rng.normal(loc, 1.0, size=(40, 2))
+                         for loc in ((8, 8), (25, 25))]
+                        + [rng.uniform(0, 32, size=(15, 2))])
+        df = spark.createDataFrame(
+            [(i, float(p[0]), float(p[1])) for i, p in enumerate(pts)],
+            "id long, xmin double, ymin double")
+        got = dbscan(df, 1.5, 4, key="id",
+                     grid=GridSpec(0, 0, 32.000001, 32.000001, 4, 4)) \
+            .toPandas()
+        assert (_cluster_signature(got.id, got.cluster)
+                == _cluster_signature(range(len(pts)),
+                                      _naive_dbscan(pts[:, 0], pts[:, 1],
+                                                    1.5, 4)))
+
+        # skyline, distributed merge (front over the limit)
+        monkeypatch.setattr(S, "GLOBAL_MERGE_LIMIT", 50)
+        rows = [(i, float(i), float(300 - i)) for i in range(300)]
+        rows += [(1000 + i, x + 0.5, y + 0.5) for i, x, y in rows]
+        sky = spark.createDataFrame(rows, "id long, x double, y double") \
+                   .repartition(8)
+        assert set(S.skyline(sky).select("id").toPandas().id) \
+            == set(range(300))
+
+        # curation: near-dup keep-best, then a token budget
+        base = ("the cat and the dog walk to the park and they see "
+                "many birds in the tall trees near the old gate today")
+        other = ("a small boat sails out of the bay and the crew look "
+                 "for fish in the deep cold water under a grey sky")
+        docs = spark.createDataFrame(
+            [(1, base, "web", len(base)),
+             (2, base + " zz", "web", len(base) + 3),
+             (3, other, "web", len(other))],
+            "doc_id long, text string, source string, n_chars long")
+        out = curate(docs, "doc_id", near_dup="simhash",
+                     score_col="n_chars", budgets={"web": 10_000},
+                     weight_col="n_chars", source_col="source")
+        assert sorted(r.doc_id for r in out.collect()) == [2, 3]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    written = [f for f in ck_dir.rglob("part-*")] if ck_dir.exists() else []
+    assert bool(written) == (policy == "reliable")
 
 
 def test_broadcast_bytes_reads_unit_suffixes(spark):

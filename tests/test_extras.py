@@ -1108,3 +1108,37 @@ def test_lsh_signature_quotes_backtick_names(spark):
         "vec_id", lsh_signature("v", 8, 4).alias("s"))
         .orderBy("vec_id").collect()]
     assert got == want
+
+
+def test_one_way_to_materialize():
+    """Library code pins frames only through `stark_spark.materialize`
+    and never changes session settings outside session setup: a
+    `.localCheckpoint(` / `.checkpoint(` / `.cache(` / `.persist(`
+    call outside materialize.py, or a `conf.set(` outside session.py
+    and datasets.py, fails. Comments and strings are skipped (read
+    with the Python tokenizer)."""
+    import io
+    import tokenize
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    files = sorted((root / "stark_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    pin = {"localCheckpoint", "checkpoint", "cache", "persist"}
+    skip = {tokenize.COMMENT, tokenize.STRING, tokenize.NL,
+            tokenize.NEWLINE, tokenize.INDENT, tokenize.DEDENT}
+    bad = []
+    for f in files:
+        toks = [t for t in tokenize.generate_tokens(
+                    io.StringIO(f.read_text()).readline)
+                if t.type not in skip]
+        for a, b, c, d in zip(toks, toks[1:], toks[2:], toks[3:]):
+            where = f"{f.relative_to(root)}:{b.start[0]}"
+            if (a.string == "." and b.string in pin and c.string == "("
+                    and f.name != "materialize.py"):
+                bad.append(f"{where} .{b.string}(")
+            if ((a.string, b.string, c.string, d.string)
+                    == ("conf", ".", "set", "(")
+                    and f.name not in ("session.py", "datasets.py")):
+                bad.append(f"{where} conf.set(")
+    assert bad == []
