@@ -2,14 +2,16 @@
 round-10 verdict asked to become code instead of prose.
 
 Given two bench JSONs (the shape `bench.py` writes: per-query cold
-(`queries`) and warm (`queries_warm`) walls plus `canary_per_query` —
-a fixed-size numpy GEMM timed next to each query, measuring host
-weather at that moment), flag ONLY regressions that survive:
+(`queries`) and warm (`queries_warm`) walls, and per-query `layers`;
+records up to r15 instead carry `canary_per_query` — a fixed-size
+numpy GEMM timed next to each query, measuring host weather at that
+moment), flag ONLY regressions that survive:
 
 1. canary adjustment — a query that got 2x slower while its adjacent
    canary also got 2x slower is host noise, not plan decay:
    ``adj_ratio = (t_new / t_old) / clamp(c_new / c_old, 1, inf)``
-   (clamped at 1 so a QUIETER host never hides a real regression);
+   (clamped at 1 so a QUIETER host never hides a real regression; a
+   record without canaries gets no adjustment, so compares stricter);
 2. an absolute floor (default 0.2 s — sub-second jitter on micro
    queries is never actionable);
 3. the per-query variance bands PARITY records from dedicated
@@ -21,8 +23,10 @@ Usage:
     python tests/bench_compare.py OLD.json NEW.json [--tier warm|cold]
         [--threshold 1.5] [--min-abs 0.2]
 
-Prints one JSON line: {"flagged": [...], "checked": N, ...};
-exit 1 iff any regression survives all three filters.
+Prints one JSON line: {"flagged": [...], "checked": N, ...}; a
+flagged query carries its `layers` entry for the compared tier from
+both records (`{"old": {...}, "new": {...}}`) when both have one.
+Exit 1 iff any regression survives all three filters.
 """
 
 from __future__ import annotations
@@ -91,6 +95,9 @@ def compare(old: dict, new: dict, *, tier: str = "warm",
     # active when BOTH files carry it; the WORST lens wins.
     jo = old.get("jvm_canary_per_query") or {}
     jn = new.get("jvm_canary_per_query") or {}
+    # per-query layers (build/exec/plan/JIT/GC ms, jobs, shuffle bytes)
+    # name the cause of a flag; shown when both records carry them
+    lo, ln = old.get("layers") or {}, new.get("layers") or {}
     go = old.get("canary_gemm_s") or 0.0
     gn = new.get("canary_gemm_s") or 0.0
     flagged, checked = [], 0
@@ -115,10 +122,13 @@ def compare(old: dict, new: dict, *, tier: str = "warm",
         band = BANDS_WARM_MAX.get(q) if tier == "warm" else None
         if band is not None and t1 <= band:
             continue
-        flagged.append({"query": q, "old_s": t0, "new_s": t1,
-                        "raw_ratio": round(raw, 3),
-                        "canary_ratio": round(host, 3),
-                        "adj_ratio": round(adj, 3)})
+        flag = {"query": q, "old_s": t0, "new_s": t1,
+                "raw_ratio": round(raw, 3),
+                "canary_ratio": round(host, 3),
+                "adj_ratio": round(adj, 3)}
+        if q in lo and q in ln:
+            flag["layers"] = {"old": lo[q][tier], "new": ln[q][tier]}
+        flagged.append(flag)
     return {"tier": tier, "checked": checked, "threshold": threshold,
             "min_abs": min_abs,
             "canary_gemm_old": go, "canary_gemm_new": gn,

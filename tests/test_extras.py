@@ -775,6 +775,67 @@ def test_registry_oracle_table_is_closed(monkeypatch):
         entry.oracle_sql()
 
 
+def test_registry_views_pinned():
+    """Every oracle SQL byte and every (name, list, builder) triple is
+    pinned by a digest, so a registry refactor that must not change a
+    view can prove it. A deliberate change to a mirror or a builder
+    list updates the digest here in the same commit. The window order
+    is owned by test_registry_driver_window_packing."""
+    import hashlib
+    import json
+
+    import __spark_entry__ as entry
+
+    def sha(obj, **kw) -> str:
+        return hashlib.sha256(json.dumps(obj, **kw).encode()).hexdigest()
+
+    assert sha(entry._oracle_table(), sort_keys=True) == (
+        "678408689222c3f59538947215e90c036c067f5dc7ce57ba7313ef55bca2c8e9")
+    builders = sorted(
+        (name, status, fn.__name__)
+        for status, listed in (("live", entry.queries()),
+                               ("pending", entry.pending_queries()),
+                               ("retired", entry.retired_queries()))
+        for name, fn in listed.items())
+    assert sha(builders) == (
+        "da3d6ae87a816f01de4a90824933d2f12faf984787e713a566429cb9601963b2")
+
+
+def test_bench_measure_records_layers(spark, sf_dir):
+    """bench.measure counts the rows Dataset.count() counts, fills
+    every layer field, keeps build + exec within the timed wall and
+    clears its job group."""
+    import bench
+    import __spark_entry__ as entry
+
+    fn = entry.queries()["knn_events"]
+    rows, wall, layer = bench.measure(spark, fn, sf_dir, "test:measure")
+    assert rows == fn(spark, sf_dir).count()
+    assert set(layer) == {"build_ms", "exec_ms", "plan_ms", "jit_ms",
+                          "gc_ms", "jobs", "stages", "tasks",
+                          "shuffle_bytes", "files_read", "rows_scanned"}
+    assert layer["jobs"] >= 1 and layer["files_read"] >= 1
+    assert 0 < layer["build_ms"] + layer["exec_ms"] <= wall * 1e3 + 1
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_bench_record_path():
+    """A subset run writes no record; a non-32-core run writes a
+    `_c{cpus}` record the cross-round gate's pattern never pairs."""
+    import os
+    import re
+
+    import bench
+
+    assert bench.record_path("4", subset=True) is None
+    assert bench.record_path("32", subset=True) is None
+    c4 = os.path.basename(bench.record_path("4", subset=False))
+    assert re.fullmatch(r"BENCH_LOCAL_r\d+_c4\.json", c4), c4
+    full = os.path.basename(bench.record_path("32", subset=False))
+    assert re.fullmatch(r"BENCH_LOCAL_r\d+\.json", full), full
+    assert c4 == full.replace(".json", "_c4.json")
+
+
 def test_format_roundtrips_hostile_content(spark):
     """JSONL/CSV/ORC roundtrips must survive hostile text: embedded
     quotes, commas, newlines, tabs, unicode, the nullValue marker
@@ -935,6 +996,27 @@ def test_bench_compare_warm_clean_across_rounds():
     out = compare(json.load(open(old_p)), json.load(open(new_p)),
                   tier="warm")
     assert out["flagged"] == [], (old_p.name, new_p.name, out)
+
+
+def test_bench_compare_shows_flagged_layers():
+    """A flagged query carries the compared tier's layers from both
+    records; without layers in both, the flag is unchanged."""
+    from tests.bench_compare import compare
+
+    def rec(wall, build_ms, layers=True):
+        out = {"queries_warm": {"q": wall, "r": 1.0}}
+        if layers:
+            out["layers"] = {
+                n: {"cold": {"build_ms": 0}, "warm": {"build_ms": build_ms}}
+                for n in ("q", "r")}
+        return out
+
+    out = compare(rec(1.0, 10), rec(3.0, 2000), tier="warm")
+    assert [f["query"] for f in out["flagged"]] == ["q"]
+    assert out["flagged"][0]["layers"] == {"old": {"build_ms": 10},
+                                           "new": {"build_ms": 2000}}
+    out = compare(rec(1.0, 10, layers=False), rec(3.0, 2000), tier="warm")
+    assert "layers" not in out["flagged"][0]
 
 
 def test_sql_array_lit_bit_identical(spark):
