@@ -20,23 +20,31 @@ CATALYST prune (free, file-level, no custom scan):
   (reference `Cell.scala:9-26` range-vs-extent distinction), time
   min/max, row count.
 
-``read_pruned`` intersects the query envelope with the manifest on the
-driver (a few KB — same driver↔storage boundary as the reference) and
-emits ``col("cell").isin(...)``: Spark's partition pruning then skips
-whole directories before any file I/O. At 100 TB the manifest is still
-O(cells) — KBs — and pruning cost stays driver-side constant.
+The manifest is the store's catalog. Its ``cell`` column carries the
+written frame's schema in its metadata, so a read needs no schema
+inference over the data. ``read_pruned``, ``knn_pruned`` and
+``join_pruned`` intersect the query with the manifest on the driver (a
+few KB — same driver↔storage boundary as the reference) and open only
+the leaf directories of the kept manifest rows, with ``cell.isin(...)``
+still in the plan as a partition filter. Cells the manifest prunes are
+never listed, so read cost grows with the kept cells, not with the
+store. ``load_partitioned`` is the whole-store read.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from stark_spark.core import geometry as G
 from stark_spark.functions.predicates import _as_geom, st_predicate
 from stark_spark.partitioner.grid import GridSpec
 
 MANIFEST = "_stark_manifest"
+SCHEMA_KEY = "stark_schema"     # metadata key of the manifest's cell column
 
 
 # ---------------------------------------------------------------------------
@@ -46,8 +54,7 @@ MANIFEST = "_stark_manifest"
 def save_partitioned(df: DataFrame, path: str, grid: GridSpec, *,
                      t_buckets: int | None = None,
                      t_range: tuple[int, int] | None = None,
-                     zorder: bool = False,
-                     mode: str = "overwrite") -> None:
+                     zorder: bool = False) -> None:
     """Write an ST frame as cell-partitioned parquet + bounds manifest.
 
     ``t_buckets``/``t_range`` add a second-level temporal partition
@@ -59,6 +66,8 @@ def save_partitioned(df: DataFrame, path: str, grid: GridSpec, *,
     tight in BOTH dimensions, so sub-cell queries skip row groups no
     matter which axis is selective (matters once cell files hold many
     row groups, i.e. at real scale).
+
+    The write replaces whatever store was at ``path``.
     """
     out = df.withColumn("cell", grid.cell_expr(F.col("xmin"), F.col("ymin")))
     part_cols = ["cell"]
@@ -73,6 +82,11 @@ def save_partitioned(df: DataFrame, path: str, grid: GridSpec, *,
                 (F.col("t_start") - F.lit(t_range[0])) / F.lit(width)
             ).cast("int"))))
         part_cols.append("t_bucket")
+    # what a read of the store returns: data columns, then the
+    # partition columns, all nullable (as parquet discovery yields them)
+    schema = StructType([
+        StructField(f.name, f.dataType, True, f.metadata)
+        for f in sorted(out.schema.fields, key=lambda f: f.name in part_cols)])
 
     # one file per cell (repartition on the dir keys) with rows sorted
     # by bbox so parquet row-group min/max stats stay tight → row-group
@@ -90,22 +104,28 @@ def save_partitioned(df: DataFrame, path: str, grid: GridSpec, *,
     # its own (non-stable) sort otherwise, destroying the spatial order
     (out.repartition(*[F.col(c) for c in part_cols])
         .sortWithinPartitions(*part_cols, *sort_cols).drop(*drop)
-        .write.partitionBy(*part_cols).mode(mode).parquet(path))
+        .write.partitionBy(*part_cols).mode("overwrite").parquet(path))
 
     # bounds manifest: one agg scan → tiny parquet (the partition_info
-    # equivalent; range = grid cell bounds, extent = true data bounds)
-    mf = (out.groupBy(*part_cols)
-             .agg(F.min("xmin").alias("ext_xmin"), F.min("ymin").alias("ext_ymin"),
-                  F.max("xmax").alias("ext_xmax"), F.max("ymax").alias("ext_ymax"),
-                  F.min("t_start").alias("t_min"), F.max("t_end").alias("t_max"),
-                  F.count("*").alias("n_rows")))
-    spark = df.sparkSession
-    gb = spark.createDataFrame(
-        [(c,) + grid.cell_bounds(c) for c in range(grid.nx * grid.ny)],
-        "cell int, rng_xmin double, rng_ymin double, rng_xmax double, rng_ymax double")
-    (mf.join(gb, "cell")
-       .coalesce(1)
-       .write.mode("overwrite").parquet(f"{path}/{MANIFEST}"))
+    # equivalent; range = grid cell bounds, extent = true data bounds).
+    # The range columns are the arithmetic of GridSpec.cell_bounds on
+    # the same literals, so they equal its values bit for bit.
+    cx = F.col("cell") % F.lit(grid.nx)
+    cy = F.floor(F.col("cell") / F.lit(grid.nx))
+    (out.groupBy(*part_cols)
+        .agg(F.min("xmin").alias("ext_xmin"), F.min("ymin").alias("ext_ymin"),
+             F.max("xmax").alias("ext_xmax"), F.max("ymax").alias("ext_ymax"),
+             F.min("t_start").alias("t_min"), F.max("t_end").alias("t_max"),
+             F.count("*").alias("n_rows"))
+        .withColumns({
+            "rng_xmin": F.lit(grid.x0) + cx * F.lit(grid.sx),
+            "rng_ymin": F.lit(grid.y0) + cy * F.lit(grid.sy),
+            "rng_xmax": F.lit(grid.x0) + (cx + 1) * F.lit(grid.sx),
+            "rng_ymax": F.lit(grid.y0) + (cy + 1) * F.lit(grid.sy),
+            "cell": F.col("cell").alias(
+                "cell", metadata={SCHEMA_KEY: schema.json()})})
+        .coalesce(1)
+        .write.mode("overwrite").parquet(f"{path}/{MANIFEST}"))
 
 
 # ---------------------------------------------------------------------------
@@ -117,10 +137,39 @@ def load_manifest(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Reload with the cell column live (the `loadPartitioned`
-    partitioner-reattach equivalent: placement is the cell column +
-    manifest, not a Partitioner object)."""
+    """Reload the whole store with the cell column live (the
+    `loadPartitioned` partitioner-reattach equivalent: placement is the
+    cell column + manifest, not a Partitioner object). Lists every cell
+    directory; pruned reads go through the manifest instead."""
     return spark.read.option("basePath", path).parquet(path)
+
+
+def _catalog(spark: SparkSession, path: str) -> tuple[list, StructType]:
+    """The manifest rows and the schema the write recorded in them."""
+    mf = load_manifest(spark, path)
+    recorded = mf.schema["cell"].metadata.get(SCHEMA_KEY)
+    if recorded is None:
+        raise ValueError(f"store {path!r}: its manifest records no schema; "
+                         "rewrite the store with save_partitioned")
+    return mf.collect(), StructType.fromJson(json.loads(recorded))
+
+
+def _read_cells(spark: SparkSession, path: str, schema: StructType,
+                manifest_rows) -> DataFrame:
+    """Read only the leaf directories the given manifest rows name
+    (``cell=c`` or ``cell=c/t_bucket=b``), with the recorded schema: no
+    listing of other cells and no schema inference. The ``cell.isin``
+    filter keeps the partition prune visible in the plan. A directory
+    the manifest names but the store lacks raises."""
+    if not manifest_rows:
+        return spark.createDataFrame([], schema)
+    leaves = sorted({
+        f"{path}/cell={r.cell}" + (f"/t_bucket={r.t_bucket}"
+                                   if "t_bucket" in r.__fields__ else "")
+        for r in manifest_rows})
+    cells = sorted({r.cell for r in manifest_rows})
+    return (spark.read.schema(schema).option("basePath", path)
+            .parquet(*leaves).filter(F.col("cell").isin(cells)))
 
 
 def _cells_for(manifest_rows, q: G.Geometry,
@@ -152,13 +201,13 @@ def read_pruned(spark: SparkSession, path: str, query,
     data — reference `SpatioTempPartitioner` two-level placement) →
     full row-wise ``st_predicate``."""
     q = _as_geom(query)
-    mf = load_manifest(spark, path).collect()
+    mf, schema = _catalog(spark, path)
     cells = _cells_for(mf, q, t_query)
-    df = load_partitioned(spark, path)
-    if not cells:
-        return df.filter(F.lit(False))
-    df = df.filter(F.col("cell").isin(cells))
     buckets = _buckets_for(mf, cells, t_query)
+    keep = set(cells)
+    df = _read_cells(spark, path, schema, [
+        r for r in mf if r.cell in keep
+        and (buckets is None or r.t_bucket in buckets)])
     if buckets is not None:
         df = df.filter(F.col("t_bucket").isin(buckets))
     return df.filter(st_predicate(q, predicate, points=points,
@@ -189,26 +238,30 @@ def knn_pruned(spark: SparkSession, path: str, query, k: int, *,
     1. scan ONLY the query point's home cell, take its k-th distance
        (driver gets k tiny rows);
     2. re-scan only cells intersecting the radius box; exact top-k.
-    Falls back to a full top-k when the home cell holds < k rows —
-    correctness never depends on phase 1.
+    Falls back to a full top-k over the manifest's cells when the
+    manifest says the home cell holds < k rows — correctness never
+    depends on phase 1. Cells the manifest lacks are never read.
     """
     from stark_spark.operators.knn import knn
 
     q = _as_geom(query)
     qx, qy = (q.bbox[0] + q.bbox[2]) / 2, (q.bbox[1] + q.bbox[3]) / 2
     home = grid.cell_of(qx, qy)
-    df = load_partitioned(spark, path)
+    mf, schema = _catalog(spark, path)
 
-    phase1 = knn(df.filter(F.col("cell") == home), q, k,
-                 points=True, tie_col=tie_col)
-    rows = phase1.select("dist").collect()
-    if len(rows) < k:
-        return knn(df, q, k, points=True, tie_col=tie_col)
-    radius = max(r.dist for r in rows)
-    cells = grid.cells_for_query((qx, qy, qx, qy), expand=radius)
-    if set(cells) == {home}:
-        return phase1
-    return knn(df.filter(F.col("cell").isin(cells)), q, k,
+    def cells(keep) -> DataFrame:
+        return _read_cells(spark, path, schema,
+                           [r for r in mf if r.cell in keep])
+
+    # the manifest's row count says whether phase 1 can find k rows
+    if sum(r.n_rows for r in mf if r.cell == home) >= k:
+        phase1 = knn(cells({home}), q, k, points=True, tie_col=tie_col)
+        radius = max(r.dist for r in phase1.select("dist").collect())
+        near = set(grid.cells_for_query((qx, qy, qx, qy), expand=radius))
+        if near == {home}:
+            return phase1
+        return knn(cells(near), q, k, points=True, tie_col=tie_col)
+    return knn(_read_cells(spark, path, schema, mf), q, k,
                points=True, tie_col=tie_col)
 
 
@@ -252,8 +305,8 @@ def join_pruned(spark: SparkSession, left_path: str, right_path: str,
     partner on the other side are read at all."""
     from stark_spark.operators.join import st_join
 
-    lm = load_manifest(spark, left_path).collect()
-    rm = load_manifest(spark, right_path).collect()
+    lm, lschema = _catalog(spark, left_path)
+    rm, rschema = _catalog(spark, right_path)
     lcells, rcells = set(), set()
     for a in lm:
         for b in rm:
@@ -261,9 +314,9 @@ def join_pruned(spark: SparkSession, left_path: str, right_path: str,
                a.ext_ymin <= b.ext_ymax and b.ext_ymin <= a.ext_ymax:
                 lcells.add(a.cell)
                 rcells.add(b.cell)
-    left = (load_partitioned(spark, left_path)
-            .filter(F.col("cell").isin(sorted(lcells))).drop("cell"))
-    right = (load_partitioned(spark, right_path)
-             .filter(F.col("cell").isin(sorted(rcells))).drop("cell"))
+    left = _read_cells(spark, left_path, lschema,
+                       [a for a in lm if a.cell in lcells]).drop("cell")
+    right = _read_cells(spark, right_path, rschema,
+                        [b for b in rm if b.cell in rcells]).drop("cell")
     return st_join(left, right, predicate, grid=grid, suffix=suffix,
                    left_points=left_points, right_points=right_points)

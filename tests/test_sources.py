@@ -20,6 +20,8 @@ from stark_spark.sources import (join_pruned, knn_pruned, load_manifest,
                                  save_partitioned)
 
 GRID = GridSpec.unit_grid(100.0, 8)
+# covers every row of the testdata, including events past x = 100
+EVERYWHERE = "POLYGON ((-1 -1, 1000 -1, 1000 1000, -1 1000, -1 -1))"
 
 
 @pytest.fixture(scope="module")
@@ -65,10 +67,37 @@ def test_pruning_reaches_the_scan(spark, store):
     assert df.select("cell").distinct().count() < mf
 
 
+def _in_job_group(spark, fn):
+    """fn()'s result, the number of jobs it ran, and the task count of
+    each of their stages."""
+    sc = spark.sparkContext
+    group = f"test-sources-{id(fn)}"
+    sc.setJobGroup(group, "test_sources")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = [tracker.getStageInfo(s).numTasks
+             for j in jobs for s in tracker.getJobInfo(j).stageIds
+             if tracker.getStageInfo(s)]
+    return out, len(jobs), tasks
+
+
 def test_empty_prune(spark, store):
-    out = read_pruned(spark, str(store / "customer"),
-                      "POLYGON ((500 500, 501 500, 501 501, 500 501, 500 500))",
-                      points=True)
+    """A window no cell meets lists and reads nothing of the store: the
+    empty frame comes from the recorded schema and has the columns of a
+    whole-store read."""
+    path = str(store / "customer")
+    n_cells = load_manifest(spark, path).count()
+    out, _, tasks = _in_job_group(spark, lambda: read_pruned(
+        spark, path, "POLYGON ((500 500, 501 500, 501 501, 500 501, 500 500))",
+        points=True))
+    assert max(tasks, default=0) < n_cells, tasks
+    assert "FileScan" not in \
+        out._jdf.queryExecution().executedPlan().toString()
+    assert out.schema == load_partitioned(spark, path).schema
     assert out.count() == 0
 
 
@@ -95,6 +124,114 @@ def test_join_pruned_matches(spark, sf_dir, store):
            join_pruned(spark, str(store / "customer"), str(store / "supplier"),
                        grid=GRID, left_points=True, right_points=True)
            .select("c_custkey", "s_suppkey").collect()}
+    assert got == want
+
+
+def test_one_cell_read_lists_no_other_cell(spark, store):
+    """A one-cell window runs no job over the store's cell directories:
+    the manifest names the one leaf directory and records the schema,
+    so neither a listing job nor a schema-inference job over the data
+    runs. Listing the whole store made this 6 jobs, one with a task
+    per cell."""
+    path = str(store / "customer")
+    n_cells = load_manifest(spark, path).count()
+    n, jobs, tasks = _in_job_group(spark, lambda: read_pruned(
+        spark, path, "POLYGON ((1 1, 11 1, 11 11, 1 11, 1 1))",
+        points=True).count())
+    assert n > 0
+    assert max(tasks) < n_cells, tasks
+    assert jobs < 6
+
+
+def test_manifest_range_is_grid_cell_bounds(spark, sf_dir, tmp_path):
+    """The manifest's range columns equal GridSpec.cell_bounds exactly,
+    on a grid whose origin and steps are not round numbers."""
+    grid = GridSpec(0.3, -1.7, 97.1, 101.3, 7, 9)
+    path = str(tmp_path / "ranges")
+    save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
+                                 keep_geom=False), path, grid)
+    rows = load_manifest(spark, path).collect()
+    assert len(rows) > 1
+    for r in rows:
+        assert (r.rng_xmin, r.rng_ymin, r.rng_xmax, r.rng_ymax) == \
+            grid.cell_bounds(r.cell)
+
+
+def test_rewrite_replaces_the_store(spark, sf_dir, tmp_path):
+    """A second write to the same path replaces the first: the read
+    and the manifest both describe only the second batch."""
+    ev = D.st_events(spark, sf_dir, keep_geom=False)
+    path = str(tmp_path / "rewrite")
+    save_partitioned(ev.where(F.col("x") < 50), path, GRID)
+    batch_b = ev.where(F.col("x") >= 50)
+    save_partitioned(batch_b, path, GRID)
+    got = read_pruned(spark, path, EVERYWHERE, points=True)
+    want = {r.event_id for r in batch_b.select("event_id").collect()}
+    ids = [r.event_id for r in got.select("event_id").collect()]
+    assert len(ids) == len(want) and set(ids) == want
+    mf = load_manifest(spark, path)
+    assert mf.agg(F.sum("n_rows")).first()[0] == len(want)
+
+
+def test_empty_store_reads_zero_rows(spark, sf_dir, tmp_path):
+    """An empty frame saves a store whose read returns no rows and the
+    written columns, from the schema the manifest records."""
+    ev = D.st_events(spark, sf_dir, keep_geom=False)
+    path = str(tmp_path / "empty")
+    save_partitioned(ev.where(F.lit(False)), path, GRID)
+    out = read_pruned(spark, path, EVERYWHERE, points=True)
+    assert out.count() == 0
+    assert out.columns == ev.columns + ["cell"]
+
+
+def test_missing_cell_directory_raises(spark, sf_dir, tmp_path):
+    """A cell the manifest lists but the store lacks fails the read
+    instead of returning fewer rows."""
+    import shutil
+    path = str(tmp_path / "holed")
+    save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
+                                 keep_geom=False), path, GRID)
+    cell = load_manifest(spark, path).first().cell
+    shutil.rmtree(f"{path}/cell={cell}")
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        read_pruned(spark, path, EVERYWHERE, points=True).count()
+
+
+def test_manifest_without_schema_raises(spark, sf_dir, tmp_path):
+    """A manifest that records no schema is refused by name; there is no
+    fallback that lists the store."""
+    from pyspark.sql.types import StructField, StructType
+    path = str(tmp_path / "noschema")
+    save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
+                                 keep_geom=False), path, GRID)
+    mf = load_manifest(spark, path)
+    bare = StructType([StructField(f.name, f.dataType, f.nullable)
+                       for f in mf.schema.fields])
+    rows = mf.collect()
+    spark.createDataFrame(rows, bare).coalesce(1).write.mode("overwrite") \
+        .parquet(f"{path}/_stark_manifest")
+    with pytest.raises(ValueError, match="noschema"):
+        read_pruned(spark, path, EVERYWHERE, points=True)
+
+
+def test_knn_pruned_empty_home_cell(spark, sf_dir, tmp_path):
+    """A query point whose home cell holds no rows still gets the exact
+    kNN: the manifest lacks the cell, so the search reads the others."""
+    cust = D.st_points(spark, sf_dir, "customer", "c_custkey",
+                       keep_geom=False)
+    # cell (3, 3) of the 8×8 grid is [37.5, 50)²; leave it empty
+    holed = cust.where(~((F.col("x") >= 37.5) & (F.col("x") < 50) &
+                         (F.col("y") >= 37.5) & (F.col("y") < 50)))
+    path = str(tmp_path / "knn_holed")
+    save_partitioned(holed, path, GRID)
+    assert GRID.cell_of(45, 45) not in \
+        {r.cell for r in load_manifest(spark, path).collect()}
+    want = [r.c_custkey for r in
+            knn(holed, "POINT (45 45)", 10, points=True,
+                tie_col="c_custkey").select("c_custkey").collect()]
+    got = [r.c_custkey for r in
+           knn_pruned(spark, path, "POINT (45 45)", 10, grid=GRID,
+                      tie_col="c_custkey").select("c_custkey").collect()]
     assert got == want
 
 
