@@ -90,6 +90,12 @@ def get_session(app: str = "stark_spark", *, master: str | None = None,
         # keep managed-table data (bucketed tables) out of the repo
         builder = builder.config(
             "spark.sql.warehouse.dir", "/tmp/stark_spark_warehouse")
+    # Generated classes are cached per JVM, up to this many (a static
+    # conf, read once at launch). At the default of 100 a plan that
+    # generates more classes than that — curation_pipeline_neardup
+    # compiles ~120 — evicts its own classes and recompiles ~95 of them
+    # on every run; at 1 000 its second run compiles none.
+    builder = builder.config("spark.sql.codegen.cache.maxEntries", "1000")
     builder = configure(builder, shuffle_partitions=shuffle_partitions)
     return builder.getOrCreate()
 

@@ -14,28 +14,33 @@ two-phase home-cell → widened-box search (`STSparkContext.scala:124-184`).
 Our mapping is Hive-style partitioning, which makes every prune a
 CATALYST prune (free, file-level, no custom scan):
 
-* data:      ``path/cell=<id>[/t_bucket=<b>]/*.parquet``
-* manifest:  ``path/_stark_manifest`` — tiny parquet, one row per cell:
-  grid ``range`` bounds, true ``extent`` of contained geometries
-  (reference `Cell.scala:9-26` range-vs-extent distinction), time
-  min/max, row count.
+* data:      ``path/cell=<id>[/t_bucket=<b>]/*.parquet`` — one file per
+  leaf directory, written by ``spark.sql.shuffle.partitions`` tasks
+  (each leaf hashes to one task);
+* manifest:  ``path/_stark_manifest.json`` — one JSON document, the
+  written frame's schema plus one row per leaf: grid ``range`` bounds,
+  true ``extent`` of contained geometries (reference `Cell.scala:9-26`
+  range-vs-extent distinction), time min/max, row count.
 
-The manifest is the store's catalog. Its ``cell`` column carries the
-written frame's schema in its metadata, so a read needs no schema
-inference over the data. ``read_pruned``, ``knn_pruned`` and
-``join_pruned`` intersect the query with the manifest on the driver (a
-few KB — same driver↔storage boundary as the reference) and open only
-the leaf directories of the kept manifest rows, with ``cell.isin(...)``
-still in the plan as a partition filter. Cells the manifest prunes are
-never listed, so read cost grows with the kept cells, not with the
-store. ``load_partitioned`` is the whole-store read.
+The manifest is the store's catalog and, like ``partition_info``, a
+sidecar the driver writes and parses itself through the session's
+Hadoop ``FileSystem`` (so any Hadoop store works); the leading ``_``
+keeps it out of partition discovery. ``read_pruned``, ``knn_pruned``
+and ``join_pruned`` intersect the query with the manifest on the driver
+(a few KB — same driver↔storage boundary as the reference) and open
+only the leaf directories of the kept rows with the recorded schema,
+with ``cell.isin(...)`` still in the plan as a partition filter. No
+Spark job runs to open the catalog, cells the manifest prunes are never
+listed, and read cost grows with the kept cells, not with the store.
+``load_partitioned`` is the whole-store read.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -43,8 +48,7 @@ from stark_spark.core import geometry as G
 from stark_spark.functions.predicates import _as_geom, st_predicate
 from stark_spark.partitioner.grid import GridSpec
 
-MANIFEST = "_stark_manifest"
-SCHEMA_KEY = "stark_schema"     # metadata key of the manifest's cell column
+MANIFEST = "_stark_manifest.json"
 
 
 # ---------------------------------------------------------------------------
@@ -101,39 +105,58 @@ def save_partitioned(df: DataFrame, path: str, grid: GridSpec, *,
         sort_cols, drop = ["xmin", "ymin"], []
     # sort by (dir keys, spatial key): the dynamic-partition writer
     # requires rows ordered by the partition columns and would insert
-    # its own (non-stable) sort otherwise, destroying the spatial order
-    (out.repartition(*[F.col(c) for c in part_cols])
+    # its own (non-stable) sort otherwise, destroying the spatial order.
+    # An explicit partition count is a by-number repartition, which AQE
+    # does not coalesce: a small batch would otherwise write every cell
+    # file from one task.
+    spark = df.sparkSession
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    (out.repartition(n_tasks, *[F.col(c) for c in part_cols])
         .sortWithinPartitions(*part_cols, *sort_cols).drop(*drop)
         .write.partitionBy(*part_cols).mode("overwrite").parquet(path))
 
-    # bounds manifest: one agg scan → tiny parquet (the partition_info
-    # equivalent; range = grid cell bounds, extent = true data bounds).
-    # The range columns are the arithmetic of GridSpec.cell_bounds on
-    # the same literals, so they equal its values bit for bit.
+    # bounds manifest: one agg scan collected to the driver (the
+    # partition_info equivalent; range = grid cell bounds, extent = true
+    # data bounds). The range columns are the arithmetic of
+    # GridSpec.cell_bounds on the same literals, so they equal its
+    # values bit for bit.
     cx = F.col("cell") % F.lit(grid.nx)
     cy = F.floor(F.col("cell") / F.lit(grid.nx))
-    (out.groupBy(*part_cols)
-        .agg(F.min("xmin").alias("ext_xmin"), F.min("ymin").alias("ext_ymin"),
-             F.max("xmax").alias("ext_xmax"), F.max("ymax").alias("ext_ymax"),
-             F.min("t_start").alias("t_min"), F.max("t_end").alias("t_max"),
-             F.count("*").alias("n_rows"))
-        .withColumns({
-            "rng_xmin": F.lit(grid.x0) + cx * F.lit(grid.sx),
-            "rng_ymin": F.lit(grid.y0) + cy * F.lit(grid.sy),
-            "rng_xmax": F.lit(grid.x0) + (cx + 1) * F.lit(grid.sx),
-            "rng_ymax": F.lit(grid.y0) + (cy + 1) * F.lit(grid.sy),
-            "cell": F.col("cell").alias(
-                "cell", metadata={SCHEMA_KEY: schema.json()})})
-        .coalesce(1)
-        .write.mode("overwrite").parquet(f"{path}/{MANIFEST}"))
+    rows = (out.groupBy(*part_cols)
+            .agg(F.min("xmin").alias("ext_xmin"), F.min("ymin").alias("ext_ymin"),
+                 F.max("xmax").alias("ext_xmax"), F.max("ymax").alias("ext_ymax"),
+                 F.min("t_start").alias("t_min"), F.max("t_end").alias("t_max"),
+                 F.count("*").alias("n_rows"))
+            .withColumns({
+                "rng_xmin": F.lit(grid.x0) + cx * F.lit(grid.sx),
+                "rng_ymin": F.lit(grid.y0) + cy * F.lit(grid.sy),
+                "rng_xmax": F.lit(grid.x0) + (cx + 1) * F.lit(grid.sx),
+                "rng_ymax": F.lit(grid.y0) + (cy + 1) * F.lit(grid.sy)})
+            .collect())
+    fs, mf = _manifest_file(spark, path)
+    stream = fs.create(mf, True)
+    try:
+        stream.write(json.dumps({"schema": schema.jsonValue(),
+                                 "rows": [r.asDict() for r in rows]}).encode())
+    finally:
+        stream.close()
 
 
 # ---------------------------------------------------------------------------
 # readers
 # ---------------------------------------------------------------------------
 
-def load_manifest(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(f"{path}/{MANIFEST}")
+def _manifest_file(spark: SparkSession, path: str):
+    """The Hadoop file system holding ``path`` and the manifest's path
+    on it, resolved with the session's Hadoop configuration."""
+    mf = spark._jvm.org.apache.hadoop.fs.Path(path, MANIFEST)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return mf.getFileSystem(conf), mf
+
+
+def load_manifest(spark: SparkSession, path: str) -> list[Row]:
+    """The store's manifest rows, one per leaf directory."""
+    return _catalog(spark, path)[0]
 
 
 def load_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -144,14 +167,28 @@ def load_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("basePath", path).parquet(path)
 
 
-def _catalog(spark: SparkSession, path: str) -> tuple[list, StructType]:
-    """The manifest rows and the schema the write recorded in them."""
-    mf = load_manifest(spark, path)
-    recorded = mf.schema["cell"].metadata.get(SCHEMA_KEY)
-    if recorded is None:
-        raise ValueError(f"store {path!r}: its manifest records no schema; "
-                         "rewrite the store with save_partitioned")
-    return mf.collect(), StructType.fromJson(json.loads(recorded))
+def _catalog(spark: SparkSession, path: str) -> tuple[list[Row], StructType]:
+    """The manifest rows and the schema the write recorded beside them,
+    read on the driver. A store without a readable manifest that records
+    its schema raises; nothing falls back to listing the store."""
+    def refuse(why: str):
+        return ValueError(f"store {path!r}: {why}; rewrite the store with "
+                          "save_partitioned")
+
+    fs, mf = _manifest_file(spark, path)
+    if not fs.exists(mf):
+        raise refuse(f"it has no {MANIFEST}")
+    stream = fs.open(mf)
+    try:
+        doc = json.loads(bytes(stream.readAllBytes()))
+    except (Py4JJavaError, ValueError) as e:    # checksum mismatch, cut JSON
+        raise refuse(f"its {MANIFEST} does not parse") from e
+    finally:
+        stream.close()
+    if doc.get("schema") is None:
+        raise refuse("its manifest records no schema")
+    return ([Row(**r) for r in doc["rows"]],
+            StructType.fromJson(doc["schema"]))
 
 
 def _read_cells(spark: SparkSession, path: str, schema: StructType,

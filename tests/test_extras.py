@@ -1224,3 +1224,26 @@ def test_one_way_to_materialize():
                     and f.name not in ("session.py", "datasets.py")):
                 bad.append(f"{where} conf.set(")
     assert bad == []
+
+
+def test_codegen_cache_holds_a_large_plan(spark):
+    """A plan with more than 100 whole-stage codegen classes (Spark's
+    default codegen cache size) compiles nothing on its second run: the
+    session's cache holds all of its classes. At 100 entries the plan
+    evicts its own classes and recompiles them on every run."""
+    from functools import reduce
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    # each branch inlines its own literals, so each compiles its own class
+    def run():
+        base = spark.range(0, 4, 1, 1)
+        return reduce(lambda a, b: a.unionByName(b), [
+            base.selectExpr(f"id * {i} + {i + 1} AS v").where(f"v % {i + 2} > 0")
+            for i in range(120)]).groupBy().sum("v").collect()
+
+    start = compiles.getCount()
+    first = run()
+    assert compiles.getCount() - start > 100
+    before = compiles.getCount()
+    assert run() == first
+    assert compiles.getCount() == before

@@ -18,6 +18,7 @@ from stark_spark.partitioner.grid import GridSpec
 from stark_spark.sources import (join_pruned, knn_pruned, load_manifest,
                                  load_partitioned, read_pruned,
                                  save_partitioned)
+from stark_spark.sources.partitioned import MANIFEST
 
 GRID = GridSpec.unit_grid(100.0, 8)
 # covers every row of the testdata, including events past x = 100
@@ -40,11 +41,10 @@ def test_roundtrip_counts(spark, sf_dir, store):
     assert re.count() == cust.count()
     assert "cell" in re.columns
     mf = load_manifest(spark, str(store / "customer"))
-    assert mf.agg(F.sum("n_rows")).first()[0] == cust.count()
+    assert sum(r.n_rows for r in mf) == cust.count()
     # extent ⊆ range for every cell (reference Cell invariant)
-    bad = mf.where((F.col("ext_xmin") < F.col("rng_xmin") - 1e-9) |
-                   (F.col("ext_xmax") > F.col("rng_xmax") + 1e-9)).count()
-    assert bad == 0
+    assert all(r.rng_xmin - 1e-9 <= r.ext_xmin and
+               r.ext_xmax <= r.rng_xmax + 1e-9 for r in mf)
 
 
 def test_pruned_read_matches_full(spark, sf_dir, store):
@@ -63,8 +63,8 @@ def test_pruning_reaches_the_scan(spark, store):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan
     # the 12×12 box touches only cell 0 (+neighbors at 12.5 boundary)
-    mf = load_manifest(spark, str(store / "customer")).count()
-    assert df.select("cell").distinct().count() < mf
+    mf = load_manifest(spark, str(store / "customer"))
+    assert df.select("cell").distinct().count() < len(mf)
 
 
 def _in_job_group(spark, fn):
@@ -90,7 +90,7 @@ def test_empty_prune(spark, store):
     empty frame comes from the recorded schema and has the columns of a
     whole-store read."""
     path = str(store / "customer")
-    n_cells = load_manifest(spark, path).count()
+    n_cells = len(load_manifest(spark, path))
     out, _, tasks = _in_job_group(spark, lambda: read_pruned(
         spark, path, "POLYGON ((500 500, 501 500, 501 501, 500 501, 500 500))",
         points=True))
@@ -131,16 +131,66 @@ def test_one_cell_read_lists_no_other_cell(spark, store):
     """A one-cell window runs no job over the store's cell directories:
     the manifest names the one leaf directory and records the schema,
     so neither a listing job nor a schema-inference job over the data
-    runs. Listing the whole store made this 6 jobs, one with a task
-    per cell."""
+    runs, and the driver reads the manifest itself. The count's own two
+    jobs are all that run. Listing the whole store made this 6 jobs,
+    one with a task per cell."""
     path = str(store / "customer")
-    n_cells = load_manifest(spark, path).count()
+    n_cells = len(load_manifest(spark, path))
     n, jobs, tasks = _in_job_group(spark, lambda: read_pruned(
         spark, path, "POLYGON ((1 1, 11 1, 11 11, 1 11, 1 1))",
         points=True).count())
     assert n > 0
     assert max(tasks) < n_cells, tasks
-    assert jobs < 6
+    assert jobs <= 2
+
+
+def test_catalog_runs_no_job(spark, store):
+    """Building a pruned read or a pruned join reads the manifests on
+    the driver and runs no Spark job."""
+    cust, supp = str(store / "customer"), str(store / "supplier")
+    window = "POLYGON ((1 1, 11 1, 11 11, 1 11, 1 1))"
+    _, jobs, _ = _in_job_group(spark, lambda: read_pruned(
+        spark, cust, window, points=True))
+    assert jobs == 0
+    _, jobs, _ = _in_job_group(spark, lambda: join_pruned(
+        spark, cust, supp, grid=GRID, left_points=True, right_points=True))
+    assert jobs == 0
+
+
+def _write_stage_tasks(spark, path: str) -> list[int]:
+    """Task count of the final stage of each SQL execution that wrote
+    files under ``path`` (``InsertIntoHadoopFsRelationCommand``): the
+    stage whose tasks write the files."""
+    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    tracker = spark.sparkContext.statusTracker()
+    out = []
+    for ex in to_java(spark._jsparkSession.sharedState().statusStore()
+                      .executionsList()):
+        plan = ex.physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan and path in plan:
+            job = max(to_java(ex.jobs()).keySet())
+            last = max(tracker.getJobInfo(job).stageIds)
+            out.append(tracker.getStageInfo(last).numTasks)
+    return out
+
+
+def test_write_uses_the_shuffle_width(spark, sf_dir, tmp_path):
+    """A small batch is still written by spark.sql.shuffle.partitions
+    tasks, one file per cell: the repartition names its partition count,
+    which AQE leaves as it is instead of coalescing the batch to one
+    writing task."""
+    import glob
+    path = str(tmp_path / "width")
+    save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey"),
+                     path, GRID)
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width > 1
+    assert _write_stage_tasks(spark, path) == [width]
+    mf = load_manifest(spark, path)
+    files = glob.glob(f"{path}/cell=*/*.parquet")
+    assert len(files) == len(mf) > 1
+    assert sorted(f"cell={r.cell}" for r in mf) == \
+        sorted(f.split("/")[-2] for f in files)
 
 
 def test_manifest_range_is_grid_cell_bounds(spark, sf_dir, tmp_path):
@@ -150,7 +200,7 @@ def test_manifest_range_is_grid_cell_bounds(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ranges")
     save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
                                  keep_geom=False), path, grid)
-    rows = load_manifest(spark, path).collect()
+    rows = load_manifest(spark, path)
     assert len(rows) > 1
     for r in rows:
         assert (r.rng_xmin, r.rng_ymin, r.rng_xmax, r.rng_ymax) == \
@@ -169,8 +219,7 @@ def test_rewrite_replaces_the_store(spark, sf_dir, tmp_path):
     want = {r.event_id for r in batch_b.select("event_id").collect()}
     ids = [r.event_id for r in got.select("event_id").collect()]
     assert len(ids) == len(want) and set(ids) == want
-    mf = load_manifest(spark, path)
-    assert mf.agg(F.sum("n_rows")).first()[0] == len(want)
+    assert sum(r.n_rows for r in load_manifest(spark, path)) == len(want)
 
 
 def test_empty_store_reads_zero_rows(spark, sf_dir, tmp_path):
@@ -191,27 +240,79 @@ def test_missing_cell_directory_raises(spark, sf_dir, tmp_path):
     path = str(tmp_path / "holed")
     save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
                                  keep_geom=False), path, GRID)
-    cell = load_manifest(spark, path).first().cell
+    cell = load_manifest(spark, path)[0].cell
     shutil.rmtree(f"{path}/cell={cell}")
     with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
         read_pruned(spark, path, EVERYWHERE, points=True).count()
 
 
+def _rewrite_manifest(path: str, body: str) -> None:
+    """Replace a store's manifest file and drop the checksum sidecar the
+    local Hadoop file system keeps beside it."""
+    import os
+    with open(f"{path}/{MANIFEST}", "w") as f:
+        f.write(body)
+    crc = f"{path}/.{MANIFEST}.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
 def test_manifest_without_schema_raises(spark, sf_dir, tmp_path):
     """A manifest that records no schema is refused by name; there is no
     fallback that lists the store."""
-    from pyspark.sql.types import StructField, StructType
+    import json
     path = str(tmp_path / "noschema")
     save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
                                  keep_geom=False), path, GRID)
-    mf = load_manifest(spark, path)
-    bare = StructType([StructField(f.name, f.dataType, f.nullable)
-                       for f in mf.schema.fields])
-    rows = mf.collect()
-    spark.createDataFrame(rows, bare).coalesce(1).write.mode("overwrite") \
-        .parquet(f"{path}/_stark_manifest")
-    with pytest.raises(ValueError, match="noschema"):
+    rows = [r.asDict() for r in load_manifest(spark, path)]
+    _rewrite_manifest(path, json.dumps({"rows": rows}))
+    with pytest.raises(ValueError, match="noschema.*no schema"):
         read_pruned(spark, path, EVERYWHERE, points=True)
+
+
+@pytest.mark.parametrize("checksum", [True, False])
+def test_truncated_manifest_raises(spark, sf_dir, tmp_path, checksum):
+    """A manifest cut short (a write that died half way) is refused by
+    name instead of reading as fewer cells, whether the local file
+    system's checksum catches it or the JSON parse does."""
+    import os
+    path = str(tmp_path / "truncated")
+    save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
+                                 keep_geom=False), path, GRID)
+    size = os.path.getsize(f"{path}/{MANIFEST}")
+    if checksum:
+        os.truncate(f"{path}/{MANIFEST}", size // 2)
+    else:
+        with open(f"{path}/{MANIFEST}") as f:
+            _rewrite_manifest(path, f.read(size // 2))
+    with pytest.raises(ValueError, match="truncated.*does not parse"):
+        read_pruned(spark, path, EVERYWHERE, points=True)
+
+
+def test_store_without_manifest_raises(spark, sf_dir, tmp_path):
+    """A store with cell directories but no manifest file (written by an
+    older checkout, or its manifest lost) is refused by name."""
+    import os
+    path = str(tmp_path / "bare")
+    save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
+                                 keep_geom=False), path, GRID)
+    os.remove(f"{path}/{MANIFEST}")
+    with pytest.raises(ValueError, match="bare.*has no"):
+        read_pruned(spark, path, EVERYWHERE, points=True)
+
+
+def test_manifest_extent_is_exact(spark, sf_dir, tmp_path):
+    """The ext_* values that come back from the JSON manifest equal
+    Spark's min/max over the stored rows of each cell bit for bit."""
+    path = str(tmp_path / "extent")
+    save_partitioned(D.st_points(spark, sf_dir, "customer", "c_custkey",
+                                 keep_geom=False), path, GRID)
+    want = {r.cell: tuple(r)[1:] for r in load_partitioned(spark, path)
+            .groupBy("cell").agg(F.min("xmin"), F.min("ymin"),
+                                 F.max("xmax"), F.max("ymax")).collect()}
+    got = {r.cell: (r.ext_xmin, r.ext_ymin, r.ext_xmax, r.ext_ymax)
+           for r in load_manifest(spark, path)}
+    assert got == want and len(got) > 1
 
 
 def test_knn_pruned_empty_home_cell(spark, sf_dir, tmp_path):
@@ -225,7 +326,7 @@ def test_knn_pruned_empty_home_cell(spark, sf_dir, tmp_path):
     path = str(tmp_path / "knn_holed")
     save_partitioned(holed, path, GRID)
     assert GRID.cell_of(45, 45) not in \
-        {r.cell for r in load_manifest(spark, path).collect()}
+        {r.cell for r in load_manifest(spark, path)}
     want = [r.c_custkey for r in
             knn(holed, "POINT (45 45)", 10, points=True,
                 tie_col="c_custkey").select("c_custkey").collect()]
@@ -271,9 +372,8 @@ def test_st_partitioned_two_level_prune(spark, sf_dir, tmp_path):
     # the t_bucket prune picks a strict subset of the 6 time dirs
     # (the plan string elides long filter lists, so assert the helper)
     from stark_spark.core import geometry as G
-    from stark_spark.sources.partitioned import (_buckets_for, _cells_for,
-                                                 load_manifest)
-    mf = load_manifest(spark, path).collect()
+    from stark_spark.sources.partitioned import _buckets_for, _cells_for
+    mf = load_manifest(spark, path)
     cells = _cells_for(mf, G.from_wkt(q), tq)
     buckets = _buckets_for(mf, cells, tq)
     assert buckets is not None and 0 < len(buckets) < 6
