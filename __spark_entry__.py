@@ -890,23 +890,28 @@ def _q_raster_count_value(spark, sf):
     return count_value(_ev_tiles(spark, sf), 1)
 
 
-_PART_EVENTS_BUILT: set = set()
+_PART_STORES_BUILT: set = set()
+
+
+def _part_store(sf: str, name: str, frame, **save_kw) -> str:
+    """Cell-partitioned copy of ``frame()`` under /tmp, written by
+    `save_partitioned` at most once per process per sf (fresh per run —
+    never trust a previous process's /tmp data, the synthetic-coordinate
+    recipe may have changed), so a pruned query times its read, not
+    the write of its store."""
+    from stark_spark.sources.partitioned import save_partitioned
+    tag = _os.path.basename(sf.rstrip("/"))
+    path = f"{_ORACLE_TMP}/{name}_{tag}"
+    if path not in _PART_STORES_BUILT:
+        save_partitioned(frame(), path, GRID, **save_kw)
+        _PART_STORES_BUILT.add(path)
+    return path
 
 
 def _part_events_path(spark, sf: str) -> str:
-    """Cell-partitioned copy of the events ST frame under /tmp, built
-    at most once per process per sf (fresh per run — never trust a
-    previous process's /tmp data, the synthetic-coordinate recipe may
-    have changed)."""
-    import os
-    from stark_spark.sources.partitioned import save_partitioned
-    tag = os.path.basename(sf.rstrip("/"))
-    path = f"{_ORACLE_TMP}/part_events_{tag}"
-    if path not in _PART_EVENTS_BUILT:
-        ev = D.st_events(spark, sf, keep_geom=False)
-        save_partitioned(ev, path, GRID)
-        _PART_EVENTS_BUILT.add(path)
-    return path
+    """The events ST frame's store, shared by the pruned read and kNN."""
+    return _part_store(sf, "part_events",
+                       lambda: D.st_events(spark, sf, keep_geom=False))
 
 
 def _q_pruned_read(spark, sf):
@@ -914,9 +919,7 @@ def _q_pruned_read(spark, sf):
     events saved cell-partitioned with a bounds manifest, re-read with
     manifest + Catalyst partition pruning; result must equal the plain
     timed-rectangle filter (the oracle is that filter)."""
-    import os
-    from stark_spark.sources.partitioned import (read_pruned,
-                                                 save_partitioned)
+    from stark_spark.sources.partitioned import read_pruned
     path = _part_events_path(spark, sf)
     out = read_pruned(spark, path,
                       "POLYGON ((10 10, 60 10, 60 80, 10 80, 10 10))",
@@ -929,16 +932,11 @@ def _q_pruned_join(spark, sf):
     jointextFiles): both sides saved partitioned; the cell-pair graph
     comes from the manifests alone; result must equal the plain
     point-equality grid join."""
-    import os
-    from stark_spark.sources.partitioned import (join_pruned,
-                                                 save_partitioned)
-    tag = os.path.basename(sf.rstrip("/"))
-    pc = f"{_ORACLE_TMP}/part_cust_{tag}"
-    ps = f"{_ORACLE_TMP}/part_supp_{tag}"
-    cust = D.st_points(spark, sf, "customer", "c_custkey", keep_geom=False)
-    supp = D.st_points(spark, sf, "supplier", "s_suppkey", keep_geom=False)
-    save_partitioned(cust, pc, GRID)
-    save_partitioned(supp, ps, GRID)
+    from stark_spark.sources.partitioned import join_pruned
+    pc = _part_store(sf, "part_cust", lambda: D.st_points(
+        spark, sf, "customer", "c_custkey", keep_geom=False))
+    ps = _part_store(sf, "part_supp", lambda: D.st_points(
+        spark, sf, "supplier", "s_suppkey", keep_geom=False))
     out = join_pruned(spark, pc, ps, grid=GRID,
                       left_points=True, right_points=True)
     return out.select("c_custkey", "s_suppkey")
@@ -951,15 +949,10 @@ def _q_pruned_read_st(spark, sf):
     manifest + two-level Catalyst pruning; result must equal the plain
     timed-rectangle filter over a NARROW window (so temporal dirs
     actually prune)."""
-    import os
-    from stark_spark.sources.partitioned import (read_pruned,
-                                                 save_partitioned)
-    tag = os.path.basename(sf.rstrip("/"))
-    path = f"{_ORACLE_TMP}/part_st_{tag}"
-    if path not in _PART_EVENTS_BUILT:
-        ev = D.st_events(spark, sf, keep_geom=False)
-        save_partitioned(ev, path, GRID, t_buckets=6)
-        _PART_EVENTS_BUILT.add(path)
+    from stark_spark.sources.partitioned import read_pruned
+    path = _part_store(sf, "part_st",
+                       lambda: D.st_events(spark, sf, keep_geom=False),
+                       t_buckets=6)
     out = read_pruned(spark, path,
                       "POLYGON ((10 10, 60 10, 60 80, 10 80, 10 10))",
                       points=True, t_query=(1704067200, 1704672000))
@@ -971,9 +964,6 @@ def _q_pruned_knn(spark, sf):
     `STSparkContext.scala:124-184` / PSF:177-252): phase 1 scans only
     the home cell, phase 2 only cells within the k-th distance; the
     answer must equal the full-scan kNN (the oracle is the full scan)."""
-    import os
-    from stark_spark.sources.partitioned import (knn_pruned,
-                                                 save_partitioned)
     from stark_spark.sources.partitioned import knn_pruned
     path = _part_events_path(spark, sf)
     out = knn_pruned(spark, path, "POINT (50 50)", 50, grid=GRID,

@@ -33,9 +33,6 @@ PY = 104729
 # right side with honest non-zero distances and zero-neighbor rows.
 TABLE_SALT: dict[str, tuple[int, int]] = {"orders": (5, 7)}
 
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-
 # Timestamp columns to normalize to TimestampType (instant) regardless of
 # the driver's parquet encoding: TIMESTAMP(NANOS) reads as long nanos
 # (legacy conf in session.py), timestamp[us] reads as TIMESTAMP_NTZ in

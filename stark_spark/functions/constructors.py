@@ -182,12 +182,6 @@ def st_point(x: Column | str, y: Column | str,
     return _st_point_udf(x.cast("double"), y.cast("double"))
 
 
-def st_zrange(geom: Column | str = "geom") -> Column:
-    """Struct (zmin, zmax) of a geometry column; NULLs when 2-D."""
-    geom = F.col(geom) if isinstance(geom, str) else geom
-    return _st_zrange_udf(geom)
-
-
 def with_z(df: DataFrame, z: str) -> DataFrame:
     """Attach native zmin/zmax columns for a point frame whose z source
     column is known — no UDF (mirror of the with_bbox point fast path)."""

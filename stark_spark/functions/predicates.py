@@ -130,8 +130,9 @@ def st_predicate(query, predicate: str, *, geom_col: str = "geom",
 
     ``points=True`` asserts the frame is point geometry → for a
     rectangle query the bbox phase is exact and no UDF is emitted.
-    ``t_query`` = (start, end) epoch seconds, or None for an untimed
-    query; with a timed query, the both-or-neither §1.2 rule applies.
+    ``t_query`` = (start, end) epoch seconds, either end None for an
+    open end, or None for an untimed query; with a timed query, the
+    both-or-neither §1.2 rule applies.
     """
     if predicate not in PREDICATES:
         raise ValueError(f"unknown predicate {predicate}")
@@ -179,7 +180,9 @@ def st_predicate(query, predicate: str, *, geom_col: str = "geom",
     if t_query == "any":
         return spatial
     ls, le = F.col(time_cols[0]), F.col(time_cols[1])
-    rs = F.lit(int(t_query[0]))
+    # an open start is -2^62, the mirror of the +2^62 open end of
+    # temporal_intersects: a NULL start would read as an untimed query
+    rs = F.lit(-2**62 if t_query[0] is None else int(t_query[0]))
     re = F.lit(None).cast("long") if t_query[1] is None else F.lit(int(t_query[1]))
     return st_conjunction(spatial, predicate, ls, le, rs, re)
 

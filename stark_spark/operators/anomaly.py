@@ -25,19 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _lower_median(df: DataFrame, group: str, val: str,
-                  tiebreak: str) -> DataFrame:
-    """(group, med) — value at row_number ⌈n/2⌉ = (n+1) div 2 under
-    ORDER BY (val, tiebreak)."""
-    from pyspark.sql import Window
-    w = Window.partitionBy(group).orderBy(F.col(val), F.col(tiebreak))
-    wc = Window.partitionBy(group)
-    return (df.withColumn("_rn", F.row_number().over(w))
-              .withColumn("_n", F.count("*").over(wc))
-              .where(F.col("_rn") == F.expr("(_n + 1) div 2"))
-              .select(F.col(group), F.col(val).alias("med")))
-
-
 def robust_outliers(df: DataFrame, group: str, value: str, key: str, *,
                     k: int = 3) -> DataFrame:
     """Rows where |value_c − median| > k·MAD within their group
@@ -65,12 +52,12 @@ def robust_thresholds(df: DataFrame, group: str, value: str,
     ONE corpus shuffle (r14, guide §2.4 — consecutive windows on the
     same partition key share the exchange): the median is attached to
     every row analytically (``max(when(rn == target, v))`` over the
-    unbounded group window — identical to `_lower_median`'s pick,
-    without the (group, med) join-back), the MAD chain re-sorts the
-    SAME group partitions by dev, and the thresholds fall out of a
-    final group aggregate that is already co-partitioned. The
-    previous med-join-mad form paid two corpus window shuffles + a
-    join and scanned the input twice."""
+    unbounded group window — the value at row (n + 1) div 2 under
+    ORDER BY (value, key), without a (group, med) join-back), the MAD
+    chain re-sorts the SAME group partitions by dev, and the
+    thresholds fall out of a final group aggregate that is already
+    co-partitioned. The previous med-join-mad form paid two corpus
+    window shuffles + a join and scanned the input twice."""
     from pyspark.sql import Window
     base = df.select(
         F.col(key), F.col(group),

@@ -78,49 +78,6 @@ def _grid_hash(xs: np.ndarray, ys: np.ndarray, eps: float):
     return neighbors
 
 
-def _local_dbscan(xs: np.ndarray, ys: np.ndarray, eps: float, min_pts: int):
-    """Single-node DBSCAN (test reference + semantics spec).
-
-    Clusters = connected components of core points (ε-graph); border
-    points join the lowest-id cluster among their core neighbors
-    (deterministic, matching the distributed min-component rule).
-    Returns (labels, is_core); -1 = noise.
-    """
-    n = len(xs)
-    neighbors = _grid_hash(np.asarray(xs, float), np.asarray(ys, float), eps)
-    neigh = [neighbors(i) for i in range(n)]
-    is_core = np.array([len(nb) >= min_pts for nb in neigh])
-    labels = np.full(n, -1, dtype=np.int64)
-    cid = 0
-    for i in range(n):
-        if not is_core[i] or labels[i] != -1:
-            continue
-        labels[i] = cid
-        stack = [i]
-        while stack:
-            p = stack.pop()
-            for q in neigh[p]:
-                if is_core[q] and labels[q] == -1:
-                    labels[q] = cid
-                    stack.append(q)
-        cid += 1
-    # border points: among core neighbors' clusters join the one whose
-    # minimum core-member id is smallest — deterministic under ties
-    # (a border point equidistant between two clusters), which the
-    # reference is not (DBScan.scala assigns in discovery order)
-    rep: dict[int, int] = {}
-    for i in range(n):
-        if is_core[i]:
-            rep[labels[i]] = min(rep.get(labels[i], i), i)
-    for i in range(n):
-        if is_core[i]:
-            continue
-        cand = {labels[q] for q in neigh[i] if is_core[q]}
-        if cand:
-            labels[i] = min(cand, key=lambda c: rep[c])
-    return labels, is_core
-
-
 def dbscan(df: DataFrame, eps: float, min_pts: int, *, key: str,
            grid: GridSpec, x: str = "xmin", y: str = "ymin") -> DataFrame:
     """Returns (key, cluster, is_core); cluster = -1 for noise."""

@@ -210,30 +210,12 @@ def cross_ngram_contamination(train: DataFrame, eval_df: DataFrame,
                  .agg(F.count("*").alias("n_hit_shingles")))
 
 
-def boilerplate_ngrams(df: DataFrame, *, n: int = 13,
-                       min_docs: int = 2,
-                       text_col: str = "text") -> DataFrame:
-    """Corpus-wide repeated n-token windows — the boilerplate
-    detector (headers, footers, license blocks, templated spans
-    repeat VERBATIM across documents; near-dup banding works at doc
-    granularity, this works at window granularity): every n-token
-    window appearing in >= min_docs DISTINCT documents. One corpus
-    pass: native shingle expressions (see `_shingle_hashes`), per-doc
-    distinct BEFORE the explode, one groupBy(hash) count — map-side
-    combined, so the shuffle carries one row per distinct window per
-    doc. Output: (h, n_docs)."""
-    return (_doc_shingle_rows(df, n, text_col)
-              .groupBy("h")
-              .agg(F.count("*").alias("n_docs"))
-              .where(F.col("n_docs") >= min_docs))
-
-
 def doc_boilerplate_ratio(df: DataFrame, key: str, *, n: int = 13,
                           min_docs: int = 2,
                           text_col: str = "text") -> DataFrame:
     """Per-document boilerplate score: the fraction of a doc's
-    distinct n-token windows that are corpus-wide boilerplate
-    (`boilerplate_ngrams`) — the window-granular quality signal a
+    distinct n-token windows that are corpus-wide boilerplate (in
+    ``min_docs`` or more documents) — the window-granular quality signal a
     100 TB pipeline thresholds on before training. ratio is
     quantized to floor(1e6·n_boiler/n_windows) (exact integer
     division of two counts — aggregation-order-proof). Docs shorter
@@ -337,17 +319,6 @@ def bloom_build(hashes: list[str], fpp: float = 1e-3):
             p = (h1 + j * h2) % m
             words[p >> 5] |= 1 << (p & 31)
     return words, m, k
-
-
-def bloom_member(hx: str, words: list[int], m: int, k: int) -> bool:
-    """Driver-side membership twin of `bloom_might_contain` (same
-    double-hash arithmetic as `bloom_build`) — used by tests and for
-    spot checks."""
-    h1 = int(hx[0:15], 16) % m
-    h2 = int(hx[15:30], 16) % (m - 1) + 1
-    return all(
-        words[((h1 + j * h2) % m) >> 5] >> (((h1 + j * h2) % m) & 31) & 1
-        for j in range(k))
 
 
 def _bloom_h12(name: str, m: int) -> tuple[str, str]:
@@ -779,69 +750,14 @@ def jaccard_prefix_join(df: DataFrame, key: str, *,
                         .alias("jaccard_q6")))
 
 
-def _simhash_bits(text: Column, shingle_k: int, n_bits: int) -> Column:
-    """SimHash fingerprint via ONE fold over the shingle hashes.
-
-    Bit j of the fingerprint = majority vote over shingles of bit j of
-    md5(shingle). A single `aggregate` accumulates all per-bit counts
-    (zip_with against the hash's expanded bit array) instead of the
-    round-1 design's 2·n_bits separate array scans — same bit-exact
-    result (oracle SQL unchanged), but a constant-size expression tree
-    and one pass over the data. All native, no UDF.
-    """
-    sh = shingles(text, shingle_k)
-    n = F.size(sh)
-    hashes = F.transform(sh, F.md5)
-
-    def hash_bits(h):
-        # 4 bits per hex nibble, MSB first — n_bits//4 nibbles
-        nibs = F.transform(
-            F.sequence(F.lit(1), F.lit(n_bits // 4)),
-            lambda i: F.conv(F.substring(h, i, 1), 16, 10).cast("int"))
-        return F.flatten(F.transform(
-            nibs,
-            lambda v: F.array(
-                F.shiftright(v, 3).bitwiseAND(F.lit(1)),
-                F.shiftright(v, 2).bitwiseAND(F.lit(1)),
-                F.shiftright(v, 1).bitwiseAND(F.lit(1)),
-                v.bitwiseAND(F.lit(1)))))
-
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), n_bits),
-        lambda acc, h: F.zip_with(acc, hash_bits(h), lambda a, b: a + b))
-    # literal per-bit weights; bit 0 is the MSB (1<<63 wraps to the
-    # sign bit, matching the round-1 fingerprints bit-for-bit)
-    weights = F.array(*[
-        F.shiftleft(F.lit(1).cast("long"), n_bits - 1 - j)
-        for j in range(n_bits)])
-    picked = F.zip_with(counts, weights,
-                        lambda c, w: F.when(c * 2 >= n, w)
-                                      .otherwise(F.lit(0).cast("long")))
-    return F.aggregate(picked, F.lit(0).cast("long"), lambda a, v: a + v)
-
-
-def simhash64(text: Column, *, shingle_k: int = 4) -> Column:
-    """64-bit SimHash from char k-grams (single-pass fold — see
-    `_simhash_bits`); exactly reproducible in DuckDB SQL (same md5,
-    same nibble arithmetic)."""
-    return _simhash_bits(text, shingle_k, 64)
-
-
-def simhash16(text: Column, *, shingle_k: int = 4) -> Column:
-    """16-bit SimHash (first 4 md5 nibbles) — the oracle-friendly size
-    (the 64-bit variant's oracle SQL is mechanical but enormous)."""
-    return _simhash_bits(text, shingle_k, 16)
-
-
 def simhash_fingerprints(df: DataFrame, key: str, *, n_bits: int = 64,
                          shingle_k: int = 4, text_col: str = "text",
                          out_col: str = "fp") -> DataFrame:
     """(key, fingerprint) frame — the fast path for corpus-scale
-    SimHash, bit-identical to the `simhash64`/`simhash16` Column spec
-    (property-tested in tests/test_analytics.py).
+    SimHash, bit-identical to the native fold Column spec in
+    tests/reference.py (property-tested in tests/test_analytics.py).
 
-    Why not just `df.select(simhash64(text))`: the fold Column is a
+    Why not that fold Column itself: it is a
     higher-order-function tree, and Spark HOFs are CodegenFallback —
     interpreted per-row eval measured ~24ms/doc.
 
@@ -1082,34 +998,6 @@ def save_fp_index(fp_df: DataFrame, path: str, *, key: str = "doc_id",
     meta.coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
 
 
-def append_fp_index(fp_df: DataFrame, path: str, *,
-                    key: str | None = None,
-                    fp_col: str | None = None) -> None:
-    """Append a new batch to a `save_fp_index` store — the write half
-    of the daily-ingest loop (probe with `hamming_near_join_indexed`,
-    anti-join the matches away, then append the survivors): the batch
-    is banded with the STORE's own parameters (read from ``_meta`` —
-    a mismatched threshold cannot silently corrupt the layout) and
-    appended into the same (band, bshard) directories; Catalyst
-    partition pruning sees old and new files uniformly, so the next
-    probe needs no compaction step. One map-only explode + a
-    partitioned append — no shuffle of the existing index, ever."""
-    spark = fp_df.sparkSession
-    mf = spark.read.parquet(path + "/_meta").first()
-    if key is not None or fp_col is not None:
-        fp_df = fp_df.select(
-            F.col(key or mf.key).alias(mf.key),
-            F.col(fp_col or mf.fp_col).alias(mf.fp_col))
-    banded = (_banded_fp(fp_df, mf.key, mf.fp_col, int(mf.n_bands))
-              .withColumn("bshard",
-                          F.pmod(F.col("bucket"),
-                                 F.lit(int(mf.bucket_shards)))
-                          .cast("int")))
-    (banded.repartition("band", "bshard")
-           .write.mode("append").partitionBy("band", "bshard")
-           .parquet(path))
-
-
 def hamming_near_join_indexed(new_df: DataFrame, index_path: str, *,
                               key: str = "doc_id",
                               fp_col: str = "fp",
@@ -1163,35 +1051,6 @@ def hamming_near_join_indexed(new_df: DataFrame, index_path: str, *,
                 .agg(F.min("hamming").alias("hamming")))
 
 
-def ingest_dedup_cycle(new_df: DataFrame, index_path: str, *,
-                       key: str = "doc_id", fp_col: str = "fp",
-                       max_hamming: int = 3,
-                       append: bool = True) -> DataFrame:
-    """The complete daily near-dup ingest loop as one call: probe the
-    persisted banded index (`hamming_near_join_indexed` — shard-
-    pruned, sublinear in index size), ANTI-join the batch on matched
-    keys (a batch doc is fresh iff it matched nothing within
-    ``max_hamming``), and — with ``append=True`` — append ONLY the
-    fresh fingerprints to the index (`append_fp_index`), so the next
-    batch dedups against today's accepted docs too. Returns the
-    fresh rows of ``new_df`` (all columns).
-
-    Note the append is an EAGER side effect (the anti-join result
-    must materialize before the index grows — `materialize` pins
-    it so the returned frame does not re-probe a store that now
-    contains the batch itself)."""
-    matches = hamming_near_join_indexed(
-        new_df, index_path, key=key, fp_col=fp_col,
-        max_hamming=max_hamming)
-    fresh = materialize(new_df.join(matches.select(F.col("new_key").alias(key))
-                                           .distinct(),
-                                    key, "left_anti"))
-    if append:
-        append_fp_index(fresh.select(key, fp_col), index_path,
-                        key=key, fp_col=fp_col)
-    return fresh
-
-
 def duplicated_spans(df: DataFrame, key: str, *, n: int = 13,
                      min_docs: int = 2, text_col: str = "text",
                      broadcast_dups: bool = True) -> DataFrame:
@@ -1203,7 +1062,7 @@ def duplicated_spans(df: DataFrame, key: str, *, n: int = 13,
     MERGED into maximal spans, reported as exact token offsets.
     Where `passage_dedup` rewrites docs on a fixed chunk grid (and
     misses repeats that straddle chunk boundaries) and
-    `boilerplate_ngrams` only scores, this emits the precise
+    `doc_boilerplate_ratio` only scores, this emits the precise
     (start, end) regions — the input a surgical redaction / rewrite
     step needs, alignment-free.
 
@@ -1356,7 +1215,7 @@ def passage_dedup(df: DataFrame, key: str, *, chunk_tokens: int = 10,
     document frequency corpus-wide, and rebuild every doc from the
     chunks appearing in fewer than ``min_docs`` documents (license
     headers, navigation boilerplate, quoted footers vanish; unique
-    prose survives). The within-doc sibling of `boilerplate_ngrams`
+    prose survives). The within-doc sibling of `doc_boilerplate_ratio`
     (which only SCORES) and the repetition gates (which only FLAG).
 
     Alignment caveat (the classic chunking trade): only passages that

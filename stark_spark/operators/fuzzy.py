@@ -16,27 +16,9 @@ is what makes the result deterministic and oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from stark_spark.materialize import materialize
-
-
-def fuzzy_join(left: DataFrame, right: DataFrame, left_col: str,
-               right_col: str, *, block_left: Column,
-               block_right: Column, max_dist: int = 2,
-               broadcast_right: bool = False) -> DataFrame:
-    """All (left, right) pairs whose block keys are equal and
-    ``levenshtein(left_col, right_col) <= max_dist``. Adds a ``dist``
-    column. Block columns must not collide with data columns."""
-    lf = left.withColumn("_blk", block_left)
-    rf = right.withColumn("_blk", block_right)
-    if broadcast_right:
-        rf = F.broadcast(rf)
-    dist = F.levenshtein(F.col(left_col), F.col(right_col))
-    return (lf.join(rf, "_blk")
-              .where(dist <= max_dist)
-              .withColumn("dist", dist.cast("int"))
-              .drop("_blk"))
 
 
 def fuzzy_self_pairs(df: DataFrame, col: str, *, block_fn,

@@ -110,16 +110,6 @@ def hdr_histogram(df: DataFrame, col: str, sub_bits: int = 5) -> DataFrame:
                        "cnt")
 
 
-def hdr_merge(*hists: DataFrame) -> DataFrame:
-    """Union-merge histograms: per-bucket count sum (bounds ride
-    along — they are a pure function of the bucket id)."""
-    out = hists[0]
-    for h in hists[1:]:
-        out = out.unionByName(h)
-    return (out.groupBy("bucket", "lo", "hi")
-               .agg(F.sum("cnt").alias("cnt")))
-
-
 def hdr_quantiles(hist: DataFrame, quantiles_bp: list[int],
                   value: str = "hi") -> DataFrame:
     """Nearest-rank quantiles from a histogram.

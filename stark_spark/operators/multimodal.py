@@ -121,33 +121,6 @@ def image_features(df: DataFrame, content_col: str = "content",
     return df.select(key_col, content_col).mapInPandas(run, _FEAT_SCHEMA)
 
 
-_RESIZE_SCHEMA = StructType([
-    StructField("path", StringType()), StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("pixels", BinaryType()),
-])
-
-
-def resize_images(df: DataFrame, width: int, height: int,
-                  content_col: str = "content",
-                  key_col: str = "path") -> DataFrame:
-    """Nearest-neighbor resize to (width, height); output raw RGB bytes
-    (real resampling math regardless of the decoder)."""
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for key, content in zip(pdf[key_col], pdf[content_col]):
-                arr = _decode(bytes(content))
-                h, w = arr.shape[:2]
-                ji = (np.arange(height) * h // height)[:, None]
-                ii = (np.arange(width) * w // width)[None, :]
-                out = arr[ji, ii]
-                rows.append((key, width, height, out.tobytes()))
-            yield pd.DataFrame(rows, columns=[f.name for f in _RESIZE_SCHEMA])
-
-    return df.select(key_col, content_col).mapInPandas(run, _RESIZE_SCHEMA)
-
-
 _FRAME_SCHEMA = StructType([
     StructField("path", StringType()), StructField("frame_no", IntegerType()),
     StructField("width", IntegerType()), StructField("height", IntegerType()),
@@ -174,33 +147,6 @@ def sample_frames(df: DataFrame, every_n: int = 10, *,
             yield pd.DataFrame(rows, columns=[f.name for f in _FRAME_SCHEMA])
 
     return df.select(key_col, content_col).mapInPandas(run, _FRAME_SCHEMA)
-
-
-_AUDIO_SCHEMA = StructType([
-    StructField("path", StringType()), StructField("n_samples", LongType()),
-    StructField("rms", DoubleType()),
-    StructField("zero_crossings", LongType()),
-])
-
-
-def audio_features(df: DataFrame, content_col: str = "content",
-                   key_col: str = "path") -> DataFrame:
-    """Waveform stats (RMS, zero crossings). Fake decoder synthesizes a
-    deterministic waveform; the stats math is real."""
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for key, content in zip(pdf[key_col], pdf[content_col]):
-                b = bytes(content)
-                h = hashlib.md5(b).digest()
-                rng = np.random.RandomState(int.from_bytes(h[:4], "little"))
-                wave = rng.standard_normal(1000 + h[4] % 1000)
-                rms = float(np.sqrt((wave ** 2).mean()))
-                zc = int((np.diff(np.signbit(wave)) != 0).sum())
-                rows.append((key, len(wave), rms, zc))
-            yield pd.DataFrame(rows, columns=[f.name for f in _AUDIO_SCHEMA])
-
-    return df.select(key_col, content_col).mapInPandas(run, _AUDIO_SCHEMA)
 
 
 # --------------------------------------------------------------- phash

@@ -21,6 +21,12 @@ from pyspark.sql.types import (BinaryType, LongType, StructField,
                                StructType)
 from stark_spark.materialize import materialize
 
+# horizontal bands per group in the two-level (``hier``) dissolve
+HIER_BANDS = 16
+# ``hier="auto"`` flags a group when its serial dissolve outlasts
+# SHARD_FACTOR× the rest of the schedule spread over the cluster
+SHARD_FACTOR = 2.0
+
 
 def _dissolve_once(df: DataFrame, group_cols: list[str],
                    group_col: str, geom_col: str) -> DataFrame:
@@ -59,12 +65,12 @@ def _dissolve_once(df: DataFrame, group_cols: list[str],
               .applyInPandas(run, schema=schema))
 
 
-def _hier_dissolve(df: DataFrame, group_col: str, geom_col: str,
-                   n_bands: int) -> DataFrame:
+def _hier_dissolve(df: DataFrame, group_col: str,
+                   geom_col: str) -> DataFrame:
     """Two-level composition of the same dissolve: stage 1 dissolves
     per (group, spatial band) — bands are horizontal slices of the
     group's bbox-centroid y-extent, so each partial is a compact
-    region and the final merge unions ~n_bands region polygons
+    region and the final merge unions ~HIER_BANDS region polygons
     instead of the raw tiles (the r10 208k-straggler study: 55.8 s vs
     93.6 s single-level). Spatial (not hash) banding is what keeps
     stage-2 cheap: a hash band would be a scattered multi-part blob
@@ -87,9 +93,9 @@ def _hier_dissolve(df: DataFrame, group_col: str, geom_col: str,
     banded = (b.join(F.broadcast(ext),
                      F.col(group_col).eqNullSafe(F.col("_eg")))
                .withColumn("_band", F.least(
-                   F.floor((F.col("_cy") - F.col("_lo")) * n_bands
+                   F.floor((F.col("_cy") - F.col("_lo")) * HIER_BANDS
                            / (F.col("_hi") - F.col("_lo") + 1e-9)),
-                   F.lit(n_bands - 1)))
+                   F.lit(HIER_BANDS - 1)))
                .drop("_cy", "_lo", "_hi", "_eg"))
     partials = _dissolve_once(banded, [group_col, "_band"],
                               group_col, geom_col)
@@ -98,8 +104,7 @@ def _hier_dissolve(df: DataFrame, group_col: str, geom_col: str,
 
 def dissolve(df: DataFrame, group_col: str,
              geom_col: str = "geom", *,
-             hier: bool | str = False, n_bands: int = 16,
-             shard_factor: float = 2.0,
+             hier: bool | str = False,
              min_shard: int = 4096) -> DataFrame:
     """GIS dissolve: per group, the union of ALL the group's polygons
     in one boundary-trace pass (k rings at once — not a fold, so
@@ -118,8 +123,8 @@ def dissolve(df: DataFrame, group_col: str,
     third of all rows IS a single-core straggler. ``hier=True`` runs
     the two-level banded composition for every group; ``hier="auto"``
     bands ONLY the keys that dominate the residual schedule — flagged
-    when ``n_g · slots > shard_factor · (N − n_g)`` (the straggler's
-    serial time exceeds ~shard_factor× the rest of the schedule
+    when ``n_g · slots > SHARD_FACTOR · (N − n_g)`` (the straggler's
+    serial time exceeds ~SHARD_FACTOR× the rest of the schedule
     spread over the cluster), from one cheap count pre-agg. The study
     is encoded in the default: banding a balanced load LOSES (126.9 s
     vs 101.4 s at 640k — shared band boundaries make the merge pay
@@ -132,30 +137,28 @@ def dissolve(df: DataFrame, group_col: str,
     if not hier:
         return _dissolve_once(base, [group_col], group_col, geom_col)
     if hier is True:
-        return _hier_dissolve(base, group_col, geom_col, n_bands)
+        return _hier_dissolve(base, group_col, geom_col)
     if hier != "auto":
         raise ValueError(f"hier must be False, True or 'auto': {hier!r}")
     flagged = dissolve_flagged_groups(base, group_col, geom_col,
-                                      shard_factor=shard_factor,
                                       min_shard=min_shard)
     flagged = materialize(flagged)   # tiny; reused 3x
     if flagged.limit(1).count() == 0:
         return _dissolve_once(base, [group_col], group_col, geom_col)
     big = base.join(F.broadcast(flagged), group_col)
     rest = base.join(F.broadcast(flagged), group_col, "left_anti")
-    return (_hier_dissolve(big, group_col, geom_col, n_bands)
+    return (_hier_dissolve(big, group_col, geom_col)
             .unionByName(_dissolve_once(rest, [group_col], group_col,
                                         geom_col)))
 
 
 def dissolve_flagged_groups(df: DataFrame, group_col: str,
                             geom_col: str = "geom", *,
-                            shard_factor: float = 2.0,
                             min_shard: int = 4096) -> DataFrame:
     """The ``hier="auto"`` skew probe, exposed for tests/inspection:
     one map-side-combined count per group; a group is flagged when
     its serial dissolve would outlast the rest of the schedule —
-    ``n_g · slots > shard_factor · (N − n_g)`` with slots = the
+    ``n_g · slots > SHARD_FACTOR · (N − n_g)`` with slots = the
     session's default parallelism — AND it is big enough for banding
     overhead to pay (``n_g ≥ min_shard``; without the floor, a frame
     of a few small groups flags everything). Returns a 1-column
@@ -168,6 +171,6 @@ def dissolve_flagged_groups(df: DataFrame, group_col: str,
     return (stats.crossJoin(F.broadcast(tot))
                  .where((F.col("_n") >= min_shard)
                         & (F.col("_n") * slots
-                           > shard_factor
+                           > SHARD_FACTOR
                            * (F.col("_tot") - F.col("_n"))))
                  .select(group_col))

@@ -273,31 +273,6 @@ def mix_sources(df: DataFrame, key: str, source_col: str,
     return df.where(hash_bucket(F.col(key), salt=salt) < thr)
 
 
-def temperature_weights(counts: dict[str, int], alpha: float = 0.5, *,
-                        scale: int = 1000) -> dict[str, int]:
-    """Temperature-based mixture parts from raw source sizes — the
-    `p_s ∝ count_s^alpha` reweighting LLM data recipes use to damp
-    head domains (alpha < 1 upweights small sources relative to their
-    natural share; alpha = 1 keeps natural proportions; alpha = 0 is
-    uniform). Returns integer parts for `mix_sources` (driver-side
-    arithmetic over the tiny per-source count dict; with the default
-    alpha=0.5 the mapping is round(sqrt(count)·scale/max), which is
-    exactly reproducible anywhere since IEEE sqrt is correctly
-    rounded)."""
-    import math
-    # zero-count sources are EXCLUDED, not given a token part: a part
-    # of 1 for an empty source would drive mix_sources' achievable
-    # corpus to zero (n_out = min includes 0*W//w) and silently drop
-    # everything
-    counts = {s: c for s, c in counts.items() if c > 0}
-    if not counts:
-        return {}
-    powed = {s: math.pow(c, alpha) if alpha != 0.5 else math.sqrt(c)
-             for s, c in counts.items()}
-    top = max(powed.values())
-    return {s: max(1, round(v * scale / top)) for s, v in powed.items()}
-
-
 def group_quantiles(df: DataFrame, group_col: str, value_col: str,
                     qs: list[float]) -> DataFrame:
     """Exact discrete quantiles per group (lower order statistic:

@@ -1179,7 +1179,7 @@ def pq_train(vectors: DataFrame, *, dim: int = 64, m_sub: int = 8,
     aggregate (map-side combined, ≤ m_sub·n_codes·dsub groups). The
     sub-vector frame is materialized once and reused across
     iterations. Returns the plain-Python codebook
-    ``[m_sub][n_codes][dsub]`` — pass it to `pq_encode`/`pq_topk`.
+    ``[m_sub][n_codes][dsub]`` — pass it to `pq_topk`.
 
     Training inputs are bounded by design (train on a sample; encode
     the corpus — the FAISS contract), so when the frame is at most
@@ -1187,7 +1187,7 @@ def pq_train(vectors: DataFrame, *, dim: int = 64, m_sub: int = 8,
     collect (`_pq_train_local` — bit-equal by construction, pytest-
     pinned against this path). ``local_max=0`` forces the distributed
     path; the 100 TB shape trains on a ≤64k sample either way and
-    spends its cluster on `pq_encode` + ADC scans."""
+    spends its cluster on encoding + ADC scans."""
     dsub = dim // m_sub
     spark = vectors.sparkSession
     # bounded gate probe: reads at most local_max+1 rows (a full
@@ -1287,18 +1287,6 @@ def _pq_codes(vectors: DataFrame, codebook: list, *, key: str,
                                                     out_schema)
 
 
-def pq_encode(vectors: DataFrame, codebook: list, *,
-              key: str = "vec_id", vec_col: str = "embedding",
-              out_col: str = "codes") -> DataFrame:
-    """Attach the PQ code array (m_sub ints, sub-space order) from
-    the Arrow encoder `_pq_codes`; store this instead of the vectors
-    for the compressed index. ``key`` must uniquely identify rows (it
-    drives the join back)."""
-    codes = _pq_codes(vectors, codebook, key=key, vec_col=vec_col,
-                      out_col=out_col)
-    return vectors.join(codes, key)
-
-
 def _pq_adc_tables(qrows: list, codebook: list):
     """Integer ADC lookup tables T[q][sub][code] = floor(d2·1e6), with
     the squared-distance accumulation LEFT-ASSOCIATED in plain Python
@@ -1376,7 +1364,7 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, codebook: list,
     vector's score is the SUM OF m_sub INTEGER table entries selected
     by its codes — exact under any order, so scores hash-gate like the
     int8 path. The scan never reads the original vectors' floats at
-    scoring time (codes only): the 100 TB shape is `pq_encode` once,
+    scoring time (codes only): the 100 TB shape is encode once,
     then ADC over the 8-byte codes.
 
     ``score="lit"`` (default) embeds one literal table expression per
@@ -1397,13 +1385,9 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, codebook: list,
     # materialize the compressed index once (the PQ contract: encode
     # once, store the 8-byte codes, score against codes only). Build
     # the (key, codes) frame DIRECTLY from the assignment aggregate:
-    # `pq_encode(...)` would inner-join the codes back onto the full
-    # vector frame only for this caller to drop every vector column
-    # again — Catalyst cannot eliminate the join (row-multiplicity
-    # reasoning), so that shape paid one corpus-wide join per call
-    # for nothing. Every key yields exactly m_sub assignment rows, so
-    # the aggregate's key set equals pq_encode's inner-join key set —
-    # identical rows, one less corpus join (r13).
+    # joining the codes back onto the vector frame would only be
+    # dropped again, and Catalyst cannot eliminate that join
+    # (row-multiplicity reasoning).
     enc = materialize(_pq_codes(vectors, codebook, key=key,
                                 vec_col=vec_col))
     if score == "batch":

@@ -157,12 +157,6 @@ def hll_estimate(registers: DataFrame,
                       "v_zero", "s_scaled", "estimate")
 
 
-def distinct_hll(df: DataFrame, col: str,
-                 group_cols: tuple[str, ...] = ()) -> DataFrame:
-    """HyperLogLog distinct-count of ``df[col]`` (optionally per group)."""
-    return hll_estimate(hll_registers(df, col, group_cols), group_cols)
-
-
 # ---------------------------------------------------------------------------
 # KMV set algebra (Beyer et al., SIGMOD 2007).  HLL unions trivially
 # but cannot intersect; the KMV sketch can do BOTH from the same

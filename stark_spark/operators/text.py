@@ -734,84 +734,6 @@ def bpe_merge_pairs(df: DataFrame, k: int = 50, *,
                  .select("pair", F.col("cnt").cast("long").alias("cnt")))
 
 
-def _bpe_apply_merge(syms_col: str, a: str, b: str) -> str:
-    """SQL expr applying merge (a,b)→ab to a symbol array with the
-    canonical left-to-right non-overlapping single-pass semantics
-    (Sennrich et al.'s reference loop): an aggregate() fold carrying
-    (accumulated array, pending symbol)."""
-    ab = a + b
-    return f"""
-aggregate({syms_col},
-  named_struct('acc', cast(array() as array<string>),
-               'carry', cast(null as string)),
-  (st, s) -> CASE
-    WHEN st.carry IS NULL
-      THEN named_struct('acc', st.acc, 'carry', s)
-    WHEN st.carry = '{a}' AND s = '{b}'
-      THEN named_struct('acc', concat(st.acc, array('{ab}')),
-                        'carry', cast(null as string))
-    ELSE named_struct('acc', concat(st.acc, array(st.carry)),
-                      'carry', s) END,
-  st -> CASE WHEN st.carry IS NULL THEN st.acc
-        ELSE concat(st.acc, array(st.carry)) END)"""
-
-
-def bpe_train(df: DataFrame, n_merges: int, *,
-              text_col: str = "text") -> DataFrame:
-    """FULL BPE tokenizer training (Sennrich et al. 2016): ``n_merges``
-    merge rounds, each picking the most frequent adjacent symbol pair
-    (ties on the pair strings — fully deterministic) and applying it
-    to the vocabulary with the canonical left-to-right non-overlapping
-    rule. Returns the merge table: (rank, left, right, merged, cnt).
-
-    Scale shape — the reason BPE training is feasible on a 100 TB
-    corpus at all: ONE corpus pass builds the distinct-word frequency
-    table; every merge round after that is vocabulary-sized (pair
-    counts weighted by word frequency, a driver top-1, one array fold
-    over ≤|vocab| rows). The corpus is never touched again.
-    `materialize` per round caps the iterative lineage. The
-    fold expression is interpreted (higher-order functions are
-    CodegenFallback) — acceptable because it runs on the vocab, not
-    the corpus.
-
-    Exactness: verified in pytest against a pure-Python reference
-    implementation (same tie rule) — merge application is a
-    sequential left-to-right rule, which single-pass SQL string
-    replace cannot mirror, so this operator is pytest-gated rather
-    than DuckDB-gated (its round-1 counts ARE DuckDB-gated via
-    `bpe_merge_pairs`)."""
-    words = (df.select(F.explode(tokens(F.col(text_col))).alias("t"))
-               .select(F.lower(F.col("t")).alias("w"))
-               .where(F.col("w").rlike("^[a-z]+$")
-                      & (F.length("w") >= 2))
-               .groupBy("w").agg(F.count("*").alias("c")))
-    vocab = materialize(
-        words.select(F.expr("split(w, '')").alias("syms"), "c"))
-    merges = []
-    for rank in range(n_merges):
-        pairs = (vocab.select(
-            F.explode(F.expr(
-                "CASE WHEN size(syms) >= 2 THEN "
-                "transform(sequence(1, size(syms) - 1), "
-                "i -> named_struct('a', element_at(syms, i), "
-                "'b', element_at(syms, i + 1))) "
-                "ELSE cast(array() as array<struct<a:string,b:string>>)"
-                " END")).alias("p"), F.col("c"))
-            .groupBy("p.a", "p.b").agg(F.sum("c").alias("cnt")))
-        top = (pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-                    .limit(1).collect())
-        if not top:
-            break
-        a, b, cnt = top[0].a, top[0].b, top[0].cnt
-        merges.append((rank, a, b, a + b, int(cnt)))
-        vocab = materialize(vocab.select(
-            F.expr(_bpe_apply_merge("syms", a, b)).alias("syms"), "c"))
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        merges, "rank long, left string, right string, "
-                "merged string, cnt long")
-
-
 def pmi_collocations(df: DataFrame, k: int = 50, *,
                      text_col: str = "text",
                      min_count: int = 5) -> DataFrame:

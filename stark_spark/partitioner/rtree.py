@@ -22,6 +22,9 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# driver-side sample cap of `str_partitioner`, whatever the data size
+MAX_SAMPLE = 200_000
+
 
 @dataclass(frozen=True)
 class StrSpec:
@@ -66,14 +69,13 @@ class StrSpec:
 
 def str_partitioner(df: DataFrame, num_partitions: int, *,
                     x: str = "xmin", y: str = "ymin",
-                    sample_fraction: float | None = None,
-                    max_sample: int = 200_000) -> StrSpec:
+                    sample_fraction: float | None = None) -> StrSpec:
     """Fit an STR tiling from a sample (driver-side, like the
     reference's driver bulk-load — but the transfer is capped at
-    ``max_sample`` rows regardless of data size)."""
+    `MAX_SAMPLE` rows regardless of data size)."""
     n = df.count()
     if sample_fraction is None:
-        sample_fraction = min(1.0, max_sample / max(n, 1))
+        sample_fraction = min(1.0, MAX_SAMPLE / max(n, 1))
     pdf = (df.select(F.col(x).alias("x"), F.col(y).alias("y"))
              .sample(fraction=sample_fraction, seed=42).toPandas())
     xs = pdf["x"].to_numpy()

@@ -220,14 +220,19 @@ def _cells_for(manifest_rows, q: G.Geometry,
         if r.ext_xmax < qx0 or r.ext_xmin > qx1 or \
            r.ext_ymax < qy0 or r.ext_ymin > qy1:
             continue
-        if t_query and t_query != "any" and r.t_min is not None:
-            ts, te = t_query
-            if te is not None and r.t_min is not None and r.t_min > te:
-                continue
-            if ts is not None and r.t_max is not None and r.t_max < ts:
-                continue
+        if t_query and t_query != "any" and not _in_window(r, t_query):
+            continue
         keep.append(r.cell)
     return sorted(set(keep))
+
+
+def _in_window(r, t_query: tuple[int | None, int | None]) -> bool:
+    """Whether manifest row ``r``'s [t_min, t_max] overlaps the query
+    window (ts, te); an open end (None) on either side bounds nothing."""
+    ts, te = t_query
+    return not ((te is not None and r.t_min is not None and r.t_min > te)
+                or (ts is not None and r.t_max is not None
+                    and r.t_max < ts))
 
 
 def read_pruned(spark: SparkSession, path: str, query,
@@ -258,13 +263,9 @@ def _buckets_for(manifest_rows, cells, t_query) -> list[int] | None:
     if not manifest_rows or "t_bucket" not in manifest_rows[0].__fields__ \
             or not t_query or t_query == "any":
         return None
-    ts, te = t_query
     keep = set(cells)
-    return sorted({
-        r.t_bucket for r in manifest_rows
-        if r.cell in keep
-        and not (te is not None and r.t_min is not None and r.t_min > te)
-        and not (ts is not None and r.t_max is not None and r.t_max < ts)})
+    return sorted({r.t_bucket for r in manifest_rows
+                   if r.cell in keep and _in_window(r, t_query)})
 
 
 def knn_pruned(spark: SparkSession, path: str, query, k: int, *,

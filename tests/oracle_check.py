@@ -6,6 +6,9 @@ and an order-insensitive value hash (strict: floats compared bit-ish
 via %.17g — if we pass this, any saner comparator passes too).
 
 Usage: python tests/oracle_check.py [sf_dir] [query_name ...]
+
+In-process callers pass their own session to `run()`; the CLI builds
+one 16 partitions wide.
 """
 
 from __future__ import annotations
@@ -178,13 +181,10 @@ def duck_chunked_hash(cur) -> tuple[int, tuple, str]:
     return n, tuple(cols), f"{tot:016x}"
 
 
-def run(sf_dir: str, only: list[str] | None = None,
+def run(spark, sf_dir: str, only: list[str] | None = None,
         chunked: set[str] | None = None, pending: bool = False,
         retired: bool = False) -> int:
     import __spark_entry__ as entry
-    from stark_spark import get_session
-
-    spark = get_session("oracle-check", shuffle_partitions=16)
 
     con = duckdb.connect()
     for t in TABLES:
@@ -261,12 +261,9 @@ def run(sf_dir: str, only: list[str] | None = None,
             failures += 1
         else:
             print(f"PASS {name}: {sn} rows hash={sh[:12]}")
-    # NOTE: run() must NOT stop the session — get_session() is
-    # getOrCreate, so when called in-process (pytest's
-    # test_pending_gates_oracle_parity, scale_check) the session is
-    # SHARED with the caller's fixtures; stopping it here killed
-    # every later test module with "Cannot call methods on a stopped
-    # SparkContext". The CLI path below owns its session and stops it.
+    # run() neither stops nor reconfigures the caller's session: in
+    # pytest it is the suite's shared fixture. The CLI path below owns
+    # its session and stops it.
     return failures
 
 
@@ -277,7 +274,8 @@ if __name__ == "__main__":
     args = [a for a in args if a not in ("--pending", "--retired")]
     sf = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = [a for a in args if "/" not in a] or None
-    rc = 1 if run(sf, only, pending=pending, retired=retired) else 0
     from stark_spark import get_session
-    get_session("oracle-check", shuffle_partitions=16).stop()
+    spark = get_session("oracle-check", shuffle_partitions=16)
+    rc = 1 if run(spark, sf, only, pending=pending, retired=retired) else 0
+    spark.stop()
     sys.exit(rc)

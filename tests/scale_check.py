@@ -814,10 +814,12 @@ def main() -> int:
     workdir = args[0] if args else "/tmp/sfbig"
     synthesize(workdir)
     import oracle_check
+    from stark_spark import get_session
+    spark = get_session("oracle-check", shuffle_partitions=16)
     t0 = time.time()
-    rc = oracle_check.run(workdir, only=QUERIES, chunked=CHUNKED)
+    rc = oracle_check.run(spark, workdir, only=QUERIES, chunked=CHUNKED)
     if PENDING_SCALE:
-        rc2 = oracle_check.run(workdir, only=PENDING_SCALE,
+        rc2 = oracle_check.run(spark, workdir, only=PENDING_SCALE,
                                pending=True)
         rc = rc or rc2
     print(f"# scale spot-run over {len(QUERIES)}+{len(PENDING_SCALE)} "

@@ -169,23 +169,6 @@ def test_fuzzy_self_pairs_blocked(spark):
                    ("big bolt", "bog bolt"): (1, 1, 1)}
 
 
-def test_fuzzy_join_threshold(spark):
-    from stark_spark.operators.fuzzy import fuzzy_join
-    left = spark.createDataFrame(
-        [("acme corp",), ("zenith ltd",)], "lname string")
-    right = spark.createDataFrame(
-        [("acme corp.",), ("acme inc",), ("zebra ltd",)], "rname string")
-    out = fuzzy_join(
-        left, right, "lname", "rname",
-        block_left=F.substring("lname", 1, 2),
-        block_right=F.substring("rname", 1, 2),
-        max_dist=2, broadcast_right=True)
-    got = {(r.lname, r.rname): r.dist for r in out.collect()}
-    # 'acme corp'~'acme corp.' dist 1; 'acme corp'~'acme inc' dist 4
-    # (out); 'zenith ltd'~'zebra ltd' dist 4 (out)
-    assert got == {("acme corp", "acme corp."): 1}
-
-
 def test_cusum_closed_form_equals_recursion(spark):
     """The window closed form s_i = P_i − min(0, min P_j) must equal
     the textbook recursion s_i = max(0, s_{i-1} + (x_i − k)) on a

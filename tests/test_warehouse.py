@@ -49,9 +49,8 @@ def test_hdr_negative_raises(spark):
 def test_hdr_quantiles_vs_exact(spark):
     """On a deterministic long-tailed fixture the sketch quantile's
     bucket CONTAINS the exact nearest-rank quantile (hi ≥ exact ≥ lo
-    — the HDR guarantee), and merge of two halves equals the whole."""
-    from stark_spark.operators.histogram import (hdr_histogram, hdr_merge,
-                                                 hdr_quantiles)
+    — the HDR guarantee)."""
+    from stark_spark.operators.histogram import hdr_histogram, hdr_quantiles
     vals = [((i * i) % 97) * (i % 13 + 1) * 17 + i % 7 for i in range(5000)]
     df = spark.createDataFrame([(v,) for v in vals], "v long")
     hist = hdr_histogram(df, "v", 5)
@@ -62,13 +61,6 @@ def test_hdr_quantiles_vs_exact(spark):
         exact = sv[math.ceil(len(sv) * q_bp / 10000) - 1]
         assert exact <= est                      # "hi" is conservative
         assert est <= exact + max(1, exact // 16)   # within one bucket
-    h1 = hdr_histogram(
-        spark.createDataFrame([(v,) for v in vals[:2500]], "v long"), "v", 5)
-    h2 = hdr_histogram(
-        spark.createDataFrame([(v,) for v in vals[2500:]], "v long"), "v", 5)
-    merged = {(r.bucket, r.cnt) for r in hdr_merge(h1, h2).collect()}
-    whole = {(r.bucket, r.cnt) for r in hist.collect()}
-    assert merged == whole
 
 
 # --------------------------------------------------------------------------
@@ -476,7 +468,7 @@ def test_expectations_report_hand(spark):
 def test_hll_rollup_equals_direct(spark):
     """Register re-aggregation (merge == max) must give the SAME
     estimate as sketching each rollup slice from scratch."""
-    from stark_spark.operators.sketch import (distinct_hll, hll_registers,
+    from stark_spark.operators.sketch import (hll_estimate, hll_registers,
                                               hll_rollup)
     rows = [(chr(97 + i % 3), i % 4, i % 500) for i in range(3000)]
     df = spark.createDataFrame(rows, "a string, b long, v long")
@@ -484,10 +476,11 @@ def test_hll_rollup_equals_direct(spark):
     cube = hll_rollup(regs, ["a", "b"], [("a",), ()])
     got_a = {r.a: r.estimate for r in cube.collect() if r.level == "a"}
     want_a = {r.a: r.estimate
-              for r in distinct_hll(df, "v", ("a",)).collect()}
+              for r in hll_estimate(hll_registers(df, "v", ("a",)),
+                                    ("a",)).collect()}
     assert got_a == want_a
     got_tot = [r.estimate for r in cube.collect() if r.level == ""][0]
-    assert got_tot == distinct_hll(df, "v").first().estimate
+    assert got_tot == hll_estimate(hll_registers(df, "v")).first().estimate
 
 
 def test_point_in_time_join_no_leakage(spark):
@@ -779,63 +772,6 @@ def test_hdr_rollup_levels_consistent(spark):
     # per-group n: 200/100/50 at both quantiles
     ns = {(r.g, r.h, r.q_bp): r.n for r in lv_gh}
     assert ns[("a", "x", 5000)] == 200 and ns[("b", "y", 9900)] == 50
-
-
-def _bpe_reference(word_counts, n_merges):
-    """Pure-Python BPE trainer (Sennrich et al. reference loop) with
-    the operator's tie rule: max cnt, then lexicographic (a, b)."""
-    vocab = {tuple(w): c for w, c in word_counts.items()}
-    merges = []
-    for rank in range(n_merges):
-        pairs = {}
-        for syms, c in vocab.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] = (
-                    pairs.get((syms[i], syms[i + 1]), 0) + c)
-        if not pairs:
-            break
-        (a, b), cnt = min(pairs.items(),
-                          key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
-        merges.append((rank, a, b, a + b, cnt))
-        new = {}
-        for syms, c in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if (i + 1 < len(syms)
-                        and syms[i] == a and syms[i + 1] == b):
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new[tuple(out)] = new.get(tuple(out), 0) + c
-        vocab = new
-    return merges
-
-
-def test_bpe_train_matches_reference(spark):
-    """Full BPE training vs the pure-Python reference on the real
-    sf0.001 documents corpus (8 merges) plus a hand case exercising
-    the overlapping-run rule (aaa + merge(a,a) -> [aa, a])."""
-    from collections import Counter
-    from stark_spark.operators.text import bpe_train
-    import re as _re
-    import __spark_entry__ as e
-    docs = e.D.load(spark, "/root/testdata/sf0.001", "documents")
-    texts = [r.text for r in docs.select("text").collect()]
-    wc = Counter(w for t in texts for w in t.lower().split(" ")
-                 if _re.fullmatch(r"[a-z]+", w) and len(w) >= 2)
-    want = _bpe_reference(wc, 8)
-    got = [(r.rank, r.left, r.right, r.merged, r.cnt)
-           for r in bpe_train(docs, 8).orderBy("rank").collect()]
-    assert got == want and len(got) == 8
-    # hand case: overlapping run, left-to-right non-overlap
-    h = spark.createDataFrame([(1, "aaa aaa ab")], "k long, text string")
-    hm = bpe_train(h, 2).orderBy("rank").collect()
-    # round 1: pairs aa:4 (2 per 'aaa' x2), ab:1 -> merge (a,a)
-    assert (hm[0].left, hm[0].right, hm[0].cnt) == ("a", "a", 4)
-    # after merge: 'aaa' -> [aa, a] so round 2 sees (aa,a):2, (a,b):1
-    assert (hm[1].left, hm[1].right, hm[1].cnt) == ("aa", "a", 2)
 
 
 def test_personalized_pagerank_mass_locality(spark):
