@@ -228,15 +228,17 @@ def measure(spark, fn, sf: str, group: str) -> tuple[int, float, dict]:
     after it stops.
 
     Layers: ``build_ms`` is ``fn`` building the frame, including the
-    jobs an eager ``materialize()`` runs while building; ``exec_ms`` is
-    the count action; ``plan_ms`` is Catalyst analysis, optimisation
-    and planning of the count plan; ``jit_ms`` and ``gc_ms`` are the
-    driver JVM's (in local mode, every executor thread's) compile and
-    GC time over the timed span; ``jobs``/``stages``/``tasks`` ran under
-    ``group``, build included (a streaming query's micro-batches run
-    under the stream's own job group and are not counted);
-    ``shuffle_bytes``, ``files_read`` and ``rows_scanned`` are SQL
-    metrics of the executed count plan."""
+    jobs its driver actions run and, of a ``materialize()``, only the
+    shuffle stages AQE runs while planning the pin (a local copy is
+    written by the first action that reads it, a reliable one by its
+    own job); ``exec_ms`` is the count action; ``plan_ms`` is
+    Catalyst analysis, optimisation and planning of the count plan;
+    ``jit_ms`` and ``gc_ms`` are the driver JVM's (in local mode,
+    every executor thread's) compile and GC time over the timed span;
+    ``jobs``/``stages``/``tasks`` ran under ``group``, build included
+    (a streaming query's micro-batches run under the stream's own job
+    group and are not counted); ``shuffle_bytes``, ``files_read`` and
+    ``rows_scanned`` are SQL metrics of the executed count plan."""
     sc = spark.sparkContext
     jvm = Jvm(spark)
     sc.setJobGroup(group, group)

@@ -182,139 +182,12 @@ class STFrame:
         return getattr(self.df, name)
 
 
-class EventFrame:
-    """Fluent surface for the behavioral-analytics tier — the event
-    (user_id, ts, event_type, value)-shaped twin of :class:`STFrame`.
-    Every verb delegates to ``operators/`` and returns a plain
-    DataFrame (these are terminal report shapes); column names are
-    configurable once at wrap time instead of per call.
-
-        evf = EventFrame(df)            # defaults match the events table
-        evf.funnel(["view", "click", "purchase"])
-        evf.retention(period_days=7)
-        evf.ohlc(bucket_hours=1)
-        evf.outliers(k=3)
-    """
-
-    def __init__(self, df: DataFrame, *, user: str = "user_id",
-                 ts: str = "ts", type_col: str = "event_type",
-                 value: str = "value", tie_col: str = "event_id"):
-        self.df = df
-        self._u, self._t = user, ts
-        self._ty, self._v, self._id = type_col, value, tie_col
-
-    def funnel(self, steps: list[str]) -> DataFrame:
-        from stark_spark.operators.funnel import funnel
-        return funnel(self.df, steps, user=self._u, ts=self._t,
-                      type_col=self._ty)
-
-    def funnel_latency(self, steps: list[str],
-                       percentiles=(50, 90, 99)) -> DataFrame:
-        from stark_spark.operators.funnel import funnel_latency
-        return funnel_latency(self.df, steps, user=self._u, ts=self._t,
-                              type_col=self._ty, percentiles=percentiles)
-
-    def retention(self, *, period_days: int = 7) -> DataFrame:
-        from stark_spark.operators.funnel import cohort_retention
-        return cohort_retention(self.df, user=self._u, ts=self._t,
-                                period_days=period_days)
-
-    def transitions(self) -> DataFrame:
-        from stark_spark.operators.funnel import event_transitions
-        return event_transitions(self.df, user=self._u, ts=self._t,
-                                 type_col=self._ty, tie_col=self._id)
-
-    def attribution(self, *, conversion: str) -> DataFrame:
-        from stark_spark.operators.funnel import attribution_last_touch
-        return attribution_last_touch(self.df, conversion=conversion,
-                                      user=self._u, ts=self._t,
-                                      type_col=self._ty,
-                                      tie_col=self._id, value=self._v)
-
-    def ohlc(self, *, bucket_hours: int = 1) -> DataFrame:
-        from stark_spark.operators.timeseries import ohlc_bars
-        return ohlc_bars(self.df, series=self._ty, ts=self._t,
-                         value=self._v, tie_col=self._id,
-                         bucket_hours=bucket_hours)
-
-    def rolling(self, *, hours: int = 24) -> DataFrame:
-        from stark_spark.operators.timeseries import rolling_window_sum
-        return rolling_window_sum(self.df, key=self._u, ts=self._t,
-                                  value=self._v, tie_col=self._id,
-                                  hours=hours)
-
-    def time_weighted_avg(self) -> DataFrame:
-        from stark_spark.operators.timeseries import time_weighted_avg
-        return time_weighted_avg(self.df, key=self._ty, ts=self._t,
-                                 value=self._v, tie_col=self._id)
-
-    def outliers(self, *, k: int = 3) -> DataFrame:
-        from stark_spark.operators.anomaly import robust_outliers
-        return robust_outliers(self.df, self._ty, self._v, self._id,
-                               k=k)
-
-    def cusum(self, *, k_c: int, h_c: int) -> DataFrame:
-        from stark_spark.operators.anomaly import cusum_alerts
-        return cusum_alerts(self.df, self._ty, self._t, self._v,
-                            self._id, k_c=k_c, h_c=h_c)
-
-    def sessionize(self, gap: int) -> DataFrame:
-        from stark_spark.operators.temporal_join import sessionize
-        return sessionize(self.df, self._u, self._t, gap)
-
-    def quantiles(self, percentiles=(50, 90, 99), *,
-                  exact: bool = True, sub_bits: int = 5) -> DataFrame:
-        """Global order-statistic percentiles of the value column.
-        ``exact=True`` (default) runs `histogram.exact_quantiles` —
-        the two-phase distributed selection, TRUE values at rank
-        ⌈n·p/100⌉, never a global sort. ``exact=False`` answers from
-        the deterministic HDR sketch instead (bucket-bounded,
-        2^-sub_bits relative error) — one fewer value-cardinality
-        shuffle when a bounded answer is enough. See the entry-point
-        table in operators/histogram.py.
-
-        Contract (explicit, per the r12 ADVICE): percentiles must be
-        integers in (0, 100] — fractional percentiles raise rather
-        than silently truncating on the sketch path; the value column
-        is CAST TO LONG first (the whole quantile tier is integer-
-        grid by design — pre-scale floats, e.g. to cents, upstream).
-        Both modes return the SAME schema (pct, value, n)."""
-        from pyspark.sql import functions as F
-
-        from stark_spark.operators.histogram import (exact_quantiles,
-                                                     hdr_histogram,
-                                                     hdr_quantiles)
-        pcts = []
-        for p in percentiles:
-            if int(p) != p or not 0 < int(p) <= 100:
-                raise ValueError(
-                    f"EventFrame.quantiles: percentile {p!r} — "
-                    f"percentiles must be integers in (0, 100] "
-                    f"(fractional percentiles would truncate; use "
-                    f"basis points via histogram.hdr_quantiles "
-                    f"directly if you need finer grain)")
-            pcts.append(int(p))
-        vals = self.df.select(F.col(self._v).cast("long").alias("v"))
-        if exact:
-            return exact_quantiles(vals, "v", pcts,
-                                   sub_bits=sub_bits)
-        hist = hdr_histogram(vals, "v", sub_bits=sub_bits)
-        return (hdr_quantiles(hist, [p * 100 for p in pcts])
-                .select((F.col("q_bp") / 100).cast("int").alias("pct"),
-                        F.col("estimate").alias("value"),
-                        F.col("n").cast("long").alias("n"))
-                .orderBy("pct"))
-
-    def __getattr__(self, name):
-        return getattr(self.df, name)
-
-
 class DocFrame:
     """Fluent surface for the text-curation tier — the documents
-    (doc_id, text, source)-shaped sibling of :class:`STFrame` /
-    :class:`EventFrame`. Pipeline verbs (quality_filter, dedup_exact,
-    decontaminate) return a new DocFrame so stages chain; terminal
-    reports (budget, profile, quality_report) return DataFrames.
+    (doc_id, text, source)-shaped sibling of :class:`STFrame`.
+    Pipeline verbs (quality_filter, dedup_exact, decontaminate)
+    return a new DocFrame so stages chain; terminal reports (budget,
+    profile, quality_report) return DataFrames.
 
         dof = DocFrame(df)               # defaults match `documents`
         curated = (dof.quality_filter()

@@ -77,9 +77,8 @@ def register_sql_functions(spark: SparkSession) -> None:
     # deterministic sketch directly:
     #   SELECT hdr_bucket(v) AS b, count(*) FROM t GROUP BY b
     # (bounded 2^-5 relative error; for EXACT global order statistics
-    # use the two-phase operator — histogram.exact_quantiles or
-    # EventFrame.quantiles(exact=True) — a scalar function cannot run
-    # that multi-stage plan by design).
+    # use the two-phase operator histogram.exact_quantiles — a scalar
+    # function cannot run that multi-stage plan by design).
     from stark_spark.operators.histogram import hdr_bucket_sql
     # negative input raises in-plan, matching hdr_histogram's
     # operator-level contract (r12 ADVICE: no silent garbage buckets

@@ -12,14 +12,14 @@ Everything is integer bit arithmetic on caller-declared value ranges
 — deterministic, engine-portable, and cheap (whole-stage codegen
 keeps the ~2·bits shift/or terms JVM-side).
 
-Scale shape: key computation is row-local (no shuffle);
-`layout_by_zorder` adds the one range-partition shuffle any re-layout
-costs, and the per-file stats frame it returns is file-count-sized.
+Scale shape: key computation is row-local (no shuffle); a re-layout
+by the key (`repartitionByRange` on it) costs one range-partition
+shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -58,24 +58,3 @@ def zorder_key(cols: list[Column], ranges: list[tuple[float, float]],
         out = out.bitwiseOR(p)
     return out.cast("long")
 
-
-def layout_by_zorder(df: DataFrame, cols: list[str],
-                     ranges: list[tuple[float, float]],
-                     n_files: int, bits: int = 16) -> tuple[DataFrame,
-                                                            DataFrame]:
-    """Re-layout ``df`` into ``n_files`` range-partitions of the
-    Morton key and return (laid_out_df, stats) where ``stats`` has one
-    row per partition with min/max of every z-ordered column — the
-    file-skipping index a predicate would prune against.
-    """
-    key = zorder_key([F.col(c) for c in cols], ranges, bits)
-    laid = (df.withColumn("_zkey", key)
-              .repartitionByRange(n_files, "_zkey"))
-    stats = (laid
-             .withColumn("_pid", F.spark_partition_id())
-             .groupBy("_pid")
-             .agg(F.count("*").alias("n_rows"),
-                  *[m for c in cols
-                    for m in (F.min(c).alias(f"min_{c}"),
-                              F.max(c).alias(f"max_{c}"))]))
-    return laid.drop("_zkey"), stats

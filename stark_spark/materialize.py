@@ -2,14 +2,20 @@
 
 Operators pin a frame when it feeds several consumers or an iterative
 loop (lineage must not grow per round). Everything about how is
-decided here:
+decided here, with no caller input:
 
 * policy — reliable ``checkpoint`` when Spark has a checkpoint dir
   (``SparkContext.setCheckpointDir``, the deployment's own setting),
   so a lost executor's blocks are recomputed from storage; local
   ``localCheckpoint`` (executor blocks, no lineage) otherwise;
+* when — a local copy is lazy: the first action that reads the frame
+  writes its blocks, so pinning runs no job of its own (under AQE the
+  shuffle stages below the pin still run while the plan is built). A
+  reliable copy is eager: a lazy one is written by a second job that
+  recomputes the frame after the first action;
 * already pinned — a ``cache()``/``persist()`` frame, or one whose
-  root is an already checkpointed RDD, comes back as it is;
+  root RDD is checkpointed or marked for a local checkpoint, comes
+  back as it is;
 * partitioning kept (``key=``) — see below.
 """
 
@@ -25,14 +31,14 @@ def _pinned(df: DataFrame) -> bool:
     if level.useMemory or level.useDisk:
         return True
     root = df._jdf.queryExecution().analyzed()
-    return (root.getClass().getSimpleName() == "LogicalRDD"
-            and root.rdd().isCheckpointed())
+    if root.getClass().getSimpleName() != "LogicalRDD":
+        return False
+    rdd = root.rdd()
+    return rdd.isCheckpointed() or rdd.isLocallyCheckpointed()
 
 
-def materialize(df: DataFrame, *, eager: bool = True,
-                key: str | None = None) -> DataFrame:
-    """``df`` pinned under the policy above (``eager=False`` defers
-    the copy to the first action that reads it).
+def materialize(df: DataFrame, *, key: str | None = None) -> DataFrame:
+    """``df`` pinned under the policy above.
 
     ``key``: hash-partition on that column first and keep the
     partitioning in the result, so a loop's joins and aggregates on
@@ -50,5 +56,5 @@ def materialize(df: DataFrame, *, eager: bool = True,
         df = bind(df.repartition(p, key), clone_session(
             spark, {"spark.sql.adaptive.enabled": "false"}))
     reliable = spark.sparkContext.getCheckpointDir() is not None
-    out = df.checkpoint(eager) if reliable else df.localCheckpoint(eager)
+    out = df.checkpoint(True) if reliable else df.localCheckpoint(False)
     return out if key is None else bind(out, spark)

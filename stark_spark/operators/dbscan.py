@@ -95,7 +95,7 @@ def dbscan(df: DataFrame, eps: float, min_pts: int, *, key: str,
     # side keeps its partitioning; guide §2.4 — two operations keyed
     # the same way share one exchange).
     pts = pts.withColumn("_home", (F.col("_cell") == home).cast("int"))
-    pts = materialize(pts, key="_cell", eager=False)
+    pts = materialize(pts, key="_cell")
 
     # --- pass 1: globally-correct core flags, computed in home cells ----
     core_schema = StructType([StructField("_k", LongType()),
@@ -175,7 +175,7 @@ def dbscan(df: DataFrame, eps: float, min_pts: int, *, key: str,
                              "_core": out_c, "_lab": out_l})
 
     labeled = materialize(piled.groupBy("_cell").applyInPandas(
-        cluster_pass, lab_schema), eager=False)
+        cluster_pass, lab_schema))
 
     # --- equivalence edges from multi-cell core points -------------------
     core_labs = labeled.where((F.col("_core") == 1) & F.col("_lab").isNotNull()) \

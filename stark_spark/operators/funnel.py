@@ -219,7 +219,7 @@ def funnel_latency(df: DataFrame, steps: list[str], *,
                .select("u", (F.col("st.last_us") - F.col("st.first_us"))
                        .alias("latency_us")))
     # the two-phase pick is `histogram.exact_quantiles` (extracted
-    # r11): distinct-value counts lazily checkpointed (the fold above
+    # r11): distinct-value counts pinned (the fold above
     # runs once), bounded HDR bucket CDF, per-pct in-bucket order
     # statistic — no global rank window at any cohort size
     res = exact_quantiles(done.select("latency_us"), "latency_us",

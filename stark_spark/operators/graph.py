@@ -367,8 +367,9 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3,
                              F.expr("r div deg").alias("c"))
                      .groupBy("node").agg(F.sum("c").alias("m")))
         # dangling mass as a broadcast 1-row aggregate (the drift.py
-        # crossJoin idiom) instead of a driver .first(): the eager
-        # checkpoint below is then the round's ONLY job — was 2/round
+        # crossJoin idiom) instead of a driver .first(), a job of its
+        # own: a round runs only the stages AQE submits while the
+        # pinned plan is built, and the next read writes the copy
         dang = (r.where(~F.col("_out"))
                  .agg(F.coalesce(F.sum("r"), F.lit(0).cast("long"))
                        .alias("_dang")))
@@ -538,7 +539,7 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame, *,
                              F.expr("r div deg").alias("c"))
                      .groupBy("node").agg(F.sum("c").alias("m")))
         # same broadcast-fold as global pagerank: no driver .first(),
-        # one job per round (the eager checkpoint)
+        # and the pin below runs no job of its own
         dang = (r.where(~F.col("_out"))
                  .agg(F.coalesce(F.sum("r"), F.lit(0).cast("long"))
                        .alias("_dang")))
@@ -592,10 +593,9 @@ def k_core(edges: DataFrame, k: int, *, src: str = "src",
                        .distinct())
     deg = materialize(sym.groupBy("a").agg(F.count("*").alias("_d")))
     for _ in range(max_rounds):
-        # bad is a plain filter over the checkpointed deg — re-deriving
-        # it per use (count / broadcast side / anti-join) is a cheap
-        # node-scale scan of local blocks, so no checkpoint job of its
-        # own (r13: was one extra eager-checkpoint job per peel round)
+        # bad is a plain filter over the pinned deg — re-deriving it
+        # per use (count / broadcast side / anti-join) is a cheap
+        # node-scale scan of local blocks, so it is not pinned itself
         bad = deg.where(F.col("_d") < k).select("a")
         n_bad = bad.count()
         if n_bad == 0:

@@ -36,16 +36,12 @@ entry point                           guarantee
 ``exact_quantiles`` (this module)     EXACT global order statistics —
                                       two-phase selection, no global
                                       sort; the engine behind
-                                      ``funnel.funnel_latency`` and
-                                      ``EventFrame.quantiles(
-                                      exact=True)``.
+                                      ``funnel.funnel_latency``.
 ``hdr_histogram`` + ``hdr_quantiles`` SKETCH — deterministic,
                                       HDR-BOUNDED (2^-sub_bits
                                       relative error); SQL-composable
                                       via the registered
-                                      ``hdr_bucket(v)`` function;
-                                      ``EventFrame.quantiles(
-                                      exact=False)``.
+                                      ``hdr_bucket(v)`` function.
 ``sampling.group_quantiles``          EXACT per-group discrete
                                       quantiles (per-GROUP window
                                       sort — group-scale partitions,
@@ -238,7 +234,7 @@ def exact_quantiles(df: DataFrame, value_col: str,
     the value multiset).
 
     1. per-distinct-value counts — one value-cardinality-scale
-       shuffle, lazily checkpointed so upstream runs once;
+       shuffle, pinned so upstream runs once;
     2. HDR bucket CDF over the ≤ ~2k-row bounded bucket frame (the
        module's standard argument) locates each percentile's bucket
        and residual rank;
@@ -258,7 +254,7 @@ def exact_quantiles(df: DataFrame, value_col: str,
                          .groupBy("v").agg(F.count("*").alias("cnt"))
                          .withColumn("_bkt",
                                      F.expr(hdr_bucket_sql("v", sub_bits))
-                                      .cast("long")), eager=False)
+                                      .cast("long")))
     bt = vals.groupBy("_bkt").agg(F.sum("cnt").alias("bcnt"))
     bw = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, 0)
     cdf = (bt.withColumn("cum", F.sum("bcnt").over(bw))
@@ -317,8 +313,8 @@ def gini_ppm(df: DataFrame, value_col: str, *,
     r11 weak mark was `v div 65536` collecting one row per occupied
     64Ki-wide stripe, unbounded for hash-valued columns), and the
     sampled boundaries balance per-bucket window sizes even for
-    pathologically clustered domains. The frame is lazily
-    checkpointed so the sampled boundaries are computed once and the
+    pathologically clustered domains. The frame is pinned so the
+    sampled boundaries are computed once and the
     offsets collect + the per-bucket window provably see the SAME
     bucket ids. Phase-2 is the per-bucket value-order window +
     broadcast offsets; never a global single-partition window (the
@@ -341,13 +337,12 @@ def gini_ppm(df: DataFrame, value_col: str, *,
                            .groupBy("v").agg(F.count("*").alias("m")))
     per_v = materialize(
         per_v0.repartitionByRange(nparts, "v")
-              .withColumn("_bk", F.spark_partition_id().cast("long")),
-        eager=False)
+              .withColumn("_bk", F.spark_partition_id().cast("long")))
     # phase-1 bucket offsets IN-PLAN: an exclusive prefix sum over the
     # ≤ nparts bucket totals (single-partition window over ≤ P rows —
     # the bounded size the offsets collect already guaranteed), then
-    # broadcast back. No driver transfer at all; the lazy checkpoint
-    # above still pins ONE range shuffle that both branches share.
+    # broadcast back. No driver transfer at all; the pin above still
+    # holds ONE range shuffle that both branches share.
     woff = (Window.orderBy("_bk")
                   .rowsBetween(Window.unboundedPreceding, -1))
     off = (per_v.groupBy("_bk").agg(F.sum("m").alias("_t"))

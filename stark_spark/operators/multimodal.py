@@ -5,7 +5,7 @@ reference surface is the one-image-per-file raster loader
 `STSparkContext.loadNanoFiles`, `STSparkContext.scala:561-621`).
 
 Design: media rides in a ``content: binary`` column with a typed
-metadata struct; decode / feature-extract / resize / frame-sample are
+metadata struct; decode / feature-extract / hash passes are
 ``mapInPandas`` passes (Arrow batches, numpy kernels). Decoder
 resolution order per blob:
 
@@ -23,8 +23,8 @@ resolution order per blob:
    those pipelines still exercise the full Spark plumbing in this
    container.
 
-Every downstream kernel (stats, resize, frame sampling) is REAL numpy
-math regardless of which decoder fired.
+Every downstream kernel (stats, perceptual hashes, fingerprints) is
+REAL numpy math regardless of which decoder fired.
 
 At scale: binary payloads never shuffle — all passes are narrow
 projections; metadata-only pipelines should ``select`` away ``content``
@@ -39,8 +39,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
-                               LongType, StringType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
+                               StringType, StructField, StructType)
 from stark_spark.materialize import materialize
 
 FAKE_DECODE = True
@@ -119,34 +119,6 @@ def image_features(df: DataFrame, content_col: str = "content",
             yield pd.DataFrame(rows, columns=[f.name for f in _FEAT_SCHEMA])
 
     return df.select(key_col, content_col).mapInPandas(run, _FEAT_SCHEMA)
-
-
-_FRAME_SCHEMA = StructType([
-    StructField("path", StringType()), StructField("frame_no", IntegerType()),
-    StructField("width", IntegerType()), StructField("height", IntegerType()),
-    StructField("pixels", BinaryType()),
-])
-
-
-def sample_frames(df: DataFrame, every_n: int = 10, *,
-                  content_col: str = "content",
-                  key_col: str = "path") -> DataFrame:
-    """Video frame sampling: emit every n-th frame as a row (row-count
-    growth happens INSIDE the Arrow batch — no shuffle). Fake decoder
-    synthesizes a deterministic 'video' of md5-derived frames."""
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for key, content in zip(pdf[key_col], pdf[content_col]):
-                b = bytes(content)
-                n_frames = 8 + hashlib.md5(b).digest()[6] % 25
-                for fno in range(0, n_frames, every_n):
-                    arr = _decode(b + fno.to_bytes(4, "little"))
-                    rows.append((key, fno, arr.shape[1], arr.shape[0],
-                                 arr.tobytes()))
-            yield pd.DataFrame(rows, columns=[f.name for f in _FRAME_SCHEMA])
-
-    return df.select(key_col, content_col).mapInPandas(run, _FRAME_SCHEMA)
 
 
 # --------------------------------------------------------------- phash
@@ -544,8 +516,8 @@ def video_frame_phash(df: DataFrame, every_n: int = 2, *,
                       key_col: str = "path") -> DataFrame:
     """Per-sampled-frame perceptual hashes: RVID streams and
     uncompressed RIFF/AVI files decode for real (magic-sniffed);
-    compressed containers synthesize deterministic fake frames (as
-    `sample_frames`). Row growth happens inside the Arrow batch.
+    compressed containers synthesize deterministic fake frames
+    (md5-derived). Row growth happens inside the Arrow batch.
     Output (key, frame_no, phash)."""
     def run(batches):
         for pdf in batches:

@@ -136,10 +136,10 @@ def skyline(df: DataFrame, x: str = "x", y: str = "y",
         rows = pd.concat(chunks, ignore_index=True)
         yield _local_skyline(rows, x, y)
 
-    # Merge-path choice needs the stage-1 front size, but materializing
-    # the front (materialize + count) costs an extra eager job even
-    # for tiny inputs. Cheap gate first: Catalyst's optimized-plan size
-    # estimate is free (file-size based, no job). The estimate is
+    # Merge-path choice needs the stage-1 front size, but counting
+    # the pinned front costs a job of its own even for tiny inputs.
+    # Cheap gate first: Catalyst's optimized-plan size estimate is
+    # free (file-size based, no job). The estimate is
     # COMPRESSED on-disk size for file scans — RLE/dictionary parquet
     # can sit well under 1 byte/row (r8 advice #2) — so demand an 8×
     # margin (est·8 < LIMIT) before skipping the exact count. The

@@ -58,10 +58,10 @@ def kaplan_meier(df: DataFrame, *, duration: str = "duration",
                      .alias("n_censored"),
                     F.count("*").alias("n_obs")))
     if max_distinct:
-        # lazy checkpoint: the probe's count materializes the grouped
-        # frame, so the KM windows below reuse it instead of paying
-        # the input scan + shuffle a second time (review r11)
-        per_t = materialize(per_t, eager=False)
+        # pinned: the probe's count and the KM windows below share
+        # one copy of the grouped frame instead of paying the input
+        # scan + shuffle a second time (review r11)
+        per_t = materialize(per_t)
     if max_distinct and (per_t.limit(max_distinct + 1).count()
                          > max_distinct):
         raise ValueError(

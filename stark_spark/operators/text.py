@@ -309,11 +309,11 @@ def doc_logprob(df: DataFrame, key: str, *, text_col: str = "text",
                      F.explode(tokens(F.col(text_col))).alias("token"))
              .where(F.col("token") != ""))
     if vocab is None:
-        # lazily checkpointed: the total .first() below materializes
-        # the (vocab-sized) frame, so the corpus explode+agg runs once
-        # instead of re-running for the broadcast side
+        # pinned: the total .first() below and the broadcast side
+        # share one copy of the (vocab-sized) frame, so the corpus
+        # explode+agg runs once
         vocab = materialize(
-            tok.groupBy("token").agg(F.count("*").alias("_n")), eager=False)
+            tok.groupBy("token").agg(F.count("*").alias("_n")))
     else:
         vocab = vocab.select("token", F.col("n").alias("_n"))
     total = vocab.agg(F.sum("_n")).first()[0] or 1   # empty corpus →
@@ -356,8 +356,9 @@ def doc_logprob_bigram(df: DataFrame, key: str, *,
     # the saved tokenize pass is repaid by the wider (a, b) aggregate
     # key and by materializing the bigram-vocab-sized count frame the
     # old form only streams into a broadcast. pmi_collocations keeps
-    # the combined form because BOTH of its passes were eager
-    # checkpoint jobs; here the bigram counts never needed one.
+    # the combined form because BOTH of its passes were pinned
+    # frames read several times; here the bigram counts never
+    # needed a pin.
     pair_expr = ("CASE WHEN size(_toks) >= 2 THEN "
                  "transform(sequence(1, size(_toks) - 1), "
                  "i -> concat(element_at(_toks, i), ' ', "
@@ -374,7 +375,7 @@ def doc_logprob_bigram(df: DataFrame, key: str, *,
     uni = materialize(
         df.select(F.explode(tokens(F.col(text_col))).alias("token"))
           .where(F.col("token") != "")
-          .groupBy("token").agg(F.count("*").alias("cu")), eager=False)
+          .groupBy("token").agg(F.count("*").alias("cu")))
     v = uni.count()
     big = pairs.groupBy("pair").agg(F.count("*").alias("cb"))
     first_tok = F.expr("substring_index(pair, ' ', 1)").alias("token")
@@ -535,10 +536,11 @@ def bm25_multi_topk(df: DataFrame, key: str, queries: DataFrame, k: int,
 
     # inverted-index hits: explode -> broadcast vocab prune -> one
     # corpus-keyed shuffle; _dl rides along (constant per key)
-    # lazily checkpointed (the repo idiom, histogram.exact_quantiles):
-    # the nd collect below materializes it, so the corpus explode
-    # runs ONCE — the scored pass reads the (query-vocab-bounded)
-    # hits back instead of re-tokenizing the corpus
+    # pinned (the repo idiom, histogram.exact_quantiles): the nd
+    # collect below and the scored pass share one copy, so the corpus
+    # explode runs ONCE — the scored pass reads the
+    # (query-vocab-bounded) hits back instead of re-tokenizing the
+    # corpus
     tf = materialize(
         base.select(F.col(key), F.col("_dl"),
                     F.explode(F.concat(
@@ -547,8 +549,7 @@ def bm25_multi_topk(df: DataFrame, key: str, queries: DataFrame, k: int,
             .where(F.col("_term") != "")
             .join(F.broadcast(vocab_plus), "_term")
             .groupBy(F.col(key), F.col("_term"))
-            .agg(F.count("*").alias("_tf"), F.max("_dl").alias("_dl")),
-        eager=False)
+            .agg(F.count("*").alias("_tf"), F.max("_dl").alias("_dl")))
 
     # per-term document frequency (+ the sentinel's N / Σ_dl) ->
     # driver-quantized idf literals, one collect
@@ -758,9 +759,9 @@ def pmi_collocations(df: DataFrame, k: int = 50, *,
     # token array is hoisted once per row and emits unigram structs
     # (w2 NULL) and adjacent-pair structs through a single explode →
     # one (w1, w2) hash aggregate — the previous two-pass form split
-    # the text twice and ran two eager checkpoint jobs over the
-    # corpus. Pair structs come straight from the zip_with slices
-    # (no concat_ws + re-split round trip); the empty-token filters
+    # the text twice and pinned two corpus-derived frames. Pair
+    # structs come straight from the zip_with slices (no concat_ws +
+    # re-split round trip); the empty-token filters
     # match the old per-pass filters exactly, so both count frames
     # are value-identical. The combined frame is VOCAB-sized but
     # consumed 4 times below (two scalar totals + join sides) —
@@ -945,7 +946,7 @@ def kn_discounts(df: DataFrame, *, text_col: str = "text",
             .select(F.explode(pairs).alias("p"))
             .select("p.w1", "p.w2"))
     c = materialize(
-        bg.groupBy("w1", "w2").agg(F.count("*").alias("c")), eager=False)
+        bg.groupBy("w1", "w2").agg(F.count("*").alias("c")))
     glob = c.agg(
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).alias("n1"),
         F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).alias("n2"))
@@ -1005,7 +1006,7 @@ def kn_discounts_mod(df: DataFrame, *, text_col: str = "text",
             .select(F.explode(pairs).alias("p"))
             .select("p.w1", "p.w2"))
     c = materialize(
-        bg.groupBy("w1", "w2").agg(F.count("*").alias("c")), eager=False)
+        bg.groupBy("w1", "w2").agg(F.count("*").alias("c")))
     glob = c.agg(*[
         F.sum(F.when(F.col("c") == k, 1).otherwise(0)).alias(f"n{k}")
         for k in (1, 2, 3, 4)])
@@ -1101,8 +1102,7 @@ def doc_logprob_kn(df: DataFrame, key: str, *,
                    .select(F.col(key), "p.w1", "p.w2"))
     stats = kn_discounts_mod(df, text_col=text_col)
     bgc = materialize(
-        doc_pairs.groupBy("w1", "w2").agg(F.count("*").alias("c")),
-        eager=False)
+        doc_pairs.groupBy("w1", "w2").agg(F.count("*").alias("c")))
     cont = bgc.groupBy("w2").agg(F.count("*").alias("cont"))
     t_types = bgc.count()
     dec = "DECIMAL(38, 0)"
@@ -1173,8 +1173,7 @@ def doc_logprob_kn3(df: DataFrame, key: str, *,
                          F.explode(F.expr(tri_expr)).alias("p"))
                  .select(F.col(key), "p.w1", "p.w2", "p.w3"))
     tri = materialize(
-        doc_tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c")),
-        eager=False)
+        doc_tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c")))
 
     dec = "DECIMAL(38, 0)"
 
@@ -1213,7 +1212,7 @@ def doc_logprob_kn3(df: DataFrame, key: str, *,
     # bigram CONTINUATION counts: rows of tri are distinct trigrams,
     # so count(*) per (w2, w3) = |{w1 : c(w1,w2,w3) > 0}|
     bc = materialize(
-        tri.groupBy("w2", "w3").agg(F.count("*").alias("bc")), eager=False)
+        tri.groupBy("w2", "w3").agg(F.count("*").alias("bc")))
     glob2 = _discounts(bc, "bc")
     ctx2 = (bc.groupBy("w2")
             .agg(F.sum("bc").alias("total2"),

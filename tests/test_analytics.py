@@ -2061,10 +2061,13 @@ def test_curation_neardup_stage_effects(spark):
 def test_materialize_skips_pinned_frames(spark, tmp_path):
     """`materialize` copies a frame only when it is not pinned yet: a
     cache()d frame and a checkpointed one come back as the same
-    object (no second copy); a parquet scan and a frame built from a
-    Python RDD (a LogicalRDD root that is NOT checkpointed) are
-    materialised into a checkpointed LogicalRDD with the same rows."""
+    object (no second copy). A parquet scan and a frame built from a
+    Python RDD (a LogicalRDD root that is NOT checkpointed) are pinned
+    under the local policy without a job: the copy is marked for a
+    local checkpoint, already counts as pinned, and its first action
+    writes it (a checkpointed LogicalRDD with the same rows)."""
     from stark_spark.materialize import materialize
+    from tests.test_sources import _in_job_group
     path = str(tmp_path / "docs")
     spark.range(4).write.parquet(path)
     scan = spark.read.parquet(path)
@@ -2079,12 +2082,15 @@ def test_materialize_skips_pinned_frames(spark, tmp_path):
     from_rdd = spark.createDataFrame(
         spark.sparkContext.parallelize([(1, 2), (3, 4)]), "a long, b long")
     for df in (scan, from_rdd):
-        out = materialize(df)
+        out, jobs, _ = _in_job_group(spark, lambda: materialize(df))
         assert out is not df
+        assert jobs == 0
+        assert materialize(out) is out
         root = out._jdf.queryExecution().analyzed()
         assert root.getClass().getSimpleName() == "LogicalRDD"
-        assert root.rdd().isCheckpointed()
+        assert not root.rdd().isCheckpointed()
         assert sorted(out.collect()) == sorted(df.collect())
+        assert root.rdd().isCheckpointed()
 
 
 def test_passage_dedup_rewrites_and_identity(spark):
@@ -2523,7 +2529,9 @@ def test_materialize_policies_one_answer(spark, monkeypatch, tmp_path,
     `SpatialRDDTestCase` idea): every operator that materialises
     returns the same rows under local checkpoints and under reliable
     ones (Spark has a checkpoint dir), and the reliable cell really
-    writes its checkpoints there."""
+    writes its checkpoints there. A pinned frame's Python UDF runs
+    once per row under both policies, however often it is read."""
+    from stark_spark.materialize import materialize
     from stark_spark.operators import skyline as S
     from stark_spark.operators.curation import curate
     from stark_spark.operators.graph import connected_components, pagerank
@@ -2535,6 +2543,21 @@ def test_materialize_policies_one_answer(spark, monkeypatch, tmp_path,
         sc.setCheckpointDir(str(ck_dir))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
+        # a shuffle-free frame is computed once under either policy:
+        # a lazy reliable checkpoint would run a counting Python UDF
+        # once for the first read and again to write the copy
+        calls = sc.accumulator(0)
+
+        def twice(v):
+            calls.add(1)
+            return 2 * v
+
+        pinned = materialize(spark.range(0, 1000, 1, 4).select(
+            F.udf(twice, "long")("id").alias("v")))
+        reads = [pinned.agg(F.sum("v")).first()[0] for _ in range(2)]
+        assert reads == [999_000, 999_000]
+        assert calls.value == 1000
+
         # connected components, hash-min loop forced
         cc_edges = spark.createDataFrame([(0, 1), (1, 2), (3, 4), (5, 4)],
                                          "a long, b long")
@@ -2598,6 +2621,38 @@ def test_materialize_policies_one_answer(spark, monkeypatch, tmp_path,
     assert sc.getCheckpointDir() is None
     written = [f for f in ck_dir.rglob("part-*")] if ck_dir.exists() else []
     assert bool(written) == (policy == "reliable")
+
+
+@pytest.mark.parametrize("policy", ["local", "reliable"])
+def test_materialize_lost_blocks(spark, tmp_path, policy):
+    """What a pinned frame survives once its executor blocks are gone
+    (the `materialize` policy's recovery claim): a local checkpoint has
+    no lineage left, so the next action fails; a reliable one reads
+    its copy back from the checkpoint dir and returns the same rows."""
+    from py4j.protocol import Py4JJavaError
+
+    from stark_spark.materialize import materialize
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    if policy == "reliable":
+        sc.setCheckpointDir(str(tmp_path / "ck"))
+    try:
+        pinned = materialize(spark.range(0, 1000, 1, 4)
+                             .select((F.col("id") * 3).alias("v")))
+        assert pinned.agg(F.sum("v")).first()[0] == 1_498_500
+        rdd = pinned._jdf.queryExecution().analyzed().rdd()
+        sc._jvm.org.apache.spark.SparkEnv.get().blockManager().master() \
+            .removeRdd(rdd.id(), True)
+        if policy == "local":
+            with pytest.raises(Py4JJavaError):
+                pinned.agg(F.sum("v")).first()
+        else:
+            assert pinned.agg(F.sum("v")).first()[0] == 1_498_500
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
 
 
 def test_broadcast_bytes_reads_unit_suffixes(spark):

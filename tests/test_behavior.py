@@ -449,68 +449,6 @@ def test_keyness_log_odds_hand(spark):
     assert got == {"A": "zebra", "B": "plain"}
 
 
-def test_event_frame_fluent(spark):
-    """EventFrame verbs delegate to the operator modules with the
-    wrap-time column config."""
-    from stark_spark.api import EventFrame
-    rows = [
-        (1, 1, _ts("2024-01-01T00:00:01"), "view", 1.0),
-        (2, 1, _ts("2024-01-01T00:00:02"), "purchase", 10.0),
-        (3, 2, _ts("2024-01-01T00:00:01"), "view", 2.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, "
-              "event_type string, value double")
-    evf = EventFrame(df)
-    f = {r.step: r.users for r in
-         evf.funnel(["view", "purchase"]).collect()}
-    assert f == {1: 2, 2: 1}
-    tr = {(r.from_type, r.to_type): r.n
-          for r in evf.transitions().collect()}
-    assert tr == {("view", "purchase"): 1}
-    att = {r.channel: r.revenue_c
-           for r in evf.attribution(conversion="purchase").collect()}
-    assert att == {"view": 1000}
-    assert evf.ohlc().count() == 2          # two series
-    assert evf.rolling(hours=1).count() == 3
-    assert evf.count() == 3                 # __getattr__ passthrough
-
-
-def test_event_frame_quantiles(spark):
-    """EventFrame.quantiles — the exact_quantiles fluent promotion
-    (r11 verdict ask #6): exact=True returns TRUE order statistics
-    (values at rank ceil(n*p/100)); exact=False answers from the HDR
-    sketch whose 'hi' bound must bracket the exact value from above
-    within the documented 2^-sub_bits relative error."""
-    import math
-
-    from stark_spark.api import EventFrame
-    vals = [3, 7, 7, 19, 240, 999, 1000, 65, 4, 88, 12, 500]
-    rows = [(i, 1, None, "e", float(v)) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, "
-              "event_type string, value double")
-    evf = EventFrame(df)
-    got = {r.pct: r.value for r in
-           evf.quantiles((25, 50, 99)).collect()}
-    srt, n = sorted(int(v) for v in vals), len(vals)
-    want = {p: srt[max(math.ceil(n * p / 100), 1) - 1]
-            for p in (25, 50, 99)}
-    assert got == want
-    hdr_rows = evf.quantiles((25, 50, 99), exact=False).collect()
-    # r12 ADVICE: sketch path now returns the SAME (pct, value, n)
-    # schema as the exact path
-    assert hdr_rows[0].asDict().keys() == {"pct", "value", "n"}
-    hdr = {r.pct: r.value for r in hdr_rows}
-    for p, exact in want.items():
-        assert exact <= hdr[p] <= exact * (1 + 2 ** -5) + 1, (p, hdr)
-    import pytest
-    with pytest.raises(ValueError, match="integers in"):
-        evf.quantiles((25.5, 50))
-    with pytest.raises(ValueError, match="integers in"):
-        evf.quantiles((0, 50))
-
-
 def test_kaplan_meier_distinct_guard(spark):
     """r10 verdict stretch #7: unbinned micro-grained durations must
     raise (bounded probe), binned/capped input still works."""

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from stark_spark import datasets as D
 from stark_spark.functions.visualize import render_points
 from stark_spark.operators.multimodal import (_decode, image_features,
-                                              read_binary_dir, sample_frames)
+                                              read_binary_dir)
 from stark_spark.partitioner import (GridSpec, partition_hint,
                                      str_partitioner)
 
@@ -79,12 +79,6 @@ def test_image_features_shape(media):
     again = image_features(media).collect()
     assert {r.path: tuple(r.mean_rgb) for r in out} == \
         {r.path: tuple(r.mean_rgb) for r in again}
-
-
-def test_sample_frames_rowcount(media):
-    out = sample_frames(media, every_n=5).toPandas()
-    assert (out.groupby("path").size() >= 2).all()
-    assert (out.frame_no % 5 == 0).all()
 
 
 def test_png_content_decodes_for_real(spark, tmp_path):
@@ -1184,7 +1178,11 @@ def test_one_way_to_materialize():
     `.localCheckpoint(` / `.checkpoint(` / `.cache(` / `.persist(`
     call outside materialize.py, or a `conf.set(` outside session.py
     and datasets.py, fails. Comments and strings are skipped (read
-    with the Python tokenizer)."""
+    with the Python tokenizer). The policy alone decides how a frame
+    is pinned: a `materialize` that takes `eager`, or a
+    `materialize(...)` call that passes `eager=` anywhere in the
+    repo's code or tests, fails (read with the Python parser)."""
+    import ast
     import io
     import tokenize
     from pathlib import Path
@@ -1209,6 +1207,17 @@ def test_one_way_to_materialize():
                     == ("conf", ".", "set", "(")
                     and f.name not in ("session.py", "datasets.py")):
                 bad.append(f"{where} conf.set(")
+    for f in files + [root / "bench.py", *sorted(root.glob("tests/*.py"))]:
+        for n in ast.walk(ast.parse(f.read_text())):
+            where = f"{f.relative_to(root)}:{getattr(n, 'lineno', 0)}"
+            if (isinstance(n, ast.FunctionDef) and n.name == "materialize"
+                    and "eager" in {a.arg for a in n.args.kwonlyargs
+                                    + n.args.args}):
+                bad.append(f"{where} def materialize(eager)")
+            fn = n.func if isinstance(n, ast.Call) else None
+            if (getattr(fn, "id", getattr(fn, "attr", None)) == "materialize"
+                    and any(k.arg == "eager" for k in n.keywords)):
+                bad.append(f"{where} materialize(eager=)")
     assert bad == []
 
 
@@ -1221,11 +1230,6 @@ UNCALLED_OK = {
     "stark_spark/functions/distance.py:interval_distance",
     "stark_spark/functions/visualize.py:render_tiles",
     "stark_spark/operators/dbscan.py:neighborhood_histogram",
-    # test-only public API whose removal retires its own tests; the
-    # next batch of ROADMAP direction 6
-    "stark_spark/api.py:EventFrame",
-    "stark_spark/functions/zorder.py:layout_by_zorder",
-    "stark_spark/operators/multimodal.py:sample_frames",
 }
 
 

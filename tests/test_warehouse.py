@@ -191,36 +191,6 @@ def test_zorder_key_interleaves(spark):
     assert k == want
 
 
-def test_zorder_layout_prunes_better_than_linear(spark):
-    """The point of Z-order: a 2-D box predicate overlaps FEWER
-    range-partitions than under single-column ordering."""
-    from stark_spark.functions.zorder import layout_by_zorder
-    pts = [(i % 64, i // 64) for i in range(4096)]        # 64x64 grid
-    df = spark.createDataFrame(pts, "x long, y long")
-    _, stats = layout_by_zorder(df, ["x", "y"],
-                                [(0, 64), (0, 64)], n_files=16)
-    zstats = stats.collect()
-    lin = (df.repartitionByRange(16, "x")
-             .withColumn("_pid", F.spark_partition_id())
-             .groupBy("_pid")
-             .agg(F.min("x").alias("min_x"), F.max("x").alias("max_x"),
-                  F.min("y").alias("min_y"), F.max("y").alias("max_y"))
-             ).collect()
-
-    def touched(rows, qx, qy):
-        return sum(1 for r in rows
-                   if r["min_x"] <= qx[1] and r["max_x"] >= qx[0]
-                   and r["min_y"] <= qy[1] and r["max_y"] >= qy[0])
-
-    # y-only predicate: x-ordered layout prunes NOTHING (every x-range
-    # stripe spans all y); z-order keeps y locality too
-    assert touched(lin, (0, 63), (4, 12)) == 16
-    assert touched(zstats, (0, 63), (4, 12)) <= 8
-    # small 2-D box: z-order must not be worse than the x-only layout
-    assert (touched(zstats, (4, 12), (4, 12))
-            <= touched(lin, (4, 12), (4, 12)))
-
-
 # --------------------------------------------------------------------------
 # Kaplan-Meier
 # --------------------------------------------------------------------------
