@@ -237,15 +237,18 @@ def measure(spark, fn, sf: str, group: str) -> tuple[int, float, dict]:
     every executor thread's) compile and GC time over the timed span;
     ``jobs``/``stages``/``tasks`` ran under ``group``, build included
     (a streaming query's micro-batches run under the stream's own job
-    group and are not counted); ``shuffle_bytes``, ``files_read`` and
-    ``rows_scanned`` are SQL metrics of the executed count plan."""
+    group and are not counted); ``build_jobs`` is the part of ``jobs``
+    the build ran, under its own group ``{group}:build``;
+    ``shuffle_bytes``, ``files_read`` and ``rows_scanned`` are SQL
+    metrics of the executed count plan."""
     sc = spark.sparkContext
     jvm = Jvm(spark)
-    sc.setJobGroup(group, group)
+    sc.setJobGroup(f"{group}:build", group)
     jit0, gc0 = jvm.counters()
     t0 = time.perf_counter()
     df = fn(spark, sf)
     t1 = time.perf_counter()
+    sc.setJobGroup(group, group)
     # the plan Dataset.count() runs, kept so its metrics can be read
     cdf = df.groupBy().count()
     rows = cdf.collect()[0][0]
@@ -253,6 +256,7 @@ def measure(spark, fn, sf: str, group: str) -> tuple[int, float, dict]:
     jit1, gc1 = jvm.counters()
     sc.setLocalProperty("spark.jobGroup.id", None)
 
+    build_jobs, build_stages, build_tasks = jvm.job_counts(f"{group}:build")
     jobs, stages, tasks = jvm.job_counts(group)
     metrics = plan_metrics(cdf)
     phases = cdf._jdf.queryExecution().tracker().phases().iterator()
@@ -261,8 +265,10 @@ def measure(spark, fn, sf: str, group: str) -> tuple[int, float, dict]:
         plan_ms += phases.next()._2().durationMs()
     layer = {"build_ms": round((t1 - t0) * 1e3, 1),
              "exec_ms": round((t2 - t1) * 1e3, 1), "plan_ms": plan_ms,
-             "jit_ms": jit1 - jit0, "gc_ms": gc1 - gc0, "jobs": jobs,
-             "stages": stages, "tasks": tasks,
+             "jit_ms": jit1 - jit0, "gc_ms": gc1 - gc0,
+             "jobs": build_jobs + jobs, "build_jobs": build_jobs,
+             "stages": build_stages + stages,
+             "tasks": build_tasks + tasks,
              "shuffle_bytes": metrics["shuffle_bytes"],
              "files_read": metrics["files_read"],
              "rows_scanned": metrics["rows_scanned"]}
@@ -358,7 +364,8 @@ def main() -> None:
         print(f"# {name}: {times[name]}s ({n} rows; warm {warm[name]}s; "
               f"build/exec ms cold {cold_l['build_ms']}/"
               f"{cold_l['exec_ms']}, warm {warm_l['build_ms']}/"
-              f"{warm_l['exec_ms']}; warm jobs {warm_l['jobs']})",
+              f"{warm_l['exec_ms']}; warm jobs {warm_l['jobs']}, "
+              f"{warm_l['build_jobs']} in build)",
               file=sys.stderr)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

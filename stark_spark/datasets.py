@@ -16,8 +16,11 @@ Conventions (keep in sync with `__spark_entry__.oracle_sql`):
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from stark_spark.functions.constructors import st_frame
 
@@ -59,9 +62,38 @@ def _ensure_runtime_confs(spark: SparkSession) -> None:
             pass
 
 
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark would infer for ``path`` with mergeSchema off,
+    read from one parquet footer on the driver: the first data file in
+    path order, names starting with ``_`` or ``.`` skipped. Listing a
+    file returns the file itself, so a single file and a Spark-written
+    directory take the same path."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    data = [s for s in p.getFileSystem(conf).listStatus(p)
+            if not s.getPath().getName().startswith(("_", "."))]
+    if not data:
+        raise ValueError(f"{path!r} holds no parquet data file")
+    first = min(data, key=lambda s: s.getPath().toString())
+    fmt = getattr(getattr(jvm.org.apache.spark.sql.execution.datasources
+                          .parquet, "ParquetFileFormat$"), "MODULE$")
+    footers = fmt.readParquetFootersInParallel(
+        conf, jvm.PythonUtils.toSeq([first]), False)
+    schema = fmt.readSchema(footers, spark._jsparkSession).get()
+    return StructType.fromJson(json.loads(schema.json()))
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One testdata table, its timestamp columns as TimestampType.
+
+    The schema comes from the parquet footer, read on the driver on
+    every call: loading runs no Spark job (schema inference would run
+    one to read that same footer), and nothing is cached, so a file
+    rewritten mid-session is read with its new schema."""
     _ensure_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    path = f"{sf_dir}/{table}.parquet"
+    df = spark.read.schema(_footer_schema(spark, path)).parquet(path)
     for c in _TS_COLS.get(table, ()):
         dtype = dict(df.dtypes).get(c)
         if dtype == "bigint":
@@ -83,8 +115,8 @@ def synth_xy(df: DataFrame, key: str,
     """Deterministic synthetic point columns from an integer key."""
     k = F.col(key).cast("long")
     sx, sy = salt
-    return (df.withColumn("x", ((k * PX + sx) % 1000) / 10.0)
-              .withColumn("y", ((k * PY + sy) % 1000) / 10.0))
+    return df.withColumns({"x": ((k * PX + sx) % 1000) / 10.0,
+                           "y": ((k * PY + sy) % 1000) / 10.0})
 
 
 def st_points(spark: SparkSession, sf_dir: str, table: str, key: str,
@@ -98,7 +130,7 @@ def st_points(spark: SparkSession, sf_dir: str, table: str, key: str,
 
 def st_events(spark: SparkSession, sf_dir: str, keep_geom: bool = True) -> DataFrame:
     """events → ST point frame: x = value, y = hash(user_id), t = ts."""
-    df = load(spark, sf_dir, "events")
-    df = (df.withColumn("x", F.col("value"))
-            .withColumn("y", (F.col("user_id").cast("long") * PX % 1000) / 10.0))
+    df = load(spark, sf_dir, "events").withColumns(
+        {"x": F.col("value"),
+         "y": (F.col("user_id").cast("long") * PX % 1000) / 10.0})
     return st_frame(df, x="x", y="y", t_start="ts", keep_geom=keep_geom)

@@ -215,10 +215,10 @@ def with_bbox(df: DataFrame, geom_col: str = "geom",
     and prunable in Parquet row-group stats. Otherwise one bbox UDF pass.
     """
     if x is not None and y is not None:
-        return (df.withColumn("xmin", F.col(x).cast("double"))
-                  .withColumn("ymin", F.col(y).cast("double"))
-                  .withColumn("xmax", F.col(x).cast("double"))
-                  .withColumn("ymax", F.col(y).cast("double")))
+        return df.withColumns({"xmin": F.col(x).cast("double"),
+                               "ymin": F.col(y).cast("double"),
+                               "xmax": F.col(x).cast("double"),
+                               "ymax": F.col(y).cast("double")})
     b = _st_bbox_udf(F.col(geom_col))
     df = df.withColumn("_bb", b)
     for c in BBOX_COLS:
@@ -236,12 +236,9 @@ def with_time(df: DataFrame, t_start: Column | str | None,
         c = F.col(c) if isinstance(c, str) else c
         return F.when(c.isNull(), F.lit(None).cast("long")) \
                 .otherwise(c.cast("timestamp").cast("long"))
-    df = df.withColumn("t_start", _to_epoch(t_start))
-    if t_end is None:
-        df = df.withColumn("t_end", F.col("t_start"))
-    else:
-        df = df.withColumn("t_end", _to_epoch(t_end))
-    return df
+    return df.withColumns({
+        "t_start": _to_epoch(t_start),
+        "t_end": _to_epoch(t_start if t_end is None else t_end)})
 
 
 def st_frame(df: DataFrame, *, x: str | None = None, y: str | None = None,

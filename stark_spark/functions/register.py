@@ -27,7 +27,11 @@ from stark_spark.functions.predicates import (pair_distance_udf,
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    """Idempotent registration of the SQL surface (§2.7 parity table)."""
+    """Registration of the SQL surface (§2.7 parity table), once per
+    session: a session that already has the last function registered
+    below returns at once."""
+    if spark.catalog.functionExists("bm25_contrib"):
+        return
     from stark_spark.functions.constructors import (
         _st_point_udf, _st_point_z_udf, _st_zrange_udf,
         _st_geomfromwkt_udf, _st_wkt_udf, _st_bbox_udf)
@@ -506,7 +510,8 @@ def _register_text_functions(spark: SparkSession) -> None:
         "shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))), "
         "CAST(0 AS BIGINT), (a, v) -> a + v)")
     # one BM25 term contribution: floor((idf_q · saturation) · 1e3)
-    # BIGINT — text.bm25_topk's contrib() with identical operand order
+    # BIGINT — text.bm25_topk's contrib() with identical operand order.
+    # Registered last: register_sql_functions skips a session that has it.
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION bm25_contrib"
         "(tf BIGINT, dl BIGINT, idf_q BIGINT, avgdl DOUBLE, "

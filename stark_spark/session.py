@@ -7,6 +7,17 @@ needs neither a custom Strategy (joins are explicit plan rewrites) nor
 a UDT — this module just centralizes the confs that matter at scale:
 AQE (runtime re-plan, skew-join splitting, broadcast switch), Arrow
 for every pandas UDF boundary, and shuffle-partition sizing.
+
+PySpark's DataFrame-debugging origin capture is off
+(``spark.python.sql.dataFrameDebugging.enabled``). With it on, every
+wrapped ``F.*`` or ``DataFrame`` call inspects the Python stack and
+makes extra py4j round-trips to record its call site. Errors keep
+their class and message; their query context names a JVM frame
+instead of the Python file and line of the failing call. PySpark
+reads the setting once per
+process, at the first wrapped call made while a session is active
+(with none active, it reads it as off), so it is set when the session
+is created: setting it later on a live session has no effect.
 """
 
 from __future__ import annotations
@@ -39,6 +50,9 @@ _SCALE_CONFS = {
     # The testdata parquet carries TIMESTAMP(NANOS) (unsupported natively);
     # read as long nanos — `datasets.load` converts to TimestampType.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # No per-call origin capture (see the module docstring); read once
+    # per process, so it is set when the session is created.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

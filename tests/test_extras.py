@@ -788,11 +788,56 @@ def test_bench_measure_records_layers(spark, sf_dir):
     rows, wall, layer = bench.measure(spark, fn, sf_dir, "test:measure")
     assert rows == fn(spark, sf_dir).count()
     assert set(layer) == {"build_ms", "exec_ms", "plan_ms", "jit_ms",
-                          "gc_ms", "jobs", "stages", "tasks",
+                          "gc_ms", "jobs", "build_jobs", "stages", "tasks",
                           "shuffle_bytes", "files_read", "rows_scanned"}
     assert layer["jobs"] >= 1 and layer["files_read"] >= 1
+    assert layer["build_jobs"] == 0
     assert 0 < layer["build_ms"] + layer["exec_ms"] <= wall * 1e3 + 1
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+    # a build that runs a job of its own: counted in build_jobs and jobs
+    def eager(s, sf):
+        s.range(10).collect()
+        return s.range(5)
+    rows, _, layer = bench.measure(spark, eager, sf_dir, "test:measure-eager")
+    assert rows == 5
+    assert layer["build_jobs"] == 1 and layer["jobs"] > 1
+
+
+def test_session_turns_off_dataframe_debugging(spark):
+    """Sessions from `get_session` run with PySpark's per-call origin
+    capture off, in a fresh process too (PySpark reads the setting once
+    per process), and analysis errors still name what is wrong."""
+    import os
+    import subprocess
+    import sys
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    script = """
+from pyspark.errors import AnalysisException
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
+from stark_spark import get_session
+
+s = get_session("debugging-off")
+F.col("a")
+assert is_debugging_enabled() is False
+try:
+    s.range(3).select("nope")
+except AnalysisException as e:
+    assert "nope" in str(e), e
+    print("raised", type(e).__name__)
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1",
+               SPARK_GRAFT_DRIVER_MEM="512m",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (root, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run([sys.executable, "-c", script], env=env, cwd=root,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.splitlines()[-1] == "raised AnalysisException"
 
 
 def test_bench_record_path():

@@ -7,6 +7,9 @@ optimization, never a semantic), (b) the physical plan actually
 partition-prunes (PartitionFilters on the cell column).
 """
 
+import os
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,7 +74,9 @@ def _in_job_group(spark, fn):
     """fn()'s result, the number of jobs it ran, and the task count of
     each of their stages."""
     sc = spark.sparkContext
-    group = f"test-sources-{id(fn)}"
+    # a fresh group per call: an id() can be reused by a later lambda,
+    # whose count would then include the earlier group's jobs
+    group = f"test-sources-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "test_sources")
     try:
         out = fn()
@@ -495,3 +500,59 @@ def test_pruned_read_files_read_sf01(spark, tmp_path):
     assert n == want.count()
     assert {r.event_id for r in got.select("event_id").collect()} == \
         {r.event_id for r in want.select("event_id").collect()}
+
+
+def test_load_reads_the_schema_without_a_job(spark, sf_dir, tmp_path):
+    """`datasets.load` runs no Spark job, and its frame has the schema
+    Spark infers for the file (the timestamp columns converted) for
+    every sf0.01 table and for a Spark-written directory table."""
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    tables = {t[:-len(".parquet")]: sf for t in os.listdir(sf)}
+    (spark.range(40).selectExpr("id", "CAST(id % 7 AS STRING) AS s",
+                                "id * 0.5 AS v")
+     .repartition(3).write.parquet(str(tmp_path / "written.parquet")))
+    tables["written"] = str(tmp_path)
+    for table, base in sorted(tables.items()):
+        out, n_jobs, _ = _in_job_group(
+            spark, lambda: D.load(spark, base, table))
+        assert n_jobs == 0, table
+        ts = D._TS_COLS.get(table, ())
+        want = StructType([
+            StructField(f.name, TimestampType() if f.name in ts
+                        else f.dataType, f.nullable)
+            for f in spark.read.parquet(f"{base}/{table}.parquet").schema])
+        assert out.schema == want, table
+    written = D.load(spark, str(tmp_path), "written")
+    assert written.count() == 40
+    assert written.agg(F.sum("v")).first()[0] == 390.0
+
+
+def test_load_sees_a_file_rewritten_mid_session(spark, tmp_path):
+    """A parquet file rewritten with one more column in the middle is
+    read with that column by the next `datasets.load`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    assert D.load(spark, str(tmp_path), "t").columns == ["a", "b"]
+    pq.write_table(pa.table({"a": [1, 2, 3], "c": [10.0, 20.0, 30.0],
+                             "b": ["x", "y", "z"]}), path)
+    df = D.load(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "c", "b"]
+    assert sorted(map(tuple, df.collect())) == [
+        (1, 10.0, "x"), (2, 20.0, "y"), (3, 30.0, "z")]
+
+
+@pytest.mark.parametrize("name", ["st_filter_polygon_timed",
+                                  "st_join_grid_points", "knn_events"])
+def test_st_spine_builds_run_no_job(spark, sf_dir, name):
+    """Building the ST spine's registry queries runs no Spark job: their
+    table loads read the footer on the driver."""
+    import __spark_entry__ as entry
+
+    build = entry.queries()[name]
+    _, n_jobs, _ = _in_job_group(spark, lambda: build(spark, sf_dir))
+    assert n_jobs == 0

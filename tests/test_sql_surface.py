@@ -528,3 +528,34 @@ def test_hdr_bucket_sql_function(spark):
     from pyspark.errors import PySparkException
     with pytest.raises(PySparkException, match="negative"):
         spark.sql("SELECT hdr_bucket(-1)").collect()
+
+
+def test_sql_surface_registers_once_per_session(spark, sf_dir, monkeypatch):
+    """A session that has the SQL surface gets nothing registered again:
+    the second build of a SQL-surface query makes no `udf.register`
+    call and creates no SQL function."""
+    from pyspark.sql.udf import UDFRegistration
+
+    import __spark_entry__ as entry
+
+    fresh = spark.newSession()
+    build = entry.queries()["sql_raster_histogram"]
+    calls = []
+    real_register, real_sql = UDFRegistration.register, fresh.sql
+
+    def register(self, name, *a, **kw):
+        calls.append(name)
+        return real_register(self, name, *a, **kw)
+
+    def sql(text, *a, **kw):
+        if "FUNCTION" in text:
+            calls.append(text)
+        return real_sql(text, *a, **kw)
+
+    monkeypatch.setattr(UDFRegistration, "register", register)
+    monkeypatch.setattr(fresh, "sql", sql)
+    build(fresh, sf_dir)
+    assert len(calls) > 50
+    calls.clear()
+    build(fresh, sf_dir)
+    assert calls == []
