@@ -5039,8 +5039,10 @@ def _q_ann_brute_gemm(spark, sf):
 
 
 def _q_ann_ivf_gemm(spark, sf):
-    """Production IVF scorer: per-bucket cogrouped BLAS matmul
-    (shared `_gemm_cogroup_topk` kernel). Rank-only hash, as above."""
+    """Production IVF scorer: queries and centroids ride the task
+    closure, and one `mapInPandas` pass assigns, masks to the probed
+    buckets and keeps a per-batch top-k (the `_batch_topk` kernel that
+    `ann_brute_topk_gemm` runs too). Rank-only hash, as above."""
     emb, q = _emb_queries(spark, sf, 5)
     cent = (emb.where(F.col("vec_id") < 4)
                .select(F.col("vec_id").alias("c_id"),

@@ -27,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from perfbench.probes import Jvm, plan_metrics  # noqa: E402
+from perfbench.probes import Jvm, _nodes, plan_metrics  # noqa: E402
 
 # the headline subset: every engine tier, nothing quadratic-in-corpus.
 # PINNED as of round 3 (38 queries): keep this list verbatim so
@@ -64,7 +64,7 @@ BENCH_QUERIES = [
     "sample_stratified",         # row-local deterministic sampling
     "dedup_simhash",             # 64 native bit-votes
     "ann_brute_topk_gemm",       # batch-GEMM exact baseline
-    "ann_ivf_topk_gemm",         # bucketed ANN, cogroup GEMM scorer
+    "ann_ivf_topk_gemm",         # bucketed ANN, one-pass batch GEMM
     "ann_knn_join_gemm",         # all-corpus neighbor graph, bucket GEMM
     "ann_dup_pairs_ivf_gemm",    # bucketed near-dup pairs, blocked GEMM
     "ann_quantized_topk",        # int8 dots, exact integer ranking
@@ -221,6 +221,31 @@ BENCH_QUERIES = [
 ]
 
 
+# SQL metrics of Spark's Python-worker operators (MapInPandasExec and
+# the other Arrow/pandas execs) -> the layer field each one adds to
+PYTHON_METRICS = {"pythonTotalTime": "python_ms",
+                  "pythonBootTime": "python_boot_ms",
+                  "pythonInitTime": "python_init_ms",
+                  "pythonDataSent": "python_bytes",
+                  "pythonDataReceived": "python_bytes"}
+
+
+def python_metrics(cdf) -> dict[str, int]:
+    """The Python-worker layer of the plan an action ran: its
+    ``PYTHON_METRICS`` summed over every operator that has them (0 when
+    no Python worker ran). Times are milliseconds summed over tasks.
+    A reused worker (Spark's default) starts its clock when its
+    previous task ends: it reports no boot time, and its idle gap
+    counts as init time."""
+    out = dict.fromkeys(PYTHON_METRICS.values(), 0)
+    for _, node in _nodes(cdf._jdf.queryExecution().executedPlan()):
+        m = node.metrics()
+        for key, name in PYTHON_METRICS.items():
+            if m.contains(key):
+                out[name] += m.apply(key).value()
+    return out
+
+
 def measure(spark, fn, sf: str, group: str) -> tuple[int, float, dict]:
     """Run one query as ``fn(spark, sf).count()`` would and return
     (rows, wall seconds, layers). Only building the frame and the count
@@ -240,7 +265,10 @@ def measure(spark, fn, sf: str, group: str) -> tuple[int, float, dict]:
     group and are not counted); ``build_jobs`` is the part of ``jobs``
     the build ran, under its own group ``{group}:build``;
     ``shuffle_bytes``, ``files_read`` and ``rows_scanned`` are SQL
-    metrics of the executed count plan."""
+    metrics of the executed count plan, and so are the Python-worker
+    fields of `python_metrics` (``python_ms``, ``python_boot_ms``,
+    ``python_init_ms``, ``python_bytes``): a Python pass that a build
+    runs for its own driver action is not in them."""
     sc = spark.sparkContext
     jvm = Jvm(spark)
     sc.setJobGroup(f"{group}:build", group)
@@ -271,7 +299,8 @@ def measure(spark, fn, sf: str, group: str) -> tuple[int, float, dict]:
              "tasks": build_tasks + tasks,
              "shuffle_bytes": metrics["shuffle_bytes"],
              "files_read": metrics["files_read"],
-             "rows_scanned": metrics["rows_scanned"]}
+             "rows_scanned": metrics["rows_scanned"],
+             **python_metrics(cdf)}
     return rows, t2 - t0, layer
 
 

@@ -8,30 +8,39 @@ Net-new beyond the reference. Tiers:
   double fold — bit-identical to the oracle's `list_reduce` fold),
   then per-query window top-k.
 * **IVF (inverted-file) bucketed search** — the scale path: assign
-  every vector to its nearest of C centroids (one broadcast pass),
-  search only the query's ``n_probe`` closest centroid buckets.
-  Centroids here are taken deterministically from the data (first C
-  vectors by id) so results stay oracle-reproducible; a production
-  deployment would plug k-means centroids in unchanged. Persisted
-  form: `save_ivf_bucketed` / `ivf_topk_pruned` (file-level pruning).
+  every vector to its nearest of C centroids, search only the query's
+  ``n_probe`` closest centroid buckets. Centroids here are taken
+  deterministically from the data (first C vectors by id) so results
+  stay oracle-reproducible; a production deployment would plug
+  k-means centroids in unchanged. Persisted form: `save_ivf_bucketed`
+  / `ivf_topk_pruned` (file-level pruning).
 * **sign-LSH bucketed search** (`ann_lsh_topk`) — the centroid-free
   alternative: deterministic hyperplane signatures, same-bucket
   candidates, exact rerank.
 * **int8 quantized retrieval** (`quantize_embeddings` +
-  `ann_quantized_topk`) — 4× smaller, integer scores, exactly
-  reproducible ranking.
+  `ann_quantized_topk`) and **PQ/ADC** (`pq_train` + `pq_topk`) —
+  compressed vectors, integer scores, exactly reproducible ranking.
 
 Query-time scoring (brute-force, IVF, ANN joins, cosine pairs) has a
 BLAS engine (``score="gemm"``) next to the bit-exact fold expression;
 the cluster-local passes (semantic dedup/contamination, k-means
 assignment, the persisted IVF store) score with the fold only.
 Embedding-cosine near-dup pairs ride the same IVF bucketing.
+
+Every scorer whose query side is small by contract — brute-force and
+IVF ``score="gemm"``, `ann_quantized_topk`, `pq_topk(score="batch")`
+— runs on one kernel, `_batch_topk`: the queries ride the task
+closure, one `mapInPandas` pass keeps a bounded top-k per Arrow batch,
+and one window merges the batches. The all-corpus `ann_knn_join` has
+no small side and scores per bucket (`_gemm_cogroup_topk`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DataType, DoubleType, IntegerType,
+                               LongType, StructField, StructType)
 
 from stark_spark.operators.dedup import _sql_array_lit
 from stark_spark.materialize import materialize
@@ -93,6 +102,77 @@ def _local_topk(cos_row, mids, k: int, exclude=None):
     return order_ids[np.argsort(-cos_row[order_ids], kind="stable")[:k]]
 
 
+def _matrix(col):
+    """A pandas column of equal-length arrays as a float64 matrix;
+    (0, 0) when the column is empty, where np.vstack raises."""
+    import numpy as np
+    if not len(col):
+        return np.zeros((0, 0))
+    return np.vstack(col.to_numpy()).astype(np.float64)
+
+
+def _unit_rows(col):
+    """`_matrix` with every row scaled to unit length."""
+    import numpy as np
+    M = _matrix(col)
+    return M / np.linalg.norm(M, axis=1, keepdims=True)
+
+
+def _rank_topk(scored: DataFrame, k: int, qkey: str, key: str,
+               col: str) -> DataFrame:
+    """The global merge: per ``qkey``, the k rows with the highest
+    ``col``, ties by ``key``, numbered 1..k in ``rank``."""
+    w = Window.partitionBy(qkey).orderBy(F.desc(col), F.col(key))
+    return (scored.withColumn("_rn", F.row_number().over(w))
+                  .where(F.col("_rn") <= k)
+                  .select(qkey, key, col, F.col("_rn").alias("rank")))
+
+
+def _batch_topk(frame: DataFrame, qfield: StructField, qids, k: int,
+                scores, *, key: str, col: str,
+                col_type: DataType) -> DataFrame:
+    """Bounded top-k shared by the closure scorers (brute-force and
+    int8 GEMM, IVF, PQ/ADC): the small query side rides the task
+    closure and ONE `mapInPandas` over ``frame`` scores it.
+    ``scores(pdf)`` turns an Arrow batch into ``(ids, S, mask)`` — the
+    member ids it scored, their |Q|×|ids| score matrix (rows in
+    ``qids`` order) and a same-shape candidate mask, or None when every
+    member is a candidate. Each batch emits at most |Q|·k rows picked
+    by the `_local_topk` (-score, id) tie-break, so the one ``qkey``
+    window that merges them reads at most batches·|Q|·k rows whatever
+    the corpus size. Higher scores rank first (PQ passes negated
+    distances). No queries: no rows, and no job.
+
+    Output: (qkey, key, col, rank)."""
+    import numpy as np
+    import pandas as pd
+    qkey = qfield.name
+    schema = StructType([qfield, frame.schema[key],
+                         StructField(col, col_type)])
+    if not len(qids):
+        return _rank_topk(frame.sparkSession.createDataFrame([], schema),
+                          k, qkey, key, col)
+
+    def topk_batches(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids, S, mask = scores(pdf)
+            tops = []
+            for qi in range(len(qids)):
+                cand = (np.arange(len(ids)) if mask is None
+                        else np.nonzero(mask[qi])[0])
+                tops.append(cand[_local_topk(S[qi, cand], ids[cand], k)])
+            n = [len(t) for t in tops]
+            top = np.concatenate(tops)
+            yield pd.DataFrame({qkey: np.repeat(qids, n), key: ids[top],
+                                col: S[np.repeat(np.arange(len(qids)), n),
+                                       top]})
+
+    return _rank_topk(frame.mapInPandas(topk_batches, schema),
+                      k, qkey, key, col)
+
+
 def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
                      key: str = "vec_id", qkey: str = "q_id",
                      vec_col: str = "embedding",
@@ -101,56 +181,29 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
     """Exact top-k by cosine for each query vector.
 
     queries is expected to be small (broadcast): (q_id, q_embedding).
-    Output: (q_id, vec_id, cos) with deterministic tie-break on key.
+    Output: (q_id, vec_id, cos, rank) with deterministic tie-break on
+    key.
 
-    ``score="gemm"`` is the production scorer: the (small) query matrix
-    rides the task closure, every Arrow batch of vectors is scored by
-    ONE BLAS matmul with a local per-query top-k, and a tiny global
-    window merges across batches — each batch emits ≤ |Q|·k rows, so
-    the merge input is bounded by tasks·|Q|·k regardless of corpus
-    size. ``"fold"`` (default) is the bit-identical-to-DuckDB oracle
-    twin (`zip_with`+`aggregate` left fold).
+    ``score="gemm"`` is the production scorer: `_batch_topk` with the
+    unit query matrix in the task closure and ONE BLAS matmul per Arrow
+    batch of vectors. ``"fold"`` (default) is the bit-identical-to-DuckDB
+    oracle twin (`zip_with`+`aggregate` left fold).
     """
-    from pyspark.sql import Window
     if score == "gemm":
-        import numpy as np
-        import pandas as pd
         q_pdf = queries.select(qkey, qvec_col).toPandas()
-        Q = np.vstack(q_pdf[qvec_col].to_numpy()).astype(np.float64)
-        Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-        qids = q_pdf[qkey].to_numpy()
-        key_type = dict(vectors.dtypes)[key]
-        qkey_type = dict(queries.dtypes)[qkey]
-
-        def score_batches(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-                cos = Qn @ Mn.T
-                mids = pdf[key].to_numpy()
-                out_q, out_v, out_c = [], [], []
-                for qi in range(len(qids)):
-                    top = _local_topk(cos[qi], mids, k)
-                    out_q.extend([qids[qi]] * len(top))
-                    out_v.extend(mids[top])
-                    out_c.extend(cos[qi][top])
-                yield pd.DataFrame({qkey: out_q, key: out_v, "cos": out_c})
-
-        j = vectors.select(key, vec_col).mapInPandas(
-            score_batches, f"{qkey} {qkey_type}, {key} {key_type}, cos double")
-    else:
-        v = vectors.withColumn("_nv", norm(F.col(vec_col)))
-        qn = queries.withColumn("_nq", norm(F.col(qvec_col)))
-        j = v.crossJoin(F.broadcast(qn))
-        j = j.withColumn("cos", _cos_pre(F.col(vec_col), F.col(qvec_col),
-                                         F.col("_nv"), F.col("_nq"))) \
-             .select(qkey, key, "cos")
-    w = Window.partitionBy(qkey).orderBy(F.desc("cos"), F.col(key))
-    return (j.withColumn("_rn", F.row_number().over(w))
-             .where(F.col("_rn") <= k)
-             .select(qkey, key, "cos", F.col("_rn").alias("rank")))
+        Qn = _unit_rows(q_pdf[qvec_col])
+        return _batch_topk(
+            vectors.select(key, vec_col), queries.schema[qkey],
+            q_pdf[qkey].to_numpy(), k,
+            lambda pdf: (pdf[key].to_numpy(),
+                         Qn @ _unit_rows(pdf[vec_col]).T, None),
+            key=key, col="cos", col_type=DoubleType())
+    v = vectors.withColumn("_nv", norm(F.col(vec_col)))
+    qn = queries.withColumn("_nq", norm(F.col(qvec_col)))
+    j = v.crossJoin(F.broadcast(qn))
+    j = j.withColumn("cos", _cos_pre(F.col(vec_col), F.col(qvec_col),
+                                     F.col("_nv"), F.col("_nq")))
+    return _rank_topk(j, k, qkey, key, "cos")
 
 
 def _gemm_centroid_matrix(centroids: DataFrame, ckey: str,
@@ -165,10 +218,17 @@ def _gemm_centroid_matrix(centroids: DataFrame, ckey: str,
     c_pdf = centroids.select(ckey, cvec_col).toPandas()
     if c_pdf.empty:
         return None, None
-    C = np.vstack(c_pdf[cvec_col].to_numpy()).astype(np.float64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    Cn = _unit_rows(c_pdf[cvec_col])
     order = np.argsort(c_pdf[ckey].to_numpy(), kind="stable")
     return Cn[order], c_pdf[ckey].to_numpy()[order]
+
+
+def _probe_top(Qn, Cn, n_probe: int):
+    """Row-wise indices into the c_id-sorted ``Cn`` of the ``n_probe``
+    nearest centroids, in (-cos, c_id) order: the stable argsort keeps
+    ascending c_id among exact ties, as the fold probe window does."""
+    import numpy as np
+    return np.argsort(-(Qn @ Cn.T), axis=1, kind="stable")[:, :n_probe]
 
 
 def ivf_assign(vectors: DataFrame, centroids: DataFrame, *,
@@ -192,11 +252,9 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, *,
     both engines, but the two float paths can disagree in the last ulp
     on near-ties — oracle-gated queries keep the fold default.
     """
-    from pyspark.sql import Window
     if score == "gemm":
         import numpy as np
         Cn, cids = _gemm_centroid_matrix(centroids, ckey, cvec_col)
-        from pyspark.sql.types import StructField, StructType
         # fresh StructType — .add() would mutate the frame's cached schema
         out_schema = StructType(
             list(vectors.schema.fields)
@@ -210,8 +268,7 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, *,
             for pdf in batches:
                 if pdf.empty:
                     continue
-                M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
+                Mn = _unit_rows(pdf[vec_col])
                 pdf = pdf.copy()
                 pdf["bucket"] = cids[np.argmax(Mn @ Cn.T, axis=1)]
                 yield pdf
@@ -229,15 +286,15 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, *,
 
 
 def _gemm_cogroup_topk(assigned: DataFrame, probes: DataFrame, k: int, *,
-                       key: str, key_type: str, vec_col: str,
-                       qkey_type: str,
-                       exclude_self: bool = False) -> DataFrame:
-    """Per-bucket BLAS scoring shared by the gemm paths: cogrouped
-    `applyInPandas` on ``bucket`` — each bucket's members and probing
-    queries cross Arrow ONCE, one matmul scores every (probe × member)
-    pair, local top-k per query. ``probes`` must have columns
-    (q_id, q_embedding, bucket). Returns (q_id, key, cos); callers
-    window-merge across the n_probe buckets."""
+                       key: str, vec_col: str) -> DataFrame:
+    """Per-bucket BLAS scoring of `ann_knn_join(score="gemm")`, its
+    only caller: cogrouped `applyInPandas` on ``bucket`` — each
+    bucket's members and probing vectors cross Arrow ONCE, one matmul
+    scores every (probe × member) pair, local top-k per probe with the
+    self-match dropped. ``probes`` must have columns (q_id,
+    q_embedding, bucket) with q_id in the ``key`` id space. Returns
+    (q_id, key, cos); the caller window-merges across the n_probe
+    buckets."""
     import numpy as np
     import pandas as pd
 
@@ -245,26 +302,25 @@ def _gemm_cogroup_topk(assigned: DataFrame, probes: DataFrame, k: int, *,
                     bucket_probes: pd.DataFrame) -> pd.DataFrame:
         if members.empty or bucket_probes.empty:
             return pd.DataFrame({"q_id": [], key: [], "cos": []})
-        M = np.vstack(members[vec_col].to_numpy()).astype(np.float64)
-        Q = np.vstack(bucket_probes["q_embedding"].to_numpy()) \
-              .astype(np.float64)
+        M = _matrix(members[vec_col])
+        Q = _matrix(bucket_probes["q_embedding"])
         mids = members[key].to_numpy()
         qids = bucket_probes["q_id"].to_numpy()
         cos = (Q @ M.T) / np.outer(np.linalg.norm(Q, axis=1),
                                    np.linalg.norm(M, axis=1))
         out_q, out_v, out_c = [], [], []
         for qi in range(len(qids)):
-            top = _local_topk(cos[qi], mids, k,
-                              exclude=qids[qi] if exclude_self else None)
+            top = _local_topk(cos[qi], mids, k, exclude=qids[qi])
             out_q.extend([qids[qi]] * len(top))
             out_v.extend(mids[top])
             out_c.extend(cos[qi][top])
         return pd.DataFrame({"q_id": out_q, key: out_v, "cos": out_c})
 
+    key_type = dict(assigned.dtypes)[key]
     return (assigned.groupBy("bucket")
             .cogroup(probes.groupBy("bucket"))
             .applyInPandas(bucket_topk,
-                           f"q_id {qkey_type}, {key} {key_type}, "
+                           f"q_id {key_type}, {key} {key_type}, "
                            f"cos double"))
 
 
@@ -279,57 +335,69 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
     instead of |data|. Bucketed vectors can be written
     `partitionBy(bucket)` so the probe prunes at the file level.
 
-    ``score="gemm"`` (production): candidates scored per bucket with
-    one BLAS matmul via the shared cogroup kernel instead of the
-    per-pair interpreted fold — at 100 TB the scoring pass dominates
-    and the fold is ~10-25× slower (measured on ann_knn_join).
-    ``"fold"`` (default) stays bit-identical to the DuckDB oracle.
+    ``score="gemm"`` (production): the query side rides the task
+    closure, as in `brute_force_topk(score="gemm")` — queries are small
+    by contract. The driver collects the queries and the centroids and
+    picks each query's ``n_probe`` buckets (`_probe_top`); one
+    `_batch_topk` pass over the vectors then assigns every member of an
+    Arrow batch to its nearest centroid with one matmul, scores only
+    members of probed buckets, and masks each query to its own buckets.
+    No crossJoin, assign stage or cogroup: one narrow pass plus the
+    merge window. ``"fold"`` (default) stays bit-identical to the
+    DuckDB oracle.
+
+    Output: (q_id, vec_id, cos, rank), ties by key.
     """
-    from pyspark.sql import Window
-    assigned = ivf_assign(vectors, centroids, key=key, vec_col=vec_col,
-                          score=score)
+    if score == "gemm":
+        import numpy as np
+        Cn, _ = _gemm_centroid_matrix(centroids, "c_id", "c_embedding")
+        q_pdf = queries.select(qkey, qvec_col).toPandas()
+        if Cn is None:      # no centroids, no probes: no rows, as the fold
+            q_pdf, Cn = q_pdf.iloc[:0], np.zeros((0, 0))
+        qids, Qn = q_pdf[qkey].to_numpy(), _unit_rows(q_pdf[qvec_col])
+        probed = np.zeros((len(qids), len(Cn)), dtype=bool)
+        if len(qids):
+            np.put_along_axis(probed, _probe_top(Qn, Cn, n_probe), True,
+                              axis=1)
+        hot = probed.any(axis=0)
+
+        def scores(pdf):
+            Mn = _unit_rows(pdf[vec_col])
+            b = np.argmax(Mn @ Cn.T, axis=1)
+            sel = hot[b]
+            return (pdf[key].to_numpy()[sel], Qn @ Mn[sel].T,
+                    probed[:, b[sel]])
+
+        return _batch_topk(vectors.select(key, vec_col),
+                           queries.schema[qkey], qids, k, scores,
+                           key=key, col="cos", col_type=DoubleType())
+    assigned = ivf_assign(vectors, centroids, key=key, vec_col=vec_col)
     qc = queries.crossJoin(F.broadcast(centroids))
     qc = qc.withColumn("_cos", cosine(F.col(qvec_col), F.col("c_embedding")))
     wq = Window.partitionBy(qkey).orderBy(F.desc("_cos"), F.col("c_id"))
     probes = (qc.withColumn("_rn", F.row_number().over(wq))
                 .where(F.col("_rn") <= n_probe)
                 .select(qkey, qvec_col, F.col("c_id").alias("bucket")))
-    if score == "gemm":
-        scored = _gemm_cogroup_topk(
-            assigned.select("bucket", key, vec_col),
-            probes.select(F.col(qkey).alias("q_id"),
-                          F.col(qvec_col).alias("q_embedding"), "bucket"),
-            k, key=key, key_type=dict(vectors.dtypes)[key],
-            vec_col=vec_col, qkey_type=dict(queries.dtypes)[qkey]) \
-            .withColumnRenamed("q_id", qkey)
-    else:
-        scored = (assigned.withColumn("_nv", norm(F.col(vec_col)))
-                  .join(probes.withColumn("_nq", norm(F.col(qvec_col))),
-                        "bucket")
-                  .withColumn("cos",
-                              _cos_pre(F.col(vec_col), F.col(qvec_col),
-                                       F.col("_nv"), F.col("_nq")))
-                  .select(qkey, key, "cos"))
-    w = Window.partitionBy(qkey).orderBy(F.desc("cos"), F.col(key))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") <= k)
-                  .select(qkey, key, "cos", F.col("_rn").alias("rank")))
+    scored = (assigned.withColumn("_nv", norm(F.col(vec_col)))
+              .join(probes.withColumn("_nq", norm(F.col(qvec_col))),
+                    "bucket")
+              .withColumn("cos",
+                          _cos_pre(F.col(vec_col), F.col(qvec_col),
+                                   F.col("_nv"), F.col("_nq"))))
+    return _rank_topk(scored, k, qkey, key, "cos")
 
 
 def _gemm_probe_buckets(vectors: DataFrame, centroids: DataFrame,
                         n_probe: int, *, key: str,
                         vec_col: str) -> DataFrame:
     """BLAS probe selection for `ann_knn_join(assign_score="gemm")`:
-    centroid matrix in the task closure, one matmul + stable argsort
-    per Arrow batch — top-``n_probe`` buckets per query with the same
-    (-cos, c_id) tie order as the fold window (centroids pre-sorted
-    by c_id; stable argsort keeps ascending c_id among exact ties).
-    No crossJoin, no window, no shuffle. Returns (q_id, q_embedding,
-    bucket) — the `probes` shape `_gemm_cogroup_topk` takes."""
+    centroid matrix in the task closure, one matmul + `_probe_top` per
+    Arrow batch — top-``n_probe`` buckets per query with the same
+    (-cos, c_id) tie order as the fold window. No crossJoin, no
+    window, no shuffle. Returns (q_id, q_embedding, bucket) — the
+    `probes` shape `_gemm_cogroup_topk` takes."""
     import numpy as np
     import pandas as pd
-
-    from pyspark.sql.types import StructField, StructType
 
     out_schema = StructType([
         StructField("q_id", vectors.schema[key].dataType),
@@ -339,17 +407,13 @@ def _gemm_probe_buckets(vectors: DataFrame, centroids: DataFrame,
     if Cn is None:
         # no centroids -> no probes (matches the fold crossJoin)
         return vectors.sparkSession.createDataFrame([], out_schema)
-    npv = min(n_probe, len(cids))
 
     def probe_batches(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            top = np.argsort(-(Mn @ Cn.T), axis=1,
-                             kind="stable")[:, :npv]
-            qi = np.repeat(np.arange(len(pdf)), npv)
+            top = _probe_top(_unit_rows(pdf[vec_col]), Cn, n_probe)
+            qi = np.repeat(np.arange(len(pdf)), top.shape[1])
             yield pd.DataFrame(
                 {"q_id": pdf[key].to_numpy()[qi],
                  "q_embedding": pdf[vec_col].to_numpy()[qi],
@@ -404,7 +468,6 @@ def ann_knn_join(vectors: DataFrame, centroids: DataFrame, k: int, *,
     Output: (q_id, key, cos, rank), self-matches excluded,
     deterministic tie-break on key.
     """
-    from pyspark.sql import Window
     assign_score = assign_score or "fold"
     assigned = ivf_assign(vectors, centroids, key=key, vec_col=vec_col,
                           score=assign_score)
@@ -441,16 +504,10 @@ def ann_knn_join(vectors: DataFrame, centroids: DataFrame, k: int, *,
                                           F.col("_nv"), F.col("_nq"))))
         scored = j.select("q_id", key, "cos")
     else:
-        key_type = dict(vectors.dtypes)[key]
         scored = _gemm_cogroup_topk(
             assigned.select("bucket", key, vec_col), probes, k,
-            key=key, key_type=key_type, vec_col=vec_col,
-            qkey_type=key_type, exclude_self=True)
-
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col(key))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") <= k)
-                  .select("q_id", key, "cos", F.col("_rn").alias("rank")))
+            key=key, vec_col=vec_col)
+    return _rank_topk(scored, k, "q_id", key, "cos")
 
 
 def cosine_dup_pairs(vectors: DataFrame, threshold: float, *,
@@ -483,9 +540,7 @@ def cosine_dup_pairs(vectors: DataFrame, threshold: float, *,
                 if len(members) < 2:
                     return pd.DataFrame({"a": [], "b": [], "cos": []})
                 members = members.sort_values(key, kind="stable")
-                M = np.vstack(members[vec_col].to_numpy()) \
-                      .astype(np.float64)
-                Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
+                Mn = _unit_rows(members[vec_col])
                 ids = members[key].to_numpy()
                 n = len(ids)
                 out_a, out_b, out_c = [], [], []
@@ -728,8 +783,6 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, *,
     100 TB this path still holds for the trainer while `ivf_assign`
     does the cluster-scale work. ``local_max=0`` forces distributed.
     """
-    from pyspark.sql import Window
-
     if exact and local_max:
         # bounded probe; require >= 1 row — an EMPTY frame must fall
         # through to the distributed path's graceful empty centroid
@@ -806,51 +859,27 @@ def ann_quantized_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
                        qvec_col: str = "q_embedding") -> DataFrame:
     """Exact top-k by int8-quantized dot product for each query vector.
 
-    Same shape as `brute_force_topk(score="gemm")` — query matrix in
-    the task closure, one matmul per Arrow batch, bounded batch-local
-    top-k, tiny global window merge — but the scores are INTEGERS:
-    |q_i| ≤ 127 so a d-dim dot is ≤ 127²·d ≪ 2⁵³, float64 BLAS on
-    integer-valued operands is exact, and the emitted `dot_q` column
-    hash-matches the SQL fold bit-for-bit (unlike the float cos paths,
-    which gate rank-only).
+    Same `_batch_topk` pass as `brute_force_topk(score="gemm")` — query
+    matrix in the task closure, one matmul per Arrow batch — but the
+    scores are INTEGERS: |q_i| ≤ 127 so a d-dim dot is ≤ 127²·d ≪ 2⁵³,
+    float64 BLAS on integer-valued operands is exact, and the emitted
+    `dot_q` column hash-matches the SQL fold bit-for-bit (unlike the
+    float cos paths, which gate rank-only).
 
     Output: (q_id, vec_id, dot_q, rank), tie-break on key.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
 
-    qv = quantize_embeddings(queries, vec_col=qvec_col, out_col="_q")
-    q_pdf = qv.select(qkey, "_q").toPandas()
-    Qm = np.vstack(q_pdf["_q"].to_numpy()).astype(np.float64)
-    qids = q_pdf[qkey].to_numpy()
-    key_type = dict(vectors.dtypes)[key]
-    qkey_type = dict(queries.dtypes)[qkey]
-
+    q_pdf = (quantize_embeddings(queries, vec_col=qvec_col, out_col="_q")
+             .select(qkey, "_q").toPandas())
+    Qm = _matrix(q_pdf["_q"])
     quant = quantize_embeddings(vectors, vec_col=vec_col, out_col="_q") \
         .select(key, "_q")
-
-    def score_batches(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.vstack(pdf["_q"].to_numpy()).astype(np.float64)
-            dots = Qm @ M.T          # exact: integer-valued float64
-            mids = pdf[key].to_numpy()
-            out_q, out_v, out_d = [], [], []
-            for qi in range(len(qids)):
-                top = _local_topk(dots[qi], mids, k)
-                out_q.extend([qids[qi]] * len(top))
-                out_v.extend(mids[top])
-                out_d.extend(dots[qi][top].astype(np.int64))
-            yield pd.DataFrame({qkey: out_q, key: out_v, "dot_q": out_d})
-
-    scored = quant.mapInPandas(
-        score_batches, f"{qkey} {qkey_type}, {key} {key_type}, dot_q long")
-    w = Window.partitionBy(qkey).orderBy(F.desc("dot_q"), F.col(key))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") <= k)
-                  .select(qkey, key, "dot_q", F.col("_rn").alias("rank")))
+    return _batch_topk(
+        quant, queries.schema[qkey], q_pdf[qkey].to_numpy(), k,
+        lambda pdf: (pdf[key].to_numpy(),
+                     (Qm @ _matrix(pdf["_q"]).T).astype(np.int64), None),
+        key=key, col="dot_q", col_type=LongType())
 
 
 def save_ivf_bucketed(vectors: DataFrame, centroids: DataFrame,
@@ -877,7 +906,6 @@ def ivf_topk_pruned(spark, path: str, queries: DataFrame, k: int, *,
     (assert `PartitionFilters` in the plan), so I/O ∝ probed buckets.
     Candidates are scored with the fold cosine, as `ivf_topk(score=
     "fold")` does."""
-    from pyspark.sql import Window
     centroids = spark.read.parquet(path + "/_centroids")
     qc = queries.crossJoin(F.broadcast(centroids))
     qc = qc.withColumn("_cos", cosine(F.col(qvec_col), F.col("c_embedding")))
@@ -895,12 +923,8 @@ def ivf_topk_pruned(spark, path: str, queries: DataFrame, k: int, *,
                     "bucket")
               .withColumn("cos",
                           _cos_pre(F.col(vec_col), F.col(qvec_col),
-                                   F.col("_nv"), F.col("_nq")))
-              .select(qkey, key, "cos"))
-    w = Window.partitionBy(qkey).orderBy(F.desc("cos"), F.col(key))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") <= k)
-                  .select(qkey, key, "cos", F.col("_rn").alias("rank")))
+                                   F.col("_nv"), F.col("_nq"))))
+    return _rank_topk(scored, k, qkey, key, "cos")
 
 
 def lsh_hyperplanes(dim: int, n_bits: int):
@@ -1015,7 +1039,6 @@ def ann_lsh_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
     without growing 2^b). A window dedups candidates that appear via
     several probes before ranking.
     """
-    from pyspark.sql import Window
     v = vectors.withColumn("_sig", lsh_signature(vec_col, dim, n_bits))
     if n_probe <= 1:
         q = queries.withColumn("_sig", lsh_signature(qvec_col, dim, n_bits))
@@ -1047,10 +1070,7 @@ def ann_lsh_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
         wd = Window.partitionBy(qkey, key).orderBy(F.col("cos"))
         j = j.withColumn("_dup", F.row_number().over(wd)) \
              .where(F.col("_dup") == 1)
-    w = Window.partitionBy(qkey).orderBy(F.desc("cos"), F.col(key))
-    return (j.withColumn("_rn", F.row_number().over(w))
-             .where(F.col("_rn") <= k)
-             .select(qkey, key, "cos", F.col("_rn").alias("rank")))
+    return _rank_topk(j, k, qkey, key, "cos")
 
 
 # ------------------------------------------------------------------ PQ (ADC)
@@ -1249,8 +1269,6 @@ def _pq_codes(vectors: DataFrame, codebook: list, *, key: str,
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql.types import (ArrayType, IntegerType,
-                                   StructField, StructType)
     m_sub = len(codebook)
     dsub = len(codebook[0][0])
     out_schema = StructType([
@@ -1312,45 +1330,30 @@ def _pq_adc_tables(qrows: list, codebook: list):
 
 
 def _pq_topk_batch(enc: DataFrame, qrows: list, codebook: list, k: int,
-                   *, key: str, key_type: str, q_key: str,
-                   qkey_type: str) -> DataFrame:
-    """Batch-query ADC scorer: ONE mapInPandas over the codes frame;
-    the integer lookup tables for ALL queries ship once in the task
-    closure, each Arrow batch is scored with vectorized int64 gathers
-    (S[q, row] = Σ_s T[q, s, codes[row, s]]), and only the per-batch
-    per-query top-k survives — plan size is CONSTANT in |queries|
-    (the literal-expression path grows O(|Q|·m_sub·n_codes)). Scores
-    are the same exact BIGINTs, so ranks and adc_q match the literal
-    path bit-for-bit; callers window-merge the partials."""
+                   *, key: str, qfield: StructField) -> DataFrame:
+    """Batch-query ADC scorer on `_batch_topk`: the integer lookup
+    tables for ALL queries ship once in the task closure, each Arrow
+    batch of the codes frame is scored with vectorized int64 gathers
+    (S[q, row] = Σ_s T[q, s, codes[row, s]]) — plan size is CONSTANT
+    in |queries| (the literal-expression path grows
+    O(|Q|·m_sub·n_codes)). The kernel ranks the NEGATED sums, so the
+    smallest distance wins and ties go to the smaller key; the scores
+    are the same exact BIGINTs as the literal path's, so ranks and
+    adc_q match it bit-for-bit. Output: (q_id, key, adc_q, rank) with
+    adc_q negated — the caller negates it back."""
     import numpy as np
-    import pandas as pd
 
-    m_sub = len(codebook)
     T = _pq_adc_tables(qrows, codebook)
-    qids = [qr[0] for qr in qrows]
-    nq = len(qids)
 
-    def score_batches(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf[key].to_numpy()
-            S = np.zeros((nq, len(ids)), dtype=np.int64)
-            for s in range(m_sub):
-                S += T[:, s, :][:, C[:, s]]
-            out_q, out_v, out_a = [], [], []
-            for qi in range(nq):
-                top = np.lexsort((ids, S[qi]))[:k]
-                out_q.extend([qids[qi]] * len(top))
-                out_v.extend(ids[top])
-                out_a.extend(S[qi][top])
-            yield pd.DataFrame({q_key: out_q, key: out_v,
-                                "adc_q": out_a})
+    def neg_adc(pdf):
+        C = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
+        S = np.zeros((len(qrows), len(C)), dtype=np.int64)
+        for s in range(len(codebook)):
+            S -= T[:, s, :][:, C[:, s]]
+        return pdf[key].to_numpy(), S, None
 
-    return enc.mapInPandas(
-        score_batches,
-        f"{q_key} {qkey_type}, {key} {key_type}, adc_q long")
+    return _batch_topk(enc, qfield, np.array([qr[0] for qr in qrows]), k,
+                       neg_adc, key=key, col="adc_q", col_type=LongType())
 
 
 def pq_topk(vectors: DataFrame, queries: DataFrame, codebook: list,
@@ -1377,8 +1380,6 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, codebook: list,
     Output: (q_id, <key>, adc_q), k rows per query, ties by key."""
     import math
 
-    from pyspark.sql import Window
-
     m_sub = len(codebook)
     dsub = len(codebook[0][0])
     qrows = queries.select(q_key, q_vec).collect()
@@ -1391,15 +1392,9 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, codebook: list,
     enc = materialize(_pq_codes(vectors, codebook, key=key,
                                 vec_col=vec_col))
     if score == "batch":
-        scored = _pq_topk_batch(
-            enc, qrows, codebook, k, key=key,
-            key_type=dict(vectors.dtypes)[key], q_key=q_key,
-            qkey_type=dict(queries.dtypes)[q_key])
-        w = Window.partitionBy(q_key).orderBy(F.asc("adc_q"),
-                                              F.asc(key))
-        return (scored.withColumn("_rn", F.row_number().over(w))
-                      .where(F.col("_rn") <= k)
-                      .select(q_key, key, "adc_q"))
+        return (_pq_topk_batch(enc, qrows, codebook, k, key=key,
+                               qfield=queries.schema[q_key])
+                .select(q_key, key, (-F.col("adc_q")).alias("adc_q")))
 
     def score_expr(qv):
         score = F.lit(0).cast("long")

@@ -823,6 +823,69 @@ def test_ann_gemm_variants_match_fold(spark, emb):
             {(a, b) for a, b in zip(pg.a, pg.b)})
 
 
+def test_ivf_topk_gemm_is_one_python_pass(spark, emb):
+    """ivf_topk(score="gemm") is one narrow mapInPandas pass plus the
+    merge window: the executed count plan has one MapInPandasExec, no
+    cogroup, no nested-loop or cartesian join, and one shuffle besides
+    the single-partition exchange every count plan ends with."""
+    from perfbench.probes import _nodes
+    from stark_spark.operators.similarity import ivf_topk
+    q = (emb.where(F.col("vec_id") < 5)
+            .select(F.col("vec_id").alias("q_id"),
+                    F.col("embedding").alias("q_embedding")))
+    cent = (emb.where(F.col("vec_id") < 4)
+               .select(F.col("vec_id").alias("c_id"),
+                       F.col("embedding").alias("c_embedding")))
+    cdf = ivf_topk(emb, q, cent, 5, n_probe=2, score="gemm") \
+        .groupBy().count()
+    assert cdf.collect()[0][0] == 25
+    nodes = list(_nodes(cdf._jdf.queryExecution().executedPlan()))
+    names = [cls for cls, _ in nodes]
+    assert names.count("MapInPandasExec") == 1, names
+    assert "FlatMapCoGroupsInPandasExec" not in names, names
+    assert not {"BroadcastNestedLoopJoinExec",
+                "CartesianProductExec"} & set(names), names
+    shuffles = sorted(node.outputPartitioning().toString().split("(")[0]
+                      for cls, node in nodes if cls == "ShuffleExchangeExec")
+    assert shuffles == ["SinglePartition", "hashpartitioning"], shuffles
+
+
+def test_closure_scorers_empty_frames(spark, emb):
+    """Every closure scorer and both ivf_topk engines return 0 rows
+    with their documented columns when the queries or the vectors are
+    empty, and the IVF engines also when the centroids are."""
+    from stark_spark.operators.similarity import (ann_quantized_topk,
+                                                  brute_force_topk,
+                                                  ivf_topk, pq_topk,
+                                                  pq_train)
+    q = (emb.where(F.col("vec_id") < 5)
+            .select(F.col("vec_id").alias("q_id"),
+                    F.col("embedding").alias("q_embedding")))
+    cent = (emb.where(F.col("vec_id") < 4)
+               .select(F.col("vec_id").alias("c_id"),
+                       F.col("embedding").alias("c_embedding")))
+    cb = pq_train(emb, dim=64, m_sub=8, n_codes=8, n_iter=1)
+    cos = ["q_id", "vec_id", "cos", "rank"]
+    scorers = [
+        ("brute gemm", lambda v, q: brute_force_topk(v, q, 5, score="gemm"),
+         cos),
+        ("quantized", lambda v, q: ann_quantized_topk(v, q, 5),
+         ["q_id", "vec_id", "dot_q", "rank"]),
+        ("pq batch", lambda v, q: pq_topk(v, q, cb, 5, score="batch"),
+         ["q_id", "vec_id", "adc_q"])]
+    scorers += [(f"ivf {e}", lambda v, q, e=e: ivf_topk(v, q, cent, 5,
+                                                         score=e), cos)
+                for e in ("fold", "gemm")]
+    for name, fn, cols in scorers:
+        for v, qq in ((emb, q.limit(0)), (emb.limit(0), q)):
+            out = fn(v, qq)
+            assert out.columns == cols, name
+            assert out.count() == 0, name
+    for e in ("fold", "gemm"):
+        out = ivf_topk(emb, q, cent.limit(0), 5, score=e)
+        assert out.columns == cos and out.count() == 0, e
+
+
 def test_ann_quantized_recall(spark, emb):
     """int8 quantization keeps high top-k agreement with the float
     ranking (exactness of the integer path is oracle-gated; this

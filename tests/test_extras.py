@@ -787,13 +787,23 @@ def test_bench_measure_records_layers(spark, sf_dir):
     fn = entry.queries()["knn_events"]
     rows, wall, layer = bench.measure(spark, fn, sf_dir, "test:measure")
     assert rows == fn(spark, sf_dir).count()
+    python = ("python_ms", "python_boot_ms", "python_init_ms",
+              "python_bytes")
     assert set(layer) == {"build_ms", "exec_ms", "plan_ms", "jit_ms",
                           "gc_ms", "jobs", "build_jobs", "stages", "tasks",
-                          "shuffle_bytes", "files_read", "rows_scanned"}
+                          "shuffle_bytes", "files_read", "rows_scanned",
+                          *python}
     assert layer["jobs"] >= 1 and layer["files_read"] >= 1
+    assert all(layer[k] == 0 for k in python)     # no Python worker ran
     assert layer["build_jobs"] == 0
     assert 0 < layer["build_ms"] + layer["exec_ms"] <= wall * 1e3 + 1
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+    # the IVF scorer's mapInPandas pass: a reused worker boots in 0 ms
+    _, _, layer = bench.measure(spark, entry.queries()["ann_ivf_topk_gemm"],
+                                sf_dir, "test:measure-python")
+    assert layer["python_ms"] > 0 and layer["python_init_ms"] > 0
+    assert layer["python_bytes"] > 0 and layer["python_boot_ms"] >= 0
 
     # a build that runs a job of its own: counted in build_jobs and jobs
     def eager(s, sf):
